@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, SRC
-from nebula_spark.operators.traverse import checkpoint_count
+from nebula_spark.operators.traverse import checkpoint_count, sized_superstep
 
 
 def pagerank(edges: DataFrame, iterations: int = 3,
@@ -212,15 +212,16 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
                 .filter(F.col("deg") >= k))
     # fixpoint mode: the edge count rides each checkpoint job
     # (checkpoint_count), so the termination probe adds no dedicated
-    # stage per peel
+    # stage per peel, and it sizes the next peel's shuffles
     e, n_e = checkpoint_count(sym)
     while True:
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
-        e2, n2 = checkpoint_count(
-            e.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .select("u", "v"))
+        with sized_superstep(e.sparkSession, n_e):
+            e2, n2 = checkpoint_count(
+                e.join(keep, "u", "left_semi")
+                .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
+                .select("u", "v"))
         e = e2
         if n2 == n_e or n2 == 0:
             break

@@ -10,8 +10,17 @@ DataFrame keyed (root, vid); a hop is one join against the edge table; the
 visited set is a DataFrame anti-joined each level. This is the Pregel
 pattern expressed in DataFrame ops, scales with the cluster, and (unlike the
 reference) handles all (src,dst) pairs in one run instead of per-pair RPCs.
-Frontiers persist per level and unpersist after; lineage is cut by
-localCheckpoint every few levels.
+
+State and width: small fixed depths chain every level lazily into the
+caller's one action-time job. Counted loops seed the frontier with
+:func:`~nebula_spark.operators.traverse.checkpoint_count` and checkpoint
+each level the same way, so every frontier is materialized once, its size
+comes free off that job, and the visited set is a plain union of those
+checkpointed pieces — nothing is persisted per level, so no level
+re-derives an earlier one from its source. Each level job runs at the
+width its observed visited count calls for
+(:func:`~nebula_spark.operators.traverse.sized_superstep`). The loop-
+invariant edge frame is persisted once per call and unpersisted on exit.
 """
 
 from __future__ import annotations
@@ -22,7 +31,7 @@ from pyspark.sql import functions as F
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
     BROADCAST_FRONTIER_ROWS, _edge_id, _edge_id_reversed, checkpoint_count,
-    checkpoint_observe, oriented, traverse,
+    checkpoint_observe, oriented, sized_superstep, traverse,
 )
 
 
@@ -53,19 +62,18 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
     e = oriented(edges, direction)
     if edge_filter is not None:
         e = e.filter(edge_filter)
-    e = e.select(SRC, DST).distinct()
-
-    frontier = (sources.select(F.col(VID).alias("root"))
-                .distinct().withColumn(VID, F.col("root")))
-    visited = frontier.withColumn("dist", F.lit(0))
-    results: DataFrame | None = None
+    e = e.select(SRC, DST)
+    roots = sources.select(F.col(VID).alias("root")).distinct()
 
     if max_hops <= 3:           # lazy mode: one job at action time
+        frontier = roots.withColumn(VID, F.col("root"))
+        visited = frontier.withColumn("dist", F.lit(0))
+        results: DataFrame | None = None
         # the deduped edge set is loop-invariant but would be re-embedded
         # in every level's subtree of the single action-time plan; a LAZY
         # localCheckpoint computes it once inside that job (no dedicated
         # materialization job) and later levels read the blocks
-        e = e.localCheckpoint(eager=False)
+        e = e.distinct().localCheckpoint(eager=False)
         for level in range(1, max_hops + 1):
             nxt = (frontier.join(e, frontier[VID] == e[SRC], "inner")
                    .select("root", F.col(DST).alias(VID)).distinct()
@@ -93,13 +101,16 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                                        .distinct()), DST, "left_semi")
         return out
 
-    # persisted: every level joins the same deduped edge set — without the
-    # cache each level re-scans and re-dedups the source tables
+    # counted mode: the level's (root, dst) distinct already dedups the
+    # hop output, so the edge frame skips its own distinct — that would
+    # shuffle the whole edge table at a width sized for the frontier.
+    # Persisted because every level joins it; the cache fills in level 1.
     e = e.persist()
-    visited = visited.persist()
-    frontier = frontier.persist()
-    n = frontier.count()        # seed size; later levels ride the checkpoint
     try:
+        frontier, n = checkpoint_count(
+            roots.withColumn(VID, F.col("root")))
+        visited = frontier.withColumn("dist", F.lit(0))
+        results, n_visited = None, n
         for level in range(1, max_hops + 1):
             if n == 0:
                 break
@@ -108,14 +119,12 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                    .select("root", F.col(DST).alias(VID)).distinct()
                    .join(visited.select("root", VID), ["root", VID], "left_anti")
                    .withColumn("dist", F.lit(level)))
-            nxt, n = checkpoint_count(nxt)
-            step = nxt.select("root", VID, "dist")
-            results = step if results is None else results.unionByName(step)
-            old_visited = visited
-            visited = visited.unionByName(step).persist()
-            old_visited.unpersist()
-            frontier.unpersist()
-            frontier = nxt.select("root", VID)   # checkpointed parent
+            with sized_superstep(e.sparkSession, n_visited):
+                nxt, n = checkpoint_count(nxt)
+            n_visited += n
+            results = nxt if results is None else results.unionByName(nxt)
+            visited = visited.unionByName(nxt)
+            frontier = nxt.select("root", VID)
         if results is None:
             results = visited.limit(0)
         out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
@@ -125,10 +134,7 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                                        .distinct()), DST, "left_semi")
         return out
     finally:
-        frontier.unpersist()
-        visited.unpersist()
         e.unpersist()
-
 
 
 def _single_tie_key(etype_order):
@@ -297,8 +303,9 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                                F.lit(0).alias("hops"), "path"))
         return results
 
-    frontier = (roots.withColumn("end_vid", F.col("root"))
-                .withColumn("path", F.array().cast(path_type)).persist())
+    frontier, n = checkpoint_count(
+        roots.withColumn("end_vid", F.col("root"))
+        .withColumn("path", F.array().cast(path_type)))
     # per-root visited set: a vid joins it at its first-reached level, so
     # later levels cannot re-emit the pair — the minimality invariant.
     # out/in with min_hops >= 1: the root itself is NOT pre-visited — the
@@ -309,15 +316,14 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
     # visited-set exception. BOTH direction: the root IS pre-visited (the
     # exception is unsound there — see docstring) and (s, s) rows come
     # from the in-loop closure rule below.
-    visited = roots.withColumn("end_vid", F.col("root"))
+    visited = frontier.select("root", "end_vid")
     if min_hops >= 1 and direction != "both":
         visited = visited.limit(0)
-    visited = visited.persist()
+    n_visited = n
     results: DataFrame | None = None
     if min_hops == 0:
         results = frontier.select(F.col("root").alias("start_vid"),
                                   "end_vid", F.lit(0).alias("hops"), "path")
-    n = frontier.count()        # seed size; later levels ride the checkpoint
     # BOTH-direction root closures: the reference's level-pruned BFS
     # reports a (s, s) row only when the closing walk's prefix is itself
     # a minimal path (SingleShortestPath.cpp never extends a pruned
@@ -368,7 +374,8 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                                 "end_vid", "path")
                     .withColumn("_cyc", F.lit(True)),
                     allowMissingColumns=True)
-                nxt, n = checkpoint_count(nxt)
+                with sized_superstep(e.sparkSession, n_visited):
+                    nxt, n = checkpoint_count(nxt)
                 hits = (nxt.filter(F.col("_cyc"))
                         .select(F.col("root").alias("start_vid"),
                                 "end_vid", F.lit(level).alias("hops"),
@@ -381,17 +388,16 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                     hits.select(F.col("start_vid").alias("root"))
                     .distinct())
             else:
-                nxt, n = checkpoint_count(nxt)
+                with sized_superstep(e.sparkSession, n_visited):
+                    nxt, n = checkpoint_count(nxt)
+            n_visited += n
             step = nxt.select(F.col("root").alias("start_vid"), "end_vid",
                               F.lit(level).alias("hops"), "path")
             if level >= min_hops:
                 results = step if results is None else results.unionByName(step)
-            old_visited = visited
             visited = visited.unionByName(
-                nxt.select("root", "end_vid").distinct()).persist()
-            old_visited.unpersist()
-            frontier.unpersist()
-            frontier = nxt          # eagerly checkpointed — no re-persist
+                nxt.select("root", "end_vid").distinct())
+            frontier = nxt
         if cyc_results is not None:
             cyc = cyc_results
             if mode == "single":
@@ -407,8 +413,6 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                                F.lit(0).alias("hops"), "path"))
         return results
     finally:
-        frontier.unpersist()
-        visited.unpersist()
         e.unpersist()
 
 
@@ -453,7 +457,7 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
     if edge_filter is not None:
         e = e.filter(edge_filter)
     path_type = _path_struct_type(e)
-    e = e.select(SRC, DST).distinct()
+    e = e.select(SRC, DST)
 
     roots = sources.select(F.col(VID).alias("root")).distinct()
     frontier = roots.withColumn("end_vid", F.col("root"))
@@ -472,7 +476,7 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
     if max_hops <= 3:           # lazy mode: one job at action time
         # loop-invariant deduped edge set — computed once inside the
         # caller's action-time job (see bfs_shortest_paths)
-        e = e.localCheckpoint(eager=False)
+        e = e.distinct().localCheckpoint(eager=False)
         for level in range(1, max_hops + 1):
             nxt = (frontier.join(e, frontier["end_vid"] == e[SRC], "inner")
                    .select("root", F.col(DST).alias("end_vid")).distinct()
@@ -486,11 +490,12 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
             frontier = nxt
         return results
 
+    # counted mode: no edge distinct, persisted edges, checkpointed state
+    # (see bfs_shortest_paths)
     e = e.persist()
-    frontier = frontier.persist()
-    visited = visited.persist()
-    n = frontier.count()
     try:
+        frontier, n = checkpoint_count(frontier)
+        n_visited = n
         for level in range(1, max_hops + 1):
             if n == 0:
                 break
@@ -499,20 +504,17 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
             nxt = (f.join(e, f["end_vid"] == e[SRC], "inner")
                    .select("root", F.col(DST).alias("end_vid")).distinct()
                    .join(visited, ["root", "end_vid"], "left_anti"))
-            nxt, n = checkpoint_count(nxt)
+            with sized_superstep(e.sparkSession, n_visited):
+                nxt, n = checkpoint_count(nxt)
+            n_visited += n
             step = shape(nxt, level)
             results = step if results is None else results.unionByName(step)
-            old_visited = visited
-            visited = visited.unionByName(nxt).persist()
-            old_visited.unpersist()
-            frontier.unpersist()
+            visited = visited.unionByName(nxt)
             frontier = nxt
         if results is None:
             results = shape(frontier.limit(0), 0)
         return results
     finally:
-        frontier.unpersist()
-        visited.unpersist()
         e.unpersist()
 
 
@@ -632,17 +634,16 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     n_diag = diag.count()
     total_pairs = n_src * n_tgt - n_diag
 
+    # the checkpointed roots are both each side's seed frontier and the
+    # first piece of its visited set
     def start_state(roots):
-        front = (roots.withColumn("end_vid", F.col("root"))
-                 .withColumn("path", F.array().cast(path_type))
-                 .localCheckpoint(eager=True))
-        visited = roots.withColumn("end_vid", F.col("root")).persist()
-        return front, visited
+        visited = roots.withColumn("end_vid", F.col("root"))
+        return visited.withColumn("path", F.array().cast(path_type)), visited
 
     lfront, lvisited = start_state(src_roots)
     rfront, rvisited = start_state(tgt_roots)
 
-    def advance(front, visited, e, n_front):
+    def advance(front, visited, e, n_front, n_visited):
         f = (F.broadcast(front)
              if n_front <= BROADCAST_FRONTIER_ROWS // 8 else front)
         uniq = ~F.array_contains(F.col("path"), _edge_id()) \
@@ -661,7 +662,8 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                           F.col("path").cast("string").desc()))
             nxt = (nxt.withColumn("_rn", F.row_number().over(w))
                    .filter(F.col("_rn") == 1).drop("_rn"))
-        return checkpoint_count(nxt)
+        with sized_superstep(e.sparkSession, n_visited):
+            return checkpoint_count(nxt)
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias("start_vid"),
@@ -685,25 +687,24 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     resolved: DataFrame | None = None
     n_resolved = 0
     n_l, n_r = n_src, n_tgt
+    nv_l, nv_r = n_src, n_tgt
     rounds = (max_hops + 1) // 2
     try:
         for r in range(1, rounds + 1):
-            new_l, n_l = advance(lfront, lvisited, fwd, n_l)
+            new_l, n_l = advance(lfront, lvisited, fwd, n_l, nv_l)
             lfront = new_l
             if n_l == 0:
                 break
-            old = lvisited
+            nv_l += n_l
             lvisited = lvisited.unionByName(
-                new_l.select("root", "end_vid").distinct()).persist()
-            old.unpersist()
+                new_l.select("root", "end_vid").distinct())
             round_meets = [meet(new_l, rfront, 2 * r - 1)]
             if 2 * r <= max_hops:
-                new_r, n_r = advance(rfront, rvisited, bwd, n_r)
+                new_r, n_r = advance(rfront, rvisited, bwd, n_r, nv_r)
                 if n_r:
-                    old = rvisited
+                    nv_r += n_r
                     rvisited = rvisited.unionByName(
-                        new_r.select("root", "end_vid").distinct()).persist()
-                    old.unpersist()
+                        new_r.select("root", "end_vid").distinct())
                     round_meets.append(meet(new_l, new_r, 2 * r))
                 rfront = new_r
             combos.extend(round_meets)
@@ -773,8 +774,6 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                            F.array().cast(path_type).alias("path")))
         return out
     finally:
-        lvisited.unpersist()
-        rvisited.unpersist()
         fwd.unpersist()
         if direction != "both":
             bwd.unpersist()
@@ -800,10 +799,12 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     depth that just came back empty).
     """
     fwd_all = _prep_oriented(edges, direction, edge_filter, False)
-    fwd = fwd_all.select(SRC, DST).distinct().persist()
+    # no edge distinct: the per-level (root, vid) distinct dedups hops,
+    # and an edge-table shuffle would run at the frontier-sized width
+    fwd = fwd_all.select(SRC, DST).persist()
     bwd = fwd if direction == "both" else _prep_oriented(
         edges, _DIR_FLIP[direction], edge_filter, False
-        ).select(SRC, DST).distinct().persist()
+        ).select(SRC, DST).persist()
 
     src_roots, n_src = checkpoint_count(
         sources.select(F.col(VID).alias("root")).distinct())
@@ -812,22 +813,19 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     n_diag = src_roots.join(tgt_roots, "root", "left_semi").count()
     total_pairs = n_src * n_tgt - n_diag
 
-    def start_state(roots):
-        front = (roots.withColumn(VID, F.col("root"))
-                 .localCheckpoint(eager=True))
-        visited = roots.withColumn(VID, F.col("root")).persist()
-        return front, visited
+    # the checkpointed roots are both each side's seed frontier and the
+    # first piece of its visited set
+    lfront = lvisited = src_roots.withColumn(VID, F.col("root"))
+    rfront = rvisited = tgt_roots.withColumn(VID, F.col("root"))
 
-    lfront, lvisited = start_state(src_roots)
-    rfront, rvisited = start_state(tgt_roots)
-
-    def advance(front, visited, e, n_front):
+    def advance(front, visited, e, n_front, n_visited):
         f = F.broadcast(front) if n_front <= BROADCAST_FRONTIER_ROWS \
             else front
         nxt = (f.join(e, f[VID] == e[SRC], "inner")
                .select("root", F.col(DST).alias(VID)).distinct()
                .join(visited, ["root", VID], "left_anti"))
-        return checkpoint_count(nxt)
+        with sized_superstep(e.sparkSession, n_visited):
+            return checkpoint_count(nxt)
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias(SRC), F.col(VID).alias("_m"))
@@ -843,23 +841,22 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     resolved: DataFrame | None = None
     n_resolved = 0
     n_l, n_r = n_src, n_tgt
+    nv_l, nv_r = n_src, n_tgt
     rounds = (max_hops + 1) // 2
     try:
         for r in range(1, rounds + 1):
-            new_l, n_l = advance(lfront, lvisited, fwd, n_l)
+            new_l, n_l = advance(lfront, lvisited, fwd, n_l, nv_l)
             lfront = new_l
             if n_l == 0:
                 break
-            old = lvisited
-            lvisited = lvisited.unionByName(new_l).persist()
-            old.unpersist()
+            nv_l += n_l
+            lvisited = lvisited.unionByName(new_l)
             round_meets = [meet(new_l, rfront, 2 * r - 1)]
             if 2 * r <= max_hops:
-                new_r, n_r = advance(rfront, rvisited, bwd, n_r)
+                new_r, n_r = advance(rfront, rvisited, bwd, n_r, nv_r)
                 if n_r:
-                    old = rvisited
-                    rvisited = rvisited.unionByName(new_r).persist()
-                    old.unpersist()
+                    nv_r += n_r
+                    rvisited = rvisited.unionByName(new_r)
                     round_meets.append(meet(new_l, new_r, 2 * r))
                 rfront = new_r
             meets.extend(round_meets)
@@ -891,8 +888,6 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                             F.lit(0).alias("dist")))
         return out.groupBy(SRC, DST).agg(F.min("dist").alias("dist"))
     finally:
-        lvisited.unpersist()
-        rvisited.unpersist()
         fwd.unpersist()
         if direction != "both":
             bwd.unpersist()

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
-    BROADCAST_FRONTIER_ROWS, checkpoint_count, oriented,
+    BROADCAST_FRONTIER_ROWS, checkpoint_count, oriented, sized_superstep,
 )
 
 
@@ -49,59 +49,57 @@ def k_hop_subgraph(edges: DataFrame, seeds: DataFrame, steps: int = 1,
     # be unpersisted before the caller materializes the lazy result)
     e_all = e_all.localCheckpoint(eager=False)
 
-    frontier = seeds.select(VID).distinct().persist()
-    visited = frontier.withColumn("step", F.lit(0)).persist()
+    # visited is a plain union of checkpointed pieces: the seed here, then
+    # each level's frontier — no cache to fill or drop between levels
+    visited, n = checkpoint_count(
+        seeds.select(VID).distinct().withColumn("step", F.lit(0)))
+    frontier = visited.select(VID)
     collected: DataFrame | None = None
-    n = frontier.count()      # seed size; later levels ride the checkpoint
-    try:
-        for step in range(1, steps + 1):
-            if n == 0:
-                break
-            f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
-            # LAZY checkpoint: hop feeds both the collected union and the
-            # nxt frontier below — the checkpoint_count(nxt) job is hop's
-            # first materialization and writes its blocks, which the final
-            # collected union then re-reads. The old eager checkpoint paid
-            # a SECOND dedicated job per step for the same sharing.
-            hop = (e_all.join(f, e_all[SRC] == f[VID], "inner").drop(VID)
-                   .withColumn("step", F.lit(step))
-                   .localCheckpoint(eager=False))
-            collected = hop if collected is None else collected.unionByName(hop)
-            # The next level's size (termination + broadcast probe) rides
-            # the materialization job via checkpoint_count — no dedicated
-            # frontier.count() stage per level (traverse.py:39).
-            nxt = (hop.select(F.col(DST).alias(VID)).distinct()
-                   .join(visited.select(VID), VID, "left_anti")
-                   .withColumn("step", F.lit(step)))
+    n_visited = n
+    for step in range(1, steps + 1):
+        if n == 0:
+            break
+        f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
+        # LAZY checkpoint: hop feeds both the collected union and the
+        # nxt frontier below — the checkpoint_count(nxt) job is hop's
+        # first materialization and writes its blocks, which the final
+        # collected union then re-reads. The old eager checkpoint paid
+        # a SECOND dedicated job per step for the same sharing.
+        hop = (e_all.join(f, e_all[SRC] == f[VID], "inner").drop(VID)
+               .withColumn("step", F.lit(step))
+               .localCheckpoint(eager=False))
+        collected = hop if collected is None else collected.unionByName(hop)
+        # The next level's size (termination + broadcast probe) rides
+        # the materialization job via checkpoint_count — no dedicated
+        # frontier.count() stage per level (traverse.py:39).
+        nxt = (hop.select(F.col(DST).alias(VID)).distinct()
+               .join(visited.select(VID), VID, "left_anti")
+               .withColumn("step", F.lit(step)))
+        with sized_superstep(e_all.sparkSession, n_visited):
             nxt, n = checkpoint_count(nxt)
-            old = visited
-            visited = visited.unionByName(nxt).persist()
-            old.unpersist()
-            frontier.unpersist()
-            frontier = nxt.select(VID)
-        # closing pass: edges among final-hop vertices back into the
-        # subgraph (reference's last round keeps only edges whose dst was
-        # seen before); n is the final frontier size off its checkpoint job
-        if n > 0:
-            f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
-            closing = (e_all.join(f, e_all[SRC] == f[VID], "inner").drop(VID)
-                       .join(visited.select(F.col(VID).alias(DST)).distinct(),
-                             DST, "left_semi")
-                       .withColumn("step", F.lit(steps + 1)))
-            collected = closing if collected is None \
-                else collected.unionByName(closing)
-        if collected is None:
-            collected = e_all.withColumn("step", F.lit(0)).limit(0)
-        # duplicate edges can be collected when direction="both" re-walks a
-        # closing edge; subgraph semantics are set semantics → dedup
-        # identity INCLUDES the edge type: a teammate edge parallel to a
-        # like edge shares (src, dst, rank) but is a distinct edge
-        # (subgraph.feature "subgraph": both Tim↔Manu teammate rows)
-        keys = [SRC, DST, RANK, "_dir"]
-        if "_etype" in collected.columns:
-            keys.append("_etype")
-        collected = collected.dropDuplicates(keys)
-        return visited.select(VID, "step"), collected
-    finally:
-        frontier.unpersist()
-        visited.unpersist()
+        n_visited += n
+        visited = visited.unionByName(nxt)
+        frontier = nxt.select(VID)
+    # closing pass: edges among final-hop vertices back into the
+    # subgraph (reference's last round keeps only edges whose dst was
+    # seen before); n is the final frontier size off its checkpoint job
+    if n > 0:
+        f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
+        closing = (e_all.join(f, e_all[SRC] == f[VID], "inner").drop(VID)
+                   .join(visited.select(F.col(VID).alias(DST)).distinct(),
+                         DST, "left_semi")
+                   .withColumn("step", F.lit(steps + 1)))
+        collected = closing if collected is None \
+            else collected.unionByName(closing)
+    if collected is None:
+        collected = e_all.withColumn("step", F.lit(0)).limit(0)
+    # duplicate edges can be collected when direction="both" re-walks a
+    # closing edge; subgraph semantics are set semantics → dedup
+    # identity INCLUDES the edge type: a teammate edge parallel to a
+    # like edge shares (src, dst, rank) but is a distinct edge
+    # (subgraph.feature "subgraph": both Tim↔Manu teammate rows)
+    keys = [SRC, DST, RANK, "_dir"]
+    if "_etype" in collected.columns:
+        keys.append("_etype")
+    collected = collected.dropDuplicates(keys)
+    return visited.select(VID, "step"), collected

@@ -18,31 +18,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.operators.traverse import (checkpoint_count,
-                                             checkpoint_observe)
+                                             checkpoint_observe,
+                                             observed_width, sized_superstep)
 
 # MinHash universal-hash parameters: h_i(x) = (a_i * x + b_i) mod P.
 # P < 2^31 keeps a_i * x + b_i within int64 after x is reduced mod P.
 MINHASH_P = 2_147_483_647  # 2^31 - 1, Mersenne prime
 _A_SEED, _B_SEED = 0x9E3779B1, 0x85EBCA77
 
-# Scale-adaptive partitioning for the CC superstep loop (r12, guide §2.2):
-# each round shuffles (node, label) pairs — ~16-32 B a row — so ~2M rows a
-# task lands shuffle partitions in the guide's 100 MB-1 GB band. The round
-# width is derived from the OBSERVED node count (rides the seed job free)
-# and capped at the session's configured spark.sql.shuffle.partitions, so
-# a cluster-scaled config is never shrunk for big graphs while a tiny
-# graph stops paying 32-task stages and per-stage AQE planning for a few
-# thousand rows (measured at sf0.1: 2.05 s → 1.0 s for the round loop).
-_CC_ROUND_ROWS_PER_TASK = 2_000_000
-
-# Same idea for the LSH banding shuffle (explode rows are ~120 B: id, the
+# Rows per task for the LSH banding shuffle, sized by
+# operators.traverse.observed_width (explode rows are ~120 B: id, the
 # signature array and the band signature string — 1M rows/task ≈ 100 MB,
 # guide §2.2). The width is derived from the doc count observed free on
 # the signature checkpoint job and embedded as an explicit repartition
 # that the band window / band self-join then REUSES (hash(band, bsig, p)
-# satisfies their clustered distribution — no second Exchange), capped at
-# the session's configured shuffle width so cluster configs are never
-# shrunk for corpora that need them.
+# satisfies their clustered distribution — no second Exchange).
 #
 # TWO constants because the two banded stages have per-row costs two
 # orders apart (r12 second pass, guide §1.2 step 2 — size tasks by
@@ -61,13 +51,6 @@ _CC_ROUND_ROWS_PER_TASK = 2_000_000
 # constants only pick parallelism for mid-size inputs.
 _LSH_BAND_ROWS_PER_TASK = 1_000_000
 _LSH_JOIN_ROWS_PER_TASK = 32_000
-
-
-def _band_width(df, n_rows: int,
-                rows_per_task: int = _LSH_BAND_ROWS_PER_TASK) -> int:
-    sess_p = int(df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    return max(1, min(sess_p, -(-n_rows // rows_per_task)))
 
 
 def _md5_64(c: Column) -> Column:
@@ -267,8 +250,9 @@ def minhash_lsh_pairs(df: DataFrame, key_col: str = "doc_id",
     # join sides reuse, so tiny corpora stop paying session-width stages.
     # JOIN rows-per-task, not window rows-per-task: pair formation is
     # compute-dense (see the constants' comment)
-    banded = banded.repartition(_band_width(df, n_docs * bands,
-                                            _LSH_JOIN_ROWS_PER_TASK),
+    banded = banded.repartition(observed_width(df.sparkSession,
+                                               n_docs * bands,
+                                               _LSH_JOIN_ROWS_PER_TASK),
                                 F.col("b.band"), F.col("b.bsig"))
     a, b = banded.alias("a"), banded.alias("b")
     # estimated similarity computed BEFORE the pair dedup (r12, guide
@@ -335,8 +319,10 @@ def lsh_star_edges(df: DataFrame, key_col: str = "doc_id",
     # size-derived window width (r12, guide §2.2): the bucket-min window
     # reuses the explicit hash(band, bsig, p) repartition — one Exchange,
     # sized to the corpus instead of the session default (see
-    # _band_width; the count rides the signature checkpoint job free)
-    banded = banded.repartition(_band_width(df, n_docs * bands),
+    # observed_width; the count rides the signature checkpoint job free)
+    banded = banded.repartition(observed_width(df.sparkSession,
+                                               n_docs * bands,
+                                               _LSH_BAND_ROWS_PER_TASK),
                                 F.col("b.band"), F.col("b.bsig"))
     w = Window.partitionBy("b.band", "b.bsig")
     out = (banded.withColumn("_root", F.min("id").over(w))
@@ -468,9 +454,7 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     can = (e.select(F.least("a", "b").alias("a"),
                     F.greatest("a", "b").alias("b"))
            .distinct())
-    sym = (can.unionByName(can.select(F.col("b").alias("a"),
-                                      F.col("a").alias("b")))
-           .persist())
+    spark = can.sparkSession
     # whole-stage codegen off for the supersteps: every iteration builds a
     # *new* plan (fresh checkpoint lineage), so generated code recompiles
     # per superstep — compile latency dominates the fusion win, and when
@@ -478,55 +462,43 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     # dedup_clusters pipeline) the first superstep would compile the whole
     # 64-expression hash tree into one huge method. Measured at sf0.1:
     # fresh-session 32.7 s → ~15-20 s, warm 8.4 s → ~5 s.
-    with scoped_conf(sym.sparkSession,
-                     **{"spark.sql.codegen.wholeStage": "false"}):
-        # round 0 folded into the seed (r11 second pass): with identity
-        # labels the neighbor-min round is algebraically min over the
-        # CLOSED neighborhood — min(node, min of neighbors) — which is a
-        # single map-side-combinable aggregate over the symmetric edge
-        # list (every node appears as `a` in sym). The identity-label
-        # frame, the sym⋈labels message join and the union it fed are
-        # gone; the probe sum rides the same checkpoint job as before.
-        # Seed stays EAGER (measured, r11 fourth pass): folding its
-        # checkpoint job into round 1 via a lazy cut saved one job
-        # barrier (28→27) but round 1's two readers re-ran the seed's
-        # post-exchange aggregation (345→599 tasks) — locally a wash
-        # (interleaved mins 2.57/3.10 vs 3.20/2.72), and at scale a
-        # full node-keyed aggregate re-run costs more than the barrier
-        # it saves. The node COUNT rides the same observation (r12):
-        # it sizes the round shuffles below and makes the empty-input
-        # convergence explicit (n == 0) instead of overloading the sum
-        # probe — a decimal(38,0) overflow now keeps iterating to
-        # max_iter (NULL total never equals) rather than conflating
-        # with emptiness (ADVICE r11).
-        labels, m0 = checkpoint_observe(
-            sym.groupBy(F.col("a").alias("node"))
-               .agg(F.min(F.least("a", "b")).alias("label")),
-            total=F.sum(F.col("label").cast("decimal(38,0)")),
-            n=F.count(F.lit(1)))
-        prev_total = m0["total"]
-        n_nodes = int(m0["n"] or 0)
-        # round-loop partitioning derived from the observed node count
-        # (guide §2.2; see _CC_ROUND_ROWS_PER_TASK). The symmetric edge
-        # list is re-hashed ONCE onto the round layout keyed by the
-        # message-join key, so every round's sym-side Exchange
-        # disappears (the persisted InMemoryRelation advertises
-        # hash(a, p)); rounds shuffle only the shrinking label frame.
-        sess_p = int(sym.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "200"))
-        p = max(1, min(sess_p, -(-n_nodes // _CC_ROUND_ROWS_PER_TASK)))
-        sym_r = sym.repartition(p, "a").persist()
-        round_confs = {"spark.sql.shuffle.partitions": str(p)}
-        if p == 1:
-            # a single-partition round plan has nothing for AQE to adapt
-            # (no coalescing, no skew split, no join re-planning across
-            # one partition) while AQE still materializes every Exchange
-            # as its own job — at p == 1 each round collapses to ONE job
-            # under static planning (measured: 1.0 → 0.88 s round loop).
-            # Any graph big enough for p > 1 keeps AQE untouched.
-            round_confs["spark.sql.adaptive.enabled"] = "false"
-        with scoped_conf(sym.sparkSession, **round_confs):
-            for it in range(1, max_iter if n_nodes else 1):
+    with scoped_conf(spark, **{"spark.sql.codegen.wholeStage": "false"}):
+        # the canonical pair count sizes the whole loop, seed included
+        # (the symmetric list has 2·n rows), and the symmetric list is a
+        # free projection over these checkpointed blocks
+        can, n_can = checkpoint_count(can)
+        with sized_superstep(spark, 2 * n_can) as p:
+            can = can.coalesce(p)
+            sym = can.unionByName(can.select(F.col("b").alias("a"),
+                                             F.col("a").alias("b")))
+            # round 0 folded into the seed (r11 second pass): with
+            # identity labels the neighbor-min round is algebraically min
+            # over the CLOSED neighborhood — min(node, min of neighbors) —
+            # which is a single map-side-combinable aggregate over the
+            # symmetric edge list (every node appears as `a` in sym). The
+            # identity-label frame, the sym⋈labels message join and the
+            # union it fed are gone; the probe sum rides the seed's
+            # checkpoint job. Seed stays EAGER (measured, r11 fourth
+            # pass): folding its checkpoint job into round 1 via a lazy
+            # cut saved one job barrier but round 1's two readers re-ran
+            # the seed's post-exchange aggregation (345→599 tasks) — at
+            # scale a full node-keyed aggregate re-run costs more than the
+            # barrier it saves. A decimal(38,0) overflow keeps iterating
+            # to max_iter (NULL total never equals) rather than
+            # conflating with emptiness (ADVICE r11); empty input is the
+            # explicit n_can == 0 case.
+            labels, m0 = checkpoint_observe(
+                sym.groupBy(F.col("a").alias("node"))
+                   .agg(F.min(F.least("a", "b")).alias("label")),
+                total=F.sum(F.col("label").cast("decimal(38,0)")))
+            prev_total = m0["total"]
+            # the symmetric edge list is re-hashed ONCE onto the round
+            # layout keyed by the message-join key, so every round's
+            # sym-side Exchange disappears (the persisted
+            # InMemoryRelation advertises hash(a, p)); rounds shuffle
+            # only the shrinking label frame
+            sym_r = sym.repartition(p, "a").persist()
+            for it in range(1, max_iter if n_can else 1):
                 msgs = (sym_r.join(labels, sym_r["a"] == labels["node"],
                                    "inner")
                         .select(F.col("b").alias("node"), F.col("label")))
@@ -562,7 +534,6 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
                 if m["total"] is not None and m["total"] == prev_total:
                     break
                 prev_total = m["total"]
-    sym.unpersist()
     sym_r.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 

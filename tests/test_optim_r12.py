@@ -128,17 +128,26 @@ def test_shortest_path_length_only_matches_path_route(spark, nba,
 
 
 def test_band_width_split_constants(spark):
-    # join width scales up two orders before the window width, both stay
-    # p=1 for sf0.1-sized corpora and clamp at the session shuffle width
+    # the shared observed-width rule on a session wide enough (16) that an
+    # unclamped join width (7) is really checked: join width scales up two
+    # orders before the window width, both stay p=1 for sf0.1-sized
+    # corpora, and every width clamps at the session shuffle width
+    from nebula_spark.operators.traverse import observed_width
     from nebula_spark.pipeline import dedup as D
-    df = spark.range(1)          # any frame bound to the session
-    sess_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    for n, want_join in ((20_000, 1), (200_000, 7), (10**9, sess_p)):
-        assert D._band_width(df, n, D._LSH_JOIN_ROWS_PER_TASK) == \
-            min(want_join, sess_p)
-    assert D._band_width(df, 20_000) == 1          # window path, sf0.1
-    assert D._band_width(df, 200_000) == 1         # window path, sf1
-    assert D._band_width(df, 10**12) == sess_p     # cap never exceeded
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        for n, want_join in ((0, 1), (20_000, 1), (200_000, 7),
+                             (10**9, 16)):
+            assert observed_width(spark, n, D._LSH_JOIN_ROWS_PER_TASK) \
+                == want_join
+        assert observed_width(spark, 20_000, D._LSH_BAND_ROWS_PER_TASK) == 1
+        assert observed_width(spark, 200_000, D._LSH_BAND_ROWS_PER_TASK) == 1
+        assert observed_width(spark, 7_000_000,
+                              D._LSH_BAND_ROWS_PER_TASK) == 7
+        assert observed_width(spark, 10**12) == 16    # cap never exceeded
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_lsh_pairs_est_before_dedup_unchanged(spark):

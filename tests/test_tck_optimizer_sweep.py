@@ -112,7 +112,11 @@ def student_space(spark):
 
 
 @pytest.mark.parametrize(
-    "sc", SCENARIOS, ids=lambda s: f"{s.feature}::{s.name}"[:120])
+    "sc", SCENARIOS,
+    # getattr: with no corpus SCENARIOS is empty and pytest passes its
+    # NOTSET placeholder here (the empty set then skips with a reason)
+    ids=lambda s: (f"{getattr(s, 'feature', '')}::"
+                   f"{getattr(s, 'name', s)}")[:120])
 def test_optimizer_feature_results(sc, request, spark):
     if "@skip" in sc.tags:
         pytest.skip("upstream @skip — the reference's own runner "
