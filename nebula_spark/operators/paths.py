@@ -17,10 +17,12 @@ caller's one action-time job. Counted loops seed the frontier with
 each level the same way, so every frontier is materialized once, its size
 comes free off that job, and the visited set is a plain union of those
 checkpointed pieces — nothing is persisted per level, so no level
-re-derives an earlier one from its source. Each level job runs at the
-width its observed visited count calls for
-(:func:`~nebula_spark.operators.traverse.sized_superstep`). The loop-
-invariant edge frame is persisted once per call and unpersisted on exit.
+re-derives an earlier one from its source. The loop-invariant edge frame
+is persisted once per call and unpersisted on exit, except in the counted
+:func:`bfs_shortest_paths`, which checkpoints it for its row count: with
+that count bounding every level's shuffled rows, its level jobs run at
+the width the data calls for
+(:func:`~nebula_spark.operators.traverse.sized_superstep`).
 """
 
 from __future__ import annotations
@@ -101,40 +103,43 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                                        .distinct()), DST, "left_semi")
         return out
 
-    # counted mode: the level's (root, dst) distinct already dedups the
-    # hop output, so the edge frame skips its own distinct — that would
-    # shuffle the whole edge table at a width sized for the frontier.
-    # Persisted because every level joins it; the cache fills in level 1.
-    e = e.persist()
-    try:
-        frontier, n = checkpoint_count(
-            roots.withColumn(VID, F.col("root")))
-        visited = frontier.withColumn("dist", F.lit(0))
-        results, n_visited = None, n
-        for level in range(1, max_hops + 1):
-            if n == 0:
-                break
-            f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
-            nxt = (f.join(e, f[VID] == e[SRC], "inner")
-                   .select("root", F.col(DST).alias(VID)).distinct()
-                   .join(visited.select("root", VID), ["root", VID], "left_anti")
-                   .withColumn("dist", F.lit(level)))
-            with sized_superstep(e.sparkSession, n_visited):
-                nxt, n = checkpoint_count(nxt)
-            n_visited += n
-            results = nxt if results is None else results.unionByName(nxt)
-            visited = visited.unionByName(nxt)
-            frontier = nxt.select("root", VID)
-        if results is None:
-            results = visited.limit(0)
-        out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
-                             F.col("dist"))
-        if targets is not None:
-            out = out.join(F.broadcast(targets.select(F.col(VID).alias(DST))
-                                       .distinct()), DST, "left_semi")
-        return out
-    finally:
-        e.unpersist()
+    # counted mode: every level joins the edge set, so it is checkpointed
+    # once (skipped when there are no roots), and its row count comes off
+    # that job to bound what a level shuffles. It is not deduped: that
+    # would be its own shuffle job, and the level's (root, dst) distinct
+    # already drops the hops parallel edges repeat.
+    frontier, n = checkpoint_count(roots.withColumn(VID, F.col("root")))
+    e, n_edges = checkpoint_count(e) if n else (e, 0)
+    visited = frontier.withColumn("dist", F.lit(0))
+    results, n_roots, n_visited = None, n, n
+    for level in range(1, max_hops + 1):
+        if n == 0:
+            break
+        f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
+        nxt = (f.join(e, f[VID] == e[SRC], "inner")
+               .select("root", F.col(DST).alias(VID)).distinct()
+               .join(visited.select("root", VID), ["root", VID], "left_anti")
+               .withColumn("dist", F.lit(level)))
+        # rows the level shuffles: the hop output (a root's frontier vids
+        # are distinct, so at most n_edges per root; this also covers the
+        # edge side of a non-broadcast join) plus the visited side of the
+        # anti-join. The visited count alone would not bound an
+        # expanding frontier.
+        bound = min(n_roots, n) * n_edges + n_visited
+        with sized_superstep(e.sparkSession, bound):
+            nxt, n = checkpoint_count(nxt)
+        n_visited += n
+        results = nxt if results is None else results.unionByName(nxt)
+        visited = visited.unionByName(nxt)
+        frontier = nxt.select("root", VID)
+    if results is None:
+        results = visited.limit(0)
+    out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
+                         F.col("dist"))
+    if targets is not None:
+        out = out.join(F.broadcast(targets.select(F.col(VID).alias(DST))
+                                   .distinct()), DST, "left_semi")
+    return out
 
 
 def _single_tie_key(etype_order):
@@ -319,7 +324,6 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
     visited = frontier.select("root", "end_vid")
     if min_hops >= 1 and direction != "both":
         visited = visited.limit(0)
-    n_visited = n
     results: DataFrame | None = None
     if min_hops == 0:
         results = frontier.select(F.col("root").alias("start_vid"),
@@ -374,8 +378,7 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                                 "end_vid", "path")
                     .withColumn("_cyc", F.lit(True)),
                     allowMissingColumns=True)
-                with sized_superstep(e.sparkSession, n_visited):
-                    nxt, n = checkpoint_count(nxt)
+                nxt, n = checkpoint_count(nxt)
                 hits = (nxt.filter(F.col("_cyc"))
                         .select(F.col("root").alias("start_vid"),
                                 "end_vid", F.lit(level).alias("hops"),
@@ -388,9 +391,7 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                     hits.select(F.col("start_vid").alias("root"))
                     .distinct())
             else:
-                with sized_superstep(e.sparkSession, n_visited):
-                    nxt, n = checkpoint_count(nxt)
-            n_visited += n
+                nxt, n = checkpoint_count(nxt)
             step = nxt.select(F.col("root").alias("start_vid"), "end_vid",
                               F.lit(level).alias("hops"), "path")
             if level >= min_hops:
@@ -457,7 +458,7 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
     if edge_filter is not None:
         e = e.filter(edge_filter)
     path_type = _path_struct_type(e)
-    e = e.select(SRC, DST)
+    e = e.select(SRC, DST).distinct()
 
     roots = sources.select(F.col(VID).alias("root")).distinct()
     frontier = roots.withColumn("end_vid", F.col("root"))
@@ -476,7 +477,7 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
     if max_hops <= 3:           # lazy mode: one job at action time
         # loop-invariant deduped edge set — computed once inside the
         # caller's action-time job (see bfs_shortest_paths)
-        e = e.distinct().localCheckpoint(eager=False)
+        e = e.localCheckpoint(eager=False)
         for level in range(1, max_hops + 1):
             nxt = (frontier.join(e, frontier["end_vid"] == e[SRC], "inner")
                    .select("root", F.col(DST).alias("end_vid")).distinct()
@@ -490,12 +491,11 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
             frontier = nxt
         return results
 
-    # counted mode: no edge distinct, persisted edges, checkpointed state
-    # (see bfs_shortest_paths)
+    # counted mode: persisted edges (the cache fills in level 1),
+    # checkpointed frontiers and a visited set that unions them
     e = e.persist()
     try:
         frontier, n = checkpoint_count(frontier)
-        n_visited = n
         for level in range(1, max_hops + 1):
             if n == 0:
                 break
@@ -504,9 +504,7 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
             nxt = (f.join(e, f["end_vid"] == e[SRC], "inner")
                    .select("root", F.col(DST).alias("end_vid")).distinct()
                    .join(visited, ["root", "end_vid"], "left_anti"))
-            with sized_superstep(e.sparkSession, n_visited):
-                nxt, n = checkpoint_count(nxt)
-            n_visited += n
+            nxt, n = checkpoint_count(nxt)
             step = shape(nxt, level)
             results = step if results is None else results.unionByName(step)
             visited = visited.unionByName(nxt)
@@ -643,7 +641,7 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     lfront, lvisited = start_state(src_roots)
     rfront, rvisited = start_state(tgt_roots)
 
-    def advance(front, visited, e, n_front, n_visited):
+    def advance(front, visited, e, n_front):
         f = (F.broadcast(front)
              if n_front <= BROADCAST_FRONTIER_ROWS // 8 else front)
         uniq = ~F.array_contains(F.col("path"), _edge_id()) \
@@ -662,8 +660,7 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                           F.col("path").cast("string").desc()))
             nxt = (nxt.withColumn("_rn", F.row_number().over(w))
                    .filter(F.col("_rn") == 1).drop("_rn"))
-        with sized_superstep(e.sparkSession, n_visited):
-            return checkpoint_count(nxt)
+        return checkpoint_count(nxt)
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias("start_vid"),
@@ -687,22 +684,19 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     resolved: DataFrame | None = None
     n_resolved = 0
     n_l, n_r = n_src, n_tgt
-    nv_l, nv_r = n_src, n_tgt
     rounds = (max_hops + 1) // 2
     try:
         for r in range(1, rounds + 1):
-            new_l, n_l = advance(lfront, lvisited, fwd, n_l, nv_l)
+            new_l, n_l = advance(lfront, lvisited, fwd, n_l)
             lfront = new_l
             if n_l == 0:
                 break
-            nv_l += n_l
             lvisited = lvisited.unionByName(
                 new_l.select("root", "end_vid").distinct())
             round_meets = [meet(new_l, rfront, 2 * r - 1)]
             if 2 * r <= max_hops:
-                new_r, n_r = advance(rfront, rvisited, bwd, n_r, nv_r)
+                new_r, n_r = advance(rfront, rvisited, bwd, n_r)
                 if n_r:
-                    nv_r += n_r
                     rvisited = rvisited.unionByName(
                         new_r.select("root", "end_vid").distinct())
                     round_meets.append(meet(new_l, new_r, 2 * r))
@@ -799,12 +793,10 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     depth that just came back empty).
     """
     fwd_all = _prep_oriented(edges, direction, edge_filter, False)
-    # no edge distinct: the per-level (root, vid) distinct dedups hops,
-    # and an edge-table shuffle would run at the frontier-sized width
-    fwd = fwd_all.select(SRC, DST).persist()
+    fwd = fwd_all.select(SRC, DST).distinct().persist()
     bwd = fwd if direction == "both" else _prep_oriented(
         edges, _DIR_FLIP[direction], edge_filter, False
-        ).select(SRC, DST).persist()
+        ).select(SRC, DST).distinct().persist()
 
     src_roots, n_src = checkpoint_count(
         sources.select(F.col(VID).alias("root")).distinct())
@@ -818,14 +810,13 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     lfront = lvisited = src_roots.withColumn(VID, F.col("root"))
     rfront = rvisited = tgt_roots.withColumn(VID, F.col("root"))
 
-    def advance(front, visited, e, n_front, n_visited):
+    def advance(front, visited, e, n_front):
         f = F.broadcast(front) if n_front <= BROADCAST_FRONTIER_ROWS \
             else front
         nxt = (f.join(e, f[VID] == e[SRC], "inner")
                .select("root", F.col(DST).alias(VID)).distinct()
                .join(visited, ["root", VID], "left_anti"))
-        with sized_superstep(e.sparkSession, n_visited):
-            return checkpoint_count(nxt)
+        return checkpoint_count(nxt)
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias(SRC), F.col(VID).alias("_m"))
@@ -841,21 +832,18 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     resolved: DataFrame | None = None
     n_resolved = 0
     n_l, n_r = n_src, n_tgt
-    nv_l, nv_r = n_src, n_tgt
     rounds = (max_hops + 1) // 2
     try:
         for r in range(1, rounds + 1):
-            new_l, n_l = advance(lfront, lvisited, fwd, n_l, nv_l)
+            new_l, n_l = advance(lfront, lvisited, fwd, n_l)
             lfront = new_l
             if n_l == 0:
                 break
-            nv_l += n_l
             lvisited = lvisited.unionByName(new_l)
             round_meets = [meet(new_l, rfront, 2 * r - 1)]
             if 2 * r <= max_hops:
-                new_r, n_r = advance(rfront, rvisited, bwd, n_r, nv_r)
+                new_r, n_r = advance(rfront, rvisited, bwd, n_r)
                 if n_r:
-                    nv_r += n_r
                     rvisited = rvisited.unionByName(new_r)
                     round_meets.append(meet(new_l, new_r, 2 * r))
                 rfront = new_r

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
-    BROADCAST_FRONTIER_ROWS, checkpoint_count, oriented, sized_superstep,
+    BROADCAST_FRONTIER_ROWS, checkpoint_count, oriented,
 )
 
 
@@ -55,7 +55,6 @@ def k_hop_subgraph(edges: DataFrame, seeds: DataFrame, steps: int = 1,
         seeds.select(VID).distinct().withColumn("step", F.lit(0)))
     frontier = visited.select(VID)
     collected: DataFrame | None = None
-    n_visited = n
     for step in range(1, steps + 1):
         if n == 0:
             break
@@ -71,13 +70,11 @@ def k_hop_subgraph(edges: DataFrame, seeds: DataFrame, steps: int = 1,
         collected = hop if collected is None else collected.unionByName(hop)
         # The next level's size (termination + broadcast probe) rides
         # the materialization job via checkpoint_count — no dedicated
-        # frontier.count() stage per level (traverse.py:39).
+        # frontier.count() stage per level (:func:`checkpoint_count`).
         nxt = (hop.select(F.col(DST).alias(VID)).distinct()
                .join(visited.select(VID), VID, "left_anti")
                .withColumn("step", F.lit(step)))
-        with sized_superstep(e_all.sparkSession, n_visited):
-            nxt, n = checkpoint_count(nxt)
-        n_visited += n
+        nxt, n = checkpoint_count(nxt)
         visited = visited.unionByName(nxt)
         frontier = nxt.select(VID)
     # closing pass: edges among final-hop vertices back into the

@@ -52,19 +52,22 @@ SUPERSTEP_ROWS_PER_TASK = 2_000_000
 
 
 def observed_width(spark: SparkSession, n_rows: int,
-                   rows_per_task: int = SUPERSTEP_ROWS_PER_TASK) -> int:
+                   rows_per_task: int | None = None) -> int:
     """Shuffle width for ``n_rows`` observed rows:
-    ``clamp(ceil(n_rows / rows_per_task), 1, session width)``."""
+    ``clamp(ceil(n_rows / rows_per_task), 1, session width)``;
+    ``rows_per_task`` defaults to :data:`SUPERSTEP_ROWS_PER_TASK`."""
+    if rows_per_task is None:
+        rows_per_task = SUPERSTEP_ROWS_PER_TASK
     sess_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, min(sess_p, -(-n_rows // rows_per_task)))
 
 
 @contextmanager
-def sized_superstep(spark: SparkSession, n_rows: int,
-                    rows_per_task: int = SUPERSTEP_ROWS_PER_TASK
-                    ) -> Iterator[int]:
-    """Run the superstep jobs of the block at :func:`observed_width`;
-    yields the width.
+def sized_superstep(spark: SparkSession, n_rows: int) -> Iterator[int]:
+    """Run the superstep jobs of the block at :func:`observed_width` of
+    ``n_rows``; yields the width. ``n_rows`` must bound the rows every
+    shuffle in the block moves — a count of the loop's state alone does
+    not when the block joins a wider table or expands a frontier.
 
     At width 1 AQE is off too: a single-partition plan has nothing for
     AQE to adapt (no coalescing, no skew split, no join re-planning
@@ -77,7 +80,7 @@ def sized_superstep(spark: SparkSession, n_rows: int,
     jobs and (lazy) checkpoints planned inside the block; frames the
     caller materializes later plan at the session's settings.
     """
-    p = observed_width(spark, n_rows, rows_per_task)
+    p = observed_width(spark, n_rows)
     confs = {"spark.sql.shuffle.partitions": str(p)}
     if p == 1:
         confs["spark.sql.adaptive.enabled"] = "false"

@@ -5,7 +5,9 @@ A counted level loop seeds its frontier with one checkpoint job and keeps
 its visited set as a union of checkpointed pieces, so no level re-derives
 the seed from its source. The tests run each loop from a Python-list
 ``createDataFrame`` source (the source that used to be re-evaluated every
-level), bound the jobs it launches and compare its rows with plain Python.
+level), check that the source is computed once and compare the rows with
+plain Python. The counted BFS, whose levels run at an observed width,
+also bounds the jobs it launches and the count its widths come from.
 """
 
 from __future__ import annotations
@@ -21,8 +23,8 @@ EDGES = ([(i, i + 1) for i in range(20)] + [(2, 7), (2, 7), (3, 1)]
          + [(30 + i, 30 + (i + 1) % 5) for i in range(5)])
 
 
-def _edges(spark):
-    return spark.createDataFrame([(s, d, 0) for s, d in EDGES],
+def _edges(spark, edges=EDGES):
+    return spark.createDataFrame([(s, d, 0) for s, d in edges],
                                  "_src long, _dst long, _rank long")
 
 
@@ -30,10 +32,24 @@ def _sources(spark, vids):
     return spark.createDataFrame([(v,) for v in vids], f"{VID} long")
 
 
-def _bfs(roots, max_hops, root_visited=True):
+def _counted_sources(spark, vids):
+    """Source frame whose rows bump an accumulator each time they are
+    computed, so a test sees whether a loop re-derives its seed."""
+    from pyspark.sql import functions as F
+    reads = spark.sparkContext.accumulator(0)
+
+    def read(v):
+        reads.add(1)
+        return v
+
+    src = _sources(spark, vids)
+    return src.select(F.udf(read, "long")(VID).alias(VID)), reads
+
+
+def _bfs(roots, max_hops, root_visited=True, edges=EDGES):
     """Plain-Python level BFS: {(root, vid): dist} for 1 <= dist."""
     adj: dict[int, list[int]] = {}
-    for s, d in EDGES:
+    for s, d in edges:
         adj.setdefault(s, []).append(d)
     out = {}
     for r in roots:
@@ -54,9 +70,10 @@ def _bfs(roots, max_hops, root_visited=True):
 @contextmanager
 def _job_ids(spark, group):
     """Collect the ids of every Spark job the block launches. The blocks
-    below wrap only the operator call: the level jobs it runs before
-    returning its lazy result, one seed job plus at most two per level
-    (the frontier broadcast and the level's checkpoint)."""
+    below wrap only the operator call: the jobs it runs before returning
+    its lazy result. That is the seed checkpoint (its distinct's shuffle
+    stage runs as a job of its own under AQE), plus at most two jobs per
+    level (the frontier broadcast and the level's checkpoint)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     ids: list[int] = []
@@ -73,13 +90,15 @@ def _job_ids(spark, group):
 def test_counted_bfs_jobs_bounded_and_exact(spark):
     from nebula_spark.operators import bfs_shortest_paths
     hops = 6
-    edges, src = _edges(spark), _sources(spark, [0, 5, 30])
+    edges, (src, reads) = _edges(spark), _counted_sources(spark, [0, 5, 30])
     with _job_ids(spark, "superstep-bfs") as jobs:
         out = bfs_shortest_paths(edges, src, max_hops=hops)
     rows = out.collect()
     got = {(r._src, r._dst): r.dist for r in rows}
     assert got == _bfs([0, 5, 30], hops)
-    assert len(jobs) <= 2 * hops + 2, len(jobs)
+    assert reads.value == 3, reads.value     # the seed is computed once
+    # + 1: the edge checkpoint, whose count bounds each level's width
+    assert len(jobs) <= 2 * hops + 3, len(jobs)
 
 
 def test_counted_bfs_empty_sources_runs_no_level(spark):
@@ -92,30 +111,28 @@ def test_counted_bfs_empty_sources_runs_no_level(spark):
     assert out.collect() == []
 
 
-def test_counted_bfs_min_dists_jobs_bounded_and_exact(spark):
+def test_counted_bfs_min_dists_reads_seed_once_and_exact(spark):
     from nebula_spark.operators.paths import bfs_min_dists
     hops = 5
-    edges, src = _edges(spark), _sources(spark, [0, 30])
-    with _job_ids(spark, "superstep-min-dists") as jobs:
-        out = bfs_min_dists(edges, src, max_hops=hops)
+    edges, (src, reads) = _edges(spark), _counted_sources(spark, [0, 30])
+    out = bfs_min_dists(edges, src, max_hops=hops)
     rows = out.collect()
     got = {(r.start_vid, r.end_vid): r.hops for r in rows}
     # the root is not pre-visited: (30, 30) surfaces as its 5-cycle
     assert got == _bfs([0, 30], hops, root_visited=False)
     assert all(len(r.path) == r.hops for r in rows)
-    assert len(jobs) <= 2 * hops + 2, len(jobs)
+    assert reads.value == 2, reads.value
 
 
-def test_subgraph_jobs_bounded_and_exact(spark):
+def test_subgraph_reads_seed_once_and_exact(spark):
     from nebula_spark.operators import k_hop_subgraph
     steps = 4
-    edges, src = _edges(spark), _sources(spark, [0])
-    with _job_ids(spark, "superstep-subgraph") as jobs:
-        verts, _ = k_hop_subgraph(edges, src, steps=steps, direction="out")
+    edges, (src, reads) = _edges(spark), _counted_sources(spark, [0])
+    verts, _ = k_hop_subgraph(edges, src, steps=steps, direction="out")
     got = {(r[VID], r.step) for r in verts.collect()}
     want = {(v, k) for (_, v), k in _bfs([0], steps).items()} | {(0, 0)}
     assert got == want
-    assert len(jobs) <= 2 * steps + 2, len(jobs)
+    assert reads.value == 1, reads.value
 
 
 def test_sized_superstep_scopes_width_and_aqe(spark):
@@ -129,11 +146,50 @@ def test_sized_superstep_scopes_width_and_aqe(spark):
             assert p == 1
             assert conf.get("spark.sql.shuffle.partitions") == "1"
             assert conf.get("spark.sql.adaptive.enabled") == "false"
-        with sized_superstep(spark, 300, rows_per_task=50) as p:
-            assert p == 6
-            assert conf.get("spark.sql.shuffle.partitions") == "6"
+        with sized_superstep(spark, 13_000_000) as p:     # 2M rows a task
+            assert p == 7
+            assert conf.get("spark.sql.shuffle.partitions") == "7"
             assert conf.get("spark.sql.adaptive.enabled") == before[1]
+        with sized_superstep(spark, 10**12) as p:         # session cap
+            assert p == 8
         assert conf.get("spark.sql.shuffle.partitions") == "8"
         assert conf.get("spark.sql.adaptive.enabled") == before[1]
     finally:
         conf.set("spark.sql.shuffle.partitions", before[0])
+
+
+def test_counted_bfs_level_width_bounds_shuffled_rows(spark, monkeypatch):
+    """A level is sized by a count that bounds the rows it shuffles, not by
+    its visited count: from one root, a non-broadcast frontier joins the
+    whole edge table and the level expands to 40 vertices, so level 1 must
+    not be planned at width 1."""
+    import sys
+    from nebula_spark.operators import bfs_shortest_paths, paths
+    traverse = sys.modules["nebula_spark.operators.traverse"]
+    star = ([(0, i) for i in range(1, 41)]
+            + [(i, 100 + i) for i in range(1, 41)])
+    monkeypatch.setattr(paths, "BROADCAST_FRONTIER_ROWS", 0)
+    monkeypatch.setattr(traverse, "SUPERSTEP_ROWS_PER_TASK", 10)
+    widths: list[int] = []
+    sized = paths.sized_superstep
+
+    @contextmanager
+    def recording(session, n_rows):
+        with sized(session, n_rows) as p:
+            widths.append(p)
+            yield p
+
+    monkeypatch.setattr(paths, "sized_superstep", recording)
+    conf = spark.conf
+    before = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        out = bfs_shortest_paths(_edges(spark, star), _sources(spark, [0]),
+                                 max_hops=4)
+        got = {(r._src, r._dst): r.dist for r in out.collect()}
+    finally:
+        conf.set("spark.sql.shuffle.partitions", before)
+    assert got == _bfs([0], 4, edges=star)
+    # levels 1-3 run; level 3 reaches nothing, so level 4 never starts
+    assert len(widths) == 3, widths
+    assert widths[0] > 1, widths
