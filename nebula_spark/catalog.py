@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nebula_spark.session import local_frame
+
 # ALL key columns are namespaced with a leading underscore (the
 # reference's own pseudo-prop spellings: `GO … YIELD E._src, E._dst,
 # E._rank`) so USER properties named `vid`/`src`/`dst`/`rank` — legal in
@@ -229,8 +231,8 @@ class GraphSpace:
             rows.append(("space", "edges",
                          sum(c for k, _, c in rows if k == "edge")))
             self._stats = rows
-        return self.spark.createDataFrame(self._stats,
-                                          ["kind", "name", "count"])
+        return local_frame(self.spark, self._stats,
+                           ["kind", "name", "count"])
 
     def vertex(self, vids_or_df, tags: list[str] | None = None) -> DataFrame:
         """Assemble full vertices (all requested tags) for a vid set.
@@ -244,7 +246,7 @@ class GraphSpace:
                 vids_or_df = vids_or_df.withColumnRenamed("vid", VID)
             base = vids_or_df.select(VID).distinct()
         else:
-            base = self.spark.createDataFrame([(v,) for v in vids_or_df], [VID])
+            base = local_frame(self.spark, [(v,) for v in vids_or_df], [VID])
         for t in tags or list(self.tags):
             tdf = self.tag(t)
             props = [c for c in tdf.columns if c != VID]

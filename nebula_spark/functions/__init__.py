@@ -2,6 +2,5 @@
 
 from nebula_spark.functions.scalar import FUNCTIONS, call  # noqa: F401
 from nebula_spark.functions.graphfns import (  # noqa: F401
-    edge_struct, vertex_struct, path_nodes, path_relationships,
-    cos_similarity,
+    path_nodes, cos_similarity,
 )

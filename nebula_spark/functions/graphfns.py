@@ -1,15 +1,12 @@
-"""Graph-typed value helpers: vertex/edge/path struct columns and their
-accessor functions (SURVEY.md §2.9 "Graph-specific").
-
-Reference: id/src/dst/rank/properties/startNode/endNode/nodes/relationships/
-reversePath/hasSameEdgeInPath/hasSameVertexInPath in
-``src/common/function/FunctionManager.cpp`` operating on the Value runtime
-types (``src/common/datatypes/{Vertex,Edge,Path}.h``).
+"""Graph-typed value helpers over path columns (SURVEY.md §2.9
+"Graph-specific"): ``nodes(path)``, the reference's ``Path::toString``
+rendering, and the cosine similarity the pipeline ranks vectors with.
 
 Spark model (SURVEY.md §1.1): a vertex value is a struct (vid, tag props…),
 an edge value is a struct (src, dst, rank, props…), a path is an array of
-edge structs. Accessors are plain getField expressions — codegen-friendly,
-no UDFs.
+edge structs. The executor compiles the reference's accessor functions
+(id/src/dst/rank/reversePath/hasSameEdgeInPath/…, ``FunctionManager.cpp``)
+to getField expressions itself — codegen-friendly, no UDFs.
 """
 
 from __future__ import annotations
@@ -17,68 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from nebula_spark.catalog import DST, RANK, SRC, VID
-
-
-def vertex_struct(df_prefix: str = "", **props: Column) -> Column:
-    """Pack a vertex value: struct(vid, props…)."""
-    cols = [F.col(f"{df_prefix}{VID}").alias(VID)]
-    cols += [c.alias(n) for n, c in props.items()]
-    return F.struct(*cols)
-
-
-def edge_struct(*prop_names: str, prefix: str = "") -> Column:
-    """Pack an edge value: struct(src, dst, rank, props…)."""
-    cols = [F.col(f"{prefix}{SRC}").alias(SRC),
-            F.col(f"{prefix}{DST}").alias(DST),
-            F.col(f"{prefix}{RANK}").alias(RANK)]
-    cols += [F.col(f"{prefix}{p}").alias(p) for p in prop_names]
-    return F.struct(*cols)
-
-
-# accessor family: id(v), src(e), dst(e), rank(e) are getField expressions
-def vid_of(v: Column) -> Column:
-    return v[VID]
-
-
-def src_of(e: Column) -> Column:
-    return e[SRC]
-
-
-def dst_of(e: Column) -> Column:
-    return e[DST]
-
-
-def rank_of(e: Column) -> Column:
-    return e[RANK]
-
 
 def path_nodes(path: Column, start: Column) -> Column:
     """nodes(path): start vid + every step dst (FunctionManager `nodes`)."""
     return F.concat(F.array(start), F.transform(path, lambda p: p["d"]))
-
-
-def path_relationships(path: Column) -> Column:
-    """relationships(path): the edge structs."""
-    return path
-
-
-def reverse_path(path: Column) -> Column:
-    """reversePath: reverse step order and flip each edge's direction."""
-    return F.reverse(F.transform(path, lambda p: F.struct(
-        p["d"].alias("s"), p["s"].alias("d"), p["r"].alias("r"),
-        (-p["t"]).alias("t"))))
-
-
-def has_same_edge_in_path(path: Column) -> Column:
-    """hasSameEdgeInPath: any edge repeated within the path."""
-    return F.size(F.array_distinct(path)) < F.size(path)
-
-
-def has_same_vertex_in_path(path: Column, start: Column) -> Column:
-    """hasSameVertexInPath: any vertex repeated within the path."""
-    nodes = path_nodes(path, start)
-    return F.size(F.array_distinct(nodes)) < F.size(nodes)
 
 
 def format_path(p: Column, with_prop: bool = False) -> Column:

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from nebula_spark.functions.graphfns import cos_similarity
 from nebula_spark.pipeline.dedup import _md5_64
+from nebula_spark.session import local_frame
 
 
 def _as_double(c: Column) -> Column:
@@ -127,7 +128,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     n_cells = min(n_centroids, train.count())
     model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(train)
     spark = corpus.sparkSession
-    cents = F.broadcast(spark.createDataFrame(
+    cents = F.broadcast(local_frame(spark,
         [(i, [float(x) for x in ctr])
          for i, ctr in enumerate(model.clusterCenters())],
         "cent_id int, centroid array<double>"))

@@ -33,6 +33,7 @@ from nebula_spark.operators.paths import (all_paths, bfs_min_dists,
                                           bfs_min_paths, bidir_distances,
                                           bidir_min_paths)
 from nebula_spark.plans import ngql as A
+from nebula_spark.session import local_frame
 
 _AGG_FNS = {"count", "sum", "avg", "max", "min", "std", "collect",
             "collect_set", "bit_and", "bit_or", "bit_xor"}
@@ -1632,7 +1633,7 @@ def _vid_frame(space: GraphSpace, vids, piped: DataFrame | None,
         # (parser.yy vid : function_call_expression) — evaluate once on
         # the driver through the expression pipeline
         vids = _eval_const_vids(space, vids)
-    return space.spark.createDataFrame([(v,) for v in vids], [VID])
+    return local_frame(space.spark, [(v,) for v in vids], [VID])
 
 
 def _edge_union(space: GraphSpace, names: list[str]) -> DataFrame:
@@ -1643,7 +1644,7 @@ def _edge_union(space: GraphSpace, names: list[str]) -> DataFrame:
         vt = "bigint" if "int" in str((getattr(space, "options", None)
                                        or {}).get("vid_type", "")).lower() \
             else "string"
-        return space.spark.createDataFrame(
+        return local_frame(space.spark,
             [], f"{SRC} {vt}, {DST} {vt}, {RANK} bigint, _etype string")
     dfs = []
     for n in names:
@@ -2126,7 +2127,7 @@ def _exec_fetch_edges(space: GraphSpace, st: A.FetchEdgesStmt,
     else:
         flat = _eval_const_vids(space,
                                 [v for s, r, d in st.keys for v in (s, d)])
-        kdf = space.spark.createDataFrame(
+        kdf = local_frame(space.spark,
             [(flat[2 * i], int(k[1]), flat[2 * i + 1])
              for i, k in enumerate(st.keys)], [SRC, RANK, DST])
     out = kdf.join(e, [SRC, DST, RANK], "inner")
@@ -5298,12 +5299,14 @@ def _stats_reset(df: DataFrame, n: int) -> DataFrame:
     Toom-Cook multiplications (r10 finding: the shared-space UPDATE
     race hung the whole suite; reproduced single-threaded — digit
     counts 58→133→285→588→1194→2407→4832 over six statements). A
-    collect + createDataFrame on the already-materialized rows is one
+    collect + ``local_frame`` on the already-materialized rows is one
     cheap driver pass for DML-sized frames and fully resets the
-    estimate; larger frames keep the checkpoint (their stats then grow
-    only linearly — the keys side is a real-stats LocalRelation)."""
+    estimate (a ``createDataFrame`` list would be a LogicalRDD sized
+    at Long.MaxValue); larger frames keep the checkpoint (their stats
+    then grow only linearly — the keys side is a real-stats
+    LocalRelation)."""
     if 0 <= n <= _STATS_RESET_MAX_ROWS:
-        return df.sparkSession.createDataFrame(df.collect(), df.schema)
+        return local_frame(df.sparkSession, df.collect(), df.schema)
     return df
 
 
@@ -5667,7 +5670,7 @@ def _exec_insert(space: GraphSpace, st: A.InsertStmt) -> DataFrame:
                 row[i] = wkt_normalize(v)
             fixed.append(tuple(row))
         data = fixed
-    # all-NULL prop columns defeat createDataFrame's type inference —
+    # all-NULL prop columns defeat local_frame's type inference —
     # pull them out and re-add as typed nulls (an explicit NULL stores
     # NULL; it does NOT take the DDL default)
     all_null = [i for i, c in enumerate(cols)
@@ -5716,7 +5719,7 @@ def _exec_insert(space: GraphSpace, st: A.InsertStmt) -> DataFrame:
                             else int(_math.ceil(v - 0.5))
                 fixed.append(tuple(row))
             data = fixed
-    rows = space.spark.createDataFrame(data, cols)
+    rows = local_frame(space.spark, data, cols)
     dt = dict(table.dtypes)
     for c in null_cols:
         rows = rows.withColumn(c, F.lit(None).cast(dt.get(c, "string")))
@@ -5822,7 +5825,7 @@ def _exec_update(space: GraphSpace, st: A.UpdateStmt,
                  for i, k in enumerate(st.keys)]
         _check_vid_len(space, [v for k in ukeys for v in k[:nk]])
         keys_df = _cast_like(
-            space.spark.createDataFrame(ukeys, key), table)
+            local_frame(space.spark, ukeys, key), table)
     # SET expressions evaluate against the stored row (UpdateExecutor
     # read-modify-write). UPSERT initializes a MISSING key's props from
     # the schema DEFAULTS (UpdateNode.h:84), so later SET exprs read them
@@ -6066,7 +6069,7 @@ def _exec_delete(space: GraphSpace, st: A.DeleteStmt,
                     for i, k in enumerate(st.keys)]
             _check_vid_len(space, [v for k in keys for v in k[:2]])
             keys_df = _cast_like(
-                space.spark.createDataFrame(keys, [SRC, DST, RANK]),
+                local_frame(space.spark, keys, [SRC, DST, RANK]),
                 table)
         _rebind(space, st.name, True,
                 delete_rows(table, keys_df, [SRC, DST, RANK]))
@@ -6089,7 +6092,7 @@ def _exec_delete(space: GraphSpace, st: A.DeleteStmt,
     else:
         keys = _eval_const_vids(space, list(st.keys))
         _check_vid_len(space, keys)
-        vids = space.spark.createDataFrame([(v,) for v in keys], [VID])
+        vids = local_frame(space.spark, [(v,) for v in keys], [VID])
     if st.kind == "tag":
         # DELETE TAG <names|*> FROM … (DeleteTagsSentence
         # MutateSentences.h:564-580): drop the tag rows only — the vertex
@@ -6129,11 +6132,11 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
     if st.kind == "show_create":
         return _exec_show_create(space, st)
     if st.kind == "tags":
-        return spark.createDataFrame([(n,) for n in space.show_tags()],
-                                     "Name string")
+        return local_frame(spark, [(n,) for n in space.show_tags()],
+                           "Name string")
     if st.kind == "edges":
-        return spark.createDataFrame([(n,) for n in space.show_edges()],
-                                     "Name string")
+        return local_frame(spark, [(n,) for n in space.show_edges()],
+                           "Name string")
     if st.kind == "stats":
         return (space.show_stats()
                 .select(F.col("kind").alias("Type"),
@@ -6174,7 +6177,7 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
         rows_ = sorted((n, k.title(), s, f, "default")
                        for n, (k, s, f) in
                        getattr(space, "ft_indexes", {}).items())
-        return space.spark.createDataFrame(rows_, schema_t)
+        return local_frame(space.spark, rows_, schema_t)
     if st.kind == "rebuild_index":
         # REBUILD is a storage backfill job in the reference; Parquet
         # stats + Catalyst pushdown subsume the backfill, but the name
@@ -6196,7 +6199,7 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
                              StructField("Index Status", StringType())])
         rows_ = [(n, s) for k, n, s in getattr(space, "_index_jobs", [])
                  if k == st.entity]
-        return space.spark.createDataFrame(rows_, schema)
+        return local_frame(space.spark, rows_, schema)
     if st.kind == "show_indexes":
         # SHOW TAG/EDGE INDEXES [BY schema] (Index.feature: columns
         # `Index Name` / `By Tag`|`By Edge` / `Columns`; the BY form
@@ -6207,10 +6210,10 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
                        if ix.kind == st.entity
                        and (st.name is None or ix.on == st.name))
         if st.name is not None:
-            return spark.createDataFrame(
+            return local_frame(spark,
                 [(n, c) for n, _, c in items],
                 "`Index Name` string, Columns array<string>")
-        return spark.createDataFrame(
+        return local_frame(spark,
             items, f"`Index Name` string, `{by}` string, "
                    "Columns array<string>")
     if st.kind == "show_create_index":
@@ -6234,7 +6237,7 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
         if getattr(ix, "comment", None):
             stmt += f' comment "{ix.comment}"'
         label = f"{ix.kind.title()} Index Name"
-        return spark.createDataFrame(
+        return local_frame(spark,
             [(ix.name, stmt)],
             f"`{label}` string, `Create {ix.kind.title()} Index` string")
     if st.kind == "describe_index":
@@ -6245,7 +6248,7 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
             raise ValueError(f"Index not existed: {st.name}")
         reg = space.tags if ix.kind == "tag" else space.edges
         decl = dict((reg[ix.on].decl or []))
-        return spark.createDataFrame(
+        return local_frame(spark,
             [(c, decl.get(c, "unknown")) for c in ix.cols],
             "Field string, Type string")
     # describe — the reference's DescTagExecutor shape: PROP rows only
@@ -6265,7 +6268,7 @@ def _exec_admin(space: GraphSpace, st: A.AdminStmt) -> DataFrame:
         data = [(f, _REF_TYPE.get(t, t), "YES" if n else "NO",
                  None, None)
                 for f, t, n in space.describe(st.name) if f not in skip]
-    return spark.createDataFrame(
+    return local_frame(spark,
         data, "Field string, Type string, Null string, Default string, "
               "Comment string")
 
@@ -6723,7 +6726,7 @@ def _exec_ddl(space: GraphSpace, st) -> DataFrame:
                 StructField(DST, vt, False),
                 StructField(RANK, LongType(), False)]
         schema = StructType(key_cols + list(sd.schema.fields))
-        empty = space.spark.createDataFrame([], schema)
+        empty = local_frame(space.spark, [], schema)
         reg0 = space.tags if sd.kind == "tag" else space.edges
         if sd.name in reg0:
             # re-CREATE of an existing schema: IF NOT EXISTS is a no-op
@@ -6857,7 +6860,7 @@ def _exec_show_create(space: GraphSpace, st) -> DataFrame:
     head = st.entity.capitalize()
     schema = StructType([StructField(head, StringType()),
                          StructField(f"Create {head}", StringType())])
-    return space.spark.createDataFrame([(st.name, body)], schema)
+    return local_frame(space.spark, [(st.name, body)], schema)
 
 
 import re as _re
@@ -6927,7 +6930,7 @@ def _space_level(cat: SpaceCatalog, node,
         with getattr(sp0, "_mutex", None) or contextlib.nullcontext():
             return _exec_clear(sp0)
     if isinstance(st, A.AdminStmt) and st.kind == "spaces":
-        return cat.spark.createDataFrame(
+        return local_frame(cat.spark,
             [(n,) for n in cat.show_spaces()], "Name string")
     return None
 
@@ -6980,7 +6983,7 @@ def execute(space: GraphSpace | SpaceCatalog, query: str,
             raise SyntaxError("syntax error near `EXPLAIN'")
         plan = explain(cat.current(), rest,
                        formatted=not fmt.startswith("dot"))
-        return cat.spark.createDataFrame([(plan,)], ["plan"])
+        return local_frame(cat.spark, [(plan,)], ["plan"])
     node = A.parse(query, params)
     # script-local current-space pointer (seeded from the session's):
     # per-statement resolution reads THIS, so a concurrent thread's USE

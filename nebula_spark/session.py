@@ -13,11 +13,19 @@ machinery you want at 100 TB where static planning is always wrong.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType, TimestampType,
+                               _parse_datatype_string)
 
 # Arrow makes pandas_udf / mapInPandas / toPandas batch-transfer instead of
-# pickling row-at-a-time; non-negotiable for the pipeline operators.
+# pickling row-at-a-time; non-negotiable for the pipeline operators. It is
+# also how literal rows reach the JVM: local_frame hands driver-side rows
+# (vid lists, DML keys, INSERT rows, result tables) over as one Arrow table,
+# which Spark keeps as a LocalRelation — scanned in the JVM and sized by
+# Catalyst — instead of a Python RDD.
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     # reference null-normalization semantics (SURVEY §1.1): engine errors
@@ -68,6 +76,89 @@ _DEFAULTS = {
 
 
 from contextlib import contextmanager
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side rows as a DataFrame backed by a JVM ``LocalRelation``.
+
+    ``createDataFrame(<list>)`` parallelizes the rows into a Python RDD:
+    Spark plans it as ``Scan ExistingRDD``, every scan runs
+    ``defaultParallelism`` tasks through Python workers, and the
+    ``LogicalRDD`` has no size estimate, so every join against it is
+    planned as a sort-merge join that shuffles the other side. Handed an
+    Arrow table instead, Spark's ``ArrowConverters.toDataFrame`` builds a
+    ``LocalRelation`` (above
+    ``spark.sql.execution.arrow.localRelationThreshold`` a JVM-only Arrow
+    batch RDD): no Python worker scans it, and Catalyst sizes it and
+    broadcasts it when small — the reference ships literal vid lists and
+    mutation keys inside the storage request the same way.
+
+    ``schema`` is a ``StructType``, a DDL string, or a list of column
+    names; names infer the types exactly as ``createDataFrame`` does (so
+    empty rows need a typed schema). Values convert as on the list route:
+    a naive ``datetime`` in a TIMESTAMP column is Python-local time, as
+    ``collect()`` hands it out."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = [tuple(r) for r in rows]
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    elif not isinstance(schema, StructType):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    # nested fields go in nullable: PySpark's Arrow timestamp pass rebuilds
+    # nested struct arrays without their NOT NULL flags, and then fails to
+    # cast them back
+    schema = StructType([StructField(f.name, _nullable(f.dataType),
+                                     f.nullable) for f in schema.fields])
+    arrow = to_arrow_schema(schema)
+    cols = []
+    for i, f in enumerate(schema.fields):
+        conv = _arrow_value(f.dataType)
+        vals = [r[i] for r in rows]
+        cols.append(pa.array(list(map(conv, vals)) if conv else vals,
+                             type=arrow.field(i).type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every nested field, element and map value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType))
+                           for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+def _arrow_value(dt: DataType):
+    """A converter making a Python value of Spark type ``dt`` read as the
+    same instant through ``pyarrow.array``, or None when it passes as is.
+    TIMESTAMP values, wherever they nest, become UTC: a naive one is read
+    in the process-local zone, as the list route's ``time.mktime`` does
+    (pyarrow would read its wall clock as UTC)."""
+    def nulls(conv):
+        return lambda v: None if v is None else conv(v)
+    if isinstance(dt, TimestampType):
+        return nulls(lambda v: v.astimezone(timezone.utc))
+    if isinstance(dt, ArrayType):
+        el = _arrow_value(dt.elementType)
+        if el:
+            return nulls(lambda v: [el(x) for x in v])
+    if isinstance(dt, MapType):
+        kc, vc = _arrow_value(dt.keyType), _arrow_value(dt.valueType)
+        if kc or vc:
+            kc, vc = kc or (lambda k: k), vc or (lambda x: x)
+            return nulls(lambda v: [(kc(k), vc(x)) for k, x in v.items()])
+    if isinstance(dt, StructType):
+        fcs = [_arrow_value(f.dataType) for f in dt.fields]
+        if any(fcs):
+            return nulls(lambda v: tuple(c(x) if c else x
+                                         for c, x in zip(fcs, v)))
+    return None
 
 
 @contextmanager

@@ -7,9 +7,15 @@ the validators (graph/util/ExpressionUtils rewriteParameter); here
 `execute(space, query, params={...})` substitutes at parse time, folding
 `$p.a.b[0]` attribute/subscript chains to constants so LIMIT and pattern
 positions keep their integer/literal requirements.
+
+Tests whose answers need the reference's NBA data run on ``nba_space``
+(skipped when that corpus is absent); the literal `RETURN $p…` forms and
+the refusals need no data and run on ``space``, a df-backed space over
+the synthesized ``nba`` fixture (tests/conftest.py).
 """
 import pytest
 
+from nebula_spark.catalog import GraphSpace
 from nebula_spark.plans.executor import execute
 from test_tck_goldens import nba_space  # noqa: F401 — shared fixture
 
@@ -30,26 +36,36 @@ def rows(df):
     return [tuple(r) for r in df.collect()]
 
 
-def test_param_without_define(nba_space):
+@pytest.fixture(scope="module")
+def space(spark, nba):
+    sp = GraphSpace(spark, "nba_params")
+    for t in ("player", "team"):
+        sp.create_tag(t, df=nba[t])
+    for e in ("like", "serve"):
+        sp.create_edge(e, df=nba[e])
+    return sp
+
+
+def test_param_without_define(space):
     # [param-test-001]
     with pytest.raises(SyntaxError,
                        match=r"Direct output of variable is prohibited "
                              r"near `\$p_not_exist'"):
-        execute(nba_space, "RETURN $p_not_exist AS v", PARAMS)
+        execute(space, "RETURN $p_not_exist AS v", PARAMS)
 
 
-def test_param_null_predicates(nba_space):
+def test_param_null_predicates(space):
     # [param-test-002]
-    assert rows(execute(nba_space, "RETURN $p1 is not null AS v",
+    assert rows(execute(space, "RETURN $p1 is not null AS v",
                         PARAMS)) == [(True,)]
-    assert rows(execute(nba_space, "RETURN $p1 is null AS v",
+    assert rows(execute(space, "RETURN $p1 is null AS v",
                         PARAMS)) == [(False,)]
 
 
-def test_param_return_expressions(nba_space):
+def test_param_return_expressions(space):
     # [param-test-003] (the `$p5 AS lval` mixed-type list column is the
     # documented typed-array deviation — asserted separately without it)
-    df = execute(nba_space,
+    df = execute(space,
                  'RETURN abs($p1)+1 AS ival, $p2 and false AS bval, '
                  '$p3+"ef" AS sval, round($p4)+1.1 AS fval, '
                  "$p6.a AS mval, "
@@ -58,9 +74,9 @@ def test_param_return_expressions(nba_space):
     assert rows(df) == [(2, False, "Tim Duncanef", 4.1, 3, True)]
 
 
-def test_param_return_map(nba_space):
+def test_param_return_map(space):
     # [param-test-003] map value — struct-encoded like map literals
-    df = execute(nba_space, "RETURN $p6 AS v", PARAMS)
+    df = execute(space, "RETURN $p6 AS v", PARAMS)
     [(v,)] = rows(df)
     assert v.a == 3 and v.b is False and v.c == "Tim Duncan"
 
@@ -101,9 +117,9 @@ def test_param_match_limit(nba_space):
     assert rows(df) == [("Tim Duncan",)]
 
 
-def test_param_with_clause(nba_space):
+def test_param_with_clause(space):
     # [param-test-004] WITH clause
-    df = execute(nba_space,
+    df = execute(space,
                  "UNWIND abs($p1)+1 AS ival "
                  'WITH ival AS ival, $p2 and false AS bval, $p3+"ef" AS '
                  "sval, round($p4)+1.1 AS fval RETURN *", PARAMS)
@@ -143,7 +159,7 @@ def test_param_go(nba_space):
                                 ("Tony Parker", "Tim Duncan")]
 
 
-def test_param_vid_refusals(nba_space):
+def test_param_vid_refusals(space):
     # [param-test-006..009] vid positions refuse parameters
     for q in [
         "GO FROM $p3 OVER like yield like._dst as dst;",
@@ -157,66 +173,66 @@ def test_param_vid_refusals(nba_space):
         with pytest.raises(SyntaxError,
                            match=r"Parameter is not supported in vid "
                                  r"near `\$p[34]'"):
-            execute(nba_space, q, PARAMS)
+            execute(space, q, PARAMS)
 
 
-def test_param_assign_refusal(nba_space):
+def test_param_assign_refusal(space):
     # [param-test-006] $var= whose source reads a parameter-named var
     with pytest.raises(SyntaxError,
                        match=r"Variable definition conflicts with a "
                              r"parameter near `\$p1'"):
-        execute(nba_space,
+        execute(space,
                 '$p1=GO FROM "Tim Duncan" OVER like WHERE '
                 "like.likeness>$p1 yield like._dst as dst; "
                 "GO FROM $p1.dst OVER like YIELD DISTINCT "
                 "$$.player.name AS name", PARAMS)
 
 
-def test_param_sample_refusal(nba_space):
+def test_param_sample_refusal(space):
     # [param-test-006] SAMPLE clause
     with pytest.raises(SyntaxError,
                        match=r"Parameter is not supported in sample "
                              r"clause near `\[1,\$p1\]'"):
-        execute(nba_space,
+        execute(space,
                 'GO 1 TO 2 STEPS FROM "Tim Duncan" OVER like YIELD '
                 "like._dst AS dst SAMPLE [1,$p1]", PARAMS)
 
 
-def test_param_fetch_bare_variable(nba_space):
+def test_param_fetch_bare_variable(space):
     # [param-test-007]
     with pytest.raises(SyntaxError,
                        match=r"Variable is not supported in vid near "
                              r"`\$nonexist'"):
-        execute(nba_space, "FETCH PROP ON player $nonexist", PARAMS)
+        execute(space, "FETCH PROP ON player $nonexist", PARAMS)
 
 
-def test_param_undefined(nba_space):
+def test_param_undefined(space):
     # [param-test-010] undefined parameters, joined in appearance order
     with pytest.raises(ValueError,
                        match=r"Undefined parameters: unknown_distance$"):
-        execute(nba_space,
+        execute(space,
                 "MATCH (v:player) where v.player.age < $unknown_distance "
                 "RETURN v.player.name AS n", PARAMS)
     with pytest.raises(ValueError,
                        match=r"Undefined parameters: unknown_distance, "
                              r"unknown_factor"):
-        execute(nba_space,
+        execute(space,
                 "LOOKUP ON player WHERE player.age < "
                 "$unknown_distance+$unknown_factor YIELD id(vertex)",
                 PARAMS)
     with pytest.raises(ValueError,
                        match=r"Undefined parameters: unknown_distance"):
-        execute(nba_space,
+        execute(space,
                 "GET SUBGRAPH FROM 'Tim Duncan' WHERE "
                 "like.likeness < $unknown_distance YIELD edges as e",
                 PARAMS)
 
 
-def test_param_limit_type_error(nba_space):
+def test_param_limit_type_error(space):
     # [param-test-010] non-integer parameter in LIMIT
     with pytest.raises(ValueError,
                        match=r"LIMIT should be of type integer"):
-        execute(nba_space,
+        execute(space,
                 "MATCH (v:player) RETURN v LIMIT $p6", PARAMS)
 
 
