@@ -3,7 +3,9 @@
 Reference executors: ``src/graph/executor/algo/BFSShortestPathExecutor.cpp``
 (1-283), ``MultiShortestPathExecutor.cpp`` (1-404), ``AllPathsExecutor.cpp``
 (1-764); MATCH shortestPath via ``SingleShortestPath.cpp:214-265`` (bidir
-meet-in-the-middle). All are single-node BFS over RPC-fetched adjacency.
+meet-in-the-middle). All are single-node BFS over RPC-fetched adjacency,
+and the shortest-path ones share one expansion — a GetNeighbors hop plus a
+visited map — differing only in what they keep.
 
 Spark-first: level-synchronous multi-source BFS — the frontier is a
 DataFrame keyed (root, vid); a hop is one join against the edge table; the
@@ -11,21 +13,30 @@ visited set is a DataFrame anti-joined each level. This is the Pregel
 pattern expressed in DataFrame ops, scales with the cluster, and (unlike the
 reference) handles all (src,dst) pairs in one run instead of per-pair RPCs.
 
-State and width: small fixed depths chain every level lazily into the
-caller's one action-time job. Counted loops seed the frontier with
-:func:`~nebula_spark.operators.traverse.checkpoint_count` and checkpoint
-each level the same way, so every frontier is materialized once, its size
-comes free off that job, and the visited set is a plain union of those
-checkpointed pieces — nothing is persisted per level, so no level
-re-derives an earlier one from its source. The loop-invariant edge frame
-is persisted once per call and unpersisted on exit, except in the counted
-:func:`bfs_shortest_paths`, which checkpoints it for its row count: with
-that count bounding every level's shuffled rows, its level jobs run at
-the width the data calls for
+One level step per frontier kind serves every search here:
+:func:`_id_step` advances ``(root, vid)`` pairs (the distance searches),
+:func:`_path_step` advances ``(root, end_vid, path)`` rows (the
+minimal-path searches). Each one-sided search has ONE level loop whose two
+modes differ only where a level is materialized: up to
+:data:`LAZY_MAX_HOPS` levels chain lazily into the caller's one
+action-time job; deeper searches run counted — the seed and every level
+go through :func:`~nebula_spark.operators.traverse.checkpoint_count`, so
+each frontier is materialized once, its size comes free off that job (the
+empty-frontier stop and the broadcast probe), and the visited set is a
+plain union of those checkpointed pieces. The two meet-in-the-middle
+searches share one round driver (:func:`_meet_rounds`) and keep only their
+own meet and final reduction.
+
+The loop-invariant edge frame is persisted once per counted call and
+unpersisted on exit, except in the counted :func:`bfs_shortest_paths`,
+which checkpoints it for its row count: with that count bounding every
+level's shuffled rows, its level jobs run at the width the data calls for
 (:func:`~nebula_spark.operators.traverse.sized_superstep`).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,11 +47,63 @@ from nebula_spark.operators.traverse import (
     checkpoint_observe, oriented, sized_superstep, traverse,
 )
 
+# Job shape (r11, guide §1.2): a search of at most this many levels chains
+# them lazily into the caller's single action-time job — no per-level
+# materialization job, and the join strategy per level is left to AQE's
+# runtime stats. Deeper searches count every level: early termination on
+# frontier death is what makes an open-ended depth survivable.
+LAZY_MAX_HOPS = 3
+
+_DIR_FLIP = {"out": "in", "in": "out", "both": "both"}
+
+
+def _id_step(frontier: DataFrame, e: DataFrame, visited: DataFrame,
+             n: int | None) -> DataFrame:
+    """One level of a ``(root, vid)`` frontier: the ``(root, vid)`` pairs
+    first reached one hop on. ``n`` is the frontier's counted size — a
+    counted frontier is broadcast while small; a lazy one (``None``)
+    leaves the join strategy to AQE."""
+    f = frontier if n is None or n > BROADCAST_FRONTIER_ROWS \
+        else F.broadcast(frontier)
+    return (f.join(e, f[VID] == e[SRC], "inner")
+            .select("root", F.col(DST).alias(VID)).distinct()
+            .join(visited, ["root", VID], "left_anti"))
+
+
+def _path_step(frontier: DataFrame, e: DataFrame, visited: DataFrame,
+               n: int | None, mode: str,
+               etype_order: list | None) -> tuple[DataFrame, DataFrame]:
+    """One level of a ``(root, end_vid, path)`` frontier over oriented
+    edges (:func:`_prep_oriented`). Returns the first-reached paths — one
+    per pair under ``mode="single"`` — and the whole hop output they were
+    cut from (BOTH-direction root closures read it). Path rows are wide,
+    so a counted frontier broadcasts below an eighth of the id-pair
+    threshold."""
+    f = frontier if n is None or n > BROADCAST_FRONTIER_ROWS // 8 \
+        else F.broadcast(frontier)
+    # direction-normalized edge uniqueness (Edge.cpp:128-136): only
+    # relevant for closed walks back to the root — a BOTH-direction walk
+    # may not return over its arrival edge
+    uniq = ~F.array_contains(F.col("path"), _edge_id()) \
+        & ~F.array_contains(F.col("path"), _edge_id_reversed())
+    expanded = (f.alias("__f")
+                .join(e.alias("__e"),
+                      F.col("__f.end_vid") == F.col(f"__e.{SRC}"), "inner")
+                .filter(uniq)
+                .select("root", F.col(DST).alias("end_vid"),
+                        F.concat("path",
+                                 F.array(_new_edge_struct())).alias("path")))
+    nxt = expanded.join(visited, ["root", "end_vid"], "left_anti")
+    if mode == "single":
+        nxt = _pick_single(nxt, ["root", "end_vid"], etype_order)
+    return nxt, expanded
+
 
 def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                        targets: DataFrame | None = None, max_hops: int = 10,
                        direction: str = "out",
-                       edge_filter: Column | None = None) -> DataFrame:
+                       edge_filter: Column | None = None,
+                       root_cycles: bool = False) -> DataFrame:
     """Multi-source BFS shortest distances: (src, dst, dist).
 
     FIND SHORTEST PATH parity at the distance level: for every source vid,
@@ -48,40 +111,62 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
     restricted to a target set. Level-synchronous: a vid enters the result at
     the level it is first reached — per-root visited set enforces minimality.
 
+    ``root_cycles=True`` does not pre-visit the root, so ``(s, s)`` is
+    reported at its shortest closed-walk length. The rows are then exactly
+    the ``(start, end, hops)`` set of :func:`bfs_min_paths`
+    ``mode="single"`` without any path struct — the MATCH ``shortestPath``
+    route for statements that read only ``length(p)``. A single-mode path
+    search keeps one row per pair at its first-reached level, which is what
+    the per-level ``distinct`` keeps here; its edge-uniqueness filter is
+    vacuous on surviving rows in a fixed direction (a path repeating a
+    directed edge would have to re-reach a visited vertex, or re-leave the
+    root, whose onward targets were reached two levels earlier).
+    ``direction="both"`` is rejected with it: BOTH-mode closures depend on
+    the frontier's edge lists (see :func:`bfs_min_paths`).
+
     Scale: visited/frontier are (root, vid) pairs — worst case |V|² for
     all-pairs, so callers pick source sets, exactly like the reference's
-    FROM/TO clauses. The frontier broadcasts while small; its size comes
-    free off the checkpoint job (:func:`checkpoint_count`), so termination
-    and the broadcast probe add no per-level stage.
-
-    Job shape (r11, guide §1.2): a SMALL fixed depth (``max_hops <= 3``)
-    chains all levels lazily into the caller's single action-time job —
-    no per-level materialization job, no persist churn; join strategy per
-    level is left to AQE's runtime stats. Deeper searches keep the
-    counted per-level loop (early termination on frontier death is what
-    makes an open-ended depth survivable).
+    FROM/TO clauses. Up to :data:`LAZY_MAX_HOPS` levels chain into the
+    caller's job; a deeper search counts its levels, its frontier
+    broadcasts while small, and its size comes free off the checkpoint job
+    (:func:`checkpoint_count`), so termination and the broadcast probe add
+    no per-level stage.
     """
+    if root_cycles and direction == "both":
+        raise ValueError("bfs_shortest_paths does not support root_cycles "
+                         "with direction='both'")
     e = oriented(edges, direction)
     if edge_filter is not None:
         e = e.filter(edge_filter)
     e = e.select(SRC, DST)
     roots = sources.select(F.col(VID).alias("root")).distinct()
+    frontier = roots.withColumn(VID, F.col("root"))
 
-    if max_hops <= 3:           # lazy mode: one job at action time
-        frontier = roots.withColumn(VID, F.col("root"))
-        visited = frontier.withColumn("dist", F.lit(0))
-        results: DataFrame | None = None
+    lazy = max_hops <= LAZY_MAX_HOPS
+    if lazy:
         # the deduped edge set is loop-invariant but would be re-embedded
         # in every level's subtree of the single action-time plan; a LAZY
         # localCheckpoint computes it once inside that job (no dedicated
         # materialization job) and later levels read the blocks
         e = e.distinct().localCheckpoint(eager=False)
-        for level in range(1, max_hops + 1):
-            nxt = (frontier.join(e, frontier[VID] == e[SRC], "inner")
-                   .select("root", F.col(DST).alias(VID)).distinct()
-                   .join(visited.select("root", VID), ["root", VID],
-                         "left_anti")
-                   .withColumn("dist", F.lit(level)))
+        n = None
+    else:
+        # every level joins the edge set, so it is checkpointed once
+        # (skipped when there are no roots), and its row count comes off
+        # that job to bound what a level shuffles. It is not deduped: that
+        # would be its own shuffle job, and the level's (root, dst)
+        # distinct already drops the hops parallel edges repeat.
+        frontier, n = checkpoint_count(frontier)
+        e, n_edges = checkpoint_count(e) if n else (e, 0)
+        n_roots, n_visited = n, (0 if root_cycles else n)
+    visited = frontier.limit(0) if root_cycles else frontier
+    levels: list[DataFrame] = []
+    for level in range(1, max_hops + 1):
+        if n == 0:
+            break
+        nxt = _id_step(frontier, e, visited, n) \
+            .withColumn("dist", F.lit(level))
+        if lazy:
             # each level's output is read by THREE later subtrees (results
             # union, every later level's visited anti-join, the next
             # frontier) — without a cut the static plan re-embeds level L
@@ -92,48 +177,21 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
             # racing readers just re-read shuffle files (the r11 item-14
             # rule), and no dedicated job is paid.
             nxt = nxt.localCheckpoint(eager=False)
-            step = nxt.select("root", VID, "dist")
-            results = step if results is None else results.unionByName(step)
-            visited = visited.unionByName(step)
-            frontier = nxt.select("root", VID)
-        out = results.select(F.col("root").alias(SRC),
-                             F.col(VID).alias(DST), F.col("dist"))
-        if targets is not None:
-            out = out.join(F.broadcast(targets.select(F.col(VID).alias(DST))
-                                       .distinct()), DST, "left_semi")
-        return out
-
-    # counted mode: every level joins the edge set, so it is checkpointed
-    # once (skipped when there are no roots), and its row count comes off
-    # that job to bound what a level shuffles. It is not deduped: that
-    # would be its own shuffle job, and the level's (root, dst) distinct
-    # already drops the hops parallel edges repeat.
-    frontier, n = checkpoint_count(roots.withColumn(VID, F.col("root")))
-    e, n_edges = checkpoint_count(e) if n else (e, 0)
-    visited = frontier.withColumn("dist", F.lit(0))
-    results, n_roots, n_visited = None, n, n
-    for level in range(1, max_hops + 1):
-        if n == 0:
-            break
-        f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
-        nxt = (f.join(e, f[VID] == e[SRC], "inner")
-               .select("root", F.col(DST).alias(VID)).distinct()
-               .join(visited.select("root", VID), ["root", VID], "left_anti")
-               .withColumn("dist", F.lit(level)))
-        # rows the level shuffles: the hop output (a root's frontier vids
-        # are distinct, so at most n_edges per root; this also covers the
-        # edge side of a non-broadcast join) plus the visited side of the
-        # anti-join. The visited count alone would not bound an
-        # expanding frontier.
-        bound = min(n_roots, n) * n_edges + n_visited
-        with sized_superstep(e.sparkSession, bound):
-            nxt, n = checkpoint_count(nxt)
-        n_visited += n
-        results = nxt if results is None else results.unionByName(nxt)
-        visited = visited.unionByName(nxt)
+        else:
+            # rows the level shuffles: the hop output (a root's frontier
+            # vids are distinct, so at most n_edges per root; this also
+            # covers the edge side of a non-broadcast join) plus the
+            # visited side of the anti-join. The visited count alone
+            # would not bound an expanding frontier.
+            bound = min(n_roots, n) * n_edges + n_visited
+            with sized_superstep(e.sparkSession, bound):
+                nxt, n = checkpoint_count(nxt)
+            n_visited += n
+        levels.append(nxt)
         frontier = nxt.select("root", VID)
-    if results is None:
-        results = visited.limit(0)
+        visited = visited.unionByName(frontier)
+    results = reduce(DataFrame.unionByName, levels) if levels \
+        else frontier.limit(0).withColumn("dist", F.lit(0))
     out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
                          F.col("dist"))
     if targets is not None:
@@ -157,6 +215,19 @@ def _single_tie_key(etype_order):
         F.col("path"),
         lambda h: F.lit(-2) * m[h["et"]]
         + F.when(h["t"] > 0, F.lit(1)).otherwise(F.lit(0)))
+
+
+def _pick_single(df: DataFrame, keys: list[str],
+                 etype_order: list | None) -> DataFrame:
+    """``mode="single"``: one deterministic path per ``keys`` group — the
+    lowest :func:`_single_tie_key`, then the greatest serialized path."""
+    from pyspark.sql.window import Window
+    w = (Window.partitionBy(*keys)
+         .orderBy(_single_tie_key(etype_order),
+                  F.col("path").cast("string").desc()))
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
+
 
 def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                   direction: str = "out", mode: str = "all",
@@ -211,123 +282,30 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
       serve/serve/like triangle is invisible). So in BOTH mode the root
       IS pre-visited and the ``(s, s)`` rows are the IN-LOOP closures of
       minimal frontier paths — reference-exact, and still free of the
-      enumerate fallback's exponential plan.
+      enumerate fallback's exponential plan. Closures need the counted
+      loop (they stop being looked for once a root has one).
+
+    Job shape: unlike :func:`bfs_shortest_paths`, the lazy levels are NOT
+    cut with a lazy checkpoint (measured, r11 fourth pass): the same
+    per-level cut regressed this operator ~2× (min 1.15→2.33 s on
+    shortest_path_fn) — here the level output carries the materialized
+    path-struct arrays, and the level tree's joins are all broadcast-side
+    (no shuffle directly below the cut), so racing readers recompute the
+    map-only segment into block storage instead of re-reading shuffle
+    files. Same family as the minhash lazy-signature negative result
+    (item 14).
 
     Output schema matches :func:`~nebula_spark.operators.traverse.traverse`:
     ``(start_vid, end_vid, hops, path)`` with path an array of edge structs
     ``(s, d, r, t, et)``.
     """
-    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                                   StructField, StructType)
-    from pyspark.sql.window import Window
-
     if min_hops > 1:
         raise ValueError("bfs_min_paths requires min_hops <= 1; route "
                          "higher lower bounds to the enumerate fallback")
-    e = oriented(edges, direction, self_loop_once=self_loop_once)
-    if edge_filter is not None:
-        e = e.filter(edge_filter)
-    if "_etype" not in e.columns:
-        e = e.withColumn("_etype", F.lit(""))
-    e = e.select(SRC, DST, RANK, "_dir", "_etype")
-    # r11 job shape (guide §1.2): a small fixed depth without the
-    # BOTH-direction closure rule chains all levels lazily — one job at
-    # action time instead of a checkpoint job per level; AQE picks the
-    # per-level join strategy from runtime stats. Deep/open-ended ranges
-    # keep the counted loop (frontier-death termination is what bounds
-    # them).
-    lazy = max_hops <= 3 and not (direction == "both" and min_hops >= 1)
-    if not lazy:
-        e = e.persist()
-    else:
-        # loop-invariant edge frame, re-embedded per level in the single
-        # action-time plan — lazy-checkpoint so it computes once in that
-        # job and later levels read blocks (see bfs_shortest_paths)
-        e = e.localCheckpoint(eager=False)
-    path_type = ArrayType(StructType([
-        StructField("s", e.schema[SRC].dataType),
-        StructField("d", e.schema[DST].dataType),
-        StructField("r", e.schema[RANK].dataType),
-        StructField("t", IntegerType()),
-        StructField("et", StringType()),
-    ]))
-    new_edge = F.struct(F.col(SRC).alias("s"), F.col(DST).alias("d"),
-                        F.col(RANK).alias("r"), F.col("_dir").alias("t"),
-                        F.col("_etype").alias("et"))
-
+    e = _prep_oriented(edges, direction, edge_filter, self_loop_once)
     roots = sources.select(F.col(VID).alias("root")).distinct()
-
-    if lazy:
-        frontier = (roots.withColumn("end_vid", F.col("root"))
-                    .withColumn("path", F.array().cast(path_type)))
-        visited = roots.withColumn("end_vid", F.col("root"))
-        if min_hops >= 1 and direction != "both":
-            visited = visited.limit(0)
-        results = None
-        if min_hops == 0:
-            results = frontier.select(F.col("root").alias("start_vid"),
-                                      "end_vid", F.lit(0).alias("hops"),
-                                      "path")
-        for level in range(1, max_hops + 1):
-            uniq = ~F.array_contains(F.col("path"), _edge_id()) \
-                & ~F.array_contains(F.col("path"), _edge_id_reversed())
-            nxt = (frontier.alias("__f")
-                   .join(e.alias("__e"),
-                         F.col("__f.end_vid") == F.col(f"__e.{SRC}"),
-                         "inner")
-                   .filter(uniq)
-                   .select("root", F.col(DST).alias("end_vid"),
-                           F.concat("path", F.array(new_edge)).alias("path"))
-                   .join(visited, ["root", "end_vid"], "left_anti"))
-            if mode == "single":
-                w = (Window.partitionBy("root", "end_vid")
-                     .orderBy(_single_tie_key(etype_order),
-                              F.col("path").cast("string").desc()))
-                nxt = (nxt.withColumn("_rn", F.row_number().over(w))
-                       .filter(F.col("_rn") == 1).drop("_rn"))
-            # NOT lazy-checkpointed (measured, r11 fourth pass): the same
-            # per-level cut that wins in bfs_shortest_paths regressed this
-            # operator ~2× (min 1.15→2.33 s on shortest_path_fn) — here
-            # the level output carries the materialized path-struct
-            # arrays, and the level tree's joins are all broadcast-side
-            # (no shuffle directly below the cut), so racing readers
-            # recompute the map-only segment into block storage instead
-            # of re-reading shuffle files. Same family as the minhash
-            # lazy-signature negative result (item 14).
-            step = nxt.select(F.col("root").alias("start_vid"), "end_vid",
-                              F.lit(level).alias("hops"), "path")
-            if level >= min_hops:
-                results = step if results is None \
-                    else results.unionByName(step)
-            visited = visited.unionByName(
-                nxt.select("root", "end_vid").distinct())
-            frontier = nxt
-        if results is None:
-            results = (frontier.limit(0)
-                       .select(F.col("root").alias("start_vid"), "end_vid",
-                               F.lit(0).alias("hops"), "path"))
-        return results
-
-    frontier, n = checkpoint_count(
-        roots.withColumn("end_vid", F.col("root"))
-        .withColumn("path", F.array().cast(path_type)))
-    # per-root visited set: a vid joins it at its first-reached level, so
-    # later levels cannot re-emit the pair — the minimality invariant.
-    # out/in with min_hops >= 1: the root itself is NOT pre-visited — the
-    # pair (s, s) is then reported at its shortest ≥1-hop cycle length,
-    # matching the enumerate semantics (traverse emits cycle paths; the
-    # per-pair min keeps the shortest). Minimal walks revisit no vertex
-    # *except* the root as a cycle endpoint, so this is the only
-    # visited-set exception. BOTH direction: the root IS pre-visited (the
-    # exception is unsound there — see docstring) and (s, s) rows come
-    # from the in-loop closure rule below.
-    visited = frontier.select("root", "end_vid")
-    if min_hops >= 1 and direction != "both":
-        visited = visited.limit(0)
-    results: DataFrame | None = None
-    if min_hops == 0:
-        results = frontier.select(F.col("root").alias("start_vid"),
-                                  "end_vid", F.lit(0).alias("hops"), "path")
+    frontier = (roots.withColumn("end_vid", F.col("root"))
+                .withColumn("path", F.array().cast(_path_struct_type(e))))
     # BOTH-direction root closures: the reference's level-pruned BFS
     # reports a (s, s) row only when the closing walk's prefix is itself
     # a minimal path (SingleShortestPath.cpp never extends a pruned
@@ -337,186 +315,77 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
     # IN-LOOP from the minimal frontier — not by an exact cycle search,
     # which would be mathematically complete but reference-divergent.
     collect_closures = direction == "both" and min_hops >= 1
+    lazy = max_hops <= LAZY_MAX_HOPS and not collect_closures
+    if lazy:
+        # loop-invariant edge frame, re-embedded per level in the single
+        # action-time plan — lazy-checkpoint so it computes once in that
+        # job and later levels read blocks
+        e = e.localCheckpoint(eager=False)
+        n = None
+    else:
+        e = e.persist()
+        frontier, n = checkpoint_count(frontier)
+
+    def shape(level_df: DataFrame, level: int) -> DataFrame:
+        return level_df.select(F.col("root").alias("start_vid"), "end_vid",
+                               F.lit(level).alias("hops"), "path")
+
+    # per-root visited set: a vid joins it at its first-reached level, so
+    # later levels cannot re-emit the pair — the minimality invariant.
+    # out/in with min_hops >= 1: the root itself is NOT pre-visited — the
+    # pair (s, s) is then reported at its shortest ≥1-hop cycle length,
+    # matching the enumerate semantics (traverse emits cycle paths; the
+    # per-pair min keeps the shortest). Minimal walks revisit no vertex
+    # *except* the root as a cycle endpoint, so this is the only
+    # visited-set exception. BOTH direction: the root IS pre-visited (the
+    # exception is unsound there — see docstring) and (s, s) rows come
+    # from the in-loop closures.
+    visited = frontier.select("root", "end_vid")
+    if min_hops >= 1 and direction != "both":
+        visited = visited.limit(0)
+    levels = [shape(frontier, 0)] if min_hops == 0 else []
+    closures: list[DataFrame] = []
     closed = roots.limit(0)                  # roots whose min closure found
-    cyc_results: DataFrame | None = None
     try:
         for level in range(1, max_hops + 1):
             if n == 0:
                 break
-            f = (F.broadcast(frontier)
-                 if n <= BROADCAST_FRONTIER_ROWS // 8 else frontier)
-            # direction-normalized edge uniqueness (Edge.cpp:128-136): only
-            # relevant for the closed-walk-to-root exception above — a
-            # BOTH-direction walk may not return over its arrival edge
-            uniq = ~F.array_contains(F.col("path"), _edge_id()) \
-                & ~F.array_contains(F.col("path"), _edge_id_reversed())
-            expanded = (f.alias("__f")
-                        .join(e.alias("__e"),
-                              F.col("__f.end_vid") == F.col(f"__e.{SRC}"),
-                              "inner")
-                        .filter(uniq)
-                        .select("root", F.col(DST).alias("end_vid"),
-                                F.concat("path",
-                                         F.array(new_edge)).alias("path")))
-            nxt = expanded.join(visited, ["root", "end_vid"], "left_anti")
-            if mode == "single":
-                w = (Window.partitionBy("root", "end_vid")
-                     .orderBy(_single_tie_key(etype_order),
-                              F.col("path").cast("string").desc()))
-                nxt = (nxt.withColumn("_rn", F.row_number().over(w))
-                       .filter(F.col("_rn") == 1).drop("_rn"))
+            nxt, expanded = _path_step(frontier, e, visited, n, mode,
+                                       etype_order)
             if collect_closures:
-                # closures ride the same checkpoint job as the frontier
+                # closures ride the same checkpoint job as the frontier;
+                # only the frontier rows count toward its size
                 hits = (expanded
                         .filter(F.col("end_vid") == F.col("root"))
                         .join(closed, "root", "left_anti")
-                        .select(F.col("root").alias("start_vid"),
-                                "end_vid", F.lit(level).alias("hops"),
-                                "path"))
-                nxt = nxt.unionByName(
-                    hits.select(F.col("start_vid").alias("root"),
-                                "end_vid", "path")
-                    .withColumn("_cyc", F.lit(True)),
-                    allowMissingColumns=True)
-                nxt, n = checkpoint_count(nxt)
-                hits = (nxt.filter(F.col("_cyc"))
-                        .select(F.col("root").alias("start_vid"),
-                                "end_vid", F.lit(level).alias("hops"),
-                                "path"))
+                        .withColumn("_cyc", F.lit(True)))
+                nxt, m = checkpoint_observe(
+                    nxt.unionByName(hits, allowMissingColumns=True),
+                    n=F.count(F.when(F.col("_cyc").isNull(), 1)))
+                n = int(m["n"])
+                hits = shape(nxt.filter(F.col("_cyc")), level)
                 nxt = nxt.filter(F.col("_cyc").isNull()).drop("_cyc")
-                n -= 0  # n counts closures too; frontier-empty still exact
-                cyc_results = hits if cyc_results is None \
-                    else cyc_results.unionByName(hits)
+                closures.append(hits)
                 closed = closed.unionByName(
                     hits.select(F.col("start_vid").alias("root"))
                     .distinct())
-            else:
+            elif not lazy:
                 nxt, n = checkpoint_count(nxt)
-            step = nxt.select(F.col("root").alias("start_vid"), "end_vid",
-                              F.lit(level).alias("hops"), "path")
-            if level >= min_hops:
-                results = step if results is None else results.unionByName(step)
+            levels.append(shape(nxt, level))
             visited = visited.unionByName(
                 nxt.select("root", "end_vid").distinct())
             frontier = nxt
-        if cyc_results is not None:
-            cyc = cyc_results
+        if closures:
+            cyc = reduce(DataFrame.unionByName, closures)
             if mode == "single":
-                ws = (Window.partitionBy("start_vid")
-                      .orderBy(_single_tie_key(etype_order),
-                               F.col("path").cast("string").desc()))
-                cyc = (cyc.withColumn("_rn", F.row_number().over(ws))
-                       .filter(F.col("_rn") == 1).drop("_rn"))
-            results = cyc if results is None else results.unionByName(cyc)
-        if results is None:
-            results = (frontier.limit(0)
-                       .select(F.col("root").alias("start_vid"), "end_vid",
-                               F.lit(0).alias("hops"), "path"))
-        return results
+                cyc = _pick_single(cyc, ["start_vid"], etype_order)
+            levels.append(cyc)
+        if not levels:
+            return shape(frontier.limit(0), 0)
+        return reduce(DataFrame.unionByName, levels)
     finally:
-        e.unpersist()
-
-
-def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
-                  direction: str = "out", min_hops: int = 1,
-                  edge_filter: Column | None = None,
-                  self_loop_once: bool = False) -> DataFrame:
-    """Distance-only single-shortestPath: the ``(start_vid, end_vid,
-    hops)`` row set of :func:`bfs_min_paths` ``mode="single"`` without
-    materializing any path struct — for statements that never read path
-    CONTENTS (``RETURN length(p)`` and friends; guide §2.3: the per-level
-    frontier shuffles identity pairs instead of growing edge-struct
-    arrays, and the per-level representative-pick window disappears).
-
-    Row-set equality with ``mode="single"``: level-pruned BFS emits a
-    pair exactly at its first-reached level, and single mode keeps ONE
-    row per pair — which tied path it would have kept cannot change
-    (start, end, hops). The per-level ``distinct`` here is that same
-    one-row-per-pair rule. The edge-uniqueness filter of the path variant
-    is vacuous on surviving rows in a fixed direction: a frontier path
-    repeating a directed edge would have to re-reach a visited vertex
-    (pruned), or re-leave the root — whose onward targets were all
-    reached two levels earlier. Root-cycle semantics match the out/in
-    rule: the root is NOT pre-visited when ``min_hops >= 1``, so
-    ``(s, s)`` is reported at its shortest ≥1-hop closed-walk length.
-
-    ``direction="both"`` is NOT supported: its reference-exact closure
-    artifact (in-loop closures only off minimal frontier paths, arrival
-    edge excluded) depends on the frontier's edge lists — callers keep
-    :func:`bfs_min_paths` there. ``min_hops`` must be 1 (the shortestPath
-    planner clamps the lower bound to 1 before routing here).
-
-    Output schema matches :func:`bfs_min_paths`; ``path`` is an array of
-    ``hops`` typed-NULL edge structs so ``length(p)``-style consumers
-    (``F.size``) stay exact while contents are never produced.
-    """
-    if direction == "both":
-        raise ValueError("bfs_min_dists does not support direction='both'")
-    if min_hops != 1:
-        raise ValueError("bfs_min_dists requires min_hops == 1")
-    e = oriented(edges, direction, self_loop_once=self_loop_once)
-    if edge_filter is not None:
-        e = e.filter(edge_filter)
-    path_type = _path_struct_type(e)
-    e = e.select(SRC, DST).distinct()
-
-    roots = sources.select(F.col(VID).alias("root")).distinct()
-    frontier = roots.withColumn("end_vid", F.col("root"))
-    # root NOT pre-visited (min_hops == 1, fixed direction): (s, s) rows
-    # surface at their shortest closed-walk length, as in bfs_min_paths
-    visited = frontier.limit(0)
-    results: DataFrame | None = None
-    null_hop = F.lit(None).cast(path_type.elementType)
-
-    def shape(level_df: DataFrame, level: int) -> DataFrame:
-        return level_df.select(
-            F.col("root").alias("start_vid"), "end_vid",
-            F.lit(level).alias("hops"),
-            F.array_repeat(null_hop, level).alias("path"))
-
-    if max_hops <= 3:           # lazy mode: one job at action time
-        # loop-invariant deduped edge set — computed once inside the
-        # caller's action-time job (see bfs_shortest_paths)
-        e = e.localCheckpoint(eager=False)
-        for level in range(1, max_hops + 1):
-            nxt = (frontier.join(e, frontier["end_vid"] == e[SRC], "inner")
-                   .select("root", F.col(DST).alias("end_vid")).distinct()
-                   .join(visited, ["root", "end_vid"], "left_anti"))
-            # per-level output read by three later subtrees — lazy cut
-            # directly above the distinct's shuffle (r11 item-14 rule)
-            nxt = nxt.localCheckpoint(eager=False)
-            step = shape(nxt, level)
-            results = step if results is None else results.unionByName(step)
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        return results
-
-    # counted mode: persisted edges (the cache fills in level 1),
-    # checkpointed frontiers and a visited set that unions them
-    e = e.persist()
-    try:
-        frontier, n = checkpoint_count(frontier)
-        for level in range(1, max_hops + 1):
-            if n == 0:
-                break
-            f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS \
-                else frontier
-            nxt = (f.join(e, f["end_vid"] == e[SRC], "inner")
-                   .select("root", F.col(DST).alias("end_vid")).distinct()
-                   .join(visited, ["root", "end_vid"], "left_anti"))
-            nxt, n = checkpoint_count(nxt)
-            step = shape(nxt, level)
-            results = step if results is None else results.unionByName(step)
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        if results is None:
-            results = shape(frontier.limit(0), 0)
-        return results
-    finally:
-        e.unpersist()
-
-
-_DIR_FLIP = {"out": "in", "in": "out", "both": "both"}
+        if not lazy:
+            e.unpersist()
 
 
 def _path_struct_type(e: DataFrame):
@@ -567,6 +436,70 @@ def _prep_oriented(edges: DataFrame, direction: str,
     if "_etype" not in e.columns:
         e = e.withColumn("_etype", F.lit(""))
     return e.select(SRC, DST, RANK, "_dir", "_etype")
+
+
+def _bidir_roots(sources: DataFrame, targets: DataFrame):
+    """Checkpointed, counted root sets of a two-sided search, plus the
+    roots on both sides (``diag``) and their count."""
+    src_roots, n_src = checkpoint_count(
+        sources.select(F.col(VID).alias("root")).distinct())
+    tgt_roots, n_tgt = checkpoint_count(
+        targets.select(F.col(VID).alias("root")).distinct())
+    diag = src_roots.join(tgt_roots, "root", "left_semi")
+    return src_roots, n_src, tgt_roots, n_tgt, diag, diag.count()
+
+
+def _meet_rounds(left: tuple, right: tuple, total_pairs: int, max_hops: int,
+                 advance, meet, pair_cols: list[str]) -> list[DataFrame]:
+    """The round loop of a meet-in-the-middle search; returns every meet
+    frame in order.
+
+    ``left``/``right`` are ``(frontier, visited, edges, n)`` seeds, each
+    expanding over its own oriented ``edges``.
+    ``advance(frontier, visited, edges, n)`` returns the next checkpointed
+    level, its piece of the visited set and its row count; ``meet(lf, rf,
+    total)`` joins two frontiers into combos of ``total`` hops keyed by
+    ``pair_cols``. Round r advances left and meets at 2r−1, then advances
+    right and meets at 2r. The search stops on an empty side (no unseen
+    pair can remain — a deeper pair's canonical meet would have to be
+    first-reached at the depth that just came back empty), after the last
+    round, or once every one of ``total_pairs`` has met.
+    """
+    (lfront, lvisited, fwd, n_l), (rfront, rvisited, bwd, n_r) = left, right
+    meets: list[DataFrame] = []
+    resolved: DataFrame | None = None
+    n_resolved = 0
+    rounds = (max_hops + 1) // 2
+    for r in range(1, rounds + 1):
+        lfront, piece, n_l = advance(lfront, lvisited, fwd, n_l)
+        if n_l == 0:
+            break
+        lvisited = lvisited.unionByName(piece)
+        round_meets = [meet(lfront, rfront, 2 * r - 1)]
+        if 2 * r <= max_hops:
+            rfront, piece, n_r = advance(rfront, rvisited, bwd, n_r)
+            if n_r:
+                rvisited = rvisited.unionByName(piece)
+                round_meets.append(meet(lfront, rfront, 2 * r))
+        meets.extend(round_meets)
+        # the probe's only effect is breaking out of LATER rounds — in
+        # the final round it is a guaranteed-wasted job
+        if n_r == 0 or r == rounds:
+            break
+        # all-pairs-resolved probe: a pair's minimal combos all appear
+        # in the round it first meets, so once every pair has met there
+        # is nothing left to find
+        newp = reduce(DataFrame.unionByName,
+                      [m.select(*pair_cols) for m in round_meets]).distinct()
+        if resolved is not None:
+            newp = newp.join(resolved, pair_cols, "left_anti")
+        newp, n_new = checkpoint_count(newp)
+        n_resolved += n_new
+        resolved = newp if resolved is None else \
+            resolved.unionByName(newp).localCheckpoint(eager=False)
+        if n_resolved >= total_pairs:
+            break
+    return meets
 
 
 def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
@@ -623,44 +556,26 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     bwd = fwd if direction == "both" else _prep_oriented(
         edges, _DIR_FLIP[direction], edge_filter, self_loop_once).persist()
     path_type = _path_struct_type(fwd)
-
-    src_roots, n_src = checkpoint_count(
-        sources.select(F.col(VID).alias("root")).distinct())
-    tgt_roots, n_tgt = checkpoint_count(
-        targets.select(F.col(VID).alias("root")).distinct())
-    diag = src_roots.join(tgt_roots, "root", "left_semi")
-    n_diag = diag.count()
-    total_pairs = n_src * n_tgt - n_diag
+    src_roots, n_src, tgt_roots, n_tgt, diag, n_diag = _bidir_roots(
+        sources, targets)
 
     # the checkpointed roots are both each side's seed frontier and the
     # first piece of its visited set
-    def start_state(roots):
+    def seed(roots, e, n):
         visited = roots.withColumn("end_vid", F.col("root"))
-        return visited.withColumn("path", F.array().cast(path_type)), visited
+        return (visited.withColumn("path", F.array().cast(path_type)),
+                visited, e, n)
 
-    lfront, lvisited = start_state(src_roots)
-    rfront, rvisited = start_state(tgt_roots)
+    def advance(front, visited, e, n):
+        nxt, n = checkpoint_count(
+            _path_step(front, e, visited, n, mode, etype_order)[0])
+        return nxt, nxt.select("root", "end_vid").distinct(), n
 
-    def advance(front, visited, e, n_front):
-        f = (F.broadcast(front)
-             if n_front <= BROADCAST_FRONTIER_ROWS // 8 else front)
-        uniq = ~F.array_contains(F.col("path"), _edge_id()) \
-            & ~F.array_contains(F.col("path"), _edge_id_reversed())
-        nxt = (f.alias("__f")
-               .join(e.alias("__e"),
-                     F.col("__f.end_vid") == F.col(f"__e.{SRC}"), "inner")
-               .filter(uniq)
-               .select("root", F.col(DST).alias("end_vid"),
-                       F.concat("path",
-                                F.array(_new_edge_struct())).alias("path"))
-               .join(visited, ["root", "end_vid"], "left_anti"))
-        if mode == "single":
-            w = (Window.partitionBy("root", "end_vid")
-                 .orderBy(_single_tie_key(etype_order),
-                          F.col("path").cast("string").desc()))
-            nxt = (nxt.withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1).drop("_rn"))
-        return checkpoint_count(nxt)
+    def zero_length(roots):
+        return roots.select(F.col("root").alias("start_vid"),
+                            F.col("root").alias("end_vid"),
+                            F.lit(0).alias("hops"),
+                            F.array().cast(path_type).alias("path"))
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias("start_vid"),
@@ -680,93 +595,37 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                 # so the final union re-reads instead of re-joining
                 .localCheckpoint(eager=False))
 
-    combos: list[DataFrame] = []
-    resolved: DataFrame | None = None
-    n_resolved = 0
-    n_l, n_r = n_src, n_tgt
-    rounds = (max_hops + 1) // 2
     try:
-        for r in range(1, rounds + 1):
-            new_l, n_l = advance(lfront, lvisited, fwd, n_l)
-            lfront = new_l
-            if n_l == 0:
-                break
-            lvisited = lvisited.unionByName(
-                new_l.select("root", "end_vid").distinct())
-            round_meets = [meet(new_l, rfront, 2 * r - 1)]
-            if 2 * r <= max_hops:
-                new_r, n_r = advance(rfront, rvisited, bwd, n_r)
-                if n_r:
-                    rvisited = rvisited.unionByName(
-                        new_r.select("root", "end_vid").distinct())
-                    round_meets.append(meet(new_l, new_r, 2 * r))
-                rfront = new_r
-            combos.extend(round_meets)
-            if (2 * r <= max_hops and n_r == 0):
-                break
-            if r == rounds:
-                # the probe's only effect is breaking out of LATER rounds
-                # — in the final round it is a guaranteed-wasted job
-                break
-            # all-pairs-resolved probe: a pair's minimal combos all appear
-            # in the round it first meets, so once every pair has met
-            # there is nothing left to find
-            newp = round_meets[0].select("start_vid", "end_vid")
-            for m in round_meets[1:]:
-                newp = newp.unionByName(m.select("start_vid", "end_vid"))
-            newp = newp.distinct()
-            if resolved is not None:
-                newp = newp.join(resolved, ["start_vid", "end_vid"],
-                                 "left_anti")
-            newp, n_new = checkpoint_count(newp)
-            n_resolved += n_new
-            resolved = newp if resolved is None else \
-                resolved.unionByName(newp).localCheckpoint(eager=False)
-            if n_resolved >= total_pairs:
-                break
-
-        out: DataFrame | None = None
-        for c in combos:
-            out = c if out is None else out.unionByName(c)
-        if out is not None:
-            out = out.filter(_edges_unique(F.col("path")))
+        combos = _meet_rounds(seed(src_roots, fwd, n_src),
+                              seed(tgt_roots, bwd, n_tgt),
+                              n_src * n_tgt - n_diag, max_hops, advance,
+                              meet, ["start_vid", "end_vid"])
+        parts: list[DataFrame] = []
+        if combos:
+            out = reduce(DataFrame.unionByName, combos) \
+                .filter(_edges_unique(F.col("path")))
             w = Window.partitionBy("start_vid", "end_vid")
             out = (out.withColumn("_min", F.min("hops").over(w))
                    .filter(F.col("hops") == F.col("_min")).drop("_min"))
             if mode == "single":
-                ws = (Window.partitionBy("start_vid", "end_vid")
-                      .orderBy(_single_tie_key(etype_order),
-                               F.col("path").cast("string").desc()))
-                out = (out.withColumn("_rn", F.row_number().over(ws))
-                       .filter(F.col("_rn") == 1).drop("_rn"))
-        extras: list[DataFrame] = []
-        if n_diag:
-            if min_hops == 0:
-                extras.append(diag.select(
-                    F.col("root").alias("start_vid"),
-                    F.col("root").alias("end_vid"),
-                    F.lit(0).alias("hops"),
-                    F.array().cast(path_type).alias("path")))
-            elif max_hops >= 1:
-                # reference-artifact closures: re-run the level-pruned
-                # BFS from the (few) diagonal roots and keep the (s, s)
-                # rows — same in-loop closure rule as bfs_min_paths
-                cyc_all = bfs_min_paths(
-                    edges, diag.select(F.col("root").alias(VID)), max_hops,
-                    direction=direction, mode=mode, min_hops=1,
-                    edge_filter=edge_filter, self_loop_once=self_loop_once,
-                    etype_order=etype_order)
-                extras.append(cyc_all.filter(
-                    F.col("start_vid") == F.col("end_vid")))
-        for x in extras:
-            out = x if out is None else out.unionByName(x)
-        if out is None:
-            out = (src_roots.limit(0)
-                   .select(F.col("root").alias("start_vid"),
-                           F.col("root").alias("end_vid"),
-                           F.lit(0).alias("hops"),
-                           F.array().cast(path_type).alias("path")))
-        return out
+                out = _pick_single(out, ["start_vid", "end_vid"],
+                                   etype_order)
+            parts.append(out)
+        if n_diag and min_hops == 0:
+            parts.append(zero_length(diag))
+        elif n_diag and max_hops >= 1:
+            # reference-artifact closures: re-run the level-pruned BFS
+            # from the (few) diagonal roots and keep the (s, s) rows —
+            # same in-loop closure rule as bfs_min_paths
+            cyc_all = bfs_min_paths(
+                edges, diag.select(F.col("root").alias(VID)), max_hops,
+                direction=direction, mode=mode, min_hops=1,
+                edge_filter=edge_filter, self_loop_once=self_loop_once,
+                etype_order=etype_order)
+            parts.append(cyc_all.filter(
+                F.col("start_vid") == F.col("end_vid")))
+        return reduce(DataFrame.unionByName, parts) if parts \
+            else zero_length(src_roots.limit(0))
     finally:
         fwd.unpersist()
         if direction != "both":
@@ -788,35 +647,26 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     at totals 2r−1 and 2r; a pair at distance L first meets at round
     ⌈L/2⌉ via its canonical split, so min-over-observed-totals per pair is
     the true distance. The search stops when every pair has resolved or a
-    frontier empties (an empty side proves no unseen pair remains — a
-    deeper pair's canonical meet would have to be first-reached at the
-    depth that just came back empty).
+    frontier empties (:func:`_meet_rounds`).
     """
-    fwd_all = _prep_oriented(edges, direction, edge_filter, False)
-    fwd = fwd_all.select(SRC, DST).distinct().persist()
-    bwd = fwd if direction == "both" else _prep_oriented(
-        edges, _DIR_FLIP[direction], edge_filter, False
-        ).select(SRC, DST).distinct().persist()
+    def pairs(d):
+        return _prep_oriented(edges, d, edge_filter, False) \
+            .select(SRC, DST).distinct().persist()
 
-    src_roots, n_src = checkpoint_count(
-        sources.select(F.col(VID).alias("root")).distinct())
-    tgt_roots, n_tgt = checkpoint_count(
-        targets.select(F.col(VID).alias("root")).distinct())
-    n_diag = src_roots.join(tgt_roots, "root", "left_semi").count()
-    total_pairs = n_src * n_tgt - n_diag
+    fwd = pairs(direction)
+    bwd = fwd if direction == "both" else pairs(_DIR_FLIP[direction])
+    src_roots, n_src, tgt_roots, n_tgt, _, n_diag = _bidir_roots(
+        sources, targets)
 
     # the checkpointed roots are both each side's seed frontier and the
     # first piece of its visited set
-    lfront = lvisited = src_roots.withColumn(VID, F.col("root"))
-    rfront = rvisited = tgt_roots.withColumn(VID, F.col("root"))
+    def seed(roots, e, n):
+        front = roots.withColumn(VID, F.col("root"))
+        return front, front, e, n
 
-    def advance(front, visited, e, n_front):
-        f = F.broadcast(front) if n_front <= BROADCAST_FRONTIER_ROWS \
-            else front
-        nxt = (f.join(e, f[VID] == e[SRC], "inner")
-               .select("root", F.col(DST).alias(VID)).distinct()
-               .join(visited, ["root", VID], "left_anti"))
-        return checkpoint_count(nxt)
+    def advance(front, visited, e, n):
+        nxt, n = checkpoint_count(_id_step(front, e, visited, n))
+        return nxt, nxt, n
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias(SRC), F.col(VID).alias("_m"))
@@ -828,53 +678,18 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                 # lazy checkpoint (r11): see bidir_min_paths.meet
                 .localCheckpoint(eager=False))
 
-    meets: list[DataFrame] = []
-    resolved: DataFrame | None = None
-    n_resolved = 0
-    n_l, n_r = n_src, n_tgt
-    rounds = (max_hops + 1) // 2
     try:
-        for r in range(1, rounds + 1):
-            new_l, n_l = advance(lfront, lvisited, fwd, n_l)
-            lfront = new_l
-            if n_l == 0:
-                break
-            lvisited = lvisited.unionByName(new_l)
-            round_meets = [meet(new_l, rfront, 2 * r - 1)]
-            if 2 * r <= max_hops:
-                new_r, n_r = advance(rfront, rvisited, bwd, n_r)
-                if n_r:
-                    rvisited = rvisited.unionByName(new_r)
-                    round_meets.append(meet(new_l, new_r, 2 * r))
-                rfront = new_r
-            meets.extend(round_meets)
-            if 2 * r <= max_hops and n_r == 0:
-                break
-            if r == rounds:
-                # final round: the probe could only break out of later
-                # rounds — skip the guaranteed-wasted job
-                break
-            newp = round_meets[0].select(SRC, DST)
-            for m in round_meets[1:]:
-                newp = newp.unionByName(m.select(SRC, DST))
-            newp = newp.distinct()
-            if resolved is not None:
-                newp = newp.join(resolved, [SRC, DST], "left_anti")
-            newp, n_new = checkpoint_count(newp)
-            n_resolved += n_new
-            resolved = newp if resolved is None else \
-                resolved.unionByName(newp).localCheckpoint(eager=False)
-            if n_resolved >= total_pairs:
-                break
-        out: DataFrame | None = None
-        for m in meets:
-            out = m if out is None else out.unionByName(m)
-        if out is None:
+        meets = _meet_rounds(seed(src_roots, fwd, n_src),
+                             seed(tgt_roots, bwd, n_tgt),
+                             n_src * n_tgt - n_diag, max_hops, advance,
+                             meet, [SRC, DST])
+        if not meets:
             return (src_roots.limit(0)
                     .select(F.col("root").alias(SRC),
                             F.col("root").alias(DST),
                             F.lit(0).alias("dist")))
-        return out.groupBy(SRC, DST).agg(F.min("dist").alias("dist"))
+        return (reduce(DataFrame.unionByName, meets).groupBy(SRC, DST)
+                .agg(F.min("dist").alias("dist")))
     finally:
         fwd.unpersist()
         if direction != "both":

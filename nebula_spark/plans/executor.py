@@ -29,9 +29,9 @@ from nebula_spark.catalog import (DST, RANK, SRC, VID, GraphSpace,
                                   SpaceCatalog)
 from nebula_spark.functions.scalar import FUNCTIONS
 from nebula_spark.operators import go, k_hop_subgraph, traverse
-from nebula_spark.operators.paths import (all_paths, bfs_min_dists,
-                                          bfs_min_paths, bidir_distances,
-                                          bidir_min_paths)
+from nebula_spark.operators.paths import (_path_struct_type, all_paths,
+                                          bfs_min_paths, bfs_shortest_paths,
+                                          bidir_distances, bidir_min_paths)
 from nebula_spark.plans import ngql as A
 from nebula_spark.session import local_frame
 
@@ -3431,10 +3431,16 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
                     # identity-only BFS emits the same (start, end,
                     # hops) rows with a typed-NULL path of the right
                     # length for size()/length() consumers
-                    tr = bfs_min_dists(
-                        edges.select(SRC, DST, RANK, "_etype"), seeds,
-                        max_hops=sp_max, direction=me.direction,
-                        min_hops=sp_min, self_loop_once=True)
+                    null_hop = F.lit(None).cast(
+                        _path_struct_type(edges).elementType)
+                    tr = bfs_shortest_paths(
+                        edges.select(SRC, DST, RANK), seeds, max_hops=sp_max,
+                        direction=me.direction, root_cycles=True
+                    ).select(F.col(SRC).alias("start_vid"),
+                             F.col(DST).alias("end_vid"),
+                             F.col("dist").alias("hops"),
+                             F.array_repeat(null_hop, F.col("dist"))
+                             .alias("path"))
                 else:
                     tr = bfs_min_paths(
                         edges.select(SRC, DST, RANK, "_etype"), seeds,
@@ -4499,7 +4505,8 @@ def _stmt_path_contents_unused(st: A.MatchStmt) -> bool:
     exactly ``length(alias)``, and no var-len edge alias is shared across
     patterns (sharing joins on the hop list itself). Under this flag a
     single-shortestPath segment may route to the distance-only BFS
-    (``bfs_min_dists``), whose ``path`` column carries typed NULLs of the
+    (``bfs_shortest_paths(root_cycles=True)``), whose rows the route
+    shapes with a ``path`` column of typed NULLs of the
     right LENGTH but no edge identities. Deliberately conservative the
     same way :func:`_stmt_reads_path_props` is: any ``attr``/
     ``edge_prop``/``star`` expression anywhere disables the route."""

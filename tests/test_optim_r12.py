@@ -2,8 +2,8 @@
 
 Guards: size-adaptive CC round partitioning (labels unchanged at any
 width), the explicit NULL-endpoint contract, the distance-only
-shortestPath route (row-set equality with the path-carrying single
-mode, detector gating), and the narrowed LSH pair dedup.
+shortestPath route (root-cycle distances equal the path-carrying single
+mode's rows, detector gating), and the narrowed LSH pair dedup.
 """
 
 from pyspark.sql import functions as F
@@ -48,23 +48,21 @@ def test_cc_empty_input_converges_fast(spark):
 
 
 def _dists_vs_paths(spark, edges, sources, max_hops, direction):
-    from nebula_spark.operators.paths import bfs_min_dists, bfs_min_paths
-    d = bfs_min_dists(edges, sources, max_hops=max_hops,
-                      direction=direction, self_loop_once=True)
+    from nebula_spark.operators.paths import (bfs_min_paths,
+                                              bfs_shortest_paths)
+    d = bfs_shortest_paths(edges, sources, max_hops=max_hops,
+                           direction=direction, root_cycles=True)
     p = bfs_min_paths(edges, sources, max_hops=max_hops,
                       direction=direction, mode="single", min_hops=1,
                       self_loop_once=True)
-    got = {(r.start_vid, r.end_vid, r.hops, len(r.path))
-           for r in d.collect()}
-    want = {(r.start_vid, r.end_vid, r.hops, len(r.path))
-            for r in p.collect()}
+    got = {(r["_src"], r["_dst"], r.dist) for r in d.collect()}
+    want = {(r.start_vid, r.end_vid, r.hops) for r in p.collect()}
     assert got == want, (direction, max_hops, got ^ want)
 
 
-def test_bfs_min_dists_matches_single_mode(spark, nba):
+def test_root_cycle_dists_match_single_mode(spark, nba):
     # row-set equality with the path-carrying single mode, including the
-    # root-cycle rows (p1->p2->p1 2-cycle, p3 self-like 1-cycle) and the
-    # PATH LENGTH (array_repeat of typed NULLs must size to hops)
+    # root-cycle rows (p1->p2->p1 2-cycle, p3 self-like 1-cycle)
     edges = nba["like"].withColumn("_etype", F.lit("like"))
     src = nba["player"].select(F.col("_vid"))
     for direction in ("out", "in"):
@@ -72,15 +70,14 @@ def test_bfs_min_dists_matches_single_mode(spark, nba):
             _dists_vs_paths(spark, edges, src, mh, direction)
 
 
-def test_bfs_min_dists_rejects_both_and_min0(spark, nba):
+def test_root_cycles_rejects_both(spark, nba):
     import pytest
-    from nebula_spark.operators.paths import bfs_min_dists
+    from nebula_spark.operators.paths import bfs_shortest_paths
     edges = nba["like"]
     src = nba["player"].select("_vid")
     with pytest.raises(ValueError):
-        bfs_min_dists(edges, src, 2, direction="both")
-    with pytest.raises(ValueError):
-        bfs_min_dists(edges, src, 2, min_hops=0)
+        bfs_shortest_paths(edges, src, max_hops=2, direction="both",
+                           root_cycles=True)
 
 
 def test_path_contents_detector(spark):
@@ -116,15 +113,17 @@ def test_shortest_path_length_only_matches_path_route(spark, nba,
     sp.create_tag("team", df=nba["team"])
     sp.create_edge("like", df=nba["like"])
     sp.create_edge("serve", df=nba["serve"])
-    q = """
-        MATCH p = shortestPath((a:player)-[:like|serve*1..3]->(b))
+    # lazy (*1..3) and counted (*1..5) BFS levels; length(p) sizes the
+    # dists route's typed-NULL path, so it must equal the path route's
+    qs = [f"""
+        MATCH p = shortestPath((a:player)-[:like|serve*1..{m}]->(b))
         RETURN id(a) AS s, id(b) AS e, length(p) AS h
-    """
-    a = {(r.s, r.e, r.h) for r in execute(sp, q).collect()}
+    """ for m in (3, 5)]
+    a = [{(r.s, r.e, r.h) for r in execute(sp, q).collect()} for q in qs]
     monkeypatch.setattr(executor, "_stmt_path_contents_unused",
                         lambda st: False)
-    b = {(r.s, r.e, r.h) for r in execute(sp, q).collect()}
-    assert a == b and a
+    b = [{(r.s, r.e, r.h) for r in execute(sp, q).collect()} for q in qs]
+    assert a == b and all(a)
 
 
 def test_band_width_split_constants(spark):

@@ -139,7 +139,7 @@ def test_hyperplane_bucket_deterministic(spark, vecs):
         min_size=1, max_size=14, unique=True),
     direction=st.sampled_from(["out", "in", "both"]),
     mode=st.sampled_from(["all", "single"]),
-    max_hops=st.integers(1, 3),
+    max_hops=st.integers(1, 5),     # lazy (<= 3) and counted levels
 )
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -255,6 +255,37 @@ def test_bfs_min_paths_equals_enumerate_prune(spark, edges, direction,
         got_set = {(r.start_vid, r.end_vid, r.hops) for r in got}
         assert got_set == set(want_pairs)
         assert len(got) == len(got_set)
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 6), st.integers(0, 6)),
+        min_size=1, max_size=14, unique=True),
+    direction=st.sampled_from(["out", "in"]),
+    max_hops=st.integers(1, 5),
+)
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_root_cycle_dists_equal_single_min_paths(spark, edges, direction,
+                                                 max_hops):
+    """The MATCH length-only shortestPath route: BFS distances with the
+    root left unvisited (``root_cycles=True``) must be exactly the
+    (start, end, hops) rows of the single-mode minimal-path BFS, root
+    cycles included, at lazy and counted depths."""
+    from nebula_spark.operators.paths import (bfs_min_paths,
+                                              bfs_shortest_paths)
+
+    e = spark.createDataFrame(
+        [(f"v{s}", f"v{d}", 0) for s, d in edges],
+        "_src string, _dst string, _rank long")
+    starts = spark.createDataFrame([("v0",), ("v1",)], ["_vid"])
+    got = sorted((r["_src"], r["_dst"], r.dist) for r in bfs_shortest_paths(
+        e, starts, max_hops=max_hops, direction=direction,
+        root_cycles=True).collect())
+    want = sorted((r.start_vid, r.end_vid, r.hops) for r in bfs_min_paths(
+        e, starts, max_hops, direction=direction, mode="single",
+        self_loop_once=True).collect())
+    assert got == want
 
 
 def test_bfs_min_paths_both_triangle_cycle_reference_invisible(spark):

@@ -111,16 +111,14 @@ def test_counted_bfs_empty_sources_runs_no_level(spark):
     assert out.collect() == []
 
 
-def test_counted_bfs_min_dists_reads_seed_once_and_exact(spark):
-    from nebula_spark.operators.paths import bfs_min_dists
+def test_counted_root_cycle_bfs_reads_seed_once_and_exact(spark):
+    from nebula_spark.operators import bfs_shortest_paths
     hops = 5
     edges, (src, reads) = _edges(spark), _counted_sources(spark, [0, 30])
-    out = bfs_min_dists(edges, src, max_hops=hops)
-    rows = out.collect()
-    got = {(r.start_vid, r.end_vid): r.hops for r in rows}
+    out = bfs_shortest_paths(edges, src, max_hops=hops, root_cycles=True)
+    got = {(r._src, r._dst): r.dist for r in out.collect()}
     # the root is not pre-visited: (30, 30) surfaces as its 5-cycle
     assert got == _bfs([0, 30], hops, root_visited=False)
-    assert all(len(r.path) == r.hops for r in rows)
     assert reads.value == 2, reads.value
 
 
