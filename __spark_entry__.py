@@ -1264,21 +1264,6 @@ def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     return triangle_count(pairs)
 
 
-def q_k_core(spark: SparkSession, sf: str) -> DataFrame:
-    """3-round k-core peel (k=40) of the co-order part graph: surviving
-    vertices with their in-core degree (operators/algo.py). Fixed round
-    count = deterministic, SQL-unrollable semantics."""
-    from nebula_spark.operators.algo import k_core
-    li = load_tables(spark, sf, ("lineitem",))["lineitem"]
-    pairs = (li.alias("a").join(
-        li.alias("b"),
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-        .select(F.col("a.l_partkey").alias("_src"),
-                F.col("b.l_partkey").alias("_dst")))
-    return k_core(pairs, k=40, rounds=3)
-
-
 def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark-contamination detection (pipeline/curate.py): docs with
     doc_id % 97 == 0 act as the held-out benchmark corpus; every other

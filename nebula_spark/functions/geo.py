@@ -158,11 +158,6 @@ def st_intersects(a: Column, b: Column) -> Column:
 # point-in-polygon / point-polyline distance (vectorized numpy path)
 # --------------------------------------------------------------------------
 
-def _parse_ring(wkt: str) -> np.ndarray:
-    """Outer ring of POLYGON / vertex list of LINESTRING → (n,2) array."""
-    return _parse_rings(wkt)[0]
-
-
 def _parse_rings(wkt: str) -> list[np.ndarray]:
     """All rings of a POLYGON (outer first, then holes; reference supports
     interior loops via S2, GeoUtils.h:43) / the single vertex list of a

@@ -18,6 +18,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -25,87 +27,84 @@ from nebula_spark.catalog import DST, SRC
 from nebula_spark.operators.traverse import checkpoint_count, sized_superstep
 
 
+# Eager lineage cut every this many PageRank supersteps; the ones between
+# chain lazily into one action-time job.
+PAGERANK_CKPT_EVERY = 8
+# The same cadence for label propagation supersteps.
+LPA_CKPT_EVERY = 4
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Distinct undirected ``(u, v)`` pairs with ``u < v``: self-loops and
+    pairs with a NULL endpoint (which least/greatest fold into a
+    self-loop) are dropped."""
+    return (edges.select(F.least(SRC, DST).alias("u"),
+                         F.greatest(SRC, DST).alias("v"))
+            .filter(F.col("u") != F.col("v")).distinct())
+
+
+def _symmetric(und: DataFrame) -> DataFrame:
+    return und.unionAll(und.select(F.col("v").alias("u"),
+                                   F.col("u").alias("v")))
+
+
 def pagerank(edges: DataFrame, iterations: int = 3,
-             damping: float = 0.85, ckpt_every: int = 8) -> DataFrame:
+             damping: float = 0.85) -> DataFrame:
     """Simplified PageRank: rank' = (1-d) + d * Σ_in rank/outdeg.
 
-    Operates on distinct (src, dst) pairs; dangling nodes keep the base
-    (1-d) term (no redistribution), matching the common simplified form.
-    Returns (vid, rank) after ``iterations`` synchronous supersteps.
+    Operates on distinct (src, dst) pairs; edges with a NULL endpoint are
+    dropped. Dangling nodes keep the base (1-d) term (no redistribution),
+    matching the common simplified form. Returns (vid, rank) after
+    ``iterations`` synchronous supersteps.
 
     Job shape (r11, guide §1.2/§2.4): supersteps chain LAZILY — one
-    Catalyst plan holds ``ckpt_every`` iterations, so a 3-iteration run is
-    ONE job at action time instead of one materialization job per
-    superstep (measured 2.5× at sf0.1), and within that job the shared
-    edge/degree/nodes subtrees are computed once (ReuseExchange dedups the
-    identical exchanges). Every ``ckpt_every`` iterations the rank frame
-    is eagerly localCheckpoint-ed so deep runs keep a flat lineage — the
-    same per-superstep materialization as before, just amortized. Each
-    superstep is still exactly one contribution shuffle keyed on dst plus
-    one vid-keyed join — the 100 TB shape is unchanged.
+    Catalyst plan holds :data:`PAGERANK_CKPT_EVERY` iterations, so a
+    3-iteration run is ONE job at action time instead of one
+    materialization job per superstep (measured 2.5× at sf0.1). Every
+    :data:`PAGERANK_CKPT_EVERY` iterations the rank frame is eagerly
+    localCheckpoint-ed so deep runs keep a flat lineage. Each superstep
+    is one contribution shuffle keyed on dst plus one vid-keyed join.
     """
-    deep = iterations > ckpt_every
-    e = edges.select(SRC, DST).distinct()
-    if deep:
-        # long runs re-read the edge frame once per checkpoint segment —
-        # cache it (unpersisted in `finally` after the in-loop eager
-        # checkpoints have consumed it)
-        e = e.persist()
-    else:
-        # shallow runs chain everything into ONE action-time job, where
-        # the loop-invariant subtrees would otherwise be re-embedded (and
-        # re-scanned) once per superstep: the 3-iteration static plan held
-        # 56 parquet scans and 0 ReusedExchange. A LAZY localCheckpoint
-        # computes each invariant once inside that same job (first touch
-        # writes the blocks, every later superstep reads them) without the
-        # dedicated materialization job an eager checkpoint/persist-and-
-        # count would cost; blocks are per-RDD-instance, so repeated bench
-        # builds recompute from parquet (no cross-run reuse), and the
-        # ContextCleaner frees them on GC (a persist() here could never be
-        # unpersisted — the returned frame is lazy).
-        e = e.localCheckpoint(eager=False)
+    # The loop-invariant subtrees would otherwise be re-embedded (and
+    # re-scanned) once per superstep: the 3-iteration static plan held 56
+    # parquet scans and 0 ReusedExchange. A LAZY localCheckpoint computes
+    # each invariant once inside the first job that reads it (first touch
+    # writes the blocks, every later superstep and every later job reads
+    # them) without a dedicated materialization job; the ContextCleaner
+    # frees the blocks on GC (a persist() here could never be
+    # unpersisted — the returned frame is lazy).
+    e = (edges.select(SRC, DST)
+         .filter(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
+         .distinct().localCheckpoint(eager=False))
     nodes = (e.select(F.col(SRC).alias("vid"))
-             .union(e.select(F.col(DST).alias("vid"))).distinct())
+             .union(e.select(F.col(DST).alias("vid"))).distinct()
+             .localCheckpoint(eager=False))
     deg = e.groupBy(SRC).agg(F.count(F.lit(1)).alias("outdeg"))
     # degree is loop-invariant: join it into the edge table ONCE — each
     # superstep then does a single rank join instead of rank+degree joins
-    ew = e.join(deg, SRC).select(SRC, DST, "outdeg")
-    if deep:
-        nodes = nodes.persist()
-        ew = ew.persist()
-    else:
-        nodes = nodes.localCheckpoint(eager=False)
-        ew = ew.localCheckpoint(eager=False)
+    ew = (e.join(deg, SRC).select(SRC, DST, "outdeg")
+          .localCheckpoint(eager=False))
 
     ranks = nodes.withColumn("rank", F.lit(1.0))
-    try:
-        for i in range(1, iterations + 1):
-            # contribution sum is decimal-stabilized (the repo's float
-            # discipline): double sums are shuffle-order-dependent, and a
-            # rank landing on a rounding boundary flips the comparison
-            contrib = (ew.join(ranks, ew[SRC] == ranks["vid"])
-                       .select(F.col(DST).alias("vid"),
-                               (F.col("rank") / F.col("outdeg"))
-                               .cast("decimal(30,15)").alias("c")))
-            sums = contrib.groupBy("vid").agg(F.sum("c").alias("s"))
-            ranks = (nodes.join(sums, "vid", "left")
-                     .select("vid",
-                             (F.lit(1.0 - damping)
-                              + F.lit(damping)
-                              * F.coalesce(F.col("s").cast("double"),
-                                           F.lit(0.0)))
-                             .alias("rank")))
-            if i % ckpt_every == 0 or (deep and i == iterations):
-                # lineage cut for deep runs; the final checkpoint also
-                # frees the persisted inputs safely (the returned frame
-                # must not depend on frames we unpersist below)
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        if deep:
-            e.unpersist()
-            nodes.unpersist()
-            ew.unpersist()
+    for i in range(1, iterations + 1):
+        # contribution sum is decimal-stabilized (the repo's float
+        # discipline): double sums are shuffle-order-dependent, and a
+        # rank landing on a rounding boundary flips the comparison
+        contrib = (ew.join(ranks, ew[SRC] == ranks["vid"])
+                   .select(F.col(DST).alias("vid"),
+                           (F.col("rank") / F.col("outdeg"))
+                           .cast("decimal(30,15)").alias("c")))
+        sums = contrib.groupBy("vid").agg(F.sum("c").alias("s"))
+        ranks = (nodes.join(sums, "vid", "left")
+                 .select("vid",
+                         (F.lit(1.0 - damping)
+                          + F.lit(damping)
+                          * F.coalesce(F.col("s").cast("double"),
+                                       F.lit(0.0)))
+                         .alias("rank")))
+        if i % PAGERANK_CKPT_EVERY == 0:
+            ranks = ranks.localCheckpoint(eager=True)
+    return ranks
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -128,9 +127,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     re-plan. The total is orientation-invariant, so the DuckDB oracle
     can use the simpler u<v<w form and still match exactly.
     """
-    und = (edges.select(F.least(SRC, DST).alias("u"),
-                        F.greatest(SRC, DST).alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct().persist())
+    und = _undirected(edges).persist()
     deg = (und.select(F.col("u").alias("vid"))
            .unionAll(und.select(F.col("v").alias("vid")))
            .groupBy("vid").agg(F.count(F.lit(1)).alias("deg")).persist())
@@ -187,42 +184,30 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
     oracle's form); ``rounds=None`` peels to fixpoint with an early-exit
     count probe, O(peel-depth) supersteps.
     """
-    und = (edges.select(F.least(SRC, DST).alias("u"),
-                        F.greatest(SRC, DST).alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct())
-    sym = und.unionAll(und.select(F.col("v").alias("u"),
-                                  F.col("u").alias("v")))
-    if rounds is not None:
-        # fixed-rounds mode needs no fixpoint counts: each peel truncates
-        # lineage with a LAZY localCheckpoint (the plan becomes a
-        # LogicalRDD without running a job — the peel tree would otherwise
-        # triple the edge subtree per round), so all ``rounds`` peels
-        # execute inside the caller's single action instead of one
-        # materialization job per peel (r11, guide §1.2)
+    sym = _symmetric(_undirected(edges))
+    # fixed rounds need no counts: each peel truncates lineage with a LAZY
+    # localCheckpoint (the plan becomes a LogicalRDD without running a
+    # job — the peel tree would otherwise triple the edge subtree per
+    # round), so all peels execute inside the caller's single action
+    # (r11, guide §1.2). The fixpoint's edge count rides each peel's
+    # checkpoint job (checkpoint_count): the stop probe adds no stage,
+    # and it sizes the next peel's shuffles.
+    counted = rounds is None
+    if counted:
+        e, n_e = checkpoint_count(sym)
+    else:
         e = sym.localCheckpoint(eager=False)
-        for _ in range(rounds):
-            deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-            keep = deg.filter(F.col("deg") >= k).select("u")
-            e = (e.join(keep, "u", "left_semi")
-                 .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-                 .select("u", "v")
-                 .localCheckpoint(eager=False))
-        return (e.groupBy(F.col("u").alias("vid"))
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k))
-    # fixpoint mode: the edge count rides each checkpoint job
-    # (checkpoint_count), so the termination probe adds no dedicated
-    # stage per peel, and it sizes the next peel's shuffles
-    e, n_e = checkpoint_count(sym)
-    while True:
+    for _ in itertools.count() if counted else range(rounds):
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
+        peeled = (e.join(keep, "u", "left_semi")
+                  .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
+                  .select("u", "v"))
+        if not counted:
+            e = peeled.localCheckpoint(eager=False)
+            continue
         with sized_superstep(e.sparkSession, n_e):
-            e2, n2 = checkpoint_count(
-                e.join(keep, "u", "left_semi")
-                .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-                .select("u", "v"))
-        e = e2
+            e, n2 = checkpoint_count(peeled)
         if n2 == n_e or n2 == 0:
             break
         n_e = n2
@@ -246,47 +231,29 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     on vid, same key each round, so AQE reuses the exchange layout) +
     count per (vid, neighbor-label) + one min_by-style reduction. The
     reduction uses max_by over a (count, -label) ordering struct — a
-    single map-side-combinable aggregate, no window. localCheckpoint per
-    superstep keeps lineage flat.
+    single map-side-combinable aggregate, no window. Supersteps chain
+    lazily, with an eager localCheckpoint every :data:`LPA_CKPT_EVERY`
+    to keep lineage flat.
     """
-    und = (edges.select(F.least(SRC, DST).alias("u"),
-                        F.greatest(SRC, DST).alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct())
-    sym = und.unionAll(und.select(F.col("v").alias("u"),
-                                  F.col("u").alias("v")))
-    # r11 job shape: supersteps chain lazily (one action-time job per
-    # ckpt_every=4 iterations, ReuseExchange shares the symmetric edge
-    # subtree) instead of one eager checkpoint job per superstep; deep
-    # runs persist the edges and cut lineage every 4 supersteps
-    ckpt_every = 4
-    deep = iterations > ckpt_every
-    if deep:
-        sym = sym.persist()
-    else:
-        # shallow runs: one action-time job; lazy-checkpoint the loop-
-        # invariant symmetric edge list so each superstep reads the blocks
-        # the first touch wrote instead of re-embedding (re-scanning) the
-        # subtree per iteration (see pagerank above for the full rationale)
-        sym = sym.localCheckpoint(eager=False)
+    # the loop-invariant symmetric edge list is lazily checkpointed so
+    # each superstep reads the blocks its first touch wrote instead of
+    # re-scanning the subtree (see pagerank above)
+    sym = _symmetric(_undirected(edges)).localCheckpoint(eager=False)
     labels = (sym.select(F.col("u").alias("vid")).distinct()
               .withColumn("label", F.col("vid")))
-    try:
-        for i in range(1, iterations + 1):
-            nbr = (sym.join(labels, sym["v"] == labels["vid"])
-                   .select(F.col("u").alias("vid"), "label"))
-            counts = (nbr.groupBy("vid", "label")
-                      .agg(F.count(F.lit(1)).alias("n")))
-            # most frequent label, smallest on ties — two map-side
-            # combinable aggregates (max count per vid, then min label
-            # among the rows at that count); works for any orderable
-            # label type, no window
-            w = counts.groupBy("vid").agg(F.max("n").alias("n_max"))
-            labels = (counts.join(w, "vid")
-                      .filter(F.col("n") == F.col("n_max"))
-                      .groupBy("vid").agg(F.min("label").alias("label")))
-            if i % ckpt_every == 0 or (deep and i == iterations):
-                labels = labels.localCheckpoint(eager=True)
-        return labels
-    finally:
-        if deep:
-            sym.unpersist()
+    for i in range(1, iterations + 1):
+        nbr = (sym.join(labels, sym["v"] == labels["vid"])
+               .select(F.col("u").alias("vid"), "label"))
+        counts = (nbr.groupBy("vid", "label")
+                  .agg(F.count(F.lit(1)).alias("n")))
+        # most frequent label, smallest on ties — two map-side
+        # combinable aggregates (max count per vid, then min label
+        # among the rows at that count); works for any orderable
+        # label type, no window
+        w = counts.groupBy("vid").agg(F.max("n").alias("n_max"))
+        labels = (counts.join(w, "vid")
+                  .filter(F.col("n") == F.col("n_max"))
+                  .groupBy("vid").agg(F.min("label").alias("label")))
+        if i % LPA_CKPT_EVERY == 0:
+            labels = labels.localCheckpoint(eager=True)
+    return labels

@@ -25,7 +25,7 @@ bucketed-by-src parquet so even shuffle joins co-locate.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -250,67 +250,57 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
                                 F.col(VID)).distinct()
     else:
         frontier = start.select(VID).distinct()
-    if early_stop:
-        # persists only pay off in the counted loop (materialized by the
-        # per-hop checkpoint jobs); the free-running short-range path
-        # builds ONE lazy plan the caller materializes after this
-        # function returns — a persist here would be unpersisted in the
-        # finally block before it could ever be populated
-        frontier = frontier.persist()
     results: DataFrame | None = None
-    # seed-set size: the only dedicated count job — later frontiers get
-    # their size free off their checkpoint job (checkpoint_count)
-    n = frontier.count() if early_stop else None
-    try:
-        for step in range(1, max_steps + 1):
+    # counted loop: every frontier, the seed included, is checkpointed
+    # and counted in one job; the short-range path builds ONE lazy plan
+    # the caller materializes after this function returns
+    n = None
+    if early_stop:
+        frontier, n = checkpoint_count(frontier)
+    for step in range(1, max_steps + 1):
+        if early_stop:
+            if n == 0:
+                break
+            small = n <= BROADCAST_FRONTIER_ROWS
+        else:
+            small = step == 1
+        step_edges = edges[step - 1] if per_step else edges
+        # per-step truncate pushdown (truncate_clause,
+        # PushStepLimitDownGetNeighborsRule /
+        # PushStepSampleDownGetNeighborsRule): applied inside the hop,
+        # before the next frontier forms — exactly where the reference
+        # pushes it into the GetNeighbors RPC
+        lim = order = None
+        if step_limits is not None and step <= len(step_limits):
+            lim = step_limits[step - 1]
+        hop = get_neighbors(frontier, step_edges, direction, edge_filter,
+                            broadcast_frontier=small,
+                            limit_per_vertex=lim, order_per_vertex=order,
+                            carry_cols=carry,
+                            dedup_frontier=False)  # frontier is distinct
+        if step_samples is not None and step <= len(step_samples):
+            # SAMPLE is a GLOBAL per-step draw, not per-vertex
+            # truncation (GO.feature "go step sample": 3 steps with
+            # SAMPLE [1,3,2] returns exactly 2 rows) — LIMIT keeps
+            # the per-vertex window (storage truncate) semantics
+            hop = (hop.orderBy(F.rand(sample_seed + step))
+                   .limit(step_samples[step - 1]))
+        if step >= min_steps:
+            step_df = hop.withColumn("step", F.lit(step))
+            results = step_df if results is None else results.unionByName(
+                step_df, allowMissingColumns=True)
+        if step < max_steps:
+            nxt = hop.select(*carry, F.col(DST).alias(VID)).distinct()
             if early_stop:
-                if n == 0:
-                    break
-                small = n <= BROADCAST_FRONTIER_ROWS
-            else:
-                small = step == 1
-            step_edges = edges[step - 1] if per_step else edges
-            # per-step truncate pushdown (truncate_clause,
-            # PushStepLimitDownGetNeighborsRule /
-            # PushStepSampleDownGetNeighborsRule): applied inside the hop,
-            # before the next frontier forms — exactly where the reference
-            # pushes it into the GetNeighbors RPC
-            lim = order = None
-            if step_limits is not None and step <= len(step_limits):
-                lim = step_limits[step - 1]
-            hop = get_neighbors(frontier, step_edges, direction, edge_filter,
-                                broadcast_frontier=small,
-                                limit_per_vertex=lim, order_per_vertex=order,
-                                carry_cols=carry,
-                                dedup_frontier=False)  # frontier is distinct
-            if step_samples is not None and step <= len(step_samples):
-                # SAMPLE is a GLOBAL per-step draw, not per-vertex
-                # truncation (GO.feature "go step sample": 3 steps with
-                # SAMPLE [1,3,2] returns exactly 2 rows) — LIMIT keeps
-                # the per-vertex window (storage truncate) semantics
-                hop = (hop.orderBy(F.rand(sample_seed + step))
-                       .limit(step_samples[step - 1]))
-            if step >= min_steps:
-                step_df = hop.withColumn("step", F.lit(step))
-                results = step_df if results is None else results.unionByName(
-                    step_df, allowMissingColumns=True)
-            if step < max_steps:
-                nxt = hop.select(*carry, F.col(DST).alias(VID)).distinct()
-                if early_stop:
-                    # materialize + count in one job; also severs lineage,
-                    # which persist() alone does not
-                    nxt, n = checkpoint_count(nxt)
-                    frontier.unpersist()
-                frontier = nxt
-        if results is None:
-            e0 = edges[0] if per_step else edges
-            empty = frontier.limit(0)
-            return get_neighbors(empty, e0, direction,
-                                 carry_cols=carry).withColumn(
-                "step", F.lit(1))
-        return results
-    finally:
-        frontier.unpersist()
+                nxt, n = checkpoint_count(nxt)
+            frontier = nxt
+    if results is None:
+        e0 = edges[0] if per_step else edges
+        empty = frontier.limit(0)
+        return get_neighbors(empty, e0, direction,
+                             carry_cols=carry).withColumn(
+            "step", F.lit(1))
+    return results
 
 
 def _edge_id_fields(prefix: str = "", reversed_: bool = False) -> list:
@@ -464,14 +454,3 @@ def get_edges(keys: DataFrame, edges: DataFrame) -> DataFrame:
     return edges.join(F.broadcast(keys.select(SRC, DST, RANK).distinct()),
                       [SRC, DST, RANK], "inner")
 
-
-def expand(frontier: DataFrame, edges: DataFrame, direction: str = "out",
-           edge_filter: Column | None = None,
-           transform: Callable[[DataFrame], DataFrame] | None = None) -> DataFrame:
-    """Expand (kExpand/kExpandAll): single frontier advance, returning the
-    next frontier (dst-only, deduped) — the GetDstBySrc fast path."""
-    hop = get_neighbors(frontier, edges, direction, edge_filter,
-                        broadcast_frontier=None)
-    if transform is not None:
-        hop = transform(hop)
-    return hop.select(F.col(DST).alias(VID)).distinct()

@@ -14,7 +14,6 @@ from nebula_spark.pipeline.text import (  # noqa: F401
 from nebula_spark.pipeline.dedup import (  # noqa: F401
     exact_dedup, ngram_jaccard_pairs, minhash_signatures, minhash_lsh_pairs,
     lsh_star_edges, simhash64, connected_components,
-    connected_components_star,
 )
 from nebula_spark.pipeline.similarity import (  # noqa: F401
     brute_force_topk, ivf_topk, lsh_bucketed_topk,

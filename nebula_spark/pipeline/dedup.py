@@ -1,5 +1,5 @@
 """Deduplication at corpus scale: exact, n-gram Jaccard, MinHash+LSH,
-SimHash, embedding-cosine near-dup.
+SimHash, and duplicate clusters as connected components of the pairs.
 
 Design for 100 TB: every method reduces to (1) a per-row signature computed
 with JVM-side expressions (no Python), (2) a shuffle keyed on
@@ -370,79 +370,40 @@ def simhash64(df: DataFrame, key_col: str = "doc_id",
     return df.select(F.col(key_col).alias("id"), sim.alias("simhash"))
 
 
-def embedding_cosine_dups(emb: DataFrame, key_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          threshold: float = 0.95,
-                          n_buckets: int = 8) -> DataFrame:
-    """Embedding near-dup pairs above a cosine threshold, random-hyperplane
-    bucketed (SimHash-for-vectors) so the pair join is bucket-local.
-
-    With ``n_buckets`` hyperplanes drawn from md5-seeded pseudo-random signs,
-    two vectors land in the same bucket when they agree on every hyperplane
-    side — high-cosine pairs almost always do for small n_buckets. Exact
-    cosine is then computed only within buckets.
-    """
-    from nebula_spark.functions.graphfns import cos_similarity
-
-    dim_idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
-    # deterministic pseudo-random hyperplane sign for (plane, dim)
-    def plane_sign(p: int):
-        return lambda i: F.when(
-            _md5_64(F.concat(F.lit(f"plane{p}:"), i.cast("string"))) % 2 == 0,
-            F.lit(1.0)).otherwise(F.lit(-1.0))
-
-    bucket = F.concat_ws("", *[
-        F.when(F.aggregate(
-            F.zip_with(F.col(vec_col),
-                       F.transform(dim_idx, plane_sign(p)),
-                       lambda x, s: x * s),
-            F.lit(0.0), lambda acc, v: acc + v) >= 0, F.lit("1"))
-        .otherwise(F.lit("0"))
-        for p in range(n_buckets)])
-    v = emb.select(F.col(key_col).alias("id"),
-                   F.col(vec_col).cast("array<double>").alias("v"),
-                   bucket.alias("bkt"))
-    a, b = v.alias("a"), v.alias("b")
-    pairs = (a.join(b, (F.col("a.bkt") == F.col("b.bkt"))
-                    & (F.col("a.id") < F.col("b.id")))
-             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                     F.round(cos_similarity(F.col("a.v"), F.col("b.v")), 6)
-                     .alias("cosine")))
-    return pairs.filter(F.col("cosine") >= threshold)
-
-
 def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b",
-                         max_iter: int = 25) -> DataFrame:
+                         dst: str = "id_b") -> DataFrame:
     """Duplicate-cluster assignment: connected components over a candidate
     pair list, label = min member id (the canonical representative a dedup
     pipeline keeps).
 
-    Min-label propagation with POINTER JUMPING (r11): each round first
-    takes the min label over the closed neighborhood (one shuffle keyed on
-    node id, map-side combinable), then compresses label chains by
-    replacing every label with its label's label (one join keyed on the
-    label). Labels only decrease and only to ids inside the same
-    component, so the fixpoint is unchanged — the component minimum — but
-    chains shorten geometrically: a depth-d label tree converges in
-    O(log d) rounds instead of d supersteps (measured at sf0.1: the LSH
-    star-edge graph needed 7 neighbor-only supersteps, 3 jump rounds).
-    The convergence probe is an improved-row Observation riding each
-    round's checkpoint job (no dedicated probe stage), and labels are
-    eagerly localCheckpoint-ed per round to cut lineage. For adversarially
-    long chain graphs :func:`connected_components_star` (alternating
-    large-star/small-star contraction, O(log² n) supersteps) remains —
-    same frame contract, identical labels.
+    Min-label propagation with root hooking and pointer jumping, in the
+    manner of Shiloach–Vishkin. The seed labels every node with the min
+    of its closed neighborhood. State is ``(node, label, prev)``, where
+    ``prev`` is the node's label before the last round. A round is:
 
+    - one node-keyed min-aggregate over three row sets: the labels, the
+      neighbors' labels, and a hook row ``(prev → label)`` for every node
+      whose label dropped in the last round, so the root it pointed at
+      learns what its member found;
+    - one pointer jump, label ← label[label], keyed on the label, which
+      hands a hooked root's new label to its members in the same round.
+
+    Labels are node ids of the node's own component and only decrease,
+    so the loop ends, and it ends on the component minimum. It stops on
+    the round where no label dropped. That count rides the round's
+    checkpoint job, is exact for any orderable id type, and needs no
+    round cap. A chain of n nodes with shuffled ids takes O(log n)
+    rounds (1k / 4k / 16k nodes: 13 / 17 / 20, seed included). Either
+    half alone takes O(n) rounds there: 228 for jumping alone and 711
+    for hooking alone on the 1k chain.
+
+    Pairs with a NULL endpoint carry no connectivity and are dropped.
     Returns ``(node, cluster_id)``, one row per distinct node in *pairs*.
     """
     from nebula_spark.session import scoped_conf
 
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # NULL endpoints carry no connectivity and are dropped outright (r12,
-    # ADVICE): under least/greatest canonicalization a (x, NULL) pair would
-    # otherwise silently collapse to a self-loop (x, x) — make the NULL-id
-    # contract explicit instead of an artifact of NULL-skipping functions.
+    # without this filter least/greatest would turn (x, NULL) into (x, x)
     e = e.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     # Dedup BEFORE symmetrizing (r11 fourth pass): distinct(e ∪ swap(e))
     # is a symmetric set, i.e. exactly can ∪ swap(can) where can is the
@@ -471,135 +432,60 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
             can = can.coalesce(p)
             sym = can.unionByName(can.select(F.col("b").alias("a"),
                                              F.col("a").alias("b")))
-            # round 0 folded into the seed (r11 second pass): with
-            # identity labels the neighbor-min round is algebraically min
-            # over the CLOSED neighborhood — min(node, min of neighbors) —
-            # which is a single map-side-combinable aggregate over the
-            # symmetric edge list (every node appears as `a` in sym). The
-            # identity-label frame, the sym⋈labels message join and the
-            # union it fed are gone; the probe sum rides the seed's
-            # checkpoint job. Seed stays EAGER (measured, r11 fourth
-            # pass): folding its checkpoint job into round 1 via a lazy
-            # cut saved one job barrier but round 1's two readers re-ran
-            # the seed's post-exchange aggregation (345→599 tasks) — at
-            # scale a full node-keyed aggregate re-run costs more than the
-            # barrier it saves. A decimal(38,0) overflow keeps iterating
-            # to max_iter (NULL total never equals) rather than
-            # conflating with emptiness (ADVICE r11); empty input is the
-            # explicit n_can == 0 case.
-            labels, m0 = checkpoint_observe(
+            # the seed is round 0 on identity labels: the min over the
+            # CLOSED neighborhood, one map-side-combinable aggregate over
+            # the symmetric list (every node appears as `a` in sym). It
+            # stays EAGER (measured, r11 fourth pass): a lazy cut re-ran
+            # its aggregate in both readers of round 1 (345 → 599 tasks).
+            # Its pre-round label is the node itself, but a hook row
+            # (node → label) would repeat the node's own row, so the seed
+            # stores prev = label and counts its drops against the node.
+            labels, m = checkpoint_observe(
                 sym.groupBy(F.col("a").alias("node"))
-                   .agg(F.min(F.least("a", "b")).alias("label")),
-                total=F.sum(F.col("label").cast("decimal(38,0)")))
-            prev_total = m0["total"]
+                   .agg(F.min(F.least("a", "b")).alias("label"))
+                   .withColumn("prev", F.col("label")),
+                dropped=F.count_if(F.col("label") < F.col("node")))
             # the symmetric edge list is re-hashed ONCE onto the round
             # layout keyed by the message-join key, so every round's
             # sym-side Exchange disappears (the persisted
             # InMemoryRelation advertises hash(a, p)); rounds shuffle
-            # only the shrinking label frame
+            # only the label frame
             sym_r = sym.repartition(p, "a").persist()
-            for it in range(1, max_iter if n_can else 1):
-                msgs = (sym_r.join(labels, sym_r["a"] == labels["node"],
-                                   "inner")
-                        .select(F.col("b").alias("node"), F.col("label")))
-                nbr_min = (labels.unionByName(msgs)
-                           .groupBy("node")
-                           .agg(F.min("label").alias("label")))
-                # pointer jump: label ← label[label]. label values are
-                # node ids of the same component (induction over both
-                # rules), so the left join resolves every non-root label
-                # one more level toward the component min; roots
-                # (label[label]=label) keep their value via the coalesce.
-                # Never applied to the round-0 identity seed (folded into
-                # the aggregate above): there the jump would re-aggregate
-                # the largest pre-convergence frame for almost no
-                # compression (measured at sf0.1: always-jump 2.7 s,
-                # jump-from-1 1.8 s, no-jump 2.0 s / 7 rounds).
-                lut = nbr_min.select(F.col("node").alias("_ln"),
-                                     F.col("label").alias("_ll"))
-                nbr_min = (nbr_min.join(lut,
-                                        nbr_min["label"] == lut["_ln"],
+            # every round reuses these columns: building them once keeps
+            # per-round plan construction to the frames themselves.
+            # `own` is set on the node's own row only, so its min is the
+            # node's pre-round label: `prev` costs no extra join. A node
+            # whose label dropped emits its hook row from the same scan
+            # (a third union branch measured +8 tasks and +0.3 s on the
+            # perfbench deep graph).
+            dropped = F.col("label") < F.col("prev")
+            own_row = F.struct("node", "label", F.col("label").alias("own"))
+            hook_row = F.struct(F.col("prev").alias("node"), "label",
+                                F.lit(None).alias("own"))
+            own_and_hook = F.inline(F.when(dropped,
+                                           F.array(own_row, hook_row))
+                                    .otherwise(F.array(own_row)))
+            msg = [F.col("b").alias("node"), F.col("label"),
+                   F.lit(None).alias("own")]
+            to_min = [F.min("label").alias("label"),
+                      F.min("own").alias("prev")]
+            lut = [F.col("node").alias("_ln"), F.col("label").alias("_ll")]
+            jumped = [F.col("node"), F.coalesce("_ll", "label").alias("label"),
+                      F.col("prev")]
+            while m["dropped"]:
+                msgs = sym_r.join(labels, F.col("a") == F.col("node"))
+                nbr_min = (labels.select(own_and_hook)
+                           .union(msgs.select(msg))
+                           .groupBy("node").agg(*to_min))
+                # pointer jump: label ← label[label]. Labels are node ids
+                # of the same component, so the left join resolves every
+                # non-root label one level toward the component min;
+                # roots (label[label] = label) keep their value.
+                nbr_min = (nbr_min.join(nbr_min.select(lut),
+                                        F.col("label") == F.col("_ln"),
                                         "left")
-                           .select("node",
-                                   F.coalesce("_ll", "label")
-                                   .alias("label")))
-                # convergence probe rides the checkpoint job: per-node
-                # labels are monotone non-increasing, so the (exact,
-                # decimal) label sum strictly decreases iff any node
-                # improved — no join against the previous labels needed
-                # (r11; was one extra node-keyed join per round)
+                           .select(jumped))
                 labels, m = checkpoint_observe(
-                    nbr_min,
-                    total=F.sum(F.col("label").cast("decimal(38,0)")))
-                if m["total"] is not None and m["total"] == prev_total:
-                    break
-                prev_total = m["total"]
+                    nbr_min, dropped=F.count_if(dropped))
     sym_r.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(pairs: DataFrame, src: str = "id_a",
-                              dst: str = "id_b",
-                              max_iter: int = 20) -> DataFrame:
-    """Connected components by alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the scale path for graphs whose diameter defeats min-label
-    propagation: a 1M-node chain needs 1M label supersteps but only
-    O(log² n) ≈ a couple dozen contraction rounds.
-
-    One round = two keyed shuffles (a groupBy-min per star phase), both
-    map-side combinable; the edge frame is eagerly localCheckpoint-ed per
-    round so lineage stays flat. Same contract and labels as
-    :func:`connected_components`: returns ``(node, cluster_id)`` with
-    cluster_id = min member id (the contraction's fixpoint is a star
-    centered on each component's minimum).
-    """
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # lazy: node set is only read by the final label join — the eager
-    # variant paid a dedicated materialization job up front for nothing
-    nodes = (e.select(F.col("u").alias("node"))
-             .unionByName(e.select(F.col("v").alias("node")))
-             .distinct().localCheckpoint(eager=False))
-    # canonical orientation big→small; self-loops carry no connectivity
-    edges, n_edges = checkpoint_count(
-        e.filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"),
-                F.least("u", "v").alias("v"))
-        .distinct())
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
-        # large-star(u): link every strictly-larger neighbor to the min of
-        # the closed neighborhood — moves whole subtrees below small ids
-        sym = edges.unionByName(edges.select(F.col("v").alias("u"),
-                                             F.col("u").alias("v")))
-        mins = (sym.groupBy("u").agg(F.min("v").alias("mn"))
-                .select("u", F.least("u", "mn").alias("m")))
-        ls = (sym.join(mins, "u")
-              .filter(F.col("v") > F.col("u"))
-              .select(F.col("v").alias("u"), F.col("m").alias("v"))
-              .filter(F.col("u") != F.col("v")).distinct())
-        # small-star(u): link u and all its smaller neighbors to their min
-        m2 = ls.groupBy("u").agg(F.min("v").alias("m"))
-        ss, n_new = checkpoint_count(
-            ls.join(m2, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(m2.select(F.col("u").alias("a"),
-                                   F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"),
-                    F.least("a", "b").alias("v"))
-            .distinct())
-        # fixpoint: identical edge set (both sides distinct, so one-sided
-        # exceptAll-empty + equal counts ⇒ equality)
-        if n_new == n_edges and \
-                ss.exceptAll(edges).limit(1).count() == 0:
-            edges = ss
-            break
-        edges, n_edges = ss, n_new
-    # at the fixpoint each node carries exactly one (node → min) edge; the
-    # groupBy-min guards the max_iter-exhausted case (still one row/node)
-    star = edges.groupBy(F.col("u").alias("node")) \
-                .agg(F.min("v").alias("label"))
-    return (nodes.join(star, "node", "left")
-            .select("node", F.coalesce("label", "node").alias("cluster_id")))

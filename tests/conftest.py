@@ -42,6 +42,26 @@ def pytest_collection_modifyitems(config, items):
               f"tests (SPARK_GRAFT_FULL_TESTS=1 runs them)", flush=True)
 
 
+def union_find_labels(pairs) -> set:
+    """Plain-Python connected components of ``(a, b)`` pairs as
+    ``{(node, min member id)}``; pairs with a None endpoint are skipped."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in list(parent)}
+
+
 @pytest.fixture(scope="session")
 def spark():
     from nebula_spark.session import get_spark

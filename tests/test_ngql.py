@@ -51,6 +51,21 @@ def test_go_two_steps_pipe_groupby(space):
     assert got == {("p1", 1), ("p4", 1), ("p3", 1), ("p5", 1)}
 
 
+def test_go_1_to_4_steps_matches_python(space, nba):
+    # max_steps > 2 takes go()'s counted loop: checkpointed, counted
+    # frontiers that stop on an empty one
+    from collections import Counter
+    like = [(r["_src"], r["_dst"]) for r in nba["like"].collect()]
+    want, frontier = Counter(), {"p1"}
+    for _ in range(4):
+        hop = [(s, d) for s, d in like if s in frontier]
+        want.update(hop)
+        frontier = {d for _, d in hop}
+    df = execute(space, 'GO 1 TO 4 STEPS FROM "p1" OVER like '
+                        'YIELD src(edge) AS s, dst(edge) AS d')
+    assert Counter((r.s, r.d) for r in df.collect()) == want
+
+
 def test_go_dst_prop_join(space):
     df = execute(space,
                  'GO FROM "p1" OVER like WHERE $$.player.age > 40 '

@@ -1,8 +1,9 @@
 """Focused pins for the r11 optimization-round operator changes.
 
 Each test guards an internals change against the semantics it must
-preserve: pointer-jumping connected components, the O(n log n) top-bigram
-rewrite, lazy-unrolled fixed-iteration loops (pagerank / k-core / BFS).
+preserve: connected components against a plain-Python union-find, the
+O(n log n) top-bigram rewrite, lazy-unrolled fixed-iteration loops
+(pagerank / k-core / BFS).
 """
 
 from pyspark.sql import functions as F
@@ -19,16 +20,14 @@ def test_cc_pointer_jump_long_chain_min_label(spark):
     assert got == {(i, 0) for i in range(31)}
 
 
-def test_cc_pointer_jump_matches_star_contraction(spark):
-    from nebula_spark.pipeline import (connected_components,
-                                       connected_components_star)
+def test_cc_pointer_jump_matches_union_find(spark):
+    from nebula_spark.pipeline import connected_components
+    from tests.conftest import union_find_labels
     rows = [(0, 5), (5, 9), (9, 2), (20, 21), (22, 21), (7, 7), (40, 41)]
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    a = {(r.node, r.cluster_id)
-         for r in connected_components(pairs).collect()}
-    b = {(r.node, r.cluster_id)
-         for r in connected_components_star(pairs).collect()}
-    assert a == b
+    got = {(r.node, r.cluster_id)
+           for r in connected_components(pairs).collect()}
+    assert got == union_find_labels(rows)
 
 
 def test_repetition_top_bigram_matches_bruteforce(spark):
@@ -53,18 +52,32 @@ def test_repetition_top_bigram_matches_bruteforce(spark):
         assert got[did] == want, (did, got[did], want)
 
 
-def test_pagerank_deep_equals_shallow_checkpointing(spark):
-    # deep (> ckpt_every) takes the persist+checkpoint path; per-
-    # iteration checkpoints must not change the recurrence
+def test_pagerank_ten_iterations_match_recurrence(spark):
+    # ten supersteps cross the eager lineage cut at PAGERANK_CKPT_EVERY;
+    # the cut must not change the recurrence
+    from nebula_spark.operators.algo import PAGERANK_CKPT_EVERY, pagerank
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)]
+    assert PAGERANK_CKPT_EVERY < 10
+    edges = spark.createDataFrame(pairs, "_src long, _dst long")
+    outdeg = {s: sum(1 for a, _ in pairs if a == s) for s, _ in pairs}
+    rank = {v: 1.0 for p in pairs for v in p}
+    for _ in range(10):
+        rank = {v: 0.15 + 0.85 * sum(rank[s] / outdeg[s]
+                                     for s, d in pairs if d == v)
+                for v in rank}
+    got = {r.vid: r.rank for r in pagerank(edges, iterations=10).collect()}
+    assert got.keys() == rank.keys()
+    assert all(abs(got[v] - rank[v]) < 1e-9 for v in rank), (got, rank)
+
+
+def test_pagerank_drops_null_endpoint_edges(spark):
+    # a NULL endpoint is neither a vertex nor an out-edge of the other one
     from nebula_spark.operators.algo import pagerank
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)],
-        "_src long, _dst long")
-    a = {(r.vid, round(r.rank, 12))
-         for r in pagerank(edges, iterations=10, ckpt_every=3).collect()}
-    b = {(r.vid, round(r.rank, 12))
-         for r in pagerank(edges, iterations=10, ckpt_every=1).collect()}
-    assert a == b
+        [(1, 2), (2, None), (None, 3), (2, 1)], "_src long, _dst long")
+    got = {r.vid: r.rank for r in pagerank(edges, 2).collect()}
+    assert got.keys() == {1, 2}
+    assert all(abs(r - 1.0) < 1e-9 for r in got.values()), got
 
 
 def test_k_core_fixed_rounds_matches_fixpoint_when_converged(spark):

@@ -10,8 +10,8 @@ from nebula_spark.pipeline import (
     brute_force_topk, exact_dedup, lsh_bucketed_topk, minhash_lsh_pairs,
     minhash_signatures, ngram_jaccard_pairs, simhash64, text_stats,
 )
-from nebula_spark.pipeline.dedup import embedding_cosine_dups, shingles
-from tests.conftest import SF_DIR
+from nebula_spark.pipeline.dedup import shingles
+from tests.conftest import SF_DIR, union_find_labels
 
 
 @pytest.fixture(scope="module")
@@ -137,15 +137,6 @@ def test_lsh_topk_subset_of_bucket(embs):
     assert all(cid == qid for qid, cid in firsts.items())
 
 
-def test_embedding_cosine_dups_selfjoin(spark):
-    rows = [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.01, 0.0]),
-            (3, [0.0, 1.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = embedding_cosine_dups(df, threshold=0.99, n_buckets=2).collect()
-    ids = {(r.id_a, r.id_b) for r in out}
-    assert (1, 2) in ids and all(3 not in p for p in ids)
-
-
 def test_multimodal_fake_decode(spark):
     from nebula_spark.pipeline.multimodal import frame_sample, image_features
     df = spark.createDataFrame(
@@ -243,32 +234,27 @@ def test_no_persist_leaks_after_queries(spark):
     assert len(jsc.getRDDStorageInfo()) == 0
 
 
-def test_star_contraction_chain_converges_fast(spark):
-    """1000-node chain — the adversarial case for min-label propagation
-    (O(diameter)=1000 supersteps). Star contraction must finish within the
-    default 20-round cap (O(log² n) ≈ 12 here) and label every node with
-    the component min."""
-    from nebula_spark.pipeline import connected_components_star
+def test_cc_chain_converges_fast(spark):
+    """1000-node sorted chain, the long-diameter case for min-label
+    propagation (1000 supersteps without pointer jumping): every node is
+    labelled with the component min."""
+    from nebula_spark.pipeline import connected_components
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(999)], ["id_a", "id_b"])
-    got = connected_components_star(pairs, max_iter=12).collect()
+    got = connected_components(pairs).collect()
     assert len(got) == 1000
     assert all(r.cluster_id == 0 for r in got)
 
 
-def test_star_contraction_matches_min_label(spark):
-    """Identical labels to min-propagation on a mixed graph: two chains,
-    a star, a self-loop singleton, shuffled ids."""
-    from nebula_spark.pipeline import (connected_components,
-                                       connected_components_star)
+def test_cc_mixed_graph_matches_union_find(spark):
+    """Two chains, a star, a self-loop singleton, shuffled ids."""
+    from nebula_spark.pipeline import connected_components
     raw = ([(2, 3), (1, 2), (3, 4), (10, 11), (20, 20), (99, 1),
             (50, 41), (41, 33), (33, 60), (60, 50)])
     pairs = spark.createDataFrame(raw, ["id_a", "id_b"])
-    a = {(r.node, r.cluster_id)
-         for r in connected_components(pairs).collect()}
-    b = {(r.node, r.cluster_id)
-         for r in connected_components_star(pairs).collect()}
-    assert a == b
+    got = {(r.node, r.cluster_id)
+           for r in connected_components(pairs).collect()}
+    assert got == union_find_labels(raw)
 
 
 def test_ivf_topk_self_match_and_recall(embs):
