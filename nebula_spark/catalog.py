@@ -11,19 +11,39 @@ vertices by ``_vid``, edges by ``_src`` — the Spark analog of the reference's
 key layout where all out-edges of a vertex are physically contiguous
 (``src/common/utils/NebulaKeyUtils.h:13-27``).
 
+Schemas live in the catalog, as graphd reads them from its cached meta
+client (``src/clients/meta/MetaClient.cpp``) instead of from the data. A
+path-backed def carries its table's Parquet schema: the first open infers
+it (one Spark job), each commit replaces it with the schema of the frame it
+wrote, and every other open passes it to the reader, which then only lists
+the directory.
+
+Statement snapshot: inside :func:`statement_snapshot` (``plans.execute``
+runs each call in one) a path-backed table is opened once, and every read
+of it shares that listing; a commit through the statement drops the handle,
+so the statement's own later reads see what it wrote. A commit from
+another thread cannot split the statement's reads of one table across two
+versions (two listings) of it. Outside a snapshot, each read lists the
+directory again, so files added between calls (a streaming sink) show up
+on the next one.
+
 TTL parity: the reference filters expired rows at read time and purges them
 in compaction (``src/storage/CompactionFilter.h:76-131``). We apply the same
 read-time filter ``ttl_col + ttl_duration >= now()`` in :meth:`GraphSpace.tag`
-/ :meth:`GraphSpace.edge`; the "compaction" analog is rewriting the parquet.
+/ :meth:`GraphSpace.edge` on every read, also of a snapshot's shared
+handle; the "compaction" analog is rewriting the parquet.
 """
 
 from __future__ import annotations
 
+import contextvars
 import threading
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from nebula_spark.session import local_frame
 
@@ -49,14 +69,67 @@ RANK = "_rank"
 _LEGACY_TAG_KEYS = {"vid": VID}
 _LEGACY_EDGE_KEYS = {"src": SRC, "dst": DST}
 
+# The raw relations the running statement has opened, by table path, or
+# None outside a statement. A ContextVar rather than a module dict: threads
+# share spaces, and each thread's statement keeps its own snapshot.
+_OPENED: contextvars.ContextVar[dict | None] = contextvars.ContextVar(
+    "nebula_spark_opened", default=None)
+
+
+@contextmanager
+def statement_snapshot():
+    """Open each path-backed table at most once inside the block.
+
+    Every read of a table in the block shares the first read's directory
+    listing, so a commit from another thread cannot split the block's
+    reads of one table across two versions. A commit in the block drops
+    its table's handle (:func:`drop_opened`), so the statement's own
+    later reads see what it wrote. A nested block joins the enclosing
+    one."""
+    if _OPENED.get() is not None:
+        yield
+        return
+    token = _OPENED.set({})
+    try:
+        yield
+    finally:
+        _OPENED.reset(token)
+
+
+def read_back_schema(dt):
+    """The type a Parquet read reports for data written as ``dt``: Spark
+    reads every field, array element and map value back as nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, read_back_schema(f.dataType),
+                                       True, f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(read_back_schema(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(read_back_schema(dt.keyType),
+                       read_back_schema(dt.valueType), True)
+    return dt
+
+
+def drop_opened(path: str) -> None:
+    """Forget the running statement's handle on ``path`` after a commit
+    rewrote the directory."""
+    opened = _OPENED.get()
+    if opened is not None:
+        opened.pop(path, None)
+
 
 @dataclass
-class TagDef:
-    """A vertex tag: ``_vid`` key + typed property columns.
+class _TableDef:
+    """The catalog entry of one tag or edge-type table.
 
-    Multi-tag vertices (``src/common/datatypes/Vertex.h:62-70``) fall out of
-    the model: the same vid may appear in several tag tables; the full vertex
-    is the outer join of its tag rows on ``_vid``.
+    ``schema`` is the carried Parquet schema of a path-backed table: taken
+    from its first open, replaced by every commit with the schema of the
+    frame it wrote, and handed to every later open so that opening infers
+    nothing. ``_dropped`` names the columns ALTER … DROP removed; they may
+    not come back (schema/Schema.feature "drop … and add it back later").
+    Mutations never edit a def in place (only the first open fills in
+    ``schema``): they register a ``dataclasses.replace`` copy, so the
+    fields below travel together.
     """
 
     name: str
@@ -69,10 +142,22 @@ class TagDef:
     required: list | None = None  # NOT NULL columns (DDL nullability)
     comments: dict | None = None  # per-column COMMENT text (DESC)
     schema_comment: str | None = None  # COMMENT = "…" (SHOW CREATE)
+    schema: StructType | None = None  # carried schema (path-backed only)
+    _dropped: frozenset = frozenset()
 
 
 @dataclass
-class EdgeDef:
+class TagDef(_TableDef):
+    """A vertex tag: ``_vid`` key + typed property columns.
+
+    Multi-tag vertices (``src/common/datatypes/Vertex.h:62-70``) fall out of
+    the model: the same vid may appear in several tag tables; the full vertex
+    is the outer join of its tag rows on ``_vid``.
+    """
+
+
+@dataclass
+class EdgeDef(_TableDef):
     """An edge type: ``(_src, _dst, _rank)`` key + typed property columns.
 
     All three keys are underscore-namespaced so user props named
@@ -81,17 +166,6 @@ class EdgeDef:
     (``src/common/datatypes/Edge.h:16-23``) and is part of edge identity
     everywhere (joins, path-uniqueness filters).
     """
-
-    name: str
-    path: str | None = None
-    df: DataFrame | None = None
-    ttl_col: str | None = None
-    ttl_duration: int = 0
-    decl: list | None = None   # declared (reference) types, for SHOW CREATE
-    defaults: dict | None = None  # DDL DEFAULT exprs, applied at INSERT
-    required: list | None = None  # NOT NULL columns (DDL nullability)
-    comments: dict | None = None  # per-column COMMENT text (DESC)
-    schema_comment: str | None = None  # COMMENT = "…" (SHOW CREATE)
 
 
 @dataclass
@@ -147,8 +221,32 @@ class GraphSpace:
         self.edges.pop(name, None)
 
     # -- reads -------------------------------------------------------------
+    def _open(self, d: TagDef | EdgeDef) -> DataFrame:
+        """The raw relation of a path-backed table.
+
+        Inside :func:`statement_snapshot` the statement's first open
+        serves all its later reads; outside one, each call lists the
+        directory again (a streaming sink stays live between calls). Only
+        a def's first open infers the schema, which costs a Spark job;
+        it fills ``d.schema``, and every later open passes that carried
+        schema and runs no job."""
+        opened = _OPENED.get()
+        hit = opened.get(d.path) if opened is not None else None
+        # defs of two spaces can share a path (CREATE SPACE … AS) and
+        # carry different schemas after an ALTER through one of them
+        if hit is not None and hit[0] == d.schema:
+            return hit[1]
+        if d.schema is None:
+            df = self.spark.read.parquet(d.path)
+            d.schema = df.schema
+        else:
+            df = self.spark.read.schema(d.schema).parquet(d.path)
+        if opened is not None:
+            opened[d.path] = (d.schema, df)
+        return df
+
     def _load(self, d: TagDef | EdgeDef) -> DataFrame:
-        df = d.df if d.df is not None else self.spark.read.parquet(d.path)
+        df = d.df if d.df is not None else self._open(d)
         # normalize legacy bare key names (vid/src/dst) from handed-in
         # frames to the namespaced key columns — only when the namespaced
         # column is absent, so user PROPS with those names (which the

@@ -113,11 +113,16 @@ def commit_table(df: DataFrame, path: str) -> None:
     """Atomically replace a parquet table directory with ``df``.
 
     Write to a temp sibling then rename — the poor-man's ACID swap that
-    Delta's transaction log replaces on a real deployment.
+    Delta's transaction log replaces on a real deployment. A write that
+    raises removes the temp sibling and leaves ``path`` untouched.
     """
     parent = os.path.dirname(os.path.abspath(path))
     tmp = os.path.join(parent, f".tmp_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(tmp)
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     old = None
     if os.path.exists(path):
         old = os.path.join(tempfile.gettempdir(), f".old_{uuid.uuid4().hex}")

@@ -20,13 +20,15 @@ Conventions:
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.catalog import (DST, RANK, SRC, VID, GraphSpace,
-                                  SpaceCatalog)
+                                  SpaceCatalog, drop_opened,
+                                  read_back_schema, statement_snapshot)
 from nebula_spark.functions.scalar import FUNCTIONS
 from nebula_spark.operators import go, k_hop_subgraph, traverse
 from nebula_spark.operators.paths import (_path_struct_type, all_paths,
@@ -3749,7 +3751,6 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
                     f"variables: `{ed.alias}'")
         counter[0] += 1
         pa = f"_ppv{counter[0]}"
-        import dataclasses
         p2 = dataclasses.replace(path, path_alias=pa)
         n0 = path.nodes[0]
         seed = None
@@ -3933,7 +3934,6 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
         value filters by end == id(element). One keyed shuffle, the
         per-element work is a lambda over the joined array."""
         nonlocal cur
-        import dataclasses
         if len(path.edges) != 1 or len(path.nodes) != 2:
             return None
         if any(n.alias == lv and (n.props or n.tag) for n in path.nodes):
@@ -5318,17 +5318,24 @@ def _stats_reset(df: DataFrame, n: int) -> DataFrame:
 
 
 def _rebind(space: GraphSpace, name: str, is_edge: bool,
-            new_df: DataFrame) -> None:
-    """Swap a tag/edge table for its mutated version, keeping TTL config.
+            new_df: DataFrame, **changes) -> None:
+    """Swap a tag/edge table for its mutated version.
 
-    **Path-backed tables write through** (r9): when the ``TagDef``/
-    ``EdgeDef`` carries a parquet ``path``, the mutation is committed to
-    disk per statement via :func:`~nebula_spark.operators.mutate
-    .commit_table` (atomic tmp+swap) and the binding re-reads the path —
-    the reference persists every mutation the same way
-    (``AddVerticesProcessor.cpp``: a RocksDB write per statement). The
-    re-read also truncates plan lineage for free. df-backed (test/bench)
-    spaces stay in-memory.
+    The new def is a ``dataclasses.replace`` of the old one, so every
+    field the statement does not name (TTL, declared types, defaults,
+    comments, dropped-column history, …) carries over; ``changes`` are
+    the def fields an ALTER sets along with the new frame.
+
+    **Path-backed tables write through** (r9): when the def carries a
+    parquet ``path``, the mutation is committed to disk per statement via
+    :func:`~nebula_spark.operators.mutate.commit_table` (atomic tmp+swap)
+    — the reference persists every mutation the same way
+    (``AddVerticesProcessor.cpp``: a RocksDB write per statement). The new
+    def carries the written frame's schema, and the statement's handle on
+    the table is dropped: its next read, and every later statement, opens
+    the committed files with that schema and infers nothing. A commit
+    that raises leaves the old files and the old def in place. df-backed
+    (test/bench) spaces stay in-memory.
 
     Lineage truncation (r8 deep-fuzz finding, df-backed lane): every
     mutation stacks an anti-join + union on the previous PLAN, so a
@@ -5341,14 +5348,12 @@ def _rebind(space: GraphSpace, name: str, is_edge: bool,
     single-statement scripts zero-cost."""
     defs = space.edges if is_edge else space.tags
     d = defs[name]
-    maker = space.create_edge if is_edge else space.create_tag
     if d.path is not None:
         from nebula_spark.operators.mutate import commit_table
+        schema = read_back_schema(new_df.schema)
         commit_table(new_df, d.path)       # materializes BEFORE the swap
-        maker(name, path=d.path, ttl_col=d.ttl_col,
-              ttl_duration=d.ttl_duration, decl=d.decl,
-              defaults=d.defaults, required=d.required,
-              comments=d.comments)
+        drop_opened(d.path)
+        defs[name] = dataclasses.replace(d, schema=schema, **changes)
         return
     counts = getattr(space, "_mut_counts", None)
     if counts is None:
@@ -5361,9 +5366,7 @@ def _rebind(space: GraphSpace, name: str, is_edge: bool,
         # reset Catalyst's size estimate too — it rides through the
         # checkpoint and compounds across statements (see _stats_reset)
         new_df = _stats_reset(new_df, n)
-    maker(name, df=new_df, ttl_col=d.ttl_col, ttl_duration=d.ttl_duration,
-          decl=d.decl, defaults=d.defaults, required=d.required,
-          comments=d.comments, schema_comment=d.schema_comment)
+    defs[name] = dataclasses.replace(d, df=new_df, **changes)
 
 
 def _default_col(text, dtype: str) -> Column:
@@ -6458,7 +6461,8 @@ def _exec_alter(space: GraphSpace, st) -> DataFrame:
     if getattr(st, "schema_comment", None) is not None \
             and not (st.adds or st.changes or st.drops):
         # ALTER TAG x comment = "…" (schema/Comment.feature)
-        d.schema_comment = st.schema_comment
+        reg[st.name] = dataclasses.replace(
+            d, schema_comment=st.schema_comment)
         return space.spark.range(0)
     if st.ttl_duration is not None or st.ttl_col is not None:
         # ALTER … ttl_duration / ttl_col (TTL2.feature "ttl ddl"):
@@ -6473,10 +6477,10 @@ def _exec_alter(space: GraphSpace, st) -> DataFrame:
         if st.ttl_col == "":
             # `ALTER … ttl_col = ""` disables TTL (TTL2.feature "ttl
             # ddl2"); rows already expired stay gone — the re-bound
-            # frame below reads through the still-active filter
-            d.df = space._load(d)
-            d.ttl_col = None
-            d.ttl_duration = 0
+            # frame reads through the still-active filter
+            _rebind(space, st.name, st.entity == "edge", space._load(d),
+                    ttl_col=None, ttl_duration=0)
+            d = reg[st.name]
             if not (st.adds or st.changes or st.drops):
                 return space.spark.range(0)
         elif st.ttl_col is not None:
@@ -6488,9 +6492,9 @@ def _exec_alter(space: GraphSpace, st) -> DataFrame:
         if st.ttl_col != "":
             if st.ttl_duration and not col:
                 raise ValueError("Unsupported!")
-            d.ttl_col = col
-            if st.ttl_duration is not None:
-                d.ttl_duration = st.ttl_duration
+            d = reg[st.name] = dataclasses.replace(
+                d, ttl_col=col, ttl_duration=d.ttl_duration
+                if st.ttl_duration is None else st.ttl_duration)
         if not (st.adds or st.changes or st.drops):
             return space.spark.range(0)
         # `ALTER TAG woman Drop (name) ttl_duration = 200` carries BOTH
@@ -6509,6 +6513,8 @@ def _exec_alter(space: GraphSpace, st) -> DataFrame:
     defaults = dict(d.defaults or {})
     required = list(d.required or [])
     comments = dict(d.comments or {})
+    dropped = set(d._dropped)
+    ttl = {}
     idx_cols = {c for ix in space.indexes.values()
                 if ix.kind == st.entity and ix.on == st.name
                 for c in ix.cols}
@@ -6541,7 +6547,7 @@ def _exec_alter(space: GraphSpace, st) -> DataFrame:
             # ADD NOT NULL needs a default (schema/Schema.feature:874)
             raise ValueError(f"Column `{col}' must have a default value "
                              "if it's not nullable")
-        if col in getattr(d, "_dropped", set()):
+        if col in dropped:
             # a previously-dropped column may not come back — the
             # reference keeps it in older schema versions
             # (schema/Schema.feature "drop … and add it back later")
@@ -6619,20 +6625,12 @@ def _exec_alter(space: GraphSpace, st) -> DataFrame:
             # dropping the ttl column clears the TTL setting
             # (TTL.feature Schematest: SHOW CREATE renders
             # `ttl_duration = 0, ttl_col = ""` after the drop)
-            d.ttl_col = None
-            d.ttl_duration = 0
-        if not hasattr(d, "_dropped"):
-            d._dropped = set()
-        d._dropped.add(col)
-    maker = space.create_edge if st.entity == "edge" else space.create_tag
-    nd = maker(st.name, df=df, ttl_col=d.ttl_col,
-               ttl_duration=d.ttl_duration,
-               decl=decl or None, defaults=defaults or None,
-               required=required or None, comments=comments or None,
-               schema_comment=d.schema_comment)
-    # dropped-column history survives the rebind (re-ADD refuses —
-    # schema/Schema.feature "drop … and add it back later")
-    nd._dropped = getattr(d, "_dropped", set())
+            ttl = {"ttl_col": None, "ttl_duration": 0}
+        dropped.add(col)
+    _rebind(space, st.name, st.entity == "edge", df,
+            decl=decl or None, defaults=defaults or None,
+            required=required or None, comments=comments or None,
+            _dropped=frozenset(dropped), **ttl)
     return space.spark.range(0)
 
 
@@ -6963,7 +6961,17 @@ def execute(space: GraphSpace | SpaceCatalog, query: str,
     reference's phrasing.
 
     An ``EXPLAIN``/``PROFILE`` prefix returns a one-row DataFrame with the
-    physical plan text instead of executing the statement."""
+    physical plan text instead of executing the statement.
+
+    The call runs in one :func:`~nebula_spark.catalog.statement_snapshot`:
+    it opens each path-backed table at most once (a commit reopens it),
+    so all reads of a table see one listing of its files."""
+    with statement_snapshot():
+        return _execute(space, query, params)
+
+
+def _execute(space: GraphSpace | SpaceCatalog, query: str,
+             params: dict | None) -> DataFrame:
     cat = space if isinstance(space, SpaceCatalog) else \
         SpaceCatalog.wrap(space)
     m = _EXPLAIN_RE.match(query)
