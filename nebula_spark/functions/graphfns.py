@@ -1,6 +1,6 @@
 """Graph-typed value helpers over path columns (SURVEY.md §2.9
-"Graph-specific"): ``nodes(path)``, the reference's ``Path::toString``
-rendering, and the cosine similarity the pipeline ranks vectors with.
+"Graph-specific"): the reference's ``Path::toString`` rendering and
+the cosine similarity the pipeline ranks vectors with.
 
 Spark model (SURVEY.md §1.1): a vertex value is a struct (vid, tag props…),
 an edge value is a struct (src, dst, rank, props…), a path is an array of
@@ -13,11 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def path_nodes(path: Column, start: Column) -> Column:
-    """nodes(path): start vid + every step dst (FunctionManager `nodes`)."""
-    return F.concat(F.array(start), F.transform(path, lambda p: p["d"]))
 
 
 def format_path(p: Column, with_prop: bool = False) -> Column:

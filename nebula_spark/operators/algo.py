@@ -3,8 +3,18 @@
 The reference has no PageRank (its algo executors cover paths/subgraph
 only — ``src/graph/executor/algo/``); this module is the north-star
 "GraphX-style iterative computation" surface: the driver loop is Python,
-every superstep is a join + aggregate the optimizer plans, and state is
-persisted/checkpointed per iteration so lineage stays flat.
+every superstep is a join + aggregate the optimizer plans, and the state
+is checkpointed often enough that lineage stays flat.
+
+Loop shapes:
+- ``k_core`` is counted: each peel's edge subset is checkpointed with its
+  row count (:func:`~nebula_spark.operators.traverse.checkpoint_count`),
+  which sizes the next peel and stops the loop at the fixpoint.
+- ``pagerank`` and ``label_propagation`` run a fixed number of supersteps
+  with nothing to stop early on, so supersteps chain into one plan with
+  an eager ``localCheckpoint`` every few of them. Their loop-invariant
+  frames are lazily checkpointed; each such site carries the A/B that
+  keeps it.
 
 Scale notes (100 TB):
 - rank state is (vid, rank) — linear in |V|; the contribution shuffle is
@@ -12,8 +22,8 @@ Scale notes (100 TB):
   src and AQE on, each iteration is one shuffle of |E| contributions.
 - out-degree is computed once, cached, and joined on src — co-partitioned
   with the edge table's layout (`sources/sink.py` hash-distributes by src).
-- `localCheckpoint` per iteration cuts the growing plan; without it the
-  lineage doubles per superstep and planning dominates after ~10 rounds.
+- without a cut the lineage doubles per superstep and planning dominates
+  after ~10 rounds.
 """
 
 from __future__ import annotations
@@ -57,22 +67,23 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     matching the common simplified form. Returns (vid, rank) after
     ``iterations`` synchronous supersteps.
 
-    Job shape (r11, guide §1.2/§2.4): supersteps chain LAZILY — one
-    Catalyst plan holds :data:`PAGERANK_CKPT_EVERY` iterations, so a
-    3-iteration run is ONE job at action time instead of one
-    materialization job per superstep (measured 2.5× at sf0.1). Every
+    Job shape: supersteps chain lazily — one Catalyst plan holds up to
+    :data:`PAGERANK_CKPT_EVERY` iterations, and every
     :data:`PAGERANK_CKPT_EVERY` iterations the rank frame is eagerly
     localCheckpoint-ed so deep runs keep a flat lineage. Each superstep
-    is one contribution shuffle keyed on dst plus one vid-keyed join.
+    is one contribution shuffle keyed on dst plus one vid-keyed join. The
+    lazy checkpoints of the invariants below still run jobs when they are
+    called (AQE runs their inputs' shuffle stages), so the 3-iteration
+    sf0.1 lane (``q_pagerank``) runs 4 jobs during the call and 17 in all.
     """
     # The loop-invariant subtrees would otherwise be re-embedded (and
     # re-scanned) once per superstep: the 3-iteration static plan held 56
-    # parquet scans and 0 ReusedExchange. A LAZY localCheckpoint computes
-    # each invariant once inside the first job that reads it (first touch
-    # writes the blocks, every later superstep and every later job reads
-    # them) without a dedicated materialization job; the ContextCleaner
-    # frees the blocks on GC (a persist() here could never be
-    # unpersisted — the returned frame is lazy).
+    # parquet scans and 0 ReusedExchange. A lazy localCheckpoint computes
+    # each invariant once and later supersteps and jobs read its blocks;
+    # the ContextCleaner frees them on GC (a persist() here could never
+    # be unpersisted — the returned frame is lazy). Kept by an A/B on the
+    # sf0.1 lane, 6 runs each: lazy 3.1–4.2 s, checkpoint_count 3.9–5.7 s,
+    # no checkpoint 4.4–5.6 s.
     e = (edges.select(SRC, DST)
          .filter(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
          .distinct().localCheckpoint(eager=False))
@@ -179,33 +190,20 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
     Scale design: each peel is one degree aggregation (map-side combined)
     plus two semi-joins of the edge table against the (shrinking) keep
     set — broadcastable as soon as the survivor set is small. State is
-    the edge subset only; localCheckpoint per peel keeps lineage flat.
-    Fixed ``rounds`` gives deterministic, SQL-unrollable semantics (the
-    oracle's form); ``rounds=None`` peels to fixpoint with an early-exit
-    count probe, O(peel-depth) supersteps.
+    the edge subset only, checkpointed per peel to keep lineage flat; the
+    edge count rides each peel's checkpoint job (:func:`checkpoint_count`),
+    sizes the next peel's shuffles and stops the loop at the fixpoint,
+    O(peel-depth) supersteps. ``rounds`` caps the peels — the oracle's
+    SQL-unrollable form; stopping before the cap at the fixpoint is exact,
+    since a peel past it changes nothing.
     """
-    sym = _symmetric(_undirected(edges))
-    # fixed rounds need no counts: each peel truncates lineage with a LAZY
-    # localCheckpoint (the plan becomes a LogicalRDD without running a
-    # job — the peel tree would otherwise triple the edge subtree per
-    # round), so all peels execute inside the caller's single action
-    # (r11, guide §1.2). The fixpoint's edge count rides each peel's
-    # checkpoint job (checkpoint_count): the stop probe adds no stage,
-    # and it sizes the next peel's shuffles.
-    counted = rounds is None
-    if counted:
-        e, n_e = checkpoint_count(sym)
-    else:
-        e = sym.localCheckpoint(eager=False)
-    for _ in itertools.count() if counted else range(rounds):
+    e, n_e = checkpoint_count(_symmetric(_undirected(edges)))
+    for _ in itertools.count() if rounds is None else range(rounds):
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
         peeled = (e.join(keep, "u", "left_semi")
                   .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
                   .select("u", "v"))
-        if not counted:
-            e = peeled.localCheckpoint(eager=False)
-            continue
         with sized_superstep(e.sparkSession, n_e):
             e, n2 = checkpoint_count(peeled)
         if n2 == n_e or n2 == 0:
@@ -237,7 +235,9 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """
     # the loop-invariant symmetric edge list is lazily checkpointed so
     # each superstep reads the blocks its first touch wrote instead of
-    # re-scanning the subtree (see pagerank above)
+    # re-scanning the subtree (see pagerank above). Kept by an A/B on the
+    # sf0.1 lane, 6 runs each: lazy 4.9–5.9 s, checkpoint_count 5.2–8.3 s,
+    # no checkpoint 6.4–7.5 s.
     sym = _symmetric(_undirected(edges)).localCheckpoint(eager=False)
     labels = (sym.select(F.col("u").alias("vid")).distinct()
               .withColumn("label", F.col("vid")))

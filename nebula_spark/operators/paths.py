@@ -16,21 +16,22 @@ reference) handles all (src,dst) pairs in one run instead of per-pair RPCs.
 One level step per frontier kind serves every search here:
 :func:`_id_step` advances ``(root, vid)`` pairs (the distance searches),
 :func:`_path_step` advances ``(root, end_vid, path)`` rows (the
-minimal-path searches). Each one-sided search has ONE level loop whose two
-modes differ only where a level is materialized: up to
-:data:`LAZY_MAX_HOPS` levels chain lazily into the caller's one
-action-time job; deeper searches run counted — the seed and every level
-go through :func:`~nebula_spark.operators.traverse.checkpoint_count`, so
-each frontier is materialized once, its size comes free off that job (the
-empty-frontier stop and the broadcast probe), and the visited set is a
-plain union of those checkpointed pieces. The two meet-in-the-middle
-searches share one round driver (:func:`_meet_rounds`) and keep only their
-own meet and final reduction.
+minimal-path searches). Each one-sided search has ONE counted level loop:
+the seed and every level go through
+:func:`~nebula_spark.operators.traverse.checkpoint_count`, so each frontier
+is materialized once, its size comes free off that job (the empty-frontier
+stop and the broadcast probe), and the visited set is a plain union of
+those checkpointed pieces. There is no lazy mode for short searches: under
+AQE a lazy ``localCheckpoint`` runs its input's shuffle stages when it is
+called anyway, so a "lazy" level paid its jobs during plan build and got
+no count back (a traced 3-hop search ran 15 jobs lazy, 11 counted). The
+two meet-in-the-middle searches share one round driver
+(:func:`_meet_rounds`) and keep only their own meet and final reduction.
 
-The loop-invariant edge frame is persisted once per counted call and
-unpersisted on exit, except in the counted :func:`bfs_shortest_paths`,
-which checkpoints it for its row count: with that count bounding every
-level's shuffled rows, its level jobs run at the width the data calls for
+The loop-invariant edge frame is persisted once per call and unpersisted
+on exit, except in :func:`bfs_shortest_paths`, which checkpoints it for
+its row count: with that count bounding every level's shuffled rows, its
+level jobs run at the width the data calls for
 (:func:`~nebula_spark.operators.traverse.sized_superstep`).
 """
 
@@ -47,39 +48,29 @@ from nebula_spark.operators.traverse import (
     checkpoint_observe, oriented, sized_superstep, traverse,
 )
 
-# Job shape (r11, guide §1.2): a search of at most this many levels chains
-# them lazily into the caller's single action-time job — no per-level
-# materialization job, and the join strategy per level is left to AQE's
-# runtime stats. Deeper searches count every level: early termination on
-# frontier death is what makes an open-ended depth survivable.
-LAZY_MAX_HOPS = 3
-
 _DIR_FLIP = {"out": "in", "in": "out", "both": "both"}
 
 
 def _id_step(frontier: DataFrame, e: DataFrame, visited: DataFrame,
-             n: int | None) -> DataFrame:
+             n: int) -> DataFrame:
     """One level of a ``(root, vid)`` frontier: the ``(root, vid)`` pairs
-    first reached one hop on. ``n`` is the frontier's counted size — a
-    counted frontier is broadcast while small; a lazy one (``None``)
-    leaves the join strategy to AQE."""
-    f = frontier if n is None or n > BROADCAST_FRONTIER_ROWS \
-        else F.broadcast(frontier)
+    first reached one hop on. ``n`` is the frontier's counted size; the
+    frontier is broadcast while small."""
+    f = frontier if n > BROADCAST_FRONTIER_ROWS else F.broadcast(frontier)
     return (f.join(e, f[VID] == e[SRC], "inner")
             .select("root", F.col(DST).alias(VID)).distinct()
             .join(visited, ["root", VID], "left_anti"))
 
 
 def _path_step(frontier: DataFrame, e: DataFrame, visited: DataFrame,
-               n: int | None, mode: str,
+               n: int, mode: str,
                etype_order: list | None) -> tuple[DataFrame, DataFrame]:
     """One level of a ``(root, end_vid, path)`` frontier over oriented
     edges (:func:`_prep_oriented`). Returns the first-reached paths — one
     per pair under ``mode="single"`` — and the whole hop output they were
     cut from (BOTH-direction root closures read it). Path rows are wide,
-    so a counted frontier broadcasts below an eighth of the id-pair
-    threshold."""
-    f = frontier if n is None or n > BROADCAST_FRONTIER_ROWS // 8 \
+    so the frontier broadcasts below an eighth of the id-pair threshold."""
+    f = frontier if n > BROADCAST_FRONTIER_ROWS // 8 \
         else F.broadcast(frontier)
     # direction-normalized edge uniqueness (Edge.cpp:128-136): only
     # relevant for closed walks back to the root — a BOTH-direction walk
@@ -126,9 +117,8 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
 
     Scale: visited/frontier are (root, vid) pairs — worst case |V|² for
     all-pairs, so callers pick source sets, exactly like the reference's
-    FROM/TO clauses. Up to :data:`LAZY_MAX_HOPS` levels chain into the
-    caller's job; a deeper search counts its levels, its frontier
-    broadcasts while small, and its size comes free off the checkpoint job
+    FROM/TO clauses. Every level is counted: its frontier broadcasts while
+    small, and its size comes free off the checkpoint job
     (:func:`checkpoint_count`), so termination and the broadcast probe add
     no per-level stage.
     """
@@ -140,25 +130,14 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
         e = e.filter(edge_filter)
     e = e.select(SRC, DST)
     roots = sources.select(F.col(VID).alias("root")).distinct()
-    frontier = roots.withColumn(VID, F.col("root"))
-
-    lazy = max_hops <= LAZY_MAX_HOPS
-    if lazy:
-        # the deduped edge set is loop-invariant but would be re-embedded
-        # in every level's subtree of the single action-time plan; a LAZY
-        # localCheckpoint computes it once inside that job (no dedicated
-        # materialization job) and later levels read the blocks
-        e = e.distinct().localCheckpoint(eager=False)
-        n = None
-    else:
-        # every level joins the edge set, so it is checkpointed once
-        # (skipped when there are no roots), and its row count comes off
-        # that job to bound what a level shuffles. It is not deduped: that
-        # would be its own shuffle job, and the level's (root, dst)
-        # distinct already drops the hops parallel edges repeat.
-        frontier, n = checkpoint_count(frontier)
-        e, n_edges = checkpoint_count(e) if n else (e, 0)
-        n_roots, n_visited = n, (0 if root_cycles else n)
+    # every level joins the edge set, so it is checkpointed once (skipped
+    # when there are no roots), and its row count comes off that job to
+    # bound what a level shuffles. It is not deduped: that would be its
+    # own shuffle job, and the level's (root, dst) distinct already drops
+    # the hops parallel edges repeat.
+    frontier, n = checkpoint_count(roots.withColumn(VID, F.col("root")))
+    e, n_edges = checkpoint_count(e) if n else (e, 0)
+    n_roots, n_visited = n, (0 if root_cycles else n)
     visited = frontier.limit(0) if root_cycles else frontier
     levels: list[DataFrame] = []
     for level in range(1, max_hops + 1):
@@ -166,27 +145,15 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
             break
         nxt = _id_step(frontier, e, visited, n) \
             .withColumn("dist", F.lit(level))
-        if lazy:
-            # each level's output is read by THREE later subtrees (results
-            # union, every later level's visited anti-join, the next
-            # frontier) — without a cut the static plan re-embeds level L
-            # once per reader and the leaf count grows geometrically
-            # (measured: 20 parquet scans / 33 Exchange for 3 levels). A
-            # LAZY localCheckpoint linearizes the plan; the level sits
-            # directly above its distinct's shuffle, the shape where
-            # racing readers just re-read shuffle files (the r11 item-14
-            # rule), and no dedicated job is paid.
-            nxt = nxt.localCheckpoint(eager=False)
-        else:
-            # rows the level shuffles: the hop output (a root's frontier
-            # vids are distinct, so at most n_edges per root; this also
-            # covers the edge side of a non-broadcast join) plus the
-            # visited side of the anti-join. The visited count alone
-            # would not bound an expanding frontier.
-            bound = min(n_roots, n) * n_edges + n_visited
-            with sized_superstep(e.sparkSession, bound):
-                nxt, n = checkpoint_count(nxt)
-            n_visited += n
+        # rows the level shuffles: the hop output (a root's frontier vids
+        # are distinct, so at most n_edges per root; this also covers the
+        # edge side of a non-broadcast join) plus the visited side of the
+        # anti-join. The visited count alone would not bound an expanding
+        # frontier.
+        bound = min(n_roots, n) * n_edges + n_visited
+        with sized_superstep(e.sparkSession, bound):
+            nxt, n = checkpoint_count(nxt)
+        n_visited += n
         levels.append(nxt)
         frontier = nxt.select("root", VID)
         visited = visited.unionByName(frontier)
@@ -282,18 +249,12 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
       serve/serve/like triangle is invisible). So in BOTH mode the root
       IS pre-visited and the ``(s, s)`` rows are the IN-LOOP closures of
       minimal frontier paths — reference-exact, and still free of the
-      enumerate fallback's exponential plan. Closures need the counted
-      loop (they stop being looked for once a root has one).
+      enumerate fallback's exponential plan. Closures ride each level's
+      checkpoint job, and a root stops looking once it has one.
 
-    Job shape: unlike :func:`bfs_shortest_paths`, the lazy levels are NOT
-    cut with a lazy checkpoint (measured, r11 fourth pass): the same
-    per-level cut regressed this operator ~2× (min 1.15→2.33 s on
-    shortest_path_fn) — here the level output carries the materialized
-    path-struct arrays, and the level tree's joins are all broadcast-side
-    (no shuffle directly below the cut), so racing readers recompute the
-    map-only segment into block storage instead of re-reading shuffle
-    files. Same family as the minhash lazy-signature negative result
-    (item 14).
+    Every level is counted: the edge frame is persisted for the call, and
+    the seed and each level go through :func:`checkpoint_count`, so the
+    search stops on an empty frontier and broadcasts it while small.
 
     Output schema matches :func:`~nebula_spark.operators.traverse.traverse`:
     ``(start_vid, end_vid, hops, path)`` with path an array of edge structs
@@ -315,16 +276,8 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
     # IN-LOOP from the minimal frontier — not by an exact cycle search,
     # which would be mathematically complete but reference-divergent.
     collect_closures = direction == "both" and min_hops >= 1
-    lazy = max_hops <= LAZY_MAX_HOPS and not collect_closures
-    if lazy:
-        # loop-invariant edge frame, re-embedded per level in the single
-        # action-time plan — lazy-checkpoint so it computes once in that
-        # job and later levels read blocks
-        e = e.localCheckpoint(eager=False)
-        n = None
-    else:
-        e = e.persist()
-        frontier, n = checkpoint_count(frontier)
+    e = e.persist()
+    frontier, n = checkpoint_count(frontier)
 
     def shape(level_df: DataFrame, level: int) -> DataFrame:
         return level_df.select(F.col("root").alias("start_vid"), "end_vid",
@@ -369,7 +322,7 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
                 closed = closed.unionByName(
                     hits.select(F.col("start_vid").alias("root"))
                     .distinct())
-            elif not lazy:
+            else:
                 nxt, n = checkpoint_count(nxt)
             levels.append(shape(nxt, level))
             visited = visited.unionByName(
@@ -384,8 +337,7 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
             return shape(frontier.limit(0), 0)
         return reduce(DataFrame.unionByName, levels)
     finally:
-        if not lazy:
-            e.unpersist()
+        e.unpersist()
 
 
 def _path_struct_type(e: DataFrame):
@@ -495,6 +447,10 @@ def _meet_rounds(left: tuple, right: tuple, total_pairs: int, max_hops: int,
             newp = newp.join(resolved, pair_cols, "left_anti")
         newp, n_new = checkpoint_count(newp)
         n_resolved += n_new
+        # the lazy cut keeps the growing union out of the next probe's
+        # plan. Kept by an A/B (distances / paths to 6 hops over 7,500
+        # random edges, 9 runs each, same jobs either way): median
+        # 5.50 / 5.32 s with it, 6.07 / 5.62 s without.
         resolved = newp if resolved is None else \
             resolved.unionByName(newp).localCheckpoint(eager=False)
         if n_resolved >= total_pairs:
@@ -588,12 +544,7 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                 .filter(F.col("start_vid") != F.col("_eroot"))
                 .select("start_vid", F.col("_eroot").alias("end_vid"),
                         F.lit(total).alias("hops"),
-                        F.concat("_lp", "_rp").alias("path"))
-                # lazy checkpoint (r11): truncates lineage without a
-                # dedicated job; the round's resolution probe is the
-                # first materialization and populates the checkpoint,
-                # so the final union re-reads instead of re-joining
-                .localCheckpoint(eager=False))
+                        F.concat("_lp", "_rp").alias("path")))
 
     try:
         combos = _meet_rounds(seed(src_roots, fwd, n_src),
@@ -674,9 +625,7 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
         return (l.join(r, "_m")
                 .filter(F.col(SRC) != F.col(DST))
                 .select(SRC, DST, F.lit(total).alias("dist"))
-                .distinct()
-                # lazy checkpoint (r11): see bidir_min_paths.meet
-                .localCheckpoint(eager=False))
+                .distinct())
 
     try:
         meets = _meet_rounds(seed(src_roots, fwd, n_src),

@@ -21,7 +21,9 @@ from __future__ import annotations
 
 import contextlib
 import dataclasses
+import os
 import re
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -6428,6 +6430,8 @@ def _execute_pipeline(space: GraphSpace, pipeline: A.Pipeline,
             # are immutable snapshots. Pinned by
             # tests/test_concurrency.py::test_shared_space_dml_race.
             with getattr(space, "_mutex", None) or contextlib.nullcontext():
+                if env:
+                    _hold_variables(space, env)
                 if isinstance(st, A.InsertStmt):
                     df = _exec_insert(space, st)
                 elif isinstance(st, A.UpdateStmt):
@@ -6447,6 +6451,21 @@ def _execute_pipeline(space: GraphSpace, pipeline: A.Pipeline,
         else:
             raise ValueError(f"unsupported statement {type(st).__name__}")
     return df
+
+
+def _hold_variables(space: GraphSpace, env: dict[str, DataFrame]) -> None:
+    """Materialize every script variable that reads a path-backed table
+    of ``space``, before a statement that may commit to it. A commit
+    replaces the table's files, so a variable left as a plan over them
+    would fail at collect; the reference's variables hold values, not
+    plans. Variables over anything else stay plans."""
+    roots = [os.path.abspath(d.path) + os.sep
+             for d in (*space.tags.values(), *space.edges.values())
+             if d.path is not None]
+    for var, df in env.items():
+        files = [unquote(f) for f in df.inputFiles()]
+        if any(r in f for r in roots for f in files):
+            env[var] = df.localCheckpoint(eager=True)
 
 
 def _exec_alter(space: GraphSpace, st) -> DataFrame:

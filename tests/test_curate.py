@@ -166,6 +166,35 @@ def test_k_core_fixed_rounds_partial_peel(spark):
     assert r_fix == []
 
 
+def _peel(pairs, k, rounds):
+    """Plain-Python k-core: ``rounds`` peels over the undirected edge set,
+    then the final degree filter ({vid: deg})."""
+    und = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
+
+    def degrees():
+        deg = {}
+        for a, b in und:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        return deg
+    for _ in range(rounds):
+        keep = {v for v, d in degrees().items() if d >= k}
+        und = {(a, b) for a, b in und if a in keep and b in keep}
+    return {v: d for v, d in degrees().items() if d >= k}
+
+
+@pytest.mark.parametrize("rounds", [1, 2, 3, 9])
+def test_k_core_rounds_cap_matches_unrolled_peel(spark, rounds):
+    # a 5-cycle with a 4-vertex tail: at k=2 the tail peels one vertex a
+    # round, so the fixpoint takes 4 peels and 1-3 rounds stop short of it
+    pairs = ([(i, (i + 1) % 5) for i in range(5)]
+             + [(4, 5), (5, 6), (6, 7), (7, 8)])
+    got = {r["vid"]: r["deg"]
+           for r in k_core(_edges(spark, pairs), k=2, rounds=rounds).collect()}
+    assert got == _peel(pairs, 2, rounds)
+    assert (got == _peel(pairs, 2, 9)) == (rounds >= 4)
+
+
 def test_shuffle_key_column_usable_standalone(spark):
     df = spark.range(5).select(
         shuffle_key(F.col("id"), seed=1).alias("k"))

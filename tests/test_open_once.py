@@ -182,3 +182,22 @@ def test_failed_commit_leaves_old_table(spark, tmp_path, monkeypatch):
     assert sp.tags["player"] is before
     assert _names(sp) == ["Manu", "Tim", "Tony"]
     assert spark.read.parquet(tp).count() == 3
+
+
+def test_script_variable_outlives_commit_to_its_table(spark, tmp_path):
+    """A script variable holds the rows it was bound to: a later
+    statement of the same script that commits to the table the variable
+    reads (which replaces the table's files) changes neither whether
+    the variable can be read nor what it holds."""
+    sp, _, _ = _space(spark, tmp_path, "open_var_commit")
+    insert = 'INSERT VERTEX player(name, age) VALUES "{}":("{}", 20); '
+    got = execute(sp, "$a = LOOKUP ON player YIELD id(vertex) AS id; "
+                  + insert.format("p9", "Zed")
+                  + "YIELD $a.id AS id").collect()
+    assert sorted(r.id for r in got) == ["p1", "p2", "p3"]
+    assert _names(sp) == ["Manu", "Tim", "Tony", "Zed"]
+    # a variable over a table the script does not commit to
+    got = execute(sp, '$l = GO FROM "p1" OVER like YIELD dst(edge) AS d; '
+                  + insert.format("p8", "Ann")
+                  + "YIELD $l.d AS d").collect()
+    assert sorted(r.d for r in got) == ["p2", "p3"]

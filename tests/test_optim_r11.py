@@ -2,8 +2,8 @@
 
 Each test guards an internals change against the semantics it must
 preserve: connected components against a plain-Python union-find, the
-O(n log n) top-bigram rewrite, lazy-unrolled fixed-iteration loops
-(pagerank / k-core / BFS).
+O(n log n) top-bigram rewrite, and fixed-iteration or depth-capped loops
+(pagerank / k-core / BFS) against their deeper or fixpoint runs.
 """
 
 from pyspark.sql import functions as F
@@ -94,8 +94,9 @@ def test_k_core_fixed_rounds_matches_fixpoint_when_converged(spark):
 
 
 def test_bfs_lazy_matches_counted_loop(spark):
-    # depth-3 graph: max_hops=3 rides the lazy single-job path,
-    # max_hops=10 the counted loop — identical distances
+    # depth-3 graph: a search capped at its depth (max_hops=3) and one
+    # far past it (max_hops=10, which stops on an empty frontier) give
+    # identical distances
     from nebula_spark.operators.paths import bfs_shortest_paths
     edges = spark.createDataFrame(
         [(1, 2, 0), (2, 3, 0), (3, 4, 0), (1, 3, 0), (9, 9, 0)],
@@ -111,6 +112,8 @@ def test_bfs_lazy_matches_counted_loop(spark):
 
 
 def test_bfs_min_paths_lazy_matches_counted(spark):
+    # the same pin for minimal paths: capped at the graph's depth vs far
+    # past it
     from nebula_spark.operators.paths import bfs_min_paths
     edges = spark.createDataFrame(
         [(1, 2, 0), (2, 3, 0), (1, 3, 0), (3, 4, 0)],

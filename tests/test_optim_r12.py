@@ -66,7 +66,7 @@ def test_root_cycle_dists_match_single_mode(spark, nba):
     edges = nba["like"].withColumn("_etype", F.lit("like"))
     src = nba["player"].select(F.col("_vid"))
     for direction in ("out", "in"):
-        for mh in (2, 3, 5):        # lazy (<=3) and counted (>3) modes
+        for mh in (2, 3, 5):
             _dists_vs_paths(spark, edges, src, mh, direction)
 
 
@@ -113,7 +113,7 @@ def test_shortest_path_length_only_matches_path_route(spark, nba,
     sp.create_tag("team", df=nba["team"])
     sp.create_edge("like", df=nba["like"])
     sp.create_edge("serve", df=nba["serve"])
-    # lazy (*1..3) and counted (*1..5) BFS levels; length(p) sizes the
+    # shallow (*1..3) and deeper (*1..5) BFS levels; length(p) sizes the
     # dists route's typed-NULL path, so it must equal the path route's
     qs = [f"""
         MATCH p = shortestPath((a:player)-[:like|serve*1..{m}]->(b))

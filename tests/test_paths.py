@@ -1,12 +1,12 @@
 """Path operators against plain Python on fixed graphs (default lane).
 
 ``operators/paths.py`` runs every search on one level step per frontier
-kind, with one loop per one-sided search (lazy up to ``LAZY_MAX_HOPS``
-levels, counted beyond) and one round driver for the two meet-in-the-middle
-searches. These tests pin each public search at a lazy depth (2) and a
-counted depth (5), in every direction, against a Python BFS over a graph
-made of small components that carry the edge cases: a 2-cycle, a
-self-loop, parallel edges, a diamond and a 6-edge chain. The hypothesis
+kind, with one counted loop per one-sided search and one round driver
+for the two meet-in-the-middle searches. These tests pin each public
+search at a shallow depth (2) and a deeper one (5), in every direction,
+against a Python BFS over a graph made of small components that carry
+the edge cases: a 2-cycle, a self-loop, parallel edges, a diamond and a
+6-edge chain. The hypothesis
 versions of the same parities run in the full lane (``test_property.py``).
 """
 

@@ -139,7 +139,7 @@ def test_hyperplane_bucket_deterministic(spark, vecs):
         min_size=1, max_size=14, unique=True),
     direction=st.sampled_from(["out", "in", "both"]),
     mode=st.sampled_from(["all", "single"]),
-    max_hops=st.integers(1, 5),     # lazy (<= 3) and counted levels
+    max_hops=st.integers(1, 5),
 )
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -271,7 +271,7 @@ def test_root_cycle_dists_equal_single_min_paths(spark, edges, direction,
     """The MATCH length-only shortestPath route: BFS distances with the
     root left unvisited (``root_cycles=True``) must be exactly the
     (start, end, hops) rows of the single-mode minimal-path BFS, root
-    cycles included, at lazy and counted depths."""
+    cycles included, at depths 1 to 5."""
     from nebula_spark.operators.paths import (bfs_min_paths,
                                               bfs_shortest_paths)
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from collections import deque
 from contextlib import contextmanager
 
+import pytest
+
 from nebula_spark.catalog import VID
 
 # a 20-node chain (deep enough that a 6-hop search never runs dry), a
@@ -87,11 +89,11 @@ def _job_ids(spark, group):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_counted_bfs_jobs_bounded_and_exact(spark):
+@pytest.mark.parametrize("hops", [2, 3, 6])
+def test_counted_bfs_jobs_bounded_and_exact(spark, hops):
     from nebula_spark.operators import bfs_shortest_paths
-    hops = 6
     edges, (src, reads) = _edges(spark), _counted_sources(spark, [0, 5, 30])
-    with _job_ids(spark, "superstep-bfs") as jobs:
+    with _job_ids(spark, f"superstep-bfs-{hops}") as jobs:
         out = bfs_shortest_paths(edges, src, max_hops=hops)
     rows = out.collect()
     got = {(r._src, r._dst): r.dist for r in rows}
