@@ -89,8 +89,7 @@ def _job_ids(spark, group):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("hops", [2, 3, 6])
-def test_counted_bfs_jobs_bounded_and_exact(spark, hops):
+def _check_counted_bfs(spark, hops):
     from nebula_spark.operators import bfs_shortest_paths
     edges, (src, reads) = _edges(spark), _counted_sources(spark, [0, 5, 30])
     with _job_ids(spark, f"superstep-bfs-{hops}") as jobs:
@@ -101,6 +100,16 @@ def test_counted_bfs_jobs_bounded_and_exact(spark, hops):
     assert reads.value == 3, reads.value     # the seed is computed once
     # + 1: the edge checkpoint, whose count bounds each level's width
     assert len(jobs) <= 2 * hops + 3, len(jobs)
+
+
+def test_counted_bfs_jobs_bounded_and_exact(spark):
+    _check_counted_bfs(spark, 6)
+
+
+# shallow searches take the same counted loop as deep ones
+@pytest.mark.parametrize("hops", [2, 3])
+def test_counted_bfs_shallow_jobs_bounded_and_exact(spark, hops):
+    _check_counted_bfs(spark, hops)
 
 
 def test_counted_bfs_empty_sources_runs_no_level(spark):
