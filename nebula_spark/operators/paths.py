@@ -14,19 +14,22 @@ pattern expressed in DataFrame ops, scales with the cluster, and (unlike the
 reference) handles all (src,dst) pairs in one run instead of per-pair RPCs.
 
 One level step per frontier kind serves every search here:
-:func:`_id_step` advances ``(root, vid)`` pairs (the distance searches),
-:func:`_path_step` advances ``(root, end_vid, path)`` rows (the
-minimal-path searches). Each one-sided search has ONE counted level loop:
-the seed and every level go through
+:func:`_id_step` advances ``(root, vid)`` pairs (the distance searches
+and GET SUBGRAPH), :func:`_path_step` advances ``(root, end_vid, path)``
+rows (the minimal-path searches). Every one-sided search is counted: the
+seed and every level go through
 :func:`~nebula_spark.operators.traverse.checkpoint_count`, so each frontier
 is materialized once, its size comes free off that job (the empty-frontier
 stop and the broadcast probe), and the visited set is a plain union of
-those checkpointed pieces. There is no lazy mode for short searches: under
-AQE a lazy ``localCheckpoint`` runs its input's shuffle stages when it is
-called anyway, so a "lazy" level paid its jobs during plan build and got
-no count back (a traced 3-hop search ran 15 jobs lazy, 11 counted). The
-two meet-in-the-middle searches share one round driver
-(:func:`_meet_rounds`) and keep only their own meet and final reduction.
+those checkpointed pieces. :func:`bfs_shortest_paths` runs on the shared
+level loop (``traverse._counted_levels``); :func:`bfs_min_paths` (its
+BOTH-direction closures) and :func:`weighted_shortest_paths` (its
+improved-row count) keep their own. There is no lazy mode for short
+searches: under AQE a lazy ``localCheckpoint`` runs its input's shuffle
+stages when it is called anyway, so a "lazy" level paid its jobs during
+plan build and got no count back (a traced 3-hop search ran 15 jobs
+lazy, 11 counted). The two meet-in-the-middle searches share one round
+driver (:func:`_meet_rounds`) and keep only their meet and final reduction.
 
 The loop-invariant edge frame is persisted once per call and unpersisted
 on exit, except in :func:`bfs_shortest_paths`, which checkpoints it for
@@ -44,34 +47,34 @@ from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
-    BROADCAST_FRONTIER_ROWS, _edge_id, _edge_id_reversed, checkpoint_count,
-    checkpoint_observe, oriented, sized_superstep, traverse,
+    BROADCAST_FRONTIER_ROWS, _broadcast_small, _counted_levels, _edge_id,
+    _edge_id_reversed, checkpoint_count, checkpoint_observe, oriented,
+    traverse,
 )
 
 _DIR_FLIP = {"out": "in", "in": "out", "both": "both"}
 
 
-def _id_step(frontier: DataFrame, e: DataFrame, visited: DataFrame,
-             n: int) -> DataFrame:
-    """One level of a ``(root, vid)`` frontier: the ``(root, vid)`` pairs
-    first reached one hop on. ``n`` is the frontier's counted size; the
-    frontier is broadcast while small."""
-    f = frontier if n > BROADCAST_FRONTIER_ROWS else F.broadcast(frontier)
+# path rows are wide: a path frontier broadcasts below 1/8 the threshold
+_PATH_BROADCAST_ROWS = BROADCAST_FRONTIER_ROWS // 8
+
+
+def _id_step(f: DataFrame, e: DataFrame, visited: DataFrame,
+             keys: tuple[str, ...] = ("root",)) -> DataFrame:
+    """One level of a ``(*keys, vid)`` frontier ``f`` (broadcast-probed by
+    the caller): the ``(*keys, vid)`` pairs first reached one hop on."""
     return (f.join(e, f[VID] == e[SRC], "inner")
-            .select("root", F.col(DST).alias(VID)).distinct()
-            .join(visited, ["root", VID], "left_anti"))
+            .select(*keys, F.col(DST).alias(VID)).distinct()
+            .join(visited, [*keys, VID], "left_anti"))
 
 
-def _path_step(frontier: DataFrame, e: DataFrame, visited: DataFrame,
-               n: int, mode: str,
+def _path_step(f: DataFrame, e: DataFrame, visited: DataFrame, mode: str,
                etype_order: list | None) -> tuple[DataFrame, DataFrame]:
-    """One level of a ``(root, end_vid, path)`` frontier over oriented
-    edges (:func:`_prep_oriented`). Returns the first-reached paths — one
-    per pair under ``mode="single"`` — and the whole hop output they were
-    cut from (BOTH-direction root closures read it). Path rows are wide,
-    so the frontier broadcasts below an eighth of the id-pair threshold."""
-    f = frontier if n > BROADCAST_FRONTIER_ROWS // 8 \
-        else F.broadcast(frontier)
+    """One level of a ``(root, end_vid, path)`` frontier ``f`` (probed by
+    the caller against :data:`_PATH_BROADCAST_ROWS`) over oriented edges
+    (:func:`_prep_oriented`). Returns the first-reached paths — one per
+    pair under ``mode="single"`` — and the whole hop output they were cut
+    from (BOTH-direction root closures read it)."""
     # direction-normalized edge uniqueness (Edge.cpp:128-136): only
     # relevant for closed walks back to the root — a BOTH-direction walk
     # may not return over its arrival edge
@@ -117,10 +120,9 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
 
     Scale: visited/frontier are (root, vid) pairs — worst case |V|² for
     all-pairs, so callers pick source sets, exactly like the reference's
-    FROM/TO clauses. Every level is counted: its frontier broadcasts while
-    small, and its size comes free off the checkpoint job
-    (:func:`checkpoint_count`), so termination and the broadcast probe add
-    no per-level stage.
+    FROM/TO clauses. It runs on the counted level loop
+    (``traverse._counted_levels``): termination and the broadcast probe
+    ride each level's checkpoint job, with no per-level stage.
     """
     if root_cycles and direction == "both":
         raise ValueError("bfs_shortest_paths does not support root_cycles "
@@ -129,36 +131,37 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
     if edge_filter is not None:
         e = e.filter(edge_filter)
     e = e.select(SRC, DST)
+    n_edges = 0
+
+    def step(frontier: DataFrame, levels: list[DataFrame]) -> DataFrame:
+        nonlocal e, n_edges
+        if len(levels) == 1:
+            # every level joins the edge set, so it is checkpointed once
+            # (never without roots: no step runs), and its count bounds
+            # what a level shuffles. Not deduped: that would be its own
+            # shuffle job, and the level's (root, dst) distinct already
+            # drops the hops parallel edges repeat.
+            e, n_edges = checkpoint_count(e)
+        seen = [lv.select("root", VID)
+                for lv in (levels[1:] if root_cycles else levels)]
+        visited = reduce(DataFrame.unionByName, seen) if seen \
+            else levels[0].limit(0)
+        return _id_step(frontier, e, visited) \
+            .withColumn("dist", F.lit(len(levels)))
+
+    def shuffle_rows(counts: list[int]) -> int:
+        # the hop output (a root's frontier vids are distinct, so at
+        # most n_edges per root; this also covers the edge side of a
+        # non-broadcast join) plus the visited side of the anti-join.
+        # The visited count alone would not bound an expanding frontier.
+        return min(counts[0], counts[-1]) * n_edges \
+            + sum(counts[1:] if root_cycles else counts)
+
     roots = sources.select(F.col(VID).alias("root")).distinct()
-    # every level joins the edge set, so it is checkpointed once (skipped
-    # when there are no roots), and its row count comes off that job to
-    # bound what a level shuffles. It is not deduped: that would be its
-    # own shuffle job, and the level's (root, dst) distinct already drops
-    # the hops parallel edges repeat.
-    frontier, n = checkpoint_count(roots.withColumn(VID, F.col("root")))
-    e, n_edges = checkpoint_count(e) if n else (e, 0)
-    n_roots, n_visited = n, (0 if root_cycles else n)
-    visited = frontier.limit(0) if root_cycles else frontier
-    levels: list[DataFrame] = []
-    for level in range(1, max_hops + 1):
-        if n == 0:
-            break
-        nxt = _id_step(frontier, e, visited, n) \
-            .withColumn("dist", F.lit(level))
-        # rows the level shuffles: the hop output (a root's frontier vids
-        # are distinct, so at most n_edges per root; this also covers the
-        # edge side of a non-broadcast join) plus the visited side of the
-        # anti-join. The visited count alone would not bound an expanding
-        # frontier.
-        bound = min(n_roots, n) * n_edges + n_visited
-        with sized_superstep(e.sparkSession, bound):
-            nxt, n = checkpoint_count(nxt)
-        n_visited += n
-        levels.append(nxt)
-        frontier = nxt.select("root", VID)
-        visited = visited.unionByName(frontier)
-    results = reduce(DataFrame.unionByName, levels) if levels \
-        else frontier.limit(0).withColumn("dist", F.lit(0))
+    levels, _ = _counted_levels(roots.withColumn(VID, F.col("root")), step,
+                                max_hops, shuffle_rows=shuffle_rows)
+    results = reduce(DataFrame.unionByName, levels[1:]) if len(levels) > 1 \
+        else levels[0].limit(0).withColumn("dist", F.lit(0))
     out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
                          F.col("dist"))
     if targets is not None:
@@ -303,8 +306,9 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
         for level in range(1, max_hops + 1):
             if n == 0:
                 break
-            nxt, expanded = _path_step(frontier, e, visited, n, mode,
-                                       etype_order)
+            nxt, expanded = _path_step(
+                _broadcast_small(frontier, n, _PATH_BROADCAST_ROWS), e,
+                visited, mode, etype_order)
             if collect_closures:
                 # closures ride the same checkpoint job as the frontier;
                 # only the frontier rows count toward its size
@@ -523,8 +527,9 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                 visited, e, n)
 
     def advance(front, visited, e, n):
-        nxt, n = checkpoint_count(
-            _path_step(front, e, visited, n, mode, etype_order)[0])
+        nxt, n = checkpoint_count(_path_step(
+            _broadcast_small(front, n, _PATH_BROADCAST_ROWS), e, visited,
+            mode, etype_order)[0])
         return nxt, nxt.select("root", "end_vid").distinct(), n
 
     def zero_length(roots):
@@ -616,7 +621,8 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
         return front, front, e, n
 
     def advance(front, visited, e, n):
-        nxt, n = checkpoint_count(_id_step(front, e, visited, n))
+        nxt, n = checkpoint_count(
+            _id_step(_broadcast_small(front, n), e, visited))
         return nxt, nxt, n
 
     def meet(lf, rf, total):
@@ -691,8 +697,7 @@ def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
         for _ in range(max_iter):
             if n == 0:
                 break
-            f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS \
-                else frontier
+            f = _broadcast_small(frontier, n)
             cand = (f.join(e, f[VID] == e[SRC], "inner")
                     .select("root", F.col(DST).alias(VID),
                             (F.col("dist") + F.col("_w")).alias("dist"),

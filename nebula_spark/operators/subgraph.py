@@ -5,20 +5,26 @@ Reference: ``src/graph/executor/algo/SubgraphExecutor.cpp:26-199`` +
 expansion collecting per-step vertex and edge sets, IN/OUT/BOTH, optional
 filters, dedup via a visited map.
 
-Spark-first: frontier expansion loop; visited set maintained as a DataFrame,
-dedup via anti-join; the collected edge set is the union of per-step hop
-joins. Returns (vertices_df, edges_df); edges_df keeps a ``step`` column
-(the reference reports per-step lists).
+Spark-first: a vertex search on the counted level loop
+(:func:`~nebula_spark.operators.traverse._counted_levels`) — each level
+is the vids first reached one hop on, anti-joined against the visited
+levels — then ONE join of the edge table against the per-level vertex
+sets collects the edges, each under the step the reference's round loop
+would give it. Returns (vertices_df, edges_df); edges_df keeps a
+``step`` column (the reference reports per-step lists).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
+from nebula_spark.operators.paths import _id_step
 from nebula_spark.operators.traverse import (
-    BROADCAST_FRONTIER_ROWS, checkpoint_count, oriented,
+    _broadcast_small, _counted_levels, oriented,
 )
 
 
@@ -30,10 +36,14 @@ def k_hop_subgraph(edges: DataFrame, seeds: DataFrame, steps: int = 1,
     """Expand ``steps`` hops from ``seeds``; return (vertices, edges).
 
     ``vertices``: (vid, step) — step = hop at which first reached (0=seed).
-    ``edges``: oriented edge rows + ``step`` (hop that collected them).
-    Matching the reference, the final hop collects only edges *among*
+    ``edges``: oriented edge rows + ``step`` (hop that collected them):
+    an edge whose source was reached at level l < ``steps`` has step l+1.
+    Matching the reference, the closing round collects only edges *among*
     already-visited vertices (SubgraphExecutor.cpp: the last round keeps
-    edges whose dst was seen before).
+    edges whose dst was seen before): an edge whose source is at level
+    ``steps`` is kept, with step ``steps + 1``, only when its destination
+    was visited. A frontier that dies before ``steps`` leaves no level
+    ``steps`` and so no closing edges.
     """
     # An input that already carries ``_dir`` is pre-oriented (e.g. the nGQL
     # executor orients per IN/OUT/BOTH edge list); re-orienting would
@@ -42,61 +52,37 @@ def k_hop_subgraph(edges: DataFrame, seeds: DataFrame, steps: int = 1,
     e_all = edges if "_dir" in edges.columns else oriented(edges, direction)
     if edge_filter is not None:
         e_all = e_all.filter(edge_filter)
-    # every step's hop join (and the closing pass) reads the same oriented
-    # edge frame — lazy-checkpoint it so step 1's job computes it once and
-    # later steps read the blocks instead of re-scanning the source
-    # (blocks are reclaimed by the ContextCleaner; a persist() could not
-    # be unpersisted before the caller materializes the lazy result).
-    # Kept by an A/B on the sf0.1 `subgraph` lane, 6 runs each: lazy
-    # 3.3–4.8 s, checkpoint_count 3.7–5.5 s, no checkpoint 5.2–7.0 s.
+    # every level's hop join and the closing edge join read the same
+    # oriented edge frame — lazy-checkpoint it so level 1's job computes
+    # it once and later jobs read the blocks instead of re-scanning the
+    # source (blocks are reclaimed by the ContextCleaner; a persist()
+    # could not be unpersisted before the caller materializes the lazy
+    # result).
+    # Kept by an A/B on the sf0.1 `subgraph` lane (8 interleaved runs, 4
+    # cores): median 2.38 s, 17 jobs with it; 2.49 s, 18 jobs without.
     e_all = e_all.localCheckpoint(eager=False)
 
-    # visited is a plain union of checkpointed pieces: the seed here, then
-    # each level's frontier — no cache to fill or drop between levels
-    visited, n = checkpoint_count(
-        seeds.select(VID).distinct().withColumn("step", F.lit(0)))
-    frontier = visited.select(VID)
-    collected: DataFrame | None = None
-    for step in range(1, steps + 1):
-        if n == 0:
-            break
-        f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
-        # LAZY checkpoint: hop feeds both the collected union and the
-        # nxt frontier below — the checkpoint_count(nxt) job is hop's
-        # first materialization and writes its blocks, which the final
-        # collected union then re-reads. The old eager checkpoint paid
-        # a SECOND dedicated job per step for the same sharing. Kept by
-        # an A/B on the sf0.1 `subgraph` lane (9 runs each, 20 jobs
-        # either way): median 2.47 s with it, 3.46 s without.
-        hop = (e_all.join(f, e_all[SRC] == f[VID], "inner").drop(VID)
-               .withColumn("step", F.lit(step))
-               .localCheckpoint(eager=False))
-        collected = hop if collected is None else collected.unionByName(hop)
-        # The next level's size (termination + broadcast probe) rides
-        # the materialization job via checkpoint_count — no dedicated
-        # frontier.count() stage per level (:func:`checkpoint_count`).
-        nxt = (hop.select(F.col(DST).alias(VID)).distinct()
-               .join(visited.select(VID), VID, "left_anti")
-               .withColumn("step", F.lit(step)))
-        nxt, n = checkpoint_count(nxt)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select(VID)
-    # closing pass: edges among final-hop vertices back into the
-    # subgraph (reference's last round keeps only edges whose dst was
-    # seen before); n is the final frontier size off its checkpoint job
-    if n > 0:
-        f = F.broadcast(frontier) if n <= BROADCAST_FRONTIER_ROWS else frontier
-        closing = (e_all.join(f, e_all[SRC] == f[VID], "inner").drop(VID)
-                   .join(visited.select(F.col(VID).alias(DST)).distinct(),
-                         DST, "left_semi")
-                   .withColumn("step", F.lit(steps + 1)))
-        collected = closing if collected is None \
-            else collected.unionByName(closing)
-    if collected is None:
-        collected = e_all.withColumn("step", F.lit(0)).limit(0)
-    # duplicate edges can be collected when direction="both" re-walks a
-    # closing edge; subgraph semantics are set semantics → dedup
-    # identity INCLUDES the edge type: a teammate edge parallel to a
+    def step(frontier: DataFrame, levels: list[DataFrame]) -> DataFrame:
+        visited = reduce(DataFrame.unionByName, levels).select(VID)
+        return _id_step(frontier, e_all, visited, keys=()) \
+            .withColumn("step", F.lit(len(levels)))
+
+    levels, counts = _counted_levels(
+        seeds.select(VID).distinct().withColumn("step", F.lit(0)), step, steps)
+    visited = reduce(DataFrame.unionByName, levels)
+    # each edge takes its step from its source's level (see the docstring)
+    src_level = _broadcast_small(
+        visited.select(F.col(VID).alias(SRC), F.col("step").alias("_lv")),
+        sum(counts))
+    dst_seen = _broadcast_small(
+        visited.select(F.col(VID).alias(DST), F.lit(True).alias("_seen")),
+        sum(counts))
+    collected = (e_all.join(src_level, SRC).join(dst_seen, DST, "left")
+                 .filter((F.col("_lv") < steps) | F.col("_seen").isNotNull())
+                 .select(*e_all.columns, "_lv")
+                 .withColumn("step", F.col("_lv") + 1).drop("_lv"))
+    # duplicate edge rows collapse; subgraph semantics are set semantics.
+    # Identity INCLUDES the edge type: a teammate edge parallel to a
     # like edge shares (src, dst, rank) but is a distinct edge
     # (subgraph.feature "subgraph": both Tim↔Manu teammate rows)
     keys = [SRC, DST, RANK, "_dir"]

@@ -14,7 +14,10 @@ Reference implementations:
 - GetEdges: ``src/graph/executor/query/GetEdgesExecutor.cpp:1-112``.
 
 Spark-first translation: a hop is a join of the frontier against the edge
-table. The reference's storage-side pushdowns (edge filter, per-vertex limit,
+table. Every counted frontier search (BFS distances, GET SUBGRAPH, MATCH
+var-len, GO's counted range) runs on one level loop,
+:func:`_counted_levels`, and supplies only its level step. The
+reference's storage-side pushdowns (edge filter, per-vertex limit,
 dedup — ``storage.thrift:140-158``) become: filter *before* the join
 (Catalyst pushes it into the parquet scan), window row_number per src for
 per-vertex limits, ``select(src,dst).distinct()`` for dst-only frontiers.
@@ -26,7 +29,8 @@ bucketed-by-src parquet so even shuffle joins co-locate.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -114,6 +118,39 @@ def checkpoint_observe(df: DataFrame,
     out = (df.observe(obs, *[m.alias(k) for k, m in metrics.items()])
            .localCheckpoint(eager=True))
     return out, obs.get
+
+
+def _broadcast_small(df: DataFrame, n: int,
+                     rows: int | None = None) -> DataFrame:
+    """``df`` hinted for broadcast when its counted size ``n`` is at most
+    ``rows`` (default :data:`BROADCAST_FRONTIER_ROWS`) — the frontier
+    probe of every counted search."""
+    return F.broadcast(df) if n <= (
+        BROADCAST_FRONTIER_ROWS if rows is None else rows) else df
+
+
+def _counted_levels(seed: DataFrame, step, max_levels: int | None,
+                    broadcast_rows: int | None = None,
+                    shuffle_rows=None) -> tuple[list[DataFrame], list[int]]:
+    """The level loop of every counted frontier search: returns the
+    levels, seed first, and their row counts. The seed and each level are
+    materialized and counted in one job (:func:`checkpoint_count`); the
+    loop stops after an empty level or at level ``max_levels`` (``None``:
+    only on an empty one). ``step(frontier, levels)`` builds level
+    ``len(levels)`` lazily from the last level, broadcast while it has at
+    most ``broadcast_rows`` rows. ``shuffle_rows(counts)``, if given,
+    bounds the rows a level shuffles and sizes its job
+    (:func:`sized_superstep`)."""
+    frontier, n = checkpoint_count(seed)
+    levels, counts = [frontier], [n]
+    while n and (max_levels is None or len(levels) <= max_levels):
+        nxt = step(_broadcast_small(frontier, n, broadcast_rows), levels)
+        with sized_superstep(seed.sparkSession, shuffle_rows(counts)) \
+                if shuffle_rows else nullcontext():
+            frontier, n = checkpoint_count(nxt)
+        levels.append(frontier)
+        counts.append(n)
+    return levels, counts
 
 
 def oriented(edges: DataFrame, direction: str = "out",
@@ -206,19 +243,17 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
     """GO M TO N STEPS: multi-hop expansion accumulating per-step edge rows.
 
     Reference plan: Loop{Expand/ExpandAll} + UnionAllVersionVar accumulation
-    (GoPlanner.cpp:15-90, UnionAllVersionVarExecutor.cpp:1-45). Here: a
-    Python loop; each iteration joins the deduped frontier to the edge table
-    and unions the yield rows for steps in [min_steps, max_steps].
+    (GoPlanner.cpp:15-90, UnionAllVersionVarExecutor.cpp:1-45). Here each
+    step joins the deduped frontier to the edge table, and the yield rows
+    of the steps in [min_steps, max_steps] are unioned.
 
     Adds a ``step`` column. Scale notes: the frontier is deduped every hop
-    (dst-only GetDstBySrc shape). A range of more than 2 steps runs
-    counted: each new frontier is materialized by :func:`checkpoint_count`,
-    whose Observation yields the size off the checkpoint job itself — the
-    empty-frontier terminator and broadcast probe cost zero extra jobs per
-    hop. A short range (max_steps <= 2) has nothing to skip, so it builds
-    one lazy plan: step 1 broadcasts the (caller-bounded) seed frontier,
-    later hops leave join strategy to AQE, whose runtime stats broadcast a
-    small frontier anyway.
+    (dst-only GetDstBySrc shape). A range of more than 2 steps walks its
+    frontiers 0 to ``max_steps - 1`` on the counted level loop
+    (:func:`_counted_levels`); the hop rows stay lazy. A short range has
+    nothing to skip, so it builds one lazy plan with no job: step 1
+    broadcasts the (caller-bounded) seed frontier, step 2 leaves join
+    strategy to AQE, whose runtime stats broadcast a small one anyway.
 
     ``edges`` may be a list with one edge table per step (GO ... OVER a
     schedule of edge types): hop *k* then joins only its own table instead
@@ -240,65 +275,57 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
     per_step = isinstance(edges, (list, tuple))
     if per_step and len(edges) != max_steps:
         raise ValueError(f"per-step edges needs {max_steps} tables")
-    counted = max_steps > 2
     carry = ("_origin",) if track_origin else ()
     if track_origin:
-        oc = origin_col or VID
-        frontier = start.select(F.col(oc).alias("_origin"),
-                                F.col(VID)).distinct()
+        seed = start.select(F.col(origin_col or VID).alias("_origin"),
+                            F.col(VID)).distinct()
     else:
-        frontier = start.select(VID).distinct()
-    results: DataFrame | None = None
-    # counted loop: every frontier, the seed included, is checkpointed
-    # and counted in one job; the short-range path builds ONE lazy plan
-    # the caller materializes after this function returns
-    n = None
-    if counted:
-        frontier, n = checkpoint_count(frontier)
-    for step in range(1, max_steps + 1):
-        if counted:
-            if n == 0:
-                break
-            small = n <= BROADCAST_FRONTIER_ROWS
-        else:
-            small = step == 1
-        step_edges = edges[step - 1] if per_step else edges
+        seed = start.select(VID).distinct()
+    results: list[DataFrame] = []
+
+    def hop(frontier: DataFrame, step: int) -> DataFrame:
+        """Step ``step``'s edge rows, collected when in range."""
         # per-step truncate pushdown (truncate_clause,
         # PushStepLimitDownGetNeighborsRule /
         # PushStepSampleDownGetNeighborsRule): applied inside the hop,
         # before the next frontier forms — exactly where the reference
         # pushes it into the GetNeighbors RPC
-        lim = order = None
-        if step_limits is not None and step <= len(step_limits):
-            lim = step_limits[step - 1]
-        hop = get_neighbors(frontier, step_edges, direction, edge_filter,
-                            broadcast_frontier=small,
-                            limit_per_vertex=lim, order_per_vertex=order,
-                            carry_cols=carry,
-                            dedup_frontier=False)  # frontier is distinct
+        lim = step_limits[step - 1] if step_limits is not None \
+            and step <= len(step_limits) else None
+        rows = get_neighbors(frontier, edges[step - 1] if per_step else edges,
+                             direction, edge_filter, broadcast_frontier=False,
+                             limit_per_vertex=lim, carry_cols=carry,
+                             dedup_frontier=False)  # frontier is distinct
         if step_samples is not None and step <= len(step_samples):
             # SAMPLE is a GLOBAL per-step draw, not per-vertex
             # truncation (GO.feature "go step sample": 3 steps with
             # SAMPLE [1,3,2] returns exactly 2 rows) — LIMIT keeps
             # the per-vertex window (storage truncate) semantics
-            hop = (hop.orderBy(F.rand(sample_seed + step))
-                   .limit(step_samples[step - 1]))
+            rows = (rows.orderBy(F.rand(sample_seed + step))
+                    .limit(step_samples[step - 1]))
         if step >= min_steps:
-            step_df = hop.withColumn("step", F.lit(step))
-            results = step_df if results is None else results.unionByName(
-                step_df, allowMissingColumns=True)
-        if step < max_steps:
-            nxt = hop.select(*carry, F.col(DST).alias(VID)).distinct()
-            if counted:
-                nxt, n = checkpoint_count(nxt)
-            frontier = nxt
-    if results is None:
+            results.append(rows.withColumn("step", F.lit(step)))
+        return rows
+
+    def advance(frontier: DataFrame, step: int) -> DataFrame:
+        return hop(frontier, step).select(*carry, F.col(DST).alias(VID)) \
+            .distinct()
+
+    if max_steps > 2:
+        levels, counts = _counted_levels(
+            seed, lambda f, levels: advance(f, len(levels)), max_steps - 1)
+        if counts[-1]:
+            hop(_broadcast_small(levels[-1], counts[-1]), max_steps)
+    else:
+        frontier = F.broadcast(seed)
+        for step in range(1, max_steps + 1):
+            frontier = advance(frontier, step)
+    if not results:
         e0 = edges[0] if per_step else edges
-        empty = frontier.limit(0)
-        return get_neighbors(empty, e0, direction,
-                             carry_cols=carry).withColumn(
-            "step", F.lit(1))
-    return results
+        return get_neighbors(seed.limit(0), e0, direction,
+                             carry_cols=carry).withColumn("step", F.lit(1))
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  results)
 
 
 def _edge_id_fields(prefix: str = "", reversed_: bool = False) -> list:
@@ -334,7 +361,10 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
     Returns one row per path: ``start_vid``, ``end_vid``, ``hops``,
     ``path`` (array of edge structs (s,d,r,t,et)). The uniqueness filter
     is ``NOT exists(path, e -> e == new_edge)`` — JVM-side higher-order
-    function, no UDF.
+    function, no UDF. Every range runs on the counted level loop
+    (:func:`_counted_levels`): the zero-hop paths and each hop's paths are
+    checkpointed and counted in one job, and the walk stops once
+    edge-uniqueness empties the frontier or at ``max_hops``.
 
     ``prop_cols`` (opt-in) appends the named edge prop columns to each
     path struct so result-shaping can read ``relationships(p)[i].prop``
@@ -364,72 +394,47 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
         *[StructField(c, e.schema[c].dataType) for c in props],
     ]))
 
-    def zero_paths() -> DataFrame:
-        return (start.select(F.col(VID).alias("start_vid")).distinct()
-                .withColumn("end_vid", F.col("start_vid"))
-                .withColumn("hops", F.lit(0))
-                .withColumn("path", F.array().cast(path_type)))
-
-    paths = zero_paths()
     extra = [F.col(c).alias(c) for c in props]
-    results: DataFrame | None = None
+    new_edge = F.struct(*_edge_id_fields(), *extra) if props else _edge_id()
+    # edge-uniqueness via array_contains(path, struct(...)) — a lambda
+    # with outer column refs (F.exists) miscompiles on reused Datasets
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at runtime). Checked in both
+    # orientations: BOTH-direction expansion must not walk back over
+    # the edge it arrived by (direction-normalized edge equality).
+    rev_edge = F.struct(*_edge_id_fields(reversed_=True), *extra) \
+        if props else _edge_id_reversed()
+    uniq = ~F.array_contains(F.col("path"), new_edge) \
+        & ~F.array_contains(F.col("path"), rev_edge)
+
+    def step(paths: DataFrame, levels: list[DataFrame]) -> DataFrame:
+        # alias-qualified join: the edge table participates in every
+        # level, and df[col] cross-references break Spark's self-join
+        # disambiguation once the same base Dataset appears twice in
+        # lineage
+        return (paths.alias("__p")
+                .join(e.alias("__e"),
+                      F.col("__p.end_vid") == F.col(f"__e.{SRC}"), "inner")
+                .filter(uniq)
+                .select(F.col("start_vid"), F.col(DST).alias("end_vid"),
+                        F.lit(len(levels)).alias("hops"),
+                        F.concat("path", F.array(new_edge)).alias("path")))
+
     # max_hops=None is the reference's open-ended range (`[e*]` /
     # `[e*m..]` — parser.yy match_step_range, MatchStepRange.h default
-    # max SIZE_MAX): iterate until edge-uniqueness empties the frontier.
-    # Each unbounded superstep eagerly checkpoints + counts, so the loop
-    # is frontier-bounded (≤ longest simple edge path), never SIZE_MAX.
-    # A LARGE bounded range takes the same counted loop — the TCK's
-    # `[:serve*1000000000..1000000002]` (VariableLengthPattern.feature
-    # "Over expand end") must terminate on frontier death, not unroll a
-    # billion driver iterations; small ranges keep the free-running
-    # unrolled loop (no per-hop count job).
-    unbounded = max_hops is None or max_hops > 32
-    hop = 0
-    while unbounded or hop < max_hops:
-        hop += 1
-        if max_hops is not None and hop > max_hops:
-            break
-        new_edge = F.struct(*_edge_id_fields(), *extra) if props \
-            else _edge_id()
-        # edge-uniqueness via array_contains(path, struct(...)) — a lambda
-        # with outer column refs (F.exists) miscompiles on reused Datasets
-        # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at runtime). Checked in both
-        # orientations: BOTH-direction expansion must not walk back over
-        # the edge it arrived by (direction-normalized edge equality).
-        rev_edge = F.struct(*_edge_id_fields(reversed_=True), *extra) \
-            if props else _edge_id_reversed()
-        uniq = ~F.array_contains(F.col("path"), new_edge) \
-            & ~F.array_contains(F.col("path"), rev_edge)
-        # alias-qualified join: the edge table participates in every
-        # iteration, and df[col] cross-references break Spark's self-join
-        # disambiguation once the same base Dataset appears twice in lineage
-        stepped = (paths.alias("__p")
-                   .join(e.alias("__e"),
-                         F.col("__p.end_vid") == F.col(f"__e.{SRC}"), "inner")
-                   .filter(uniq)
-                   .select(F.col("start_vid"),
-                           F.col(DST).alias("end_vid"),
-                           F.lit(hop).alias("hops"),
-                           F.concat("path", F.array(new_edge)).alias("path")))
-        n = None
-        if unbounded:
-            stepped, n = checkpoint_count(stepped)
-        elif hop % 4 == 0:
-            # a lazy cut every 4 hops keeps the unrolled plan flat. Kept
-            # by an A/B (5 hops from 6 roots over 7,500 random edges, 9
-            # runs each): median 1.48 s and 7 jobs with it, 1.76 s and 4
-            # jobs without.
-            stepped = stepped.localCheckpoint(eager=False)
-        if hop >= min_hops:
-            results = stepped if results is None else results.unionByName(stepped)
-        paths = stepped
-        if n == 0:        # unbounded: frontier exhausted (after the
-            break         # union so an empty result keeps its schema)
-    if min_hops == 0:
-        results = zero_paths() if results is None else zero_paths().unionByName(results)
-    if results is None:     # frontier died before min_hops (unbounded)
-        results = paths.limit(0)
-    return results
+    # max SIZE_MAX): the counted loop stops once edge-uniqueness empties
+    # the frontier, so it runs at most the longest simple edge path, and
+    # so does a huge bound (VariableLengthPattern.feature "Over expand
+    # end": `[:serve*1000000000..1000000002]`). Path rows are not
+    # broadcast: the join leaves them to AQE.
+    zero = (start.select(F.col(VID).alias("start_vid")).distinct()
+            .withColumn("end_vid", F.col("start_vid"))
+            .withColumn("hops", F.lit(0))
+            .withColumn("path", F.array().cast(path_type)))
+    levels, _ = _counted_levels(zero, step, max_hops, broadcast_rows=0)
+    kept = levels[min_hops:]
+    # a frontier that dies before min_hops keeps the schema in no rows
+    return reduce(DataFrame.unionByName, kept) if kept \
+        else levels[-1].limit(0)
 
 
 def append_vertices(df: DataFrame, tag: DataFrame, on_col: str = DST,

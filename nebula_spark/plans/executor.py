@@ -758,13 +758,16 @@ class ExprCompiler:
                         f"expression, can not apply `{op}' to "
                         f"`{ta}' and `STRING'.")
             if op in ("==", "!=", "<", "<=", ">", ">="):
-                _r0 = _fold_const_list_cmp(op, e[1], e[2])
-                if _r0 is not _CMP_MISS:
-                    # const list comparisons fold BEFORE the epsilon
-                    # branch — `2.0 == [1.99…]` is kind-mismatch false,
-                    # not a float compare (RelationalExpr.feature)
-                    return F.lit(_r0).cast("boolean") if _r0 is None \
-                        else F.lit(_r0)
+                r = _fold_const_list_cmp(op, e[1], e[2])
+                if r is not _CMP_MISS:
+                    # constant list comparison folds in Python with the
+                    # reference's dynamic semantics (heterogeneous
+                    # elements, epsilon floats — RelationalExpr.feature
+                    # `[1,"a"]<=[1]`): Spark arrays can't mix types. It
+                    # folds BEFORE the epsilon branch — `2.0 == [1.99…]`
+                    # is kind-mismatch false, not a float compare
+                    return F.lit(r).cast("boolean") if r is None \
+                        else F.lit(r)
             if op in ("==", "!=", "<", "<=", ">", ">=") \
                     and (_is_floatish(e[1]) or _is_floatish(e[2])):
                 # FLOAT comparisons are epsilon-tolerant in the reference
@@ -811,14 +814,6 @@ class ExprCompiler:
                 if ia and ib:
                     return F.call_function("div", a, b)
             if op in ("==", "!=", "<", "<=", ">", ">="):
-                r = _fold_const_list_cmp(op, e[1], e[2])
-                if r is not _CMP_MISS:
-                    # constant list comparison folds in Python with the
-                    # reference's dynamic semantics (heterogeneous
-                    # elements, epsilon floats — RelationalExpr.feature
-                    # `[1,"a"]<=[1]`): Spark arrays can't mix types
-                    return F.lit(r).cast("boolean") if r is None \
-                        else F.lit(r)
                 # json_extract(s)[key] carries the JSON value's OWN type
                 # in the reference (dynamically-typed Value map —
                 # SubscriptInUpdate.feature compares ['a'] == 1); our
@@ -1603,34 +1598,41 @@ def _eval_const_vids(space: GraphSpace, vals: list) -> list:
             and v[0] == "__const_expr__" else v for v in vals]
 
 
-def _vid_frame(space: GraphSpace, vids, piped: DataFrame | None,
-               src_col: str | None,
-               env: dict[str, DataFrame] | None = None) -> DataFrame:
-    def _checked(df: DataFrame, sigil: str) -> DataFrame:
-        col = src_col or df.columns[0]
-        n = df.columns.count(col)
-        if n == 0:                       # subgraph.feature "invalid input"
-            raise ValueError(f"`{sigil}.{col}', not exist prop `{col}'")
-        if n > 1:
-            raise ValueError(f"Duplicate Column Name : `{col}'")
-        return df.select(F.col(col).alias(VID)).distinct()
-
+def _runtime_input(vids: str, piped: DataFrame | None,
+                   src_col: str | None,
+                   env: dict[str, DataFrame] | None) -> tuple[DataFrame, str]:
+    """The frame a ``$-`` / ``$var`` source reads and its checked vid
+    column, with the reference's error phrasing."""
     if vids == "$-":
-        if piped is None:
+        df = piped
+        if df is None:
             if src_col:                  # reference phrases this as a
                 raise ValueError(        # missing-prop error
                     f"`$-.{src_col}', not exist prop `{src_col}'")
             raise ValueError("$- with no piped input")
-        return _checked(piped, "$-")
-    if isinstance(vids, str) and vids.startswith("$"):
+    else:
         # named query variable bound by `$var = <stmt>;`
         # (AssignExecutor.cpp:1-32 / ExecutionContext variable table)
-        bound = (env or {}).get(vids)
-        if bound is None:
+        df = (env or {}).get(vids)
+        if df is None:
             raise ValueError(
                 f"`{vids}.{src_col}', not exist variable `{vids[1:]}'"
                 if src_col else f"undefined query variable {vids}")
-        return _checked(bound, vids)
+    col = src_col or df.columns[0]
+    n = df.columns.count(col)
+    if n == 0:                           # subgraph.feature "invalid input"
+        raise ValueError(f"`{vids}.{col}', not exist prop `{col}'")
+    if n > 1:
+        raise ValueError(f"Duplicate Column Name : `{col}'")
+    return df, col
+
+
+def _vid_frame(space: GraphSpace, vids, piped: DataFrame | None,
+               src_col: str | None,
+               env: dict[str, DataFrame] | None = None) -> DataFrame:
+    if isinstance(vids, str) and vids.startswith("$"):
+        df, col = _runtime_input(vids, piped, src_col, env)
+        return df.select(F.col(col).alias(VID)).distinct()
     if any(isinstance(v, tuple) and len(v) == 2 and v[0] == "__const_expr__"
            for v in vids):
         # constant function-call vids — `GO FROM hash("Boris Diaw")`
@@ -1667,45 +1669,15 @@ def _exec_go(space: GraphSpace, st: A.GoStmt, piped: DataFrame | None,
     # duplicate piped vids keep their multiplicity (unlike literal FROM
     # lists, which dedup — GO.feature "duplicated vids" vs
     # GoYieldVertexEdge.feature "multi edges over all" pipe), and $-.*
-    # joins back by ROW identity, not vid. The row key must read the same
-    # in both uses, so the keyed frame is checkpointed — the analog of
-    # the reference's materialized interim DataSet between pipe stages.
+    # joins back by ROW identity, not vid.
     runtime_input = isinstance(st.sources, str)
-    keyed: DataFrame | None = None
     if runtime_input:
-        # same column-existence/duplicate checks and reference error
-        # phrasing as _vid_frame's _checked — the keyed path used to
-        # bypass them, surfacing raw AnalysisExceptions (r5 ADVICE)
-        src_df = piped if st.sources == "$-" else (env or {}).get(st.sources)
-        if src_df is None:
-            if st.sources == "$-":
-                raise ValueError(
-                    f"`$-.{st.src_col}', not exist prop `{st.src_col}'"
-                    if st.src_col else "$- with no piped input")
-            raise ValueError(
-                f"`{st.sources}.{st.src_col}', not exist variable "
-                f"`{st.sources[1:]}'" if st.src_col
-                else f"undefined query variable {st.sources}")
-        src_col = st.src_col or src_df.columns[0]
-        n_col = src_df.columns.count(src_col)
-        sigil = "$-" if st.sources == "$-" else st.sources
-        if n_col == 0:
-            raise ValueError(f"`{sigil}.{src_col}', not exist prop "
-                             f"`{src_col}'")
-        if n_col > 1:
-            raise ValueError(f"Duplicate Column Name : `{src_col}'")
-        keyed = (src_df.withColumn("__row", F.monotonically_increasing_id())
-                 .localCheckpoint(eager=True))
-        start = keyed.select("__row", F.col(src_col).alias(VID))
+        src_df, src_col = _runtime_input(st.sources, piped, st.src_col, env)
     else:
         start = _vid_frame(space, st.sources, piped, st.src_col, env)
     # OVER * (edges=None) expands to every edge type in the space, the
     # reference's AllEdges expansion (GoValidator over_clause)
     edges = _edge_union(space, st.edges or sorted(space.edges))
-    hop = go(edges, start, st.min_steps, st.max_steps, st.direction,
-             step_limits=st.limits, step_samples=st.sample,
-             track_origin=runtime_input,
-             origin_col="__row" if runtime_input else None)
     input_refs: list = []
     for y in st.yields:
         _walk(y.expr, {"input_prop", "var_prop"}, input_refs)
@@ -1719,6 +1691,20 @@ def _exec_go(space: GraphSpace, st: A.GoStmt, piped: DataFrame | None,
             raise ValueError(
                 "A variable must be referred in FROM before used in "
                 "WHERE or YIELD")
+    if runtime_input:
+        keyed = src_df.withColumn("__row", F.monotonically_increasing_id())
+        if input_refs:
+            # the join-back below reads the row key a second time, so it
+            # must read the same in both uses: the keyed frame is
+            # checkpointed — the analog of the reference's materialized
+            # interim DataSet between pipe stages. Without a join-back
+            # the plan reads the key once and needs no stable value.
+            keyed = keyed.localCheckpoint(eager=True)
+        start = keyed.select("__row", F.col(src_col).alias(VID))
+    hop = go(edges, start, st.min_steps, st.max_steps, st.direction,
+             step_limits=st.limits, step_samples=st.sample,
+             track_origin=runtime_input,
+             origin_col="__row" if runtime_input else None)
     if runtime_input and input_refs:
         # one output row per (input row, traversal result), joined by the
         # ROW key. Piped columns colliding with hop internals (a user
@@ -4454,6 +4440,58 @@ def _project_impl(cur, items, ec, bound):
     return out, out_bound, renames
 
 
+def _path_value_aliases(st: A.MatchStmt) -> tuple[set[str], list[str]]:
+    """The aliases bound to a path value — path aliases and var-len edge
+    lists — and every edge alias, in pattern order."""
+    names: set[str] = set()
+    edge_aliases: list[str] = []
+    for cl in st.clauses:
+        for p in getattr(cl, "paths", []) or []:
+            if p.path_alias:
+                names.add(p.path_alias)
+            for ed in p.edges:
+                if ed.alias:
+                    edge_aliases.append(ed.alias)
+                if ed.alias and (ed.var_len or ed.min_hops != 1
+                                 or ed.max_hops != 1):
+                    names.add(ed.alias)
+    return names, edge_aliases
+
+
+def _stmt_observes_paths(st: A.MatchStmt, names: set[str],
+                         length_blind: bool) -> bool:
+    """Does a clause expression, RETURN item or ORDER BY key observe a
+    path value? ``attr`` (``x["likeness"]`` on a struct value),
+    ``edge_prop`` (the ``x.likeness`` form a comprehension var takes)
+    and ``star`` anywhere count, and so does a bare alias in ``names``,
+    which renders its full value. With ``length_blind`` a
+    ``length(alias)`` call observes nothing: it reads the size only."""
+    def scan(e) -> bool:
+        if isinstance(e, tuple):
+            if e and e[0] in ("attr", "edge_prop", "star"):
+                return True
+            if e and e[0] == "name" and len(e) == 2 and e[1] in names:
+                return True
+            if length_blind and e and e[0] == "call" and len(e) == 3 \
+                    and e[1] == "length" and isinstance(e[2], tuple) \
+                    and e[2][0] == "name":
+                return False
+            return any(scan(x) for x in e)
+        if isinstance(e, list):
+            return any(scan(x) for x in e)
+        return False
+
+    exprs: list = []
+    for cl in st.clauses:
+        exprs.extend(getattr(ex, "expr", ex)
+                     for ex in getattr(cl, "items", None) or [])
+        exprs.extend(getattr(cl, k, None) for k in ("where", "expr",
+                                                    "order_by"))
+    exprs.extend(y.expr for y in st.returns)
+    exprs.append(st.order_by)
+    return any(scan(x) for x in exprs)
+
+
 def _stmt_reads_path_props(st: A.MatchStmt) -> bool:
     """Does any clause expression read edge props off a path value? —
     the (deliberately over-approximate) trigger for lazily joining props
@@ -4463,42 +4501,8 @@ def _stmt_reads_path_props(st: A.MatchStmt) -> bool:
     False keeps those paths identity-only, which is the cheap case; a
     false positive only costs the shaping-time join when a shortest
     var-len segment also exists."""
-    names: set[str] = set()
-    for cl in st.clauses:
-        for p in getattr(cl, "paths", []) or []:
-            if p.path_alias:
-                names.add(p.path_alias)
-            for ed in p.edges:
-                if ed.alias and (ed.var_len or ed.min_hops != 1
-                                 or ed.max_hops != 1):
-                    names.add(ed.alias)
-
-    def scan(e) -> bool:
-        if isinstance(e, tuple):
-            # attr: x["likeness"] on a struct value; edge_prop: the
-            # `x.likeness` form a comprehension var takes; a bare
-            # path/edge-list alias renders its full value
-            if e and e[0] in ("attr", "edge_prop", "star"):
-                return True
-            if e and e[0] == "name" and len(e) == 2 and e[1] in names:
-                return True
-            return any(scan(x) for x in e)
-        if isinstance(e, list):
-            return any(scan(x) for x in e)
-        return False
-
-    for cl in st.clauses:
-        for ex in getattr(cl, "items", None) or []:
-            if scan(getattr(ex, "expr", ex)):
-                return True
-        if scan(getattr(cl, "where", None)):
-            return True
-        if scan(getattr(cl, "expr", None)):
-            return True
-        if scan(getattr(cl, "order_by", None)):
-            return True
-    return any(scan(y.expr) for y in st.returns) \
-        or scan(st.order_by)
+    return _stmt_observes_paths(st, _path_value_aliases(st)[0],
+                                length_blind=False)
 
 
 def _stmt_path_contents_unused(st: A.MatchStmt) -> bool:
@@ -4512,51 +4516,12 @@ def _stmt_path_contents_unused(st: A.MatchStmt) -> bool:
     right LENGTH but no edge identities. Deliberately conservative the
     same way :func:`_stmt_reads_path_props` is: any ``attr``/
     ``edge_prop``/``star`` expression anywhere disables the route."""
-    names: set[str] = set()
-    seen_edge_aliases: list[str] = []
-    for cl in st.clauses:
-        for p in getattr(cl, "paths", []) or []:
-            if p.path_alias:
-                names.add(p.path_alias)
-            for ed in p.edges:
-                if ed.alias:
-                    seen_edge_aliases.append(ed.alias)
-                if ed.alias and (ed.var_len or ed.min_hops != 1
-                                 or ed.max_hops != 1):
-                    names.add(ed.alias)
+    names, edge_aliases = _path_value_aliases(st)
     # a var-len edge alias appearing in two patterns joins on its hop
     # list — contents observed structurally, not via an expression
-    if any(seen_edge_aliases.count(a) > 1 for a in names):
+    if any(edge_aliases.count(a) > 1 for a in names):
         return False
-
-    def scan(e) -> bool:
-        """True = some expression observes path contents."""
-        if isinstance(e, tuple):
-            if e and e[0] in ("attr", "edge_prop", "star"):
-                return True
-            if e and e[0] == "name" and len(e) == 2 and e[1] in names:
-                return True
-            if e and e[0] == "call" and len(e) == 3 and e[1] == "length" \
-                    and isinstance(e[2], tuple) and e[2][0] == "name":
-                return False          # length(p): size only, no contents
-            return any(scan(x) for x in e)
-        if isinstance(e, list):
-            return any(scan(x) for x in e)
-        return False
-
-    for cl in st.clauses:
-        for ex in getattr(cl, "items", None) or []:
-            if scan(getattr(ex, "expr", ex)):
-                return False
-        if scan(getattr(cl, "where", None)):
-            return False
-        if scan(getattr(cl, "expr", None)):
-            return False
-        if scan(getattr(cl, "order_by", None)):
-            return False
-    if any(scan(y.expr) for y in st.returns) or scan(st.order_by):
-        return False
-    return True
+    return not _stmt_observes_paths(st, names, length_blind=True)
 
 
 def _node_prop_patterns_need_tag(st: A.MatchStmt) -> None:

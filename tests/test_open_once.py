@@ -56,9 +56,7 @@ GO_GROUP = ('GO FROM "p1", "p2", "p3" OVER like WHERE like.likeness > 10 '
             "YIELD src(edge) AS s, like.likeness AS l "
             "| GROUP BY $-.s YIELD $-.s AS s, count(*) AS n, max($-.l) AS top "
             "| ORDER BY $-.n DESC, $-.s")
-# $b reads player again through the destination's props. (`GO FROM
-# $a.id` would add one build job of its own: the eager checkpoint that
-# numbers a variable's rows, which opens nothing.)
+# $b reads player again through the destination's props.
 VAR_JOIN = ("$a = LOOKUP ON player WHERE player.age > 0 "
             "YIELD id(vertex) AS id, player.age AS age; "
             '$b = GO FROM "p1", "p2", "p3" OVER like '
@@ -67,12 +65,20 @@ VAR_JOIN = ("$a = LOOKUP ON player WHERE player.age > 0 "
             "YIELD $a.id AS id, $a.age AS age, $b.dn AS dn "
             "FROM $a INNER JOIN $b ON $a.id == $b.s")
 
+# $a holds p1 twice (p2 and p3 both like p1), and GO FROM a runtime input
+# walks once per input row: each hop row appears twice. The rows are
+# numbered without a checkpoint, since no `$a.x` prop is read back.
+GO_FROM_VAR = ('$a = GO FROM "p2", "p3" OVER like YIELD dst(edge) AS id; '
+               "GO FROM $a.id OVER like "
+               "YIELD src(edge) AS s, dst(edge) AS d")
+
 
 @pytest.mark.parametrize("query,expected", [
     (GO_GROUP, [("p1", 2, 95), ("p2", 1, 80)]),
     (VAR_JOIN, [("p1", 42, "Tony"), ("p1", 42, "Manu"),
                 ("p2", 36, "Tim")]),
-], ids=["go_group_by", "var_join"])
+    (GO_FROM_VAR, [("p1", "p2")] * 2 + [("p1", "p3")] * 2),
+], ids=["go_group_by", "var_join", "go_from_var"])
 def test_statement_build_runs_no_jobs_and_opens_once(spark, tmp_path,
                                                      monkeypatch, query,
                                                      expected):

@@ -1,13 +1,16 @@
-"""Path operators against plain Python on fixed graphs (default lane).
+"""Frontier searches against plain Python on fixed graphs (default lane).
 
 ``operators/paths.py`` runs every search on one level step per frontier
-kind, with one counted loop per one-sided search and one round driver
-for the two meet-in-the-middle searches. These tests pin each public
-search at a shallow depth (2) and a deeper one (5), in every direction,
-against a Python BFS over a graph made of small components that carry
-the edge cases: a 2-cycle, a self-loop, parallel edges, a diamond and a
-6-edge chain. The hypothesis
-versions of the same parities run in the full lane (``test_property.py``).
+kind, with one round driver for the two meet-in-the-middle searches.
+BFS distances, GET SUBGRAPH, MATCH var-len expansion and GO's counted
+range share one counted level loop (``traverse._counted_levels``).
+These tests pin each public search at a shallow depth (2) and a deeper
+one (5), and the loop's searches at their edge depths too, in every
+direction, against a Python BFS over a graph made of small components
+that carry the edge cases: a 2-cycle, a self-loop, parallel edges, a
+diamond and a 6-edge chain. Every frontier dies before 5 levels. The
+hypothesis versions of the path parities run in the full lane
+(``test_property.py``).
 """
 
 from __future__ import annotations
@@ -16,6 +19,8 @@ from collections import Counter
 
 import pytest
 
+from nebula_spark.catalog import VID
+from nebula_spark.operators import go, k_hop_subgraph, traverse
 from nebula_spark.operators import paths as P
 from nebula_spark.session import local_frame
 
@@ -40,15 +45,17 @@ def _edges(spark, rows=EDGES):
     return local_frame(spark, rows, "_src string, _dst string, _rank long")
 
 
-def _hops(direction):
+def _hops(direction, loops_once=True):
     """Oriented adjacency entries: (from, to, hop struct as the engine
     records it, direction-normalized edge identity). BOTH yields a
-    self-loop once (``self_loop_once=True``)."""
+    self-loop once (``self_loop_once=True``) unless ``loops_once`` is
+    False."""
     out = []
     for s, d, r in EDGES:
         if direction in ("out", "both"):
             out.append((s, d, (s, d, r, 1), (s, d, r)))
-        if direction == "in" or (direction == "both" and s != d):
+        if direction == "in" or (direction == "both"
+                                 and (s != d or not loops_once)):
             out.append((d, s, (d, s, r, -1), (s, d, r)))
     return out
 
@@ -108,6 +115,76 @@ def _py_min_paths(direction, max_hops):
     return {k: [tuple(h for h, _ in p) for p in ps] for k, ps in out.items()}
 
 
+def _py_subgraph(direction, steps):
+    """The reference's subgraph rounds from ROOTS: ({vid: level},
+    {(edge, step)}). Round k collects every edge out of the level k-1
+    frontier; a closing round after the last collects the final
+    frontier's edges back into the subgraph."""
+    hops = _hops(direction, loops_once=False)
+    level = dict.fromkeys(ROOTS, 0)
+    frontier, rows = set(ROOTS), set()
+    for step in range(1, steps + 1):
+        out = [(b, h) for a, b, h, _ in hops if a in frontier]
+        rows |= {(h, step) for _, h in out}
+        frontier = {b for b, _ in out if b not in level}
+        level.update(dict.fromkeys(frontier, step))
+    rows |= {(h, steps + 1) for a, b, h, _ in hops
+             if a in frontier and b in level}
+    return level, rows
+
+
+def _py_walks(direction, min_hops, max_hops):
+    """Edge-unique walks from ROOTS of min_hops..max_hops hops (None:
+    no cap), as a Counter of (start, end, hops, path)."""
+    adj: dict = {}
+    for a, b, hop, key in _hops(direction):
+        adj.setdefault(a, []).append((b, hop, key))
+    out: Counter = Counter()
+    walks, hops = [(r, r, ()) for r in ROOTS], 0
+    while walks and (max_hops is None or hops <= max_hops):
+        if hops >= min_hops:
+            out.update((s, e, hops, tuple(h for h, _ in p))
+                       for s, e, p in walks)
+        hops += 1
+        walks = [(s, w, p + ((hop, key),)) for s, e, p in walks
+                 for w, hop, key in adj.get(e, ())
+                 if key not in {k for _, k in p}]
+    return out
+
+
+def _py_go(direction, steps, track_origin):
+    """GO 1 TO ``steps`` STEPS from ROOTS: a Counter of (origin, edge,
+    step); the frontier is a set of (origin, vid), origin None unless
+    tracked."""
+    hops = _hops(direction, loops_once=False)
+    frontier = {(r if track_origin else None, r) for r in ROOTS}
+    out: Counter = Counter()
+    for step in range(1, steps + 1):
+        rows = [(o, h, step) for o, v in frontier
+                for a, _, h, _ in hops if a == v]
+        out.update(rows)
+        frontier = {(o, h[1]) for o, h, _ in rows}
+    return out
+
+
+def _check_subgraph(spark, direction, steps):
+    # a duplicate edge row must collapse into its edge
+    edges = _edges(spark, EDGES + [EDGES[6]])
+    verts, collected = k_hop_subgraph(edges, _frame(spark, ROOTS), steps,
+                                      direction=direction)
+    level, rows = _py_subgraph(direction, steps)
+    assert {r[VID]: r.step for r in verts.collect()} == level
+    assert Counter(((r["_src"], r["_dst"], r["_rank"], r["_dir"]), r.step)
+                   for r in collected.collect()) == Counter(rows)
+
+
+def _check_walks(spark, direction, min_hops, max_hops):
+    out = traverse(_edges(spark), _frame(spark, ROOTS), min_hops, max_hops,
+                   direction, self_loop_once=True)
+    assert Counter(_path_key(r) for r in out.collect()) \
+        == _py_walks(direction, min_hops, max_hops)
+
+
 def _path_key(r):
     return (r.start_vid, r.end_vid, r.hops,
             tuple((h.s, h.d, h.r, h.t) for h in r.path))
@@ -157,6 +234,27 @@ def test_paths_match_python_bfs(spark, direction, max_hops):
                                    direction, mode=mode,
                                    self_loop_once=True).collect(),
                  {k: v for k, v in want.items() if k[1] in TARGETS}, mode)
+    _check_subgraph(spark, direction, max_hops)
+    _check_walks(spark, direction, 1, max_hops)
+
+
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_level_loop_edge_depths_match_python(spark, direction):
+    """The counted level loop at the depths the test above skips: a
+    subgraph of 0 and 1 steps, var-len ranges from 0 hops and with no
+    upper bound, and GO's counted range."""
+    for steps in (0, 1):
+        _check_subgraph(spark, direction, steps)
+    _check_walks(spark, direction, 0, 3)
+    _check_walks(spark, direction, 1, None)
+    for steps in (3, 5):
+        for track in (False, True):
+            out = go(_edges(spark), _frame(spark, ROOTS), 1, steps,
+                     direction, track_origin=track)
+            got = Counter((r["_origin"] if track else None,
+                           (r["_src"], r["_dst"], r["_rank"], r["_dir"]),
+                           r.step) for r in out.collect())
+            assert got == _py_go(direction, steps, track), (steps, track)
 
 
 def test_zero_hops_return_empty_typed_frames(spark):

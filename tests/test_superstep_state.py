@@ -173,14 +173,14 @@ def test_counted_bfs_level_width_bounds_shuffled_rows(spark, monkeypatch):
     whole edge table and the level expands to 40 vertices, so level 1 must
     not be planned at width 1."""
     import sys
-    from nebula_spark.operators import bfs_shortest_paths, paths
+    from nebula_spark.operators import bfs_shortest_paths
     traverse = sys.modules["nebula_spark.operators.traverse"]
     star = ([(0, i) for i in range(1, 41)]
             + [(i, 100 + i) for i in range(1, 41)])
-    monkeypatch.setattr(paths, "BROADCAST_FRONTIER_ROWS", 0)
+    monkeypatch.setattr(traverse, "BROADCAST_FRONTIER_ROWS", 0)
     monkeypatch.setattr(traverse, "SUPERSTEP_ROWS_PER_TASK", 10)
     widths: list[int] = []
-    sized = paths.sized_superstep
+    sized = traverse.sized_superstep
 
     @contextmanager
     def recording(session, n_rows):
@@ -188,7 +188,7 @@ def test_counted_bfs_level_width_bounds_shuffled_rows(spark, monkeypatch):
             widths.append(p)
             yield p
 
-    monkeypatch.setattr(paths, "sized_superstep", recording)
+    monkeypatch.setattr(traverse, "sized_superstep", recording)
     conf = spark.conf
     before = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.shuffle.partitions", "8")
@@ -202,3 +202,27 @@ def test_counted_bfs_level_width_bounds_shuffled_rows(spark, monkeypatch):
     # levels 1-3 run; level 3 reaches nothing, so level 4 never starts
     assert len(widths) == 3, widths
     assert widths[0] > 1, widths
+
+
+def test_lazy_checkpoints_carry_a_measurement():
+    """Every lazy ``localCheckpoint`` in the engine sits in a paragraph
+    whose comment names the measurement that keeps it ("Kept by ..."), so
+    a lazy fork of a counted loop comes back only with an A/B."""
+    import re
+    from pathlib import Path
+
+    import nebula_spark
+    pkg = Path(nebula_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if not re.search(r"localCheckpoint\(\s*eager\s*=\s*False", line):
+                continue
+            top = i
+            while top > 0 and lines[top - 1].strip():
+                top -= 1
+            if not any("#" in ln and "Kept by" in ln
+                       for ln in lines[top:i + 1]):
+                offenders.append(f"{path.relative_to(pkg)}:{i + 1}")
+    assert offenders == []
