@@ -86,21 +86,6 @@ def delete_rows(table: DataFrame, keys: DataFrame,
     return table.join(keys.select(*key).distinct(), key, "left_anti")
 
 
-def delete_vertex_cascade(tags: dict[str, DataFrame],
-                          edges: dict[str, DataFrame],
-                          vids: DataFrame) -> tuple[dict, dict]:
-    """DELETE VERTEX with edges (the reference's DeleteVerticesExecutor
-    removes the vertex row and all its in/out edges)."""
-    vkeys = vids.select(VID).distinct()
-    new_tags = {n: delete_rows(t, vkeys, VERTEX_KEY) for n, t in tags.items()}
-    new_edges = {}
-    for n, e in edges.items():
-        e2 = e.join(vkeys.withColumnRenamed(VID, SRC), [SRC], "left_anti")
-        e2 = e2.join(vkeys.withColumnRenamed(VID, DST), [DST], "left_anti")
-        new_edges[n] = e2.select(*e.columns)
-    return new_tags, new_edges
-
-
 def ttl_vacuum(table: DataFrame, ttl_col: str, ttl_duration: int) -> DataFrame:
     """Physically drop expired rows (compaction parity with
     CompactionFilter.h:76-131; the read path already filters them)."""

@@ -16,20 +16,22 @@ reference) handles all (src,dst) pairs in one run instead of per-pair RPCs.
 One level step per frontier kind serves every search here:
 :func:`_id_step` advances ``(root, vid)`` pairs (the distance searches
 and GET SUBGRAPH), :func:`_path_step` advances ``(root, end_vid, path)``
-rows (the minimal-path searches). Every one-sided search is counted: the
-seed and every level go through
-:func:`~nebula_spark.operators.traverse.checkpoint_count`, so each frontier
-is materialized once, its size comes free off that job (the empty-frontier
-stop and the broadcast probe), and the visited set is a plain union of
-those checkpointed pieces. :func:`bfs_shortest_paths` runs on the shared
-level loop (``traverse._counted_levels``); :func:`bfs_min_paths` (its
-BOTH-direction closures) and :func:`weighted_shortest_paths` (its
-improved-row count) keep their own. There is no lazy mode for short
+rows (the minimal-path searches). Every level search runs on the shared
+counted level loop (``traverse._counted_levels``): the seed and every
+level go through :func:`~nebula_spark.operators.traverse.checkpoint_count`,
+so each frontier is materialized once, its size comes free off that job
+(the empty-frontier stop and the broadcast probe), and the visited set is
+a plain union of those checkpointed pieces. :func:`bfs_shortest_paths`
+and :func:`bfs_min_paths` pull the loop to its end; the two
+meet-in-the-middle searches pull one loop per side, in turn, from one
+round driver (:func:`_meet_rounds`), and keep only their meet and final
+reduction. :func:`weighted_shortest_paths` keeps its own loop: its state
+is the whole tentative-distance set, not a level, and what it counts is
+the rows whose distance improved. There is no lazy mode for short
 searches: under AQE a lazy ``localCheckpoint`` runs its input's shuffle
 stages when it is called anyway, so a "lazy" level paid its jobs during
 plan build and got no count back (a traced 3-hop search ran 15 jobs
-lazy, 11 counted). The two meet-in-the-middle searches share one round
-driver (:func:`_meet_rounds`) and keep only their meet and final reduction.
+lazy, 11 counted).
 
 The loop-invariant edge frame is persisted once per call and unpersisted
 on exit, except in :func:`bfs_shortest_paths`, which checkpoints it for
@@ -41,9 +43,11 @@ level jobs run at the width the data calls for
 from __future__ import annotations
 
 from functools import reduce
+from itertools import chain
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
@@ -68,29 +72,40 @@ def _id_step(f: DataFrame, e: DataFrame, visited: DataFrame,
             .join(visited, [*keys, VID], "left_anti"))
 
 
-def _path_step(f: DataFrame, e: DataFrame, visited: DataFrame, mode: str,
-               etype_order: list | None) -> tuple[DataFrame, DataFrame]:
-    """One level of a ``(root, end_vid, path)`` frontier ``f`` (probed by
-    the caller against :data:`_PATH_BROADCAST_ROWS`) over oriented edges
-    (:func:`_prep_oriented`). Returns the first-reached paths — one per
-    pair under ``mode="single"`` — and the whole hop output they were cut
-    from (BOTH-direction root closures read it)."""
+def _path_hop(f: DataFrame, e: DataFrame) -> DataFrame:
+    """Every path of a ``(root, end_vid, path)`` frontier ``f`` (probed by
+    the caller against :data:`_PATH_BROADCAST_ROWS`) extended one hop
+    over oriented edges (:func:`_prep_oriented`)."""
     # direction-normalized edge uniqueness (Edge.cpp:128-136): only
     # relevant for closed walks back to the root — a BOTH-direction walk
     # may not return over its arrival edge
     uniq = ~F.array_contains(F.col("path"), _edge_id()) \
         & ~F.array_contains(F.col("path"), _edge_id_reversed())
-    expanded = (f.alias("__f")
-                .join(e.alias("__e"),
-                      F.col("__f.end_vid") == F.col(f"__e.{SRC}"), "inner")
-                .filter(uniq)
-                .select("root", F.col(DST).alias("end_vid"),
-                        F.concat("path",
-                                 F.array(_new_edge_struct())).alias("path")))
-    nxt = expanded.join(visited, ["root", "end_vid"], "left_anti")
+    return (f.alias("__f")
+            .join(e.alias("__e"),
+                  F.col("__f.end_vid") == F.col(f"__e.{SRC}"), "inner")
+            .filter(uniq)
+            .select("root", F.col(DST).alias("end_vid"),
+                    F.concat("path",
+                             F.array(_new_edge_struct())).alias("path")))
+
+
+def _path_step(f: DataFrame, e: DataFrame, levels: list[DataFrame],
+               mode: str, etype_order: list | None,
+               seed_visited: bool = True) -> DataFrame:
+    """The next level of a path search from frontier ``f``: the paths of
+    :func:`_path_hop` to pairs no level reached (the seed counts only when
+    ``seed_visited``), one per pair under ``mode="single"``."""
+    seen = [lv.select("root", "end_vid").distinct() for lv in levels[1:]]
+    if seed_visited:
+        seen.insert(0, levels[0].select("root", "end_vid"))
+    nxt = _path_hop(f, e)
+    if seen:
+        nxt = nxt.join(reduce(DataFrame.unionByName, seen),
+                       ["root", "end_vid"], "left_anti")
     if mode == "single":
         nxt = _pick_single(nxt, ["root", "end_vid"], etype_order)
-    return nxt, expanded
+    return nxt
 
 
 def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
@@ -158,8 +173,9 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
             + sum(counts[1:] if root_cycles else counts)
 
     roots = sources.select(F.col(VID).alias("root")).distinct()
-    levels, _ = _counted_levels(roots.withColumn(VID, F.col("root")), step,
-                                max_hops, shuffle_rows=shuffle_rows)
+    levels, _ = zip(*_counted_levels(roots.withColumn(VID, F.col("root")),
+                                     step, max_hops,
+                                     shuffle_rows=shuffle_rows))
     results = reduce(DataFrame.unionByName, levels[1:]) if len(levels) > 1 \
         else levels[0].limit(0).withColumn("dist", F.lit(0))
     out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
@@ -187,11 +203,17 @@ def _single_tie_key(etype_order):
         + F.when(h["t"] > 0, F.lit(1)).otherwise(F.lit(0)))
 
 
+def _shortest(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows of ``df`` at the fewest ``hops`` of their ``keys`` group."""
+    w = Window.partitionBy(*keys)
+    return (df.withColumn("_min", F.min("hops").over(w))
+            .filter(F.col("hops") == F.col("_min")).drop("_min"))
+
+
 def _pick_single(df: DataFrame, keys: list[str],
                  etype_order: list | None) -> DataFrame:
     """``mode="single"``: one deterministic path per ``keys`` group — the
     lowest :func:`_single_tie_key`, then the greatest serialized path."""
-    from pyspark.sql.window import Window
     w = (Window.partitionBy(*keys)
          .orderBy(_single_tie_key(etype_order),
                   F.col("path").cast("string").desc()))
@@ -250,14 +272,14 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
       BFS never extends a pruned path, so such cycles are NOT reported
       (AllShortestPaths.feature:578 pins count 1062 — Yao Ming's
       serve/serve/like triangle is invisible). So in BOTH mode the root
-      IS pre-visited and the ``(s, s)`` rows are the IN-LOOP closures of
-      minimal frontier paths — reference-exact, and still free of the
-      enumerate fallback's exponential plan. Closures ride each level's
-      checkpoint job, and a root stops looking once it has one.
+      IS pre-visited and the ``(s, s)`` rows are the closures of minimal
+      frontier paths — reference-exact, and still free of the enumerate
+      fallback's exponential plan. They are the hops back to the root from
+      every level the loop stepped from, kept at each root's first closing
+      level; they stay lazy, so the result re-runs one hop per level when
+      it is collected.
 
-    Every level is counted: the edge frame is persisted for the call, and
-    the seed and each level go through :func:`checkpoint_count`, so the
-    search stops on an empty frontier and broadcasts it while small.
+    It runs on the counted level loop (``traverse._counted_levels``).
 
     Output schema matches :func:`~nebula_spark.operators.traverse.traverse`:
     ``(start_vid, end_vid, hops, path)`` with path an array of edge structs
@@ -267,81 +289,45 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
         raise ValueError("bfs_min_paths requires min_hops <= 1; route "
                          "higher lower bounds to the enumerate fallback")
     e = _prep_oriented(edges, direction, edge_filter, self_loop_once)
-    roots = sources.select(F.col(VID).alias("root")).distinct()
-    frontier = (roots.withColumn("end_vid", F.col("root"))
-                .withColumn("path", F.array().cast(_path_struct_type(e))))
-    # BOTH-direction root closures: the reference's level-pruned BFS
-    # reports a (s, s) row only when the closing walk's prefix is itself
-    # a minimal path (SingleShortestPath.cpp never extends a pruned
-    # path) — a 3-cycle whose 2-prefix is non-minimal is NOT found
-    # (AllShortestPaths.feature:578 pins 1062: Yao Ming's
-    # serve/serve/like triangle is invisible). So closures are collected
-    # IN-LOOP from the minimal frontier — not by an exact cycle search,
-    # which would be mathematically complete but reference-divergent.
-    collect_closures = direction == "both" and min_hops >= 1
+    seed = (sources.select(F.col(VID).alias("root")).distinct()
+            .withColumn("end_vid", F.col("root"))
+            .withColumn("path", F.array().cast(_path_struct_type(e))))
+    # per-root visited set (the minimality invariant): a vid joins it at
+    # its first-reached level. The root is pre-visited only in BOTH
+    # direction or with min_hops=0 (see the docstring for why).
+    seed_visited = min_hops == 0 or direction == "both"
     e = e.persist()
-    frontier, n = checkpoint_count(frontier)
-
-    def shape(level_df: DataFrame, level: int) -> DataFrame:
-        return level_df.select(F.col("root").alias("start_vid"), "end_vid",
-                               F.lit(level).alias("hops"), "path")
-
-    # per-root visited set: a vid joins it at its first-reached level, so
-    # later levels cannot re-emit the pair — the minimality invariant.
-    # out/in with min_hops >= 1: the root itself is NOT pre-visited — the
-    # pair (s, s) is then reported at its shortest ≥1-hop cycle length,
-    # matching the enumerate semantics (traverse emits cycle paths; the
-    # per-pair min keeps the shortest). Minimal walks revisit no vertex
-    # *except* the root as a cycle endpoint, so this is the only
-    # visited-set exception. BOTH direction: the root IS pre-visited (the
-    # exception is unsound there — see docstring) and (s, s) rows come
-    # from the in-loop closures.
-    visited = frontier.select("root", "end_vid")
-    if min_hops >= 1 and direction != "both":
-        visited = visited.limit(0)
-    levels = [shape(frontier, 0)] if min_hops == 0 else []
-    closures: list[DataFrame] = []
-    closed = roots.limit(0)                  # roots whose min closure found
     try:
-        for level in range(1, max_hops + 1):
-            if n == 0:
-                break
-            nxt, expanded = _path_step(
-                _broadcast_small(frontier, n, _PATH_BROADCAST_ROWS), e,
-                visited, mode, etype_order)
-            if collect_closures:
-                # closures ride the same checkpoint job as the frontier;
-                # only the frontier rows count toward its size
-                hits = (expanded
-                        .filter(F.col("end_vid") == F.col("root"))
-                        .join(closed, "root", "left_anti")
-                        .withColumn("_cyc", F.lit(True)))
-                nxt, m = checkpoint_observe(
-                    nxt.unionByName(hits, allowMissingColumns=True),
-                    n=F.count(F.when(F.col("_cyc").isNull(), 1)))
-                n = int(m["n"])
-                hits = shape(nxt.filter(F.col("_cyc")), level)
-                nxt = nxt.filter(F.col("_cyc").isNull()).drop("_cyc")
-                closures.append(hits)
-                closed = closed.unionByName(
-                    hits.select(F.col("start_vid").alias("root"))
-                    .distinct())
-            else:
-                nxt, n = checkpoint_count(nxt)
-            levels.append(shape(nxt, level))
-            visited = visited.unionByName(
-                nxt.select("root", "end_vid").distinct())
-            frontier = nxt
-        if closures:
-            cyc = reduce(DataFrame.unionByName, closures)
-            if mode == "single":
-                cyc = _pick_single(cyc, ["start_vid"], etype_order)
-            levels.append(cyc)
-        if not levels:
-            return shape(frontier.limit(0), 0)
-        return reduce(DataFrame.unionByName, levels)
+        levels, counts = zip(*_counted_levels(
+            seed, lambda f, lvs: _path_step(f, e, lvs, mode, etype_order,
+                                            seed_visited),
+            max_hops, broadcast_rows=_PATH_BROADCAST_ROWS))
     finally:
         e.unpersist()
+    shaped = [lv.select(F.col("root").alias("start_vid"), "end_vid",
+                        F.lit(hops).alias("hops"), "path")
+              for hops, lv in enumerate(levels)]
+    kept = shaped[min_hops:]
+    if direction == "both" and min_hops >= 1 and len(levels) > 1:
+        # BOTH-direction root closures: the hops back to the root from
+        # every level the loop stepped from (all but the last; zip stops
+        # there), kept at each root's first closing level — the
+        # reference's rule (SingleShortestPath.cpp never extends a pruned
+        # path), not an exact cycle search (see the docstring). One hop
+        # per level: one hop over a union of the levels made Spark 4.1's
+        # union constraint rewrite fail at collect in bidir_min_paths
+        # (NoSuchElementException "key not found: root#…").
+        hits = [_path_hop(_broadcast_small(lv, n, _PATH_BROADCAST_ROWS), e)
+                .filter(F.col("end_vid") == F.col("root"))
+                .select(F.col("root").alias("start_vid"), "end_vid",
+                        F.lit(hops + 1).alias("hops"), "path")
+                for hops, (lv, n) in enumerate(zip(levels, counts[:-1]))]
+        cyc = _shortest(reduce(DataFrame.unionByName, hits), ["start_vid"])
+        if mode == "single":
+            cyc = _pick_single(cyc, ["start_vid"], etype_order)
+        kept.append(cyc)
+    return reduce(DataFrame.unionByName, kept) if kept \
+        else shaped[0].limit(0)
 
 
 def _path_struct_type(e: DataFrame):
@@ -394,48 +380,64 @@ def _prep_oriented(edges: DataFrame, direction: str,
     return e.select(SRC, DST, RANK, "_dir", "_etype")
 
 
-def _bidir_roots(sources: DataFrame, targets: DataFrame):
-    """Checkpointed, counted root sets of a two-sided search, plus the
-    roots on both sides (``diag``) and their count."""
-    src_roots, n_src = checkpoint_count(
-        sources.select(F.col(VID).alias("root")).distinct())
-    tgt_roots, n_tgt = checkpoint_count(
-        targets.select(F.col(VID).alias("root")).distinct())
-    diag = src_roots.join(tgt_roots, "root", "left_semi")
-    return src_roots, n_src, tgt_roots, n_tgt, diag, diag.count()
+def _bidir_search(sources: DataFrame, targets: DataFrame, direction: str,
+                  orient, seed_cols: dict, step, max_hops: int, meet,
+                  pair_cols: list[str], broadcast_rows: int | None = None):
+    """A meet-in-the-middle search: two uncapped counted level loops
+    (:func:`_counted_levels`), from the sources over ``orient(direction)``
+    and from the targets over the flipped direction (each edge frame
+    persisted for the call), seeded by their ``root`` column plus
+    ``seed_cols`` and run by ``step(frontier, edges, levels)``, pulled in
+    turn by :func:`_meet_rounds`. Returns the meets, the roots on both
+    sides (``diag``) and their count."""
+    fwd = orient(direction).persist()
+    bwd = fwd if direction == "both" \
+        else orient(_DIR_FLIP[direction]).persist()
+    try:
+        sides, seeds = [], []
+        for vids, e in ((sources, fwd), (targets, bwd)):
+            levels = _counted_levels(
+                vids.select(F.col(VID).alias("root")).distinct()
+                .withColumns(seed_cols),
+                lambda f, lvs, e=e: step(f, e, lvs), None, broadcast_rows)
+            seeds.append(next(levels))        # sources' seed job first
+            sides.append(chain(seeds[-1:], levels))
+        (lseed, n_src), (rseed, n_tgt) = seeds
+        diag = lseed.select("root").join(rseed.select("root"), "root",
+                                         "left_semi")
+        n_diag = diag.count()
+        return _meet_rounds(*sides, n_src * n_tgt - n_diag, max_hops, meet,
+                            pair_cols), diag, n_diag
+    finally:
+        fwd.unpersist()
+        bwd.unpersist()
 
 
-def _meet_rounds(left: tuple, right: tuple, total_pairs: int, max_hops: int,
-                 advance, meet, pair_cols: list[str]) -> list[DataFrame]:
-    """The round loop of a meet-in-the-middle search; returns every meet
-    frame in order.
-
-    ``left``/``right`` are ``(frontier, visited, edges, n)`` seeds, each
-    expanding over its own oriented ``edges``.
-    ``advance(frontier, visited, edges, n)`` returns the next checkpointed
-    level, its piece of the visited set and its row count; ``meet(lf, rf,
-    total)`` joins two frontiers into combos of ``total`` hops keyed by
-    ``pair_cols``. Round r advances left and meets at 2r−1, then advances
-    right and meets at 2r. The search stops on an empty side (no unseen
+def _meet_rounds(left, right, total_pairs: int, max_hops: int, meet,
+                 pair_cols: list[str]) -> list[DataFrame]:
+    """The round driver of a meet-in-the-middle search: pulls the two
+    sides' counted level loops ``left``/``right`` (seed first) in turn
+    and returns every meet frame in order. ``meet(lf, rf, total)`` joins
+    two frontiers into combos of ``total`` hops keyed by ``pair_cols``.
+    Round r pulls a left level and meets at 2r−1, then pulls a right
+    level and meets at 2r. The search stops on an empty side (no unseen
     pair can remain — a deeper pair's canonical meet would have to be
     first-reached at the depth that just came back empty), after the last
-    round, or once every one of ``total_pairs`` has met.
-    """
-    (lfront, lvisited, fwd, n_l), (rfront, rvisited, bwd, n_r) = left, right
+    round, or once every one of ``total_pairs`` has met."""
+    (lfront, _), (rfront, n_r) = next(left), next(right)
     meets: list[DataFrame] = []
     resolved: DataFrame | None = None
     n_resolved = 0
     rounds = (max_hops + 1) // 2
     for r in range(1, rounds + 1):
-        lfront, piece, n_l = advance(lfront, lvisited, fwd, n_l)
+        # an exhausted side (an empty seed) reads as an empty level
+        lfront, n_l = next(left, (lfront, 0))
         if n_l == 0:
             break
-        lvisited = lvisited.unionByName(piece)
         round_meets = [meet(lfront, rfront, 2 * r - 1)]
         if 2 * r <= max_hops:
-            rfront, piece, n_r = advance(rfront, rvisited, bwd, n_r)
+            rfront, n_r = next(right, (rfront, 0))
             if n_r:
-                rvisited = rvisited.unionByName(piece)
                 round_meets.append(meet(lfront, rfront, 2 * r))
         meets.extend(round_meets)
         # the probe's only effect is breaking out of LATER rounds — in
@@ -499,38 +501,23 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     as every (source, target) pair has resolved, probed per round against
     \\|S\\|·\\|T\\|. Root-cycle pairs (s in both sets) are excluded from the
     vertex meets (the half-paths from one side alone can't see a cycle's
-    non-minimal prefix) and routed to the in-loop closure rule of
-    :func:`bfs_min_paths`;
-    ``min_hops=0`` adds their zero-length rows instead.
+    non-minimal prefix) and routed to the closure rule of
+    :func:`bfs_min_paths`; ``min_hops=0`` adds their zero-length rows
+    instead.
 
     Output schema matches :func:`bfs_min_paths`:
     ``(start_vid, end_vid, hops, path)``.
     """
-    from pyspark.sql.window import Window
-
     if min_hops > 1:
         raise ValueError("bidir_min_paths requires min_hops <= 1; route "
                          "higher lower bounds to the enumerate fallback")
-    fwd = _prep_oriented(edges, direction, edge_filter,
-                         self_loop_once).persist()
-    bwd = fwd if direction == "both" else _prep_oriented(
-        edges, _DIR_FLIP[direction], edge_filter, self_loop_once).persist()
-    path_type = _path_struct_type(fwd)
-    src_roots, n_src, tgt_roots, n_tgt, diag, n_diag = _bidir_roots(
-        sources, targets)
+    def orient(d):
+        return _prep_oriented(edges, d, edge_filter, self_loop_once)
 
-    # the checkpointed roots are both each side's seed frontier and the
-    # first piece of its visited set
-    def seed(roots, e, n):
-        visited = roots.withColumn("end_vid", F.col("root"))
-        return (visited.withColumn("path", F.array().cast(path_type)),
-                visited, e, n)
+    path_type = _path_struct_type(orient(direction))
 
-    def advance(front, visited, e, n):
-        nxt, n = checkpoint_count(_path_step(
-            _broadcast_small(front, n, _PATH_BROADCAST_ROWS), e, visited,
-            mode, etype_order)[0])
-        return nxt, nxt.select("root", "end_vid").distinct(), n
+    def step(front, e, levels):
+        return _path_step(front, e, levels, mode, etype_order)
 
     def zero_length(roots):
         return roots.select(F.col("root").alias("start_vid"),
@@ -551,41 +538,32 @@ def bidir_min_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                         F.lit(total).alias("hops"),
                         F.concat("_lp", "_rp").alias("path")))
 
-    try:
-        combos = _meet_rounds(seed(src_roots, fwd, n_src),
-                              seed(tgt_roots, bwd, n_tgt),
-                              n_src * n_tgt - n_diag, max_hops, advance,
-                              meet, ["start_vid", "end_vid"])
-        parts: list[DataFrame] = []
-        if combos:
-            out = reduce(DataFrame.unionByName, combos) \
-                .filter(_edges_unique(F.col("path")))
-            w = Window.partitionBy("start_vid", "end_vid")
-            out = (out.withColumn("_min", F.min("hops").over(w))
-                   .filter(F.col("hops") == F.col("_min")).drop("_min"))
-            if mode == "single":
-                out = _pick_single(out, ["start_vid", "end_vid"],
-                                   etype_order)
-            parts.append(out)
-        if n_diag and min_hops == 0:
-            parts.append(zero_length(diag))
-        elif n_diag and max_hops >= 1:
-            # reference-artifact closures: re-run the level-pruned BFS
-            # from the (few) diagonal roots and keep the (s, s) rows —
-            # same in-loop closure rule as bfs_min_paths
-            cyc_all = bfs_min_paths(
-                edges, diag.select(F.col("root").alias(VID)), max_hops,
-                direction=direction, mode=mode, min_hops=1,
-                edge_filter=edge_filter, self_loop_once=self_loop_once,
-                etype_order=etype_order)
-            parts.append(cyc_all.filter(
-                F.col("start_vid") == F.col("end_vid")))
-        return reduce(DataFrame.unionByName, parts) if parts \
-            else zero_length(src_roots.limit(0))
-    finally:
-        fwd.unpersist()
-        if direction != "both":
-            bwd.unpersist()
+    combos, diag, n_diag = _bidir_search(
+        sources, targets, direction, orient,
+        {"end_vid": F.col("root"), "path": F.array().cast(path_type)}, step,
+        max_hops, meet, ["start_vid", "end_vid"], _PATH_BROADCAST_ROWS)
+    parts: list[DataFrame] = []
+    if combos:
+        out = _shortest(reduce(DataFrame.unionByName, combos)
+                        .filter(_edges_unique(F.col("path"))),
+                        ["start_vid", "end_vid"])
+        if mode == "single":
+            out = _pick_single(out, ["start_vid", "end_vid"], etype_order)
+        parts.append(out)
+    if n_diag and min_hops == 0:
+        parts.append(zero_length(diag))
+    elif n_diag and max_hops >= 1:
+        # reference-artifact closures: re-run the level-pruned BFS from
+        # the (few) diagonal roots and keep the (s, s) rows — same
+        # closure rule as bfs_min_paths
+        cyc_all = bfs_min_paths(
+            edges, diag.select(F.col("root").alias(VID)), max_hops,
+            direction=direction, mode=mode, min_hops=1,
+            edge_filter=edge_filter, self_loop_once=self_loop_once,
+            etype_order=etype_order)
+        parts.append(cyc_all.filter(F.col("start_vid") == F.col("end_vid")))
+    return reduce(DataFrame.unionByName, parts) if parts \
+        else zero_length(diag.limit(0))
 
 
 def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
@@ -605,25 +583,12 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
     the true distance. The search stops when every pair has resolved or a
     frontier empties (:func:`_meet_rounds`).
     """
-    def pairs(d):
+    def orient(d):
         return _prep_oriented(edges, d, edge_filter, False) \
-            .select(SRC, DST).distinct().persist()
+            .select(SRC, DST).distinct()
 
-    fwd = pairs(direction)
-    bwd = fwd if direction == "both" else pairs(_DIR_FLIP[direction])
-    src_roots, n_src, tgt_roots, n_tgt, _, n_diag = _bidir_roots(
-        sources, targets)
-
-    # the checkpointed roots are both each side's seed frontier and the
-    # first piece of its visited set
-    def seed(roots, e, n):
-        front = roots.withColumn(VID, F.col("root"))
-        return front, front, e, n
-
-    def advance(front, visited, e, n):
-        nxt, n = checkpoint_count(
-            _id_step(_broadcast_small(front, n), e, visited))
-        return nxt, nxt, n
+    def step(front, e, levels):
+        return _id_step(front, e, reduce(DataFrame.unionByName, levels))
 
     def meet(lf, rf, total):
         l = lf.select(F.col("root").alias(SRC), F.col(VID).alias("_m"))
@@ -633,22 +598,15 @@ def bidir_distances(edges: DataFrame, sources: DataFrame, targets: DataFrame,
                 .select(SRC, DST, F.lit(total).alias("dist"))
                 .distinct())
 
-    try:
-        meets = _meet_rounds(seed(src_roots, fwd, n_src),
-                             seed(tgt_roots, bwd, n_tgt),
-                             n_src * n_tgt - n_diag, max_hops, advance,
-                             meet, [SRC, DST])
-        if not meets:
-            return (src_roots.limit(0)
-                    .select(F.col("root").alias(SRC),
-                            F.col("root").alias(DST),
-                            F.lit(0).alias("dist")))
-        return (reduce(DataFrame.unionByName, meets).groupBy(SRC, DST)
-                .agg(F.min("dist").alias("dist")))
-    finally:
-        fwd.unpersist()
-        if direction != "both":
-            bwd.unpersist()
+    meets, diag, _ = _bidir_search(sources, targets, direction, orient,
+                                   {VID: F.col("root")}, step, max_hops,
+                                   meet, [SRC, DST])
+    if not meets:
+        return diag.limit(0).select(F.col("root").alias(SRC),
+                                    F.col("root").alias(DST),
+                                    F.lit(0).alias("dist"))
+    return (reduce(DataFrame.unionByName, meets).groupBy(SRC, DST)
+            .agg(F.min("dist").alias("dist")))
 
 
 def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,

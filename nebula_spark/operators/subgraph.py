@@ -67,8 +67,9 @@ def k_hop_subgraph(edges: DataFrame, seeds: DataFrame, steps: int = 1,
         return _id_step(frontier, e_all, visited, keys=()) \
             .withColumn("step", F.lit(len(levels)))
 
-    levels, counts = _counted_levels(
-        seeds.select(VID).distinct().withColumn("step", F.lit(0)), step, steps)
+    levels, counts = zip(*_counted_levels(
+        seeds.select(VID).distinct().withColumn("step", F.lit(0)), step,
+        steps))
     visited = reduce(DataFrame.unionByName, levels)
     # each edge takes its step from its source's level (see the docstring)
     src_level = _broadcast_small(

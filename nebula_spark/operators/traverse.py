@@ -1,5 +1,5 @@
-"""Traversal operators: GetNeighbors / GO / Traverse / AppendVertices /
-GetEdges (SURVEY.md §2.1, §2.3).
+"""Traversal operators: GetNeighbors / GO / Traverse / GetEdges (SURVEY.md
+§2.1, §2.3).
 
 Reference implementations:
 - GetNeighbors: ``src/graph/executor/query/GetNeighborsExecutor.cpp:1-102``
@@ -10,7 +10,6 @@ Reference implementations:
   frontier ``src/storage/query/GetDstBySrcProcessor.cpp``).
 - Traverse (MATCH var-len expansion with path tracking + edge-uniqueness):
   ``src/graph/executor/query/TraverseExecutor.cpp:25-676``.
-- AppendVertices: ``src/graph/executor/query/AppendVerticesExecutor.cpp:18-317``.
 - GetEdges: ``src/graph/executor/query/GetEdgesExecutor.cpp:1-112``.
 
 Spark-first translation: a hop is a join of the frontier against the edge
@@ -131,18 +130,20 @@ def _broadcast_small(df: DataFrame, n: int,
 
 def _counted_levels(seed: DataFrame, step, max_levels: int | None,
                     broadcast_rows: int | None = None,
-                    shuffle_rows=None) -> tuple[list[DataFrame], list[int]]:
-    """The level loop of every counted frontier search: returns the
-    levels, seed first, and their row counts. The seed and each level are
-    materialized and counted in one job (:func:`checkpoint_count`); the
-    loop stops after an empty level or at level ``max_levels`` (``None``:
-    only on an empty one). ``step(frontier, levels)`` builds level
-    ``len(levels)`` lazily from the last level, broadcast while it has at
-    most ``broadcast_rows`` rows. ``shuffle_rows(counts)``, if given,
-    bounds the rows a level shuffles and sizes its job
-    (:func:`sized_superstep`)."""
+                    shuffle_rows=None) -> Iterator[tuple[DataFrame, int]]:
+    """The level loop of every counted frontier search: yields each level,
+    seed first, with its row count. The seed and each level are
+    materialized and counted in one job (:func:`checkpoint_count`), run
+    when the caller pulls that level; the loop stops after an empty level
+    or at level ``max_levels`` (``None``: only on an empty one), and a
+    caller may stop pulling sooner, or pull two searches in turn.
+    ``step(frontier, levels)`` builds level ``len(levels)`` lazily from
+    the last level, broadcast while it has at most ``broadcast_rows``
+    rows. ``shuffle_rows(counts)``, if given, bounds the rows a level
+    shuffles and sizes its job (:func:`sized_superstep`)."""
     frontier, n = checkpoint_count(seed)
     levels, counts = [frontier], [n]
+    yield frontier, n
     while n and (max_levels is None or len(levels) <= max_levels):
         nxt = step(_broadcast_small(frontier, n, broadcast_rows), levels)
         with sized_superstep(seed.sparkSession, shuffle_rows(counts)) \
@@ -150,7 +151,7 @@ def _counted_levels(seed: DataFrame, step, max_levels: int | None,
             frontier, n = checkpoint_count(nxt)
         levels.append(frontier)
         counts.append(n)
-    return levels, counts
+        yield frontier, n
 
 
 def oriented(edges: DataFrame, direction: str = "out",
@@ -312,8 +313,8 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
             .distinct()
 
     if max_steps > 2:
-        levels, counts = _counted_levels(
-            seed, lambda f, levels: advance(f, len(levels)), max_steps - 1)
+        levels, counts = zip(*_counted_levels(
+            seed, lambda f, levels: advance(f, len(levels)), max_steps - 1))
         if counts[-1]:
             hop(_broadcast_small(levels[-1], counts[-1]), max_steps)
     else:
@@ -430,25 +431,11 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
             .withColumn("end_vid", F.col("start_vid"))
             .withColumn("hops", F.lit(0))
             .withColumn("path", F.array().cast(path_type)))
-    levels, _ = _counted_levels(zero, step, max_hops, broadcast_rows=0)
+    levels, _ = zip(*_counted_levels(zero, step, max_hops, broadcast_rows=0))
     kept = levels[min_hops:]
     # a frontier that dies before min_hops keeps the schema in no rows
     return reduce(DataFrame.unionByName, kept) if kept \
         else levels[-1].limit(0)
-
-
-def append_vertices(df: DataFrame, tag: DataFrame, on_col: str = DST,
-                    prefix: str = "v_") -> DataFrame:
-    """AppendVertices (kAppendVertices): fetch dst-vertex props as columns.
-
-    Reference fetches tag props for the pattern's trailing node and appends a
-    vertex value (AppendVerticesExecutor.cpp:18-317). Here: a left join
-    against the tag table with prefixed prop columns; left join preserves
-    dangling edges (reference keeps rows when the filter allows).
-    """
-    props = [c for c in tag.columns if c != VID]
-    renamed = tag.select(F.col(VID), *[F.col(c).alias(f"{prefix}{c}") for c in props])
-    return df.join(renamed, df[on_col] == renamed[VID], "left").drop(VID)
 
 
 def get_edges(keys: DataFrame, edges: DataFrame) -> DataFrame:

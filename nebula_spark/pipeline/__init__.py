@@ -9,7 +9,7 @@ row-at-a-time Python.
 """
 
 from nebula_spark.pipeline.text import (  # noqa: F401
-    token_count, quality_score, language_id, fingerprint, text_stats,
+    token_count, quality_score, language_id, fingerprint,
 )
 from nebula_spark.pipeline.dedup import (  # noqa: F401
     exact_dedup, ngram_jaccard_pairs, minhash_signatures, minhash_lsh_pairs,

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from nebula_spark.operators.traverse import (checkpoint_count,
                                              checkpoint_observe,
                                              observed_width, sized_superstep)
+from nebula_spark.session import scoped_conf
 
 # MinHash universal-hash parameters: h_i(x) = (a_i * x + b_i) mod P.
 # P < 2^31 keeps a_i * x + b_i within int64 after x is reduced mod P.
@@ -209,6 +210,50 @@ def minhash_signatures(df: DataFrame, key_col: str = "doc_id",
             .select(F.col(key_col).alias("id"), sig.alias("sig")))
 
 
+def _lsh_bands(df: DataFrame, key_col: str, text_col: str, k: int,
+               num_hashes: int, bands: int, rows_per_task: int,
+               keep_sig: bool) -> DataFrame:
+    """The banded MinHash rows both LSH operators shuffle: ``id``, the
+    whole ``sig`` when ``keep_sig``, and one ``b`` = (band, bsig) struct
+    per band, repartitioned on ``b`` at :func:`observed_width` for
+    ``rows_per_task``."""
+    if num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
+    r = num_hashes // bands
+    # eager localCheckpoint, not persist(): a persist() here could never
+    # be unpersisted (the returned frames are lazy) — checkpoint blocks are
+    # freed by the ContextCleaner once the result goes out of scope, so a
+    # long-lived driver loop doesn't accumulate cache entries. And not
+    # lazy (measured twice, r11): the pairs self-join reads the signatures
+    # twice, and connected_components' symmetrization unions two copies
+    # of the star edges; A/B at sf0.1 (3+5 reps, both orders) put a
+    # skipped checkpoint at best neutral (eager med 2.96/3.07 s vs lazy
+    # 3.43/3.19 s for the full cluster pipeline; OPTIMIZATION_r11.md item
+    # 14: a map-only subtree with concurrent readers wants a real
+    # barrier). Whole-stage codegen off for this one job: the 16-hash md5
+    # tree compiles into one huge generated method (~10 s of fresh-JVM
+    # compile at 16 hashes); the per-expression interpreted path computes
+    # the same md5s at nearly the same throughput because hashing, not
+    # virtual-call overhead, is the bottleneck.
+    sigs = minhash_signatures(df, key_col, text_col, k, num_hashes)
+    with scoped_conf(df.sparkSession,
+                     **{"spark.sql.codegen.wholeStage": "false"}):
+        sigs, n_docs = checkpoint_count(sigs)
+    banded = sigs.select(
+        "id", *(["sig"] if keep_sig else []),
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("band"),
+                     F.array_join(F.slice("sig", i * r + 1, r), "_")
+                     .alias("bsig"))
+            for i in range(bands)])).alias("b"))
+    # size-derived width (r12, guide §2.2): the doc count rides the
+    # signature checkpoint free, so tiny corpora stop paying
+    # session-width stages
+    return banded.repartition(observed_width(df.sparkSession,
+                                             n_docs * bands, rows_per_task),
+                              F.col("b.band"), F.col("b.bsig"))
+
+
 def minhash_lsh_pairs(df: DataFrame, key_col: str = "doc_id",
                       text_col: str = "text", k: int = 3,
                       num_hashes: int = 16, bands: int = 4) -> DataFrame:
@@ -219,41 +264,11 @@ def minhash_lsh_pairs(df: DataFrame, key_col: str = "doc_id",
     then self-join per bucket. Estimated similarity = fraction of matching
     signature positions, computed from the signatures (no second text pass).
     """
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
-    # eager localCheckpoint, not persist(): the banded self-join below reads
-    # the signatures twice, but a persist() here could never be unpersisted
-    # (the returned frame is lazy) — checkpoint blocks are freed by the
-    # ContextCleaner once the result goes out of scope, so a long-lived
-    # driver loop doesn't accumulate cache entries. Whole-stage codegen off
-    # for this one job: the 16-hash md5 tree compiles into one huge
-    # generated method (~10 s of fresh-JVM compile at 16 hashes); the
-    # per-expression interpreted path computes the same md5s at nearly the
-    # same throughput because hashing, not virtual-call overhead, is the
-    # bottleneck.
-    from nebula_spark.operators.traverse import checkpoint_count
-    from nebula_spark.session import scoped_conf
-    sigs = minhash_signatures(df, key_col, text_col, k, num_hashes)
-    with scoped_conf(df.sparkSession,
-                     **{"spark.sql.codegen.wholeStage": "false"}):
-        sigs, n_docs = checkpoint_count(sigs)
-    banded = sigs.select(
-        "id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.array_join(F.slice("sig", i * r + 1, r), "_")
-                     .alias("bsig"))
-            for i in range(bands)])).alias("b"))
-    # size-derived band-join width (r12, guide §2.2): the doc count rides
-    # the signature checkpoint free; the explicit repartition is what both
-    # join sides reuse, so tiny corpora stop paying session-width stages.
-    # JOIN rows-per-task, not window rows-per-task: pair formation is
+    # the explicit repartition is what both join sides reuse. JOIN
+    # rows-per-task, not window rows-per-task: pair formation is
     # compute-dense (see the constants' comment)
-    banded = banded.repartition(observed_width(df.sparkSession,
-                                               n_docs * bands,
-                                               _LSH_JOIN_ROWS_PER_TASK),
-                                F.col("b.band"), F.col("b.bsig"))
+    banded = _lsh_bands(df, key_col, text_col, k, num_hashes, bands,
+                        _LSH_JOIN_ROWS_PER_TASK, keep_sig=True)
     a, b = banded.alias("a"), banded.alias("b")
     # estimated similarity computed BEFORE the pair dedup (r12, guide
     # §2.3 shuffle fewer bytes): duplicate (id_a, id_b) rows from
@@ -292,38 +307,9 @@ def lsh_star_edges(df: DataFrame, key_col: str = "doc_id",
     """
     from pyspark.sql.window import Window
 
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
-    # Signature checkpoint stays EAGER (measured twice, r11): skipping it
-    # looks attractive — the signatures feed one banded explode under the
-    # window Exchange — but connected_components' symmetrization unions
-    # two copies of this frame, and A/B at sf0.1 (3+5 reps, both orders)
-    # put the skip at best neutral (eager med 2.96/3.07 s vs lazy
-    # 3.43/3.19 s for the full cluster pipeline). Same family as the
-    # lazy-checkpoint negative result in OPTIMIZATION_r11.md item 14:
-    # a map-only subtree with concurrent readers wants a real barrier.
-    from nebula_spark.operators.traverse import checkpoint_count
-    from nebula_spark.session import scoped_conf
-    sigs = minhash_signatures(df, key_col, text_col, k, num_hashes)
-    with scoped_conf(df.sparkSession,
-                     **{"spark.sql.codegen.wholeStage": "false"}):
-        sigs, n_docs = checkpoint_count(sigs)
-    banded = sigs.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.array_join(F.slice("sig", i * r + 1, r), "_")
-                     .alias("bsig"))
-            for i in range(bands)])).alias("b"))
-    # size-derived window width (r12, guide §2.2): the bucket-min window
-    # reuses the explicit hash(band, bsig, p) repartition — one Exchange,
-    # sized to the corpus instead of the session default (see
-    # observed_width; the count rides the signature checkpoint job free)
-    banded = banded.repartition(observed_width(df.sparkSession,
-                                               n_docs * bands,
-                                               _LSH_BAND_ROWS_PER_TASK),
-                                F.col("b.band"), F.col("b.bsig"))
+    # the bucket-min window reuses the banding repartition: one Exchange
+    banded = _lsh_bands(df, key_col, text_col, k, num_hashes, bands,
+                        _LSH_BAND_ROWS_PER_TASK, keep_sig=False)
     w = Window.partitionBy("b.band", "b.bsig")
     out = (banded.withColumn("_root", F.min("id").over(w))
            .filter(F.col("id") != F.col("_root"))
@@ -400,8 +386,6 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     Pairs with a NULL endpoint carry no connectivity and are dropped.
     Returns ``(node, cluster_id)``, one row per distinct node in *pairs*.
     """
-    from nebula_spark.session import scoped_conf
-
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # without this filter least/greatest would turn (x, NULL) into (x, x)
     e = e.filter(F.col("a").isNotNull() & F.col("b").isNotNull())

@@ -8,7 +8,7 @@ size — every function is embarrassingly parallel per row, no shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # whitespace tokenizer + a BPE-ish fallback that also splits punctuation
@@ -89,15 +89,3 @@ def fingerprint(text: Column, chunk: int = 64) -> Column:
     norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
     return F.conv(F.substring(F.md5(norm), 1, 15), 16, 10).cast("long")
 
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass per-document stat block: the standard pre-pipeline profile."""
-    t = F.col(text_col)
-    return df.withColumns({
-        "n_chars_calc": F.length(t),
-        "n_tokens": token_count(t),
-        "n_tokens_bpe": token_count(t, "regex"),
-        "quality": quality_score(t),
-        "lang_pred": language_id(t),
-        "fp64": fingerprint(t),
-    })

@@ -322,9 +322,6 @@ def _expr_text(e) -> str | None:
     if op == "attr":
         a = _expr_text(e[1])
         return None if a is None else f"{a}.{e[2]}"
-    if op == "subscript":
-        a, b = _expr_text(e[1]), _expr_text(e[2])
-        return None if a is None or b is None else f"{a}[{b}]"
     if op == "cast":                     # (INT)3.14 → "(INT)3.14"
         a = _expr_text(e[2])
         return None if a is None else f"({e[1].upper()}){a}"
@@ -806,11 +803,14 @@ class ExprCompiler:
 
                 def _intish(x):
                     if isinstance(x, tuple) and x[0] == "lit":
-                        return isinstance(x[1], int)                             and not isinstance(x[1], bool)
+                        return isinstance(x[1], int) \
+                            and not isinstance(x[1], bool)
                     return False
                 da, db = self._dtype(a), self._dtype(b)
-                ia = isinstance(da, IntegralType) or                     (da is None and _intish(e[1]))
-                ib = isinstance(db, IntegralType) or                     (db is None and _intish(e[2]))
+                ia = isinstance(da, IntegralType) or \
+                    (da is None and _intish(e[1]))
+                ib = isinstance(db, IntegralType) or \
+                    (db is None and _intish(e[2]))
                 if ia and ib:
                     return F.call_function("div", a, b)
             if op in ("==", "!=", "<", "<=", ">", ">="):
@@ -849,11 +849,9 @@ class ExprCompiler:
                 # mismatched kinds (MatchByVariable.feature "bugfix":
                 # `id(v) == vid` where vid is LIST[] matches 0 rows);
                 # Spark refuses the cast at analysis, so resolve here
-                from pyspark.sql.types import (ArrayType, MapType,
-                                               StructType)
-
-                from pyspark.sql.types import (BooleanType, NumericType,
-                                               StringType)
+                from pyspark.sql.types import (ArrayType, BooleanType,
+                                               MapType, NumericType,
+                                               StringType, StructType)
 
                 def _kind(t):
                     if t is None:

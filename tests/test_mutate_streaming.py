@@ -8,8 +8,8 @@ import time
 from pyspark.sql import functions as F
 
 from nebula_spark.operators.mutate import (
-    EDGE_KEY, VERTEX_KEY, commit_table, delete_rows, delete_vertex_cascade,
-    insert_rows, ttl_vacuum, update_rows,
+    EDGE_KEY, VERTEX_KEY, commit_table, delete_rows, insert_rows, ttl_vacuum,
+    update_rows,
 )
 
 
@@ -46,17 +46,6 @@ def test_delete_edge_by_composite_key(spark):
     keys = spark.createDataFrame([("a", "b", 1)], "_src string, _dst string, _rank long")
     out = delete_rows(e, keys, EDGE_KEY).collect()
     assert {(r["_src"], r["_dst"], r["_rank"]) for r in out} == {("a", "b", 0), ("a", "c", 0)}
-
-
-def test_delete_vertex_cascade(spark):
-    tags = {"p": spark.createDataFrame([("v1", 1), ("v2", 2)], "_vid string, x long")}
-    edges = {"e": spark.createDataFrame(
-        [("v1", "v2", 0), ("v2", "v3", 0), ("v3", "v4", 0)],
-        "_src string, _dst string, _rank long")}
-    vids = spark.createDataFrame([("v2",)], ["_vid"])
-    nt, ne = delete_vertex_cascade(tags, edges, vids)
-    assert [r["_vid"] for r in nt["p"].collect()] == ["v1"]
-    assert {(r["_src"], r["_dst"]) for r in ne["e"].collect()} == {("v3", "v4")}
 
 
 def test_ttl_vacuum(spark):

@@ -2,12 +2,15 @@
 
 ``operators/paths.py`` runs every search on one level step per frontier
 kind, with one round driver for the two meet-in-the-middle searches.
-BFS distances, GET SUBGRAPH, MATCH var-len expansion and GO's counted
-range share one counted level loop (``traverse._counted_levels``).
+Every frontier search except the weighted one — BFS distances and
+minimal paths, both meet-in-the-middle sides, GET SUBGRAPH, MATCH var-len
+expansion and GO's counted range — pulls one counted level loop
+(``traverse._counted_levels``).
 These tests pin each public search at a shallow depth (2) and a deeper
 one (5), and the loop's searches at their edge depths too, in every
 direction, against a Python BFS over a graph made of small components
 that carry the edge cases: a 2-cycle, a self-loop, parallel edges, a
+root that closes at two levels (a self-loop beside parallel edges), a
 diamond and a 6-edge chain. Every frontier dies before 5 levels. The
 hypothesis versions of the path parities run in the full lane
 (``test_property.py``).
@@ -15,6 +18,7 @@ hypothesis versions of the path parities run in the full lane
 
 from __future__ import annotations
 
+import sys
 from collections import Counter
 
 import pytest
@@ -28,11 +32,14 @@ EDGES = [
     ("a0", "a1", 0), ("a1", "a0", 0),                       # 2-cycle
     ("b0", "b0", 0), ("b0", "b1", 0),                       # self-loop
     ("c0", "c1", 0), ("c0", "c1", 1), ("c1", "c2", 0),      # parallel
+    # BOTH closes f0 at level 1 (the loop) and again at level 2 (the
+    # parallel pair); only the level-1 closures may come back
+    ("f0", "f0", 0), ("f0", "f1", 0), ("f0", "f1", 1),
     ("d0", "d1", 0), ("d0", "d2", 0), ("d1", "d3", 0),      # diamond
     ("d2", "d3", 0),
 ] + [(f"e{i}", f"e{i + 1}", 0) for i in range(6)]          # 6-chain
-ROOTS = ["a0", "b0", "c0", "d0", "d3", "e2"]
-TARGETS = ["a0", "b0", "c1", "c2", "d0", "d3", "e0", "e5"]
+ROOTS = ["a0", "b0", "c0", "d0", "d3", "e2", "f0"]
+TARGETS = ["a0", "b0", "c1", "c2", "d0", "d3", "e0", "e5", "f0"]
 
 
 # JVM-local frames: a Python-list frame would run Python workers on
@@ -296,23 +303,20 @@ def test_zero_step_shortest_path_match_returns_no_rows(spark, nba):
 def test_both_closures_stop_on_empty_frontier(spark, monkeypatch):
     # two parallel edges v0->v1: level 1 reaches v1 twice, level 2 closes
     # both walks back at the pre-visited root and leaves no frontier. The
-    # closures ride the level's checkpoint but must not count as frontier
-    # rows, or level 3 would checkpoint an empty frontier.
+    # closures must not count as frontier rows, or level 3 would
+    # checkpoint an empty frontier. The counts are read where the shared
+    # level loop looks checkpoint_count up.
+    # the package re-exports traverse() under the module's name
+    T = sys.modules["nebula_spark.operators.traverse"]
     counts: list[int] = []
-    real_count, real_observe = P.checkpoint_count, P.checkpoint_observe
+    real_count = T.checkpoint_count
 
     def count(df):
         out, n = real_count(df)
         counts.append(n)
         return out, n
 
-    def observe(df, **metrics):
-        out, m = real_observe(df, **metrics)
-        counts.append(int(m["n"]))
-        return out, m
-
-    monkeypatch.setattr(P, "checkpoint_count", count)
-    monkeypatch.setattr(P, "checkpoint_observe", observe)
+    monkeypatch.setattr(T, "checkpoint_count", count)
     edges = _edges(spark, [("v0", "v1", 0), ("v0", "v1", 1)])
     out = P.bfs_min_paths(edges, _frame(spark, ["v0"]), 5,
                           direction="both")

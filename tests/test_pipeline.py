@@ -7,8 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from nebula_spark.pipeline import (
-    brute_force_topk, exact_dedup, lsh_bucketed_topk, minhash_lsh_pairs,
-    minhash_signatures, ngram_jaccard_pairs, simhash64, text_stats,
+    brute_force_topk, exact_dedup, fingerprint, language_id,
+    lsh_bucketed_topk, minhash_lsh_pairs, minhash_signatures,
+    ngram_jaccard_pairs, quality_score, simhash64, token_count,
 )
 from nebula_spark.pipeline.dedup import shingles
 from tests.conftest import SF_DIR, union_find_labels
@@ -25,8 +26,11 @@ def embs(spark):
 
 
 def test_text_stats(docs):
-    out = text_stats(docs.limit(20))
-    rows = out.collect()
+    t = F.col("text")
+    rows = docs.limit(20).select(
+        token_count(t).alias("n_tokens"), quality_score(t).alias("quality"),
+        language_id(t).alias("lang_pred"), fingerprint(t).alias("fp64"),
+    ).collect()
     assert all(r.n_tokens > 0 and 0 <= r.quality <= 1 for r in rows)
     assert all(r.lang_pred in ("en", "de", "fr", "es", "und") for r in rows)
     assert all(r.fp64 is not None for r in rows)

@@ -226,3 +226,23 @@ def test_lazy_checkpoints_carry_a_measurement():
                        for ln in lines[top:i + 1]):
                 offenders.append(f"{path.relative_to(pkg)}:{i + 1}")
     assert offenders == []
+
+
+def test_path_searches_count_only_on_the_level_loop():
+    """The frontier searches of ``operators/paths.py`` checkpoint and count
+    their levels only through the shared loop (``traverse._counted_levels``):
+    the direct ``checkpoint_count``/``checkpoint_observe`` uses left are
+    ``bfs_shortest_paths``' edge checkpoint, ``_meet_rounds``' resolved
+    probe and ``weighted_shortest_paths``' own loop."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    from nebula_spark.operators import paths
+    tree = ast.parse(Path(paths.__file__).read_text())
+    uses = Counter(
+        fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn) if isinstance(node, ast.Name)
+        and node.id in ("checkpoint_count", "checkpoint_observe"))
+    assert uses == {"bfs_shortest_paths": 1, "_meet_rounds": 1,
+                    "weighted_shortest_paths": 2}, uses

@@ -6,8 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nebula_spark.operators import (
-    append_vertices, bfs_shortest_paths, get_edges, get_neighbors, go,
-    k_hop_subgraph, traverse,
+    bfs_shortest_paths, get_edges, get_neighbors, go, k_hop_subgraph,
+    traverse,
 )
 from nebula_spark.operators.paths import all_paths
 
@@ -81,15 +81,6 @@ def test_traverse_parallel_edges_distinct(nba):
     t = traverse(nba["serve"], start, 1, 1)
     # two parallel p1->t1 edges (rank 0 and 1) are distinct paths
     assert t.count() == 2
-
-
-def test_append_vertices(nba):
-    spark = nba["like"].sparkSession
-    start = spark.createDataFrame([("p1",)], ["_vid"])
-    hop = get_neighbors(start, nba["like"])
-    av = append_vertices(hop, nba["player"])
-    got = {(r["_dst"], r.v_name) for r in av.collect()}
-    assert got == {("p2", "Tony"), ("p3", "Manu")}
 
 
 def test_get_edges(nba):
