@@ -17,7 +17,7 @@ from nebula_spark.operators.setops import (  # noqa: F401
     union_all, union_distinct, intersect, minus,
 )
 from nebula_spark.operators.traverse import (  # noqa: F401
-    go, traverse, get_edges, get_neighbors,
+    go, get_edges, get_neighbors,
 )
 from nebula_spark.operators.subgraph import k_hop_subgraph  # noqa: F401
 from nebula_spark.operators.paths import (  # noqa: F401

@@ -6,15 +6,12 @@ only — ``src/graph/executor/algo/``); this module is the north-star
 every superstep is a join + aggregate the optimizer plans, and the state
 is checkpointed often enough that lineage stays flat.
 
-Loop shapes:
-- ``k_core`` is counted: each peel's edge subset is checkpointed with its
-  row count (:func:`~nebula_spark.operators.traverse.checkpoint_count`),
-  which sizes the next peel and stops the loop at the fixpoint.
-- ``pagerank`` and ``label_propagation`` run a fixed number of supersteps
-  with nothing to stop early on, so supersteps chain into one plan with
-  an eager ``localCheckpoint`` every few of them. Their loop-invariant
-  frames are lazily checkpointed; each such site carries the A/B that
-  keeps it.
+Loop shapes: each loop here is the vertex-state superstep loop
+(:func:`~nebula_spark.operators.traverse._vertex_rounds`). ``k_core`` runs
+it counted, until no vertex is left to peel. ``pagerank`` and
+``label_propagation`` run a fixed number of supersteps, chained lazily
+between eager cuts; their loop-invariant frames are lazily checkpointed,
+and each such site carries the A/B that keeps it.
 
 Scale notes (100 TB):
 - rank state is (vid, rank) — linear in |V|; the contribution shuffle is
@@ -28,20 +25,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, SRC
-from nebula_spark.operators.traverse import checkpoint_count, sized_superstep
-
-
-# Eager lineage cut every this many PageRank supersteps; the ones between
-# chain lazily into one action-time job.
-PAGERANK_CKPT_EVERY = 8
-# The same cadence for label propagation supersteps.
-LPA_CKPT_EVERY = 4
+from nebula_spark.operators.traverse import (_vertex_rounds, checkpoint_count,
+                                             sized_superstep)
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -67,11 +56,9 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     matching the common simplified form. Returns (vid, rank) after
     ``iterations`` synchronous supersteps.
 
-    Job shape: supersteps chain lazily — one Catalyst plan holds up to
-    :data:`PAGERANK_CKPT_EVERY` iterations, and every
-    :data:`PAGERANK_CKPT_EVERY` iterations the rank frame is eagerly
-    localCheckpoint-ed so deep runs keep a flat lineage. Each superstep
-    is one contribution shuffle keyed on dst plus one vid-keyed join. The
+    Job shape: supersteps chain lazily, cut every ``SUPERSTEP_CKPT_EVERY``
+    (``traverse._vertex_rounds``). Each superstep is one contribution
+    shuffle keyed on dst plus one vid-keyed join. The
     lazy checkpoints of the invariants below still run jobs when they are
     called (AQE runs their inputs' shuffle stages), so the 3-iteration
     sf0.1 lane (``q_pagerank``) runs 4 jobs during the call and 17 in all.
@@ -96,8 +83,7 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     ew = (e.join(deg, SRC).select(SRC, DST, "outdeg")
           .localCheckpoint(eager=False))
 
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for i in range(1, iterations + 1):
+    def superstep(ranks: DataFrame, _n) -> DataFrame:
         # contribution sum is decimal-stabilized (the repo's float
         # discipline): double sums are shuffle-order-dependent, and a
         # rank landing on a rounding boundary flips the comparison
@@ -106,16 +92,16 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                            (F.col("rank") / F.col("outdeg"))
                            .cast("decimal(30,15)").alias("c")))
         sums = contrib.groupBy("vid").agg(F.sum("c").alias("s"))
-        ranks = (nodes.join(sums, "vid", "left")
-                 .select("vid",
-                         (F.lit(1.0 - damping)
-                          + F.lit(damping)
-                          * F.coalesce(F.col("s").cast("double"),
-                                       F.lit(0.0)))
-                         .alias("rank")))
-        if i % PAGERANK_CKPT_EVERY == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+        return (nodes.join(sums, "vid", "left")
+                .select("vid",
+                        (F.lit(1.0 - damping)
+                         + F.lit(damping)
+                         * F.coalesce(F.col("s").cast("double"),
+                                      F.lit(0.0)))
+                        .alias("rank")))
+
+    return _vertex_rounds(nodes.withColumn("rank", F.lit(1.0)), superstep,
+                          rounds=iterations)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -187,31 +173,30 @@ def k_core(edges: DataFrame, k: int, rounds: int | None = None) -> DataFrame:
     reference). Returns (vid, deg) for the surviving vertices with their
     degree inside the core.
 
-    Scale design: each peel is one degree aggregation (map-side combined)
-    plus two semi-joins of the edge table against the (shrinking) keep
-    set — broadcastable as soon as the survivor set is small. State is
-    the edge subset only, checkpointed per peel to keep lineage flat; the
-    edge count rides each peel's checkpoint job (:func:`checkpoint_count`),
-    sizes the next peel's shuffles and stops the loop at the fixpoint,
-    O(peel-depth) supersteps. ``rounds`` caps the peels — the oracle's
-    SQL-unrollable form; stopping before the cap at the fixpoint is exact,
-    since a peel past it changes nothing.
+    Scale design: the state is ``(u, deg)`` on the counted vertex loop
+    (``traverse._vertex_rounds``), active while ``deg < k``. A peel
+    semi-joins the checkpointed symmetric edges against the survivors on
+    both ends and re-aggregates ``deg``; the symmetric edge count sizes
+    the whole loop once. Trade-off: each peel scans all of the symmetric
+    edges, not the shrinking subset. ``rounds`` caps the peels — the
+    oracle's SQL-unrollable form; stopping before the cap at the fixpoint
+    is exact, since a peel past it changes nothing.
     """
-    e, n_e = checkpoint_count(_symmetric(_undirected(edges)))
-    for _ in itertools.count() if rounds is None else range(rounds):
-        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("u")
-        peeled = (e.join(keep, "u", "left_semi")
-                  .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-                  .select("u", "v"))
-        with sized_superstep(e.sparkSession, n_e):
-            e, n2 = checkpoint_count(peeled)
-        if n2 == n_e or n2 == 0:
-            break
-        n_e = n2
-    return (e.groupBy(F.col("u").alias("vid"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k))
+    sym, n_e = checkpoint_count(_symmetric(_undirected(edges)))
+    deg = F.col("deg")
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+
+    def peel(state: DataFrame, _n) -> DataFrame:
+        keep = state.filter(deg >= k).select("u")
+        return degrees(sym.join(keep, "u", "left_semi")
+                       .join(keep.select(F.col("u").alias("v")), "v",
+                             "left_semi"))
+
+    with sized_superstep(sym.sparkSession, n_e):
+        state = _vertex_rounds(degrees(sym), peel, deg < k, rounds)
+    return state.filter(deg >= k).select(F.col("u").alias("vid"), deg)
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
@@ -230,8 +215,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     count per (vid, neighbor-label) + one min_by-style reduction. The
     reduction uses max_by over a (count, -label) ordering struct — a
     single map-side-combinable aggregate, no window. Supersteps chain
-    lazily, with an eager localCheckpoint every :data:`LPA_CKPT_EVERY`
-    to keep lineage flat.
+    lazily as in :func:`pagerank`.
     """
     # the loop-invariant symmetric edge list is lazily checkpointed so
     # each superstep reads the blocks its first touch wrote instead of
@@ -239,9 +223,8 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     # sf0.1 lane, 6 runs each: lazy 4.9–5.9 s, checkpoint_count 5.2–8.3 s,
     # no checkpoint 6.4–7.5 s.
     sym = _symmetric(_undirected(edges)).localCheckpoint(eager=False)
-    labels = (sym.select(F.col("u").alias("vid")).distinct()
-              .withColumn("label", F.col("vid")))
-    for i in range(1, iterations + 1):
+
+    def superstep(labels: DataFrame, _n) -> DataFrame:
         nbr = (sym.join(labels, sym["v"] == labels["vid"])
                .select(F.col("u").alias("vid"), "label"))
         counts = (nbr.groupBy("vid", "label")
@@ -251,9 +234,10 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
         # among the rows at that count); works for any orderable
         # label type, no window
         w = counts.groupBy("vid").agg(F.max("n").alias("n_max"))
-        labels = (counts.join(w, "vid")
-                  .filter(F.col("n") == F.col("n_max"))
-                  .groupBy("vid").agg(F.min("label").alias("label")))
-        if i % LPA_CKPT_EVERY == 0:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+        return (counts.join(w, "vid")
+                .filter(F.col("n") == F.col("n_max"))
+                .groupBy("vid").agg(F.min("label").alias("label")))
+
+    labels = (sym.select(F.col("u").alias("vid")).distinct()
+              .withColumn("label", F.col("vid")))
+    return _vertex_rounds(labels, superstep, rounds=iterations)

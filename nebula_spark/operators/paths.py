@@ -25,9 +25,10 @@ a plain union of those checkpointed pieces. :func:`bfs_shortest_paths`
 and :func:`bfs_min_paths` pull the loop to its end; the two
 meet-in-the-middle searches pull one loop per side, in turn, from one
 round driver (:func:`_meet_rounds`), and keep only their meet and final
-reduction. :func:`weighted_shortest_paths` keeps its own loop: its state
-is the whole tentative-distance set, not a level, and what it counts is
-the rows whose distance improved. There is no lazy mode for short
+reduction. :func:`weighted_shortest_paths` runs on the vertex-state
+superstep loop (``traverse._vertex_rounds``) instead: its state is the
+whole tentative-distance set, not a level, and what it counts is the rows
+whose distance improved. There is no lazy mode for short
 searches: under AQE a lazy ``localCheckpoint`` runs its input's shuffle
 stages when it is called anyway, so a "lazy" level paid its jobs during
 plan build and got no count back (a traced 3-hop search ran 15 jobs
@@ -52,8 +53,7 @@ from pyspark.sql.window import Window
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
     BROADCAST_FRONTIER_ROWS, _broadcast_small, _counted_levels, _edge_id,
-    _edge_id_reversed, checkpoint_count, checkpoint_observe, oriented,
-    traverse,
+    _edge_id_reversed, _vertex_rounds, checkpoint_count, oriented, traverse,
 )
 
 _DIR_FLIP = {"out": "in", "in": "out", "both": "both"}
@@ -613,7 +613,6 @@ def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
                             weight_col: str = "weight",
                             targets: DataFrame | None = None,
                             direction: str = "out",
-                            max_iter: int = 50,
                             edge_filter: Column | None = None) -> DataFrame:
     """Weighted single-source (multi-root) shortest distances:
     ``(src, dst, dist)`` with dist = min total edge weight.
@@ -624,21 +623,22 @@ def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
     Bellman-Ford in BSP form with frontier restriction, the standard
     bucketless delta-stepping degeneration that suits a shuffle engine.
 
-    Per superstep: relax only vertices whose tentative distance improved
-    last round (the frontier) — one join frontier⋈edges plus one
-    min-aggregate keyed on (root, vid), both map-side combinable; eager
-    localCheckpoint keeps lineage flat. Terminates when no tentative
-    distance improves (the improved-set size rides the frontier's own
-    checkpoint job via :func:`checkpoint_count` — no dedicated probe),
-    worst-case after
-    |V|−1 supersteps on non-negative weights. Negative weights are
-    rejected: with them Bellman-Ford needs exactly |V|−1 rounds plus a
-    negative-cycle check, which a caller doing that analysis should run
-    explicitly.
+    The state, ``(root, vid, dist, _imp)``, is every tentative distance
+    on the counted vertex loop (``traverse._vertex_rounds``), active
+    where ``_imp``: the distance improved last round. A round relaxes
+    only those rows — one join against the edges plus one min-aggregate
+    keyed on (root, vid), both map-side combinable. The loop ends once
+    no distance improves, after at most |V|−1 rounds, so distances are
+    exact. Edges with a NULL weight or endpoint are dropped, as
+    ``pagerank`` drops NULL endpoints (a NULL source never joins the
+    frontier). Negative weights are rejected: with them Bellman-Ford
+    needs exactly |V|−1 rounds plus a negative-cycle check, which a
+    caller doing that analysis should run explicitly.
     """
     e = oriented(edges, direction)
     if edge_filter is not None:
         e = e.filter(edge_filter)
+    e = e.filter(F.col(weight_col).isNotNull() & F.col(DST).isNotNull())
     neg = e.filter(F.col(weight_col) < 0).limit(1).count()
     if neg:
         raise ValueError("weighted_shortest_paths requires non-negative "
@@ -646,51 +646,40 @@ def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
     e = (e.groupBy(SRC, DST)                 # parallel edges: keep min
          .agg(F.min(weight_col).alias("_w")).persist())
 
-    tentative, n = checkpoint_count(
-        sources.select(F.col(VID).alias("root")).distinct()
-        .withColumn(VID, F.col("root"))
-        .withColumn("dist", F.lit(0.0)))
-    frontier = tentative
+    def relax(state: DataFrame, n: int) -> DataFrame:
+        f = _broadcast_small(state.filter(F.col("_imp")), n)
+        cand = (f.join(e, f[VID] == e[SRC], "inner")
+                .select("root", F.col(DST).alias(VID),
+                        (F.col("dist") + F.col("_w")).alias("dist"),
+                        F.lit(False).alias("_old_row")))
+        # a conditional min beside the overall min: `_prev` is the prior
+        # tentative distance (NULL when newly reached), so `_imp` needs
+        # no (root, vid)-keyed join against the previous state
+        merged = (state.select("root", VID, "dist",
+                               F.lit(True).alias("_old_row"))
+                  .unionByName(cand))
+        agg = (merged.groupBy("root", VID)
+               .agg(F.min("dist").alias("dist"),
+                    F.min(F.when(F.col("_old_row"), F.col("dist")))
+                    .alias("_prev")))
+        return agg.select("root", VID, "dist",
+                          (F.col("_prev").isNull()
+                           | (F.col("dist") < F.col("_prev"))).alias("_imp"))
+
+    seed = (sources.select(F.col(VID).alias("root")).distinct()
+            .withColumn(VID, F.col("root"))
+            .withColumn("dist", F.lit(0.0))
+            .withColumn("_imp", F.lit(True)))
     try:
-        for _ in range(max_iter):
-            if n == 0:
-                break
-            f = _broadcast_small(frontier, n)
-            cand = (f.join(e, f[VID] == e[SRC], "inner")
-                    .select("root", F.col(DST).alias(VID),
-                            (F.col("dist") + F.col("_w")).alias("dist"),
-                            F.lit(False).alias("_old_row")))
-            # ONE job per superstep (was two: an eager checkpoint of the
-            # new tentative set plus a join-based improved-frontier
-            # count): tag the union branches and take a conditional min
-            # alongside the overall min — `_prev` is the vertex's prior
-            # tentative distance (NULL when newly reached), so the
-            # improved set is a filter over the SAME aggregate output,
-            # no (root, vid)-keyed join against the previous state, and
-            # the improved-row count rides the one checkpoint job as an
-            # Observation. Both aggregates are map-side combinable.
-            merged = (tentative.withColumn("_old_row", F.lit(True))
-                      .unionByName(cand))
-            agg = (merged.groupBy("root", VID)
-                   .agg(F.min("dist").alias("dist"),
-                        F.min(F.when(F.col("_old_row"), F.col("dist")))
-                        .alias("_prev")))
-            improved = (F.col("_prev").isNull()
-                        | (F.col("dist") < F.col("_prev")))
-            new, m = checkpoint_observe(
-                agg.withColumn("_imp", improved),
-                n_imp=F.sum(F.when(improved, 1).otherwise(0)))
-            n = int(m["n_imp"])
-            frontier = new.filter(F.col("_imp")).select("root", VID, "dist")
-            tentative = new.select("root", VID, "dist")
-        out = tentative.select(F.col("root").alias(SRC),
-                               F.col(VID).alias(DST), "dist")
-        if targets is not None:
-            out = out.join(F.broadcast(targets.select(F.col(VID).alias(DST))
-                                       .distinct()), DST, "left_semi")
-        return out
+        state = _vertex_rounds(seed, relax, F.col("_imp"))
     finally:
         e.unpersist()
+    out = state.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
+                       "dist")
+    if targets is not None:
+        out = out.join(F.broadcast(targets.select(F.col(VID).alias(DST))
+                                   .distinct()), DST, "left_semi")
+    return out
 
 
 def all_paths(edges: DataFrame, sources: DataFrame, targets: DataFrame,

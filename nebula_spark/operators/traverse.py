@@ -15,9 +15,10 @@ Reference implementations:
 Spark-first translation: a hop is a join of the frontier against the edge
 table. Every counted frontier search (BFS distances, GET SUBGRAPH, MATCH
 var-len, GO's counted range) runs on one level loop,
-:func:`_counted_levels`, and supplies only its level step. The
-reference's storage-side pushdowns (edge filter, per-vertex limit,
-dedup — ``storage.thrift:140-158``) become: filter *before* the join
+:func:`_counted_levels`, and every vertex-state algorithm on one
+superstep loop, :func:`_vertex_rounds`. The reference's storage-side
+pushdowns (edge filter, per-vertex limit, dedup —
+``storage.thrift:140-158``) become: filter *before* the join
 (Catalyst pushes it into the parquet scan), window row_number per src for
 per-vertex limits, ``select(src,dst).distinct()`` for dst-only frontiers.
 Scale posture: the frontier is broadcast when small (seed sets almost always
@@ -152,6 +153,33 @@ def _counted_levels(seed: DataFrame, step, max_levels: int | None,
         levels.append(frontier)
         counts.append(n)
         yield frontier, n
+
+
+# Eager lineage cut every this many rounds of an uncounted vertex loop:
+# at sf0.1 (c→n→r edges, 10 iterations, 4 cores, medians of 3) LPA took
+# 9.0 s cut every 4 rounds vs 50.0 s every 8, PageRank 4.2 s vs 5.0 s.
+SUPERSTEP_CKPT_EVERY = 4
+
+
+def _vertex_rounds(state: DataFrame, step, active: Column | None = None,
+                   rounds: int | None = None) -> DataFrame:
+    """The superstep loop of every vertex-state algorithm (GraphX's Pregel
+    operator): ``state = step(state, n)`` each round. With ``active``, a
+    boolean column, the seed and every round are checkpointed and their
+    active rows ``n`` counted in the same job (:func:`checkpoint_observe`);
+    the loop stops after the first state with none, or at ``rounds``.
+    Without it, exactly ``rounds`` rounds chain lazily (``n`` is
+    ``None``), cut eagerly every :data:`SUPERSTEP_CKPT_EVERY`."""
+    n, done = None, 0
+    while True:
+        if active is not None:
+            state, m = checkpoint_observe(state, n=F.count_if(active))
+            n = int(m["n"])
+        elif done and done % SUPERSTEP_CKPT_EVERY == 0:
+            state = state.localCheckpoint(eager=True)
+        if n == 0 or (rounds is not None and done >= rounds):
+            return state
+        state, done = step(state, n), done + 1
 
 
 def oriented(edges: DataFrame, direction: str = "out",

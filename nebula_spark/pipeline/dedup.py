@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nebula_spark.operators.traverse import (checkpoint_count,
-                                             checkpoint_observe,
+from nebula_spark.operators.traverse import (_vertex_rounds, checkpoint_count,
                                              observed_width, sized_superstep)
 from nebula_spark.session import scoped_conf
 
@@ -375,7 +374,9 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
       hands a hooked root's new label to its members in the same round.
 
     Labels are node ids of the node's own component and only decrease,
-    so the loop ends, and it ends on the component minimum. It stops on
+    so the loop ends, and it ends on the component minimum. It runs on
+    the counted vertex loop
+    (:func:`~nebula_spark.operators.traverse._vertex_rounds`) and stops on
     the round where no label dropped. That count rides the round's
     checkpoint job, is exact for any orderable id type, and needs no
     round cap. A chain of n nodes with shuffled ids takes O(log n)
@@ -421,14 +422,11 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
             # the symmetric list (every node appears as `a` in sym). It
             # stays EAGER (measured, r11 fourth pass): a lazy cut re-ran
             # its aggregate in both readers of round 1 (345 → 599 tasks).
-            # Its pre-round label is the node itself, but a hook row
-            # (node → label) would repeat the node's own row, so the seed
-            # stores prev = label and counts its drops against the node.
-            labels, m = checkpoint_observe(
-                sym.groupBy(F.col("a").alias("node"))
-                   .agg(F.min(F.least("a", "b")).alias("label"))
-                   .withColumn("prev", F.col("label")),
-                dropped=F.count_if(F.col("label") < F.col("node")))
+            # Its pre-round label is the node itself, so `dropped` counts
+            # its drops too.
+            seed = (sym.groupBy(F.col("a").alias("node"))
+                    .agg(F.min(F.least("a", "b")).alias("label"))
+                    .withColumn("prev", F.col("node")))
             # the symmetric edge list is re-hashed ONCE onto the round
             # layout keyed by the message-join key, so every round's
             # sym-side Exchange disappears (the persisted
@@ -441,13 +439,14 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
             # node's pre-round label: `prev` costs no extra join. A node
             # whose label dropped emits its hook row from the same scan
             # (a third union branch measured +8 tasks and +0.3 s on the
-            # perfbench deep graph).
+            # perfbench deep graph); a node that was its own label's root
+            # (prev = node) skips it, as the row would repeat its own.
             dropped = F.col("label") < F.col("prev")
             own_row = F.struct("node", "label", F.col("label").alias("own"))
             hook_row = F.struct(F.col("prev").alias("node"), "label",
                                 F.lit(None).alias("own"))
-            own_and_hook = F.inline(F.when(dropped,
-                                           F.array(own_row, hook_row))
+            hooks = dropped & (F.col("prev") != F.col("node"))
+            own_and_hook = F.inline(F.when(hooks, F.array(own_row, hook_row))
                                     .otherwise(F.array(own_row)))
             msg = [F.col("b").alias("node"), F.col("label"),
                    F.lit(None).alias("own")]
@@ -456,7 +455,8 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
             lut = [F.col("node").alias("_ln"), F.col("label").alias("_ll")]
             jumped = [F.col("node"), F.coalesce("_ll", "label").alias("label"),
                       F.col("prev")]
-            while m["dropped"]:
+
+            def round_(labels: DataFrame, _n) -> DataFrame:
                 msgs = sym_r.join(labels, F.col("a") == F.col("node"))
                 nbr_min = (labels.select(own_and_hook)
                            .union(msgs.select(msg))
@@ -465,11 +465,10 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
                 # of the same component, so the left join resolves every
                 # non-root label one level toward the component min;
                 # roots (label[label] = label) keep their value.
-                nbr_min = (nbr_min.join(nbr_min.select(lut),
-                                        F.col("label") == F.col("_ln"),
-                                        "left")
-                           .select(jumped))
-                labels, m = checkpoint_observe(
-                    nbr_min, dropped=F.count_if(dropped))
+                return (nbr_min.join(nbr_min.select(lut),
+                                     F.col("label") == F.col("_ln"), "left")
+                        .select(jumped))
+
+            labels = _vertex_rounds(seed, round_, dropped)
     sym_r.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))

@@ -32,10 +32,11 @@ from nebula_spark.catalog import (DST, RANK, SRC, VID, GraphSpace,
                                   SpaceCatalog, drop_opened,
                                   read_back_schema, statement_snapshot)
 from nebula_spark.functions.scalar import FUNCTIONS
-from nebula_spark.operators import go, k_hop_subgraph, traverse
+from nebula_spark.operators import go, k_hop_subgraph
 from nebula_spark.operators.paths import (_path_struct_type, all_paths,
                                           bfs_min_paths, bfs_shortest_paths,
                                           bidir_distances, bidir_min_paths)
+from nebula_spark.operators.traverse import oriented, traverse
 from nebula_spark.plans import ngql as A
 from nebula_spark.session import local_frame
 
@@ -2647,7 +2648,6 @@ def _subgraph_where(space: GraphSpace, st: A.SubgraphStmt,
 def _exec_subgraph(space: GraphSpace, st: A.SubgraphStmt,
                    piped: DataFrame | None = None,
                    env: dict[str, DataFrame] | None = None) -> DataFrame:
-    from nebula_spark.operators.traverse import oriented
     parts = []
     if st.out_edges:
         parts.append(oriented(_edge_union(space, st.out_edges), "out"))
@@ -3335,7 +3335,6 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
             # explicit `[e*1]` skips this single-hop fast path: the `*`
             # syntax binds e as a LIST (bugfix/LackFilterGetEdges.feature
             # reads e[0].likeness)
-            from nebula_spark.operators.traverse import oriented
             e = oriented(edges, me.direction, self_loop_once=True)
             eprops = [c for c in e.columns if c not in (SRC, DST, RANK)]
             e = e.select(F.col(SRC).alias(f"{ea}___src"),

@@ -23,15 +23,20 @@ def _shuffled_chain(ids: list) -> list:
 
 @pytest.fixture
 def rounds(monkeypatch):
-    """Counts the seed and round checkpoints of connected_components."""
+    """Counts the seed and round checkpoints of connected_components: the
+    seed and one per round its vertex loop steps."""
     n = [0]
-    observe = dedup.checkpoint_observe
+    vertex_rounds = dedup._vertex_rounds
 
-    def counted(*args, **kwargs):
+    def counted(state, step, *args):
+        def counted_step(*step_args):
+            n[0] += 1
+            return step(*step_args)
+
         n[0] += 1
-        return observe(*args, **kwargs)
+        return vertex_rounds(state, counted_step, *args)
 
-    monkeypatch.setattr(dedup, "checkpoint_observe", counted)
+    monkeypatch.setattr(dedup, "_vertex_rounds", counted)
     return n
 
 

@@ -6,6 +6,7 @@ O(n log n) top-bigram rewrite, and fixed-iteration or depth-capped loops
 (pagerank / k-core / BFS) against their deeper or fixpoint runs.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -53,11 +54,12 @@ def test_repetition_top_bigram_matches_bruteforce(spark):
 
 
 def test_pagerank_ten_iterations_match_recurrence(spark):
-    # ten supersteps cross the eager lineage cut at PAGERANK_CKPT_EVERY;
+    # ten supersteps cross the eager lineage cut at SUPERSTEP_CKPT_EVERY;
     # the cut must not change the recurrence
-    from nebula_spark.operators.algo import PAGERANK_CKPT_EVERY, pagerank
+    from nebula_spark.operators.algo import pagerank
+    from nebula_spark.operators.traverse import SUPERSTEP_CKPT_EVERY
     pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)]
-    assert PAGERANK_CKPT_EVERY < 10
+    assert SUPERSTEP_CKPT_EVERY < 10
     edges = spark.createDataFrame(pairs, "_src long, _dst long")
     outdeg = {s: sum(1 for a, _ in pairs if a == s) for s, _ in pairs}
     rank = {v: 1.0 for p in pairs for v in p}
@@ -68,6 +70,35 @@ def test_pagerank_ten_iterations_match_recurrence(spark):
     got = {r.vid: r.rank for r in pagerank(edges, iterations=10).collect()}
     assert got.keys() == rank.keys()
     assert all(abs(got[v] - rank[v]) < 1e-9 for v in rank), (got, rank)
+
+
+def test_label_propagation_ten_iterations_match_rule(spark):
+    # ten supersteps cross the eager lineage cut twice; each round every
+    # vertex takes its neighbours' most frequent label, the smallest on
+    # ties, over the undirected, deduplicated, loop-free edge set
+    from collections import Counter
+
+    from nebula_spark.operators.algo import label_propagation
+    from nebula_spark.operators.traverse import SUPERSTEP_CKPT_EVERY
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4),
+             (6, 7), (7, 8), (8, 9), (9, 7), (2, 1), (5, 5), (10, 11)]
+    assert 2 * SUPERSTEP_CKPT_EVERY < 10
+    nbrs: dict[int, list[int]] = {}
+    for a, b in {(min(p), max(p)) for p in pairs if p[0] != p[1]}:
+        nbrs.setdefault(a, []).append(b)
+        nbrs.setdefault(b, []).append(a)
+
+    def adopt(labels):
+        n = Counter(labels)
+        return min(n, key=lambda x: (-n[x], x))
+
+    label = {v: v for v in nbrs}
+    for _ in range(10):
+        label = {v: adopt(label[u] for u in ns) for v, ns in nbrs.items()}
+    edges = spark.createDataFrame(pairs, "_src long, _dst long")
+    got = {r.vid: r.label
+           for r in label_propagation(edges, iterations=10).collect()}
+    assert got == label
 
 
 def test_pagerank_drops_null_endpoint_edges(spark):
@@ -133,27 +164,45 @@ def test_bfs_min_paths_lazy_matches_counted(spark):
         (1, 2, 1), (1, 3, 1), (1, 4, 2)}
 
 
-def test_weighted_superstep_merge_matches_dijkstra(spark):
+# ladder: direct expensive edges that cheaper multi-hop chains beat
+_LADDER = ([(0, i + 1, 0, float(10 * (i + 1))) for i in range(8)]
+           + [(i, i + 1, 0, 1.5) for i in range(8)]
+           + [(3, 7, 0, 2.0), (7, 2, 0, 0.25), (5, 5, 0, 0.0)])
+WEIGHTED_GRAPHS = {
+    "ladder": _LADDER,
+    # 60 relaxation rounds deep
+    "unit-chain-60": [(i, i + 1, 0, 1.0) for i in range(60)],
+    # a NULL weight carries no distance: 1 and 2 stay unreached
+    "null-weight": [(0, 1, 0, None), (1, 2, 0, 1.0)],
+    "zero-weight-cycle": [(0, 1, 0, 0.0), (1, 2, 0, 0.0), (2, 0, 0, 0.0),
+                          (2, 3, 0, 2.5), (0, 3, 0, 5.0)],
+    "parallel-edges": [(0, 1, 0, 3.0), (0, 1, 1, 1.0), (0, 1, 2, None),
+                       (1, 2, 0, 2.0), (1, 2, 1, 0.5), (0, 2, 0, 4.0)],
+    # a NULL endpoint is no vertex to reach
+    "null-endpoint": [(0, 1, 0, 1.0), (1, None, 0, 2.0), (None, 2, 0, 1.0)],
+}
+
+
+@pytest.mark.parametrize("graph", list(WEIGHTED_GRAPHS))
+def test_weighted_superstep_merge_matches_dijkstra(spark, graph):
     # r11: the Bellman-Ford superstep fused the improved-frontier join
     # into the tentative-min aggregate (tagged conditional min). Pin the
-    # result against a Python Dijkstra oracle on a graph that forces
-    # repeated re-relaxation of already-reached vertices.
+    # result against a Python Dijkstra oracle that skips edges with a
+    # NULL weight or endpoint: the ladder forces repeated re-relaxation of
+    # reached vertices, and the others pin a deep chain, NULL weights, a
+    # zero-weight cycle, parallel edges and NULL endpoints.
     import heapq
 
     from nebula_spark.operators.paths import weighted_shortest_paths
 
-    rows = []
-    # ladder: direct expensive edges that cheaper multi-hop chains beat
-    for i in range(8):
-        rows.append((0, i + 1, 0, float(10 * (i + 1))))   # direct, costly
-        rows.append((i, i + 1, 0, 1.5))                   # chain, cheap
-    rows += [(3, 7, 0, 2.0), (7, 2, 0, 0.25), (5, 5, 0, 0.0)]
+    rows = WEIGHTED_GRAPHS[graph]
     e = spark.createDataFrame(
         rows, "_src long, _dst long, _rank long, weight double")
 
     adj = {}
     for s, d, _, w in rows:
-        adj.setdefault(s, []).append((d, w))
+        if None not in (s, d, w):
+            adj.setdefault(s, []).append((d, w))
     dist = {0: 0.0}
     pq = [(0.0, 0)]
     while pq:

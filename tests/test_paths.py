@@ -18,14 +18,14 @@ hypothesis versions of the path parities run in the full lane
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
 
 import pytest
 
 from nebula_spark.catalog import VID
-from nebula_spark.operators import go, k_hop_subgraph, traverse
+from nebula_spark.operators import go, k_hop_subgraph
 from nebula_spark.operators import paths as P
+from nebula_spark.operators.traverse import traverse
 from nebula_spark.session import local_frame
 
 EDGES = [
@@ -306,8 +306,7 @@ def test_both_closures_stop_on_empty_frontier(spark, monkeypatch):
     # closures must not count as frontier rows, or level 3 would
     # checkpoint an empty frontier. The counts are read where the shared
     # level loop looks checkpoint_count up.
-    # the package re-exports traverse() under the module's name
-    T = sys.modules["nebula_spark.operators.traverse"]
+    from nebula_spark.operators import traverse as T
     counts: list[int] = []
     real_count = T.checkpoint_count
 

@@ -172,9 +172,8 @@ def test_counted_bfs_level_width_bounds_shuffled_rows(spark, monkeypatch):
     its visited count: from one root, a non-broadcast frontier joins the
     whole edge table and the level expands to 40 vertices, so level 1 must
     not be planned at width 1."""
-    import sys
     from nebula_spark.operators import bfs_shortest_paths
-    traverse = sys.modules["nebula_spark.operators.traverse"]
+    from nebula_spark.operators import traverse
     star = ([(0, i) for i in range(1, 41)]
             + [(i, 100 + i) for i in range(1, 41)])
     monkeypatch.setattr(traverse, "BROADCAST_FRONTIER_ROWS", 0)
@@ -230,10 +229,11 @@ def test_lazy_checkpoints_carry_a_measurement():
 
 def test_path_searches_count_only_on_the_level_loop():
     """The frontier searches of ``operators/paths.py`` checkpoint and count
-    their levels only through the shared loop (``traverse._counted_levels``):
-    the direct ``checkpoint_count``/``checkpoint_observe`` uses left are
-    ``bfs_shortest_paths``' edge checkpoint, ``_meet_rounds``' resolved
-    probe and ``weighted_shortest_paths``' own loop."""
+    their levels only through the shared loops (``traverse._counted_levels``
+    and, for ``weighted_shortest_paths``, ``traverse._vertex_rounds``): the
+    direct ``checkpoint_count``/``checkpoint_observe`` uses left are
+    ``bfs_shortest_paths``' edge checkpoint and ``_meet_rounds``' resolved
+    probe."""
     import ast
     from collections import Counter
     from pathlib import Path
@@ -244,5 +244,26 @@ def test_path_searches_count_only_on_the_level_loop():
         fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
         for node in ast.walk(fn) if isinstance(node, ast.Name)
         and node.id in ("checkpoint_count", "checkpoint_observe"))
-    assert uses == {"bfs_shortest_paths": 1, "_meet_rounds": 1,
-                    "weighted_shortest_paths": 2}, uses
+    assert uses == {"bfs_shortest_paths": 1, "_meet_rounds": 1}, uses
+
+
+def test_vertex_algorithms_keep_no_loop_of_their_own():
+    """PageRank, label propagation, k-core, connected components and
+    weighted shortest paths run their supersteps on the one vertex-state
+    loop (``traverse._vertex_rounds``): none of them holds a ``for`` or
+    ``while`` statement."""
+    import ast
+    import inspect
+    import textwrap
+
+    from nebula_spark.operators.algo import (k_core, label_propagation,
+                                             pagerank)
+    from nebula_spark.operators.paths import weighted_shortest_paths
+    from nebula_spark.pipeline.dedup import connected_components
+    loops = {}
+    for fn in (pagerank, label_propagation, k_core, connected_components,
+               weighted_shortest_paths):
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        loops[fn.__name__] = [type(node).__name__ for node in ast.walk(tree)
+                              if isinstance(node, (ast.For, ast.While))]
+    assert loops == {name: [] for name in loops}, loops

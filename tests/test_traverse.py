@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from nebula_spark.operators import (
     bfs_shortest_paths, get_edges, get_neighbors, go, k_hop_subgraph,
-    traverse,
 )
 from nebula_spark.operators.paths import all_paths
+from nebula_spark.operators.traverse import traverse
 
 
 def test_get_neighbors_out(nba):
