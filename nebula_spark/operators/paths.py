@@ -16,23 +16,30 @@ reference) handles all (src,dst) pairs in one run instead of per-pair RPCs.
 One level step per frontier kind serves every search here:
 :func:`_id_step` advances ``(root, vid)`` pairs (the distance searches
 and GET SUBGRAPH), :func:`_path_step` advances ``(root, end_vid, path)``
-rows (the minimal-path searches). Every level search runs on the shared
-counted level loop (``traverse._counted_levels``): the seed and every
-level go through :func:`~nebula_spark.operators.traverse.checkpoint_count`,
-so each frontier is materialized once, its size comes free off that job
-(the empty-frontier stop and the broadcast probe), and the visited set is
-a plain union of those checkpointed pieces. :func:`bfs_shortest_paths`
+rows (the minimal-path searches) through the path hop it shares with
+MATCH var-len expansion (``traverse._path_hop``; the seed, path type and
+output shaping are shared too, so ``traverse()`` is the unpruned twin of
+:func:`bfs_min_paths`). Every level search runs on the shared level loop
+(``traverse._counted_levels``): the seed and every level go through
+:func:`~nebula_spark.operators.traverse.checkpoint_count`, so each
+frontier is materialized once, its size comes free off that job (the
+empty-frontier stop and the broadcast probe), and the visited set is a
+plain union of those checkpointed pieces. :func:`bfs_shortest_paths`
 and :func:`bfs_min_paths` pull the loop to its end; the two
 meet-in-the-middle searches pull one loop per side, in turn, from one
 round driver (:func:`_meet_rounds`), and keep only their meet and final
 reduction. :func:`weighted_shortest_paths` runs on the vertex-state
 superstep loop (``traverse._vertex_rounds``) instead: its state is the
 whole tentative-distance set, not a level, and what it counts is the rows
-whose distance improved. There is no lazy mode for short
-searches: under AQE a lazy ``localCheckpoint`` runs its input's shuffle
-stages when it is called anyway, so a "lazy" level paid its jobs during
-plan build and got no count back (a traced 3-hop search ran 15 jobs
-lazy, 11 counted).
+whose distance improved.
+
+The loop's lazy head (``lazy_levels``, which GO uses) is not used here:
+every search here anti-joins each level against a visited set built from
+the levels before it, so a lazy level would re-run its whole chain in
+every later level's plan and again in the result. Under AQE only a plan
+with no ``localCheckpoint`` at all stays lazy, so a head can only start
+at the seed, never resume after a counted level (a traced 3-hop search
+with lazy checkpoints ran 15 jobs, counted 11).
 
 The loop-invariant edge frame is persisted once per call and unpersisted
 on exit, except in :func:`bfs_shortest_paths`, which checkpoints it for
@@ -50,10 +57,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nebula_spark.catalog import DST, RANK, SRC, VID
+from nebula_spark.catalog import DST, SRC, VID
 from nebula_spark.operators.traverse import (
-    BROADCAST_FRONTIER_ROWS, _broadcast_small, _counted_levels, _edge_id,
-    _edge_id_reversed, _vertex_rounds, checkpoint_count, oriented, traverse,
+    BROADCAST_FRONTIER_ROWS, _broadcast_small, _counted_levels, _path_hop,
+    _path_rows, _path_seed, _path_struct_type, _prep_oriented,
+    _vertex_rounds, checkpoint_count, oriented, traverse,
 )
 
 _DIR_FLIP = {"out": "in", "in": "out", "both": "both"}
@@ -70,24 +78,6 @@ def _id_step(f: DataFrame, e: DataFrame, visited: DataFrame,
     return (f.join(e, f[VID] == e[SRC], "inner")
             .select(*keys, F.col(DST).alias(VID)).distinct()
             .join(visited, [*keys, VID], "left_anti"))
-
-
-def _path_hop(f: DataFrame, e: DataFrame) -> DataFrame:
-    """Every path of a ``(root, end_vid, path)`` frontier ``f`` (probed by
-    the caller against :data:`_PATH_BROADCAST_ROWS`) extended one hop
-    over oriented edges (:func:`_prep_oriented`)."""
-    # direction-normalized edge uniqueness (Edge.cpp:128-136): only
-    # relevant for closed walks back to the root — a BOTH-direction walk
-    # may not return over its arrival edge
-    uniq = ~F.array_contains(F.col("path"), _edge_id()) \
-        & ~F.array_contains(F.col("path"), _edge_id_reversed())
-    return (f.alias("__f")
-            .join(e.alias("__e"),
-                  F.col("__f.end_vid") == F.col(f"__e.{SRC}"), "inner")
-            .filter(uniq)
-            .select("root", F.col(DST).alias("end_vid"),
-                    F.concat("path",
-                             F.array(_new_edge_struct())).alias("path")))
 
 
 def _path_step(f: DataFrame, e: DataFrame, levels: list[DataFrame],
@@ -289,9 +279,7 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
         raise ValueError("bfs_min_paths requires min_hops <= 1; route "
                          "higher lower bounds to the enumerate fallback")
     e = _prep_oriented(edges, direction, edge_filter, self_loop_once)
-    seed = (sources.select(F.col(VID).alias("root")).distinct()
-            .withColumn("end_vid", F.col("root"))
-            .withColumn("path", F.array().cast(_path_struct_type(e))))
+    seed = _path_seed(sources, _path_struct_type(e))
     # per-root visited set (the minimality invariant): a vid joins it at
     # its first-reached level. The root is pre-visited only in BOTH
     # direction or with min_hops=0 (see the docstring for why).
@@ -304,48 +292,25 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
             max_hops, broadcast_rows=_PATH_BROADCAST_ROWS))
     finally:
         e.unpersist()
-    shaped = [lv.select(F.col("root").alias("start_vid"), "end_vid",
-                        F.lit(hops).alias("hops"), "path")
-              for hops, lv in enumerate(levels)]
-    kept = shaped[min_hops:]
-    if direction == "both" and min_hops >= 1 and len(levels) > 1:
-        # BOTH-direction root closures: the hops back to the root from
-        # every level the loop stepped from (all but the last; zip stops
-        # there), kept at each root's first closing level — the
-        # reference's rule (SingleShortestPath.cpp never extends a pruned
-        # path), not an exact cycle search (see the docstring). One hop
-        # per level: one hop over a union of the levels made Spark 4.1's
-        # union constraint rewrite fail at collect in bidir_min_paths
-        # (NoSuchElementException "key not found: root#…").
-        hits = [_path_hop(_broadcast_small(lv, n, _PATH_BROADCAST_ROWS), e)
-                .filter(F.col("end_vid") == F.col("root"))
-                .select(F.col("root").alias("start_vid"), "end_vid",
-                        F.lit(hops + 1).alias("hops"), "path")
-                for hops, (lv, n) in enumerate(zip(levels, counts[:-1]))]
-        cyc = _shortest(reduce(DataFrame.unionByName, hits), ["start_vid"])
-        if mode == "single":
-            cyc = _pick_single(cyc, ["start_vid"], etype_order)
-        kept.append(cyc)
-    return reduce(DataFrame.unionByName, kept) if kept \
-        else shaped[0].limit(0)
-
-
-def _path_struct_type(e: DataFrame):
-    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                                   StructField, StructType)
-    return ArrayType(StructType([
-        StructField("s", e.schema[SRC].dataType),
-        StructField("d", e.schema[DST].dataType),
-        StructField("r", e.schema[RANK].dataType),
-        StructField("t", IntegerType()),
-        StructField("et", StringType()),
-    ]))
-
-
-def _new_edge_struct() -> Column:
-    return F.struct(F.col(SRC).alias("s"), F.col(DST).alias("d"),
-                    F.col(RANK).alias("r"), F.col("_dir").alias("t"),
-                    F.col("_etype").alias("et"))
+    if direction != "both" or min_hops < 1 or len(levels) == 1:
+        return _path_rows(levels, min_hops)
+    # BOTH-direction root closures: the hops back to the root from every
+    # level the loop stepped from (all but the last; zip stops there),
+    # kept at each root's first closing level — the reference's rule
+    # (SingleShortestPath.cpp never extends a pruned path), not an exact
+    # cycle search (see the docstring). One hop per level: one hop over a
+    # union of the levels made Spark 4.1's union constraint rewrite fail
+    # at collect in bidir_min_paths (NoSuchElementException "key not
+    # found: root#…").
+    hits = [_path_hop(_broadcast_small(lv, n, _PATH_BROADCAST_ROWS), e)
+            .filter(F.col("end_vid") == F.col("root"))
+            .select(F.col("root").alias("start_vid"), "end_vid",
+                    F.lit(hops + 1).alias("hops"), "path")
+            for hops, (lv, n) in enumerate(zip(levels, counts[:-1]))]
+    cyc = _shortest(reduce(DataFrame.unionByName, hits), ["start_vid"])
+    if mode == "single":
+        cyc = _pick_single(cyc, ["start_vid"], etype_order)
+    return _path_rows(levels, min_hops, cyc)
 
 
 def _flip_path(col: Column) -> Column:
@@ -367,17 +332,6 @@ def _edges_unique(col: Column) -> Column:
         F.when(x["t"] == 1, x["d"]).otherwise(x["s"]).alias("b"),
         x["r"].alias("r"), x["et"].alias("et")))
     return F.size(F.array_distinct(canon)) == F.size(col)
-
-
-def _prep_oriented(edges: DataFrame, direction: str,
-                   edge_filter: Column | None,
-                   self_loop_once: bool) -> DataFrame:
-    e = oriented(edges, direction, self_loop_once=self_loop_once)
-    if edge_filter is not None:
-        e = e.filter(edge_filter)
-    if "_etype" not in e.columns:
-        e = e.withColumn("_etype", F.lit(""))
-    return e.select(SRC, DST, RANK, "_dir", "_etype")
 
 
 def _bidir_search(sources: DataFrame, targets: DataFrame, direction: str,

@@ -13,10 +13,13 @@ Reference implementations:
 - GetEdges: ``src/graph/executor/query/GetEdgesExecutor.cpp:1-112``.
 
 Spark-first translation: a hop is a join of the frontier against the edge
-table. Every counted frontier search (BFS distances, GET SUBGRAPH, MATCH
-var-len, GO's counted range) runs on one level loop,
-:func:`_counted_levels`, and every vertex-state algorithm on one
-superstep loop, :func:`_vertex_rounds`. The reference's storage-side
+table. Every frontier search (BFS distances and paths, GET SUBGRAPH, MATCH
+var-len, GO) runs on one level loop, :func:`_counted_levels`, and every
+vertex-state algorithm on one superstep loop, :func:`_vertex_rounds`. GO
+starts the loop with a lazy head: its first two levels are one plain plan
+with no job, so a 1- or 2-step GO runs only when collected. MATCH var-len
+and the minimal-path searches of ``paths.py`` extend paths with one shared
+hop (:func:`_path_hop`). The reference's storage-side
 pushdowns (edge filter, per-vertex limit, dedup —
 ``storage.thrift:140-158``) become: filter *before* the join
 (Catalyst pushes it into the parquet scan), window row_number per src for
@@ -34,6 +37,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, IntegerType, StringType,
+                               StructField, StructType)
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.session import scoped_conf
@@ -53,6 +58,9 @@ BROADCAST_FRONTIER_ROWS = 2_000_000
 # three-row frontier still runs session-width stages (measured at sf0.1:
 # 2.05 s → 1.0 s for the connected-components round loop).
 SUPERSTEP_ROWS_PER_TASK = 2_000_000
+
+# GO's per-step SAMPLE draws order by rand(GO_SAMPLE_SEED + step).
+GO_SAMPLE_SEED = 42
 
 
 def observed_width(spark: SparkSession, n_rows: int,
@@ -120,39 +128,50 @@ def checkpoint_observe(df: DataFrame,
     return out, obs.get
 
 
-def _broadcast_small(df: DataFrame, n: int,
+def _broadcast_small(df: DataFrame, n: int | None,
                      rows: int | None = None) -> DataFrame:
     """``df`` hinted for broadcast when its counted size ``n`` is at most
     ``rows`` (default :data:`BROADCAST_FRONTIER_ROWS`) — the frontier
-    probe of every counted search."""
-    return F.broadcast(df) if n <= (
-        BROADCAST_FRONTIER_ROWS if rows is None else rows) else df
+    probe of every counted search. An uncounted level (``n`` is ``None``)
+    is left to AQE's runtime join choice."""
+    if n is None or n > (BROADCAST_FRONTIER_ROWS if rows is None else rows):
+        return df
+    return F.broadcast(df)
 
 
 def _counted_levels(seed: DataFrame, step, max_levels: int | None,
                     broadcast_rows: int | None = None,
-                    shuffle_rows=None) -> Iterator[tuple[DataFrame, int]]:
-    """The level loop of every counted frontier search: yields each level,
-    seed first, with its row count. The seed and each level are
-    materialized and counted in one job (:func:`checkpoint_count`), run
-    when the caller pulls that level; the loop stops after an empty level
-    or at level ``max_levels`` (``None``: only on an empty one), and a
-    caller may stop pulling sooner, or pull two searches in turn.
+                    shuffle_rows=None, lazy_levels: int = 0
+                    ) -> Iterator[tuple[DataFrame, int | None]]:
+    """The level loop of every frontier search: yields each level, seed
+    first, with its row count. The first ``lazy_levels`` levels (the seed
+    is level 0) chain into one plain plan and are yielded with count
+    ``None``: no checkpoint, no job. Every later level is materialized
+    and counted in one job (:func:`checkpoint_count`), run when the
+    caller pulls that level. Only a plan with no ``localCheckpoint`` at
+    all stays lazy under AQE, so the lazy levels form a head and never
+    follow a counted one. The loop stops after an empty level or at
+    level ``max_levels`` (``None``: only on an empty one), and a caller
+    may stop pulling sooner, or pull two searches in turn.
     ``step(frontier, levels)`` builds level ``len(levels)`` lazily from
     the last level, broadcast while it has at most ``broadcast_rows``
-    rows. ``shuffle_rows(counts)``, if given, bounds the rows a level
-    shuffles and sizes its job (:func:`sized_superstep`)."""
-    frontier, n = checkpoint_count(seed)
-    levels, counts = [frontier], [n]
-    yield frontier, n
-    while n and (max_levels is None or len(levels) <= max_levels):
-        nxt = step(_broadcast_small(frontier, n, broadcast_rows), levels)
-        with sized_superstep(seed.sparkSession, shuffle_rows(counts)) \
-                if shuffle_rows else nullcontext():
-            frontier, n = checkpoint_count(nxt)
+    rows (:func:`_broadcast_small`). ``shuffle_rows(counts)``, if given,
+    bounds the rows a counted level shuffles and sizes its job
+    (:func:`sized_superstep`)."""
+    levels: list[DataFrame] = []
+    counts: list[int | None] = []
+    frontier, n = seed, None
+    while True:
+        if len(levels) >= lazy_levels:
+            with sized_superstep(seed.sparkSession, shuffle_rows(counts)) \
+                    if shuffle_rows and levels else nullcontext():
+                frontier, n = checkpoint_count(frontier)
         levels.append(frontier)
         counts.append(n)
         yield frontier, n
+        if n == 0 or (max_levels is not None and len(levels) > max_levels):
+            return
+        frontier = step(_broadcast_small(frontier, n, broadcast_rows), levels)
 
 
 # Eager lineage cut every this many rounds of an uncounted vertex loop:
@@ -217,7 +236,7 @@ def get_neighbors(vids: DataFrame, edges: DataFrame, direction: str = "out",
                   limit_per_vertex: int | None = None,
                   order_per_vertex: list | None = None,
                   dedup_dst: bool = False,
-                  broadcast_frontier: bool | None = None,
+                  broadcast_frontier: bool = True,
                   carry_cols: tuple[str, ...] = (),
                   dedup_frontier: bool = True) -> DataFrame:
     """One hop from a vid set: the GetNeighbors RPC as a join.
@@ -245,9 +264,7 @@ def get_neighbors(vids: DataFrame, edges: DataFrame, direction: str = "out",
     f = vids.select(VID, *carry_cols)
     if dedup_frontier:
         f = f.distinct()
-    if broadcast_frontier is None:
-        broadcast_frontier = True  # seed sets are small; loops override
-    if broadcast_frontier:
+    if broadcast_frontier:       # seed sets are small; loops override
         f = F.broadcast(f)
     hop = e.join(f, e[SRC] == f[VID], "inner").drop(VID)
     if limit_per_vertex is not None:
@@ -266,7 +283,6 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
        edge_filter: Column | None = None,
        step_limits: list[int] | None = None,
        step_samples: list[int] | None = None,
-       sample_seed: int = 42,
        track_origin: bool = False,
        origin_col: str | None = None) -> DataFrame:
     """GO M TO N STEPS: multi-hop expansion accumulating per-step edge rows.
@@ -277,12 +293,13 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
     of the steps in [min_steps, max_steps] are unioned.
 
     Adds a ``step`` column. Scale notes: the frontier is deduped every hop
-    (dst-only GetDstBySrc shape). A range of more than 2 steps walks its
-    frontiers 0 to ``max_steps - 1`` on the counted level loop
-    (:func:`_counted_levels`); the hop rows stay lazy. A short range has
-    nothing to skip, so it builds one lazy plan with no job: step 1
-    broadcasts the (caller-bounded) seed frontier, step 2 leaves join
-    strategy to AQE, whose runtime stats broadcast a small one anyway.
+    (dst-only GetDstBySrc shape). The frontiers 0 to ``max_steps - 1``
+    come from the level loop (:func:`_counted_levels`) with a lazy head of
+    two levels, and the hop rows stay lazy. So a 1- or 2-step range is
+    one plan with no job: step 1 broadcasts the (caller-bounded) seed
+    frontier, step 2 leaves the join strategy to AQE, whose runtime stats
+    broadcast a small one anyway. A longer range counts each later
+    frontier and skips the last hop once one comes back empty.
 
     ``edges`` may be a list with one edge table per step (GO ... OVER a
     schedule of edge types): hop *k* then joins only its own table instead
@@ -330,25 +347,19 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
             # truncation (GO.feature "go step sample": 3 steps with
             # SAMPLE [1,3,2] returns exactly 2 rows) — LIMIT keeps
             # the per-vertex window (storage truncate) semantics
-            rows = (rows.orderBy(F.rand(sample_seed + step))
+            rows = (rows.orderBy(F.rand(GO_SAMPLE_SEED + step))
                     .limit(step_samples[step - 1]))
         if step >= min_steps:
             results.append(rows.withColumn("step", F.lit(step)))
         return rows
 
-    def advance(frontier: DataFrame, step: int) -> DataFrame:
-        return hop(frontier, step).select(*carry, F.col(DST).alias(VID)) \
-            .distinct()
-
-    if max_steps > 2:
-        levels, counts = zip(*_counted_levels(
-            seed, lambda f, levels: advance(f, len(levels)), max_steps - 1))
-        if counts[-1]:
-            hop(_broadcast_small(levels[-1], counts[-1]), max_steps)
-    else:
-        frontier = F.broadcast(seed)
-        for step in range(1, max_steps + 1):
-            frontier = advance(frontier, step)
+    levels, counts = zip(*_counted_levels(
+        F.broadcast(seed),
+        lambda f, levels: hop(f, len(levels))
+        .select(*carry, F.col(DST).alias(VID)).distinct(),
+        max_steps - 1, lazy_levels=2))
+    if max_steps and counts[-1] != 0:
+        hop(_broadcast_small(levels[-1], counts[-1]), max_steps)
     if not results:
         e0 = edges[0] if per_step else edges
         return get_neighbors(seed.limit(0), e0, direction,
@@ -357,23 +368,85 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
                   results)
 
 
-def _edge_id_fields(prefix: str = "", reversed_: bool = False) -> list:
+def _edge_id(reversed_: bool = False, props=()) -> Column:
+    """The path struct ``(s, d, r, t, et, *props)`` of an oriented edge
+    row. ``reversed_`` gives the same underlying edge seen from the other
+    orientation: reference edge equality is direction-normalized
+    ((a,b,e,r) == (b,a,-e,r), Edge.cpp:128-136 keyEqual), so uniqueness
+    checks both images."""
     s, d = (DST, SRC) if reversed_ else (SRC, DST)
-    t = -F.col(f"{prefix}_dir") if reversed_ else F.col(f"{prefix}_dir")
-    return [F.col(f"{prefix}{s}").alias("s"), F.col(f"{prefix}{d}").alias("d"),
-            F.col(f"{prefix}{RANK}").alias("r"), t.alias("t"),
-            F.col(f"{prefix}_etype").alias("et")]
+    t = -F.col("_dir") if reversed_ else F.col("_dir")
+    return F.struct(F.col(s).alias("s"), F.col(d).alias("d"),
+                    F.col(RANK).alias("r"), t.alias("t"),
+                    F.col("_etype").alias("et"), *map(F.col, props))
 
 
-def _edge_id(prefix: str = "") -> Column:
-    return F.struct(*_edge_id_fields(prefix))
+def _prep_oriented(edges: DataFrame, direction: str,
+                   edge_filter: Column | None, self_loop_once: bool,
+                   props=()) -> DataFrame:
+    """The ``(src, dst, _rank, _dir, _etype, *props)`` edge rows a path
+    search walks (:func:`oriented`, filtered); single-type edge tables
+    get an empty ``_etype``."""
+    e = oriented(edges, direction, self_loop_once=self_loop_once)
+    if edge_filter is not None:
+        e = e.filter(edge_filter)
+    if "_etype" not in e.columns:
+        e = e.withColumn("_etype", F.lit(""))
+    return e.select(SRC, DST, RANK, "_dir", "_etype", *props)
 
 
-def _edge_id_reversed(prefix: str = "") -> Column:
-    """The same underlying edge seen from the other orientation: reference
-    edge equality is direction-normalized ((a,b,e,r) == (b,a,-e,r),
-    Edge.cpp:128-136 keyEqual), so uniqueness checks both images."""
-    return F.struct(*_edge_id_fields(prefix, reversed_=True))
+def _path_struct_type(e: DataFrame, props=()) -> ArrayType:
+    """The type of a path column over edge rows ``e``: an array of
+    :func:`_edge_id` structs."""
+    return ArrayType(StructType([
+        StructField("s", e.schema[SRC].dataType),
+        StructField("d", e.schema[DST].dataType),
+        StructField("r", e.schema[RANK].dataType),
+        StructField("t", IntegerType()),
+        StructField("et", StringType()),
+        *[StructField(c, e.schema[c].dataType) for c in props],
+    ]))
+
+
+def _path_seed(vids: DataFrame, path_type: ArrayType) -> DataFrame:
+    """The zero-hop ``(root, end_vid, path)`` frontier of a path search
+    from the distinct ``vids``."""
+    return (vids.select(F.col(VID).alias("root")).distinct()
+            .withColumn("end_vid", F.col("root"))
+            .withColumn("path", F.array().cast(path_type)))
+
+
+def _path_hop(f: DataFrame, e: DataFrame, props=()) -> DataFrame:
+    """Every path of a ``(root, end_vid, path)`` frontier ``f`` extended
+    one hop over edge rows ``e`` (:func:`_prep_oriented`) without reusing
+    an edge of the path (openCypher relationship uniqueness)."""
+    # array_contains, not a lambda: F.exists with outer column refs
+    # miscompiles on reused Datasets (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
+    # Both images are checked, so a BOTH-direction walk may not return
+    # over the edge it arrived by. The join is alias-qualified: the edge
+    # table joins every level, and df[col] references break Spark's
+    # self-join disambiguation once one Dataset appears twice in lineage.
+    uniq = ~F.array_contains(F.col("path"), _edge_id(props=props)) \
+        & ~F.array_contains(F.col("path"), _edge_id(True, props))
+    return (f.alias("__f")
+            .join(e.alias("__e"),
+                  F.col("__f.end_vid") == F.col(f"__e.{SRC}"), "inner")
+            .filter(uniq)
+            .select("root", F.col(DST).alias("end_vid"),
+                    F.concat("path", F.array(_edge_id(props=props)))
+                    .alias("path")))
+
+
+def _path_rows(levels, min_hops: int, *more: DataFrame) -> DataFrame:
+    """The ``(start_vid, end_vid, hops, path)`` rows of the path levels
+    from ``min_hops`` on, and of ``more``; a search that dies before
+    ``min_hops`` keeps the schema in no rows."""
+    shaped = [lv.select(F.col("root").alias("start_vid"), "end_vid",
+                        F.lit(hops).alias("hops"), "path")
+              for hops, lv in enumerate(levels)]
+    kept = shaped[min_hops:] + list(more)
+    return reduce(DataFrame.unionByName, kept) if kept \
+        else shaped[0].limit(0)
 
 
 def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
@@ -388,12 +461,20 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
     appear once per path; tracked via dst2PathsMap + hasSameEdgeInPath).
 
     Returns one row per path: ``start_vid``, ``end_vid``, ``hops``,
-    ``path`` (array of edge structs (s,d,r,t,et)). The uniqueness filter
-    is ``NOT exists(path, e -> e == new_edge)`` — JVM-side higher-order
-    function, no UDF. Every range runs on the counted level loop
-    (:func:`_counted_levels`): the zero-hop paths and each hop's paths are
-    checkpointed and counted in one job, and the walk stops once
-    edge-uniqueness empties the frontier or at ``max_hops``.
+    ``path`` (array of edge structs (s,d,r,t,et)). It is the unpruned twin
+    of ``paths.bfs_min_paths``: the same seed, hop (:func:`_path_hop`,
+    whose uniqueness filter is a JVM-side ``array_contains``, no UDF) and
+    output shaping on the level loop (:func:`_counted_levels`), with no
+    visited set. The zero-hop paths and each hop's paths are checkpointed
+    and counted in one job, and the walk stops once edge-uniqueness
+    empties the frontier or at ``max_hops``. Path rows are never
+    broadcast: the join leaves them to AQE.
+
+    ``max_hops=None`` is the reference's open-ended range (`[e*]` /
+    `[e*m..]` — parser.yy match_step_range, MatchStepRange.h default max
+    SIZE_MAX): the walk runs at most the longest simple edge path, and so
+    does a huge bound (VariableLengthPattern.feature "Over expand end":
+    `[:serve*1000000000..1000000002]`).
 
     ``prop_cols`` (opt-in) appends the named edge prop columns to each
     path struct so result-shaping can read ``relationships(p)[i].prop``
@@ -404,66 +485,17 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
     operators/paths.py therefore stay identity-only and leave prop
     resolution to their callers.
     """
-    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
-                                   StructField, StructType)
-
-    e = oriented(edges, direction, self_loop_once=self_loop_once)
-    if edge_filter is not None:
-        e = e.filter(edge_filter)
-    if "_etype" not in e.columns:        # single-type edge tables
-        e = e.withColumn("_etype", F.lit(""))
-    props = list(prop_cols or [])
-    e = e.select(SRC, DST, RANK, "_dir", "_etype", *props)
-    path_type = ArrayType(StructType([
-        StructField("s", e.schema[SRC].dataType),
-        StructField("d", e.schema[DST].dataType),
-        StructField("r", e.schema[RANK].dataType),
-        StructField("t", IntegerType()),
-        StructField("et", StringType()),
-        *[StructField(c, e.schema[c].dataType) for c in props],
-    ]))
-
-    extra = [F.col(c).alias(c) for c in props]
-    new_edge = F.struct(*_edge_id_fields(), *extra) if props else _edge_id()
-    # edge-uniqueness via array_contains(path, struct(...)) — a lambda
-    # with outer column refs (F.exists) miscompiles on reused Datasets
-    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at runtime). Checked in both
-    # orientations: BOTH-direction expansion must not walk back over
-    # the edge it arrived by (direction-normalized edge equality).
-    rev_edge = F.struct(*_edge_id_fields(reversed_=True), *extra) \
-        if props else _edge_id_reversed()
-    uniq = ~F.array_contains(F.col("path"), new_edge) \
-        & ~F.array_contains(F.col("path"), rev_edge)
-
-    def step(paths: DataFrame, levels: list[DataFrame]) -> DataFrame:
-        # alias-qualified join: the edge table participates in every
-        # level, and df[col] cross-references break Spark's self-join
-        # disambiguation once the same base Dataset appears twice in
-        # lineage
-        return (paths.alias("__p")
-                .join(e.alias("__e"),
-                      F.col("__p.end_vid") == F.col(f"__e.{SRC}"), "inner")
-                .filter(uniq)
-                .select(F.col("start_vid"), F.col(DST).alias("end_vid"),
-                        F.lit(len(levels)).alias("hops"),
-                        F.concat("path", F.array(new_edge)).alias("path")))
-
-    # max_hops=None is the reference's open-ended range (`[e*]` /
-    # `[e*m..]` — parser.yy match_step_range, MatchStepRange.h default
-    # max SIZE_MAX): the counted loop stops once edge-uniqueness empties
-    # the frontier, so it runs at most the longest simple edge path, and
-    # so does a huge bound (VariableLengthPattern.feature "Over expand
-    # end": `[:serve*1000000000..1000000002]`). Path rows are not
-    # broadcast: the join leaves them to AQE.
-    zero = (start.select(F.col(VID).alias("start_vid")).distinct()
-            .withColumn("end_vid", F.col("start_vid"))
-            .withColumn("hops", F.lit(0))
-            .withColumn("path", F.array().cast(path_type)))
-    levels, _ = zip(*_counted_levels(zero, step, max_hops, broadcast_rows=0))
-    kept = levels[min_hops:]
-    # a frontier that dies before min_hops keeps the schema in no rows
-    return reduce(DataFrame.unionByName, kept) if kept \
-        else levels[-1].limit(0)
+    props = tuple(prop_cols or ())
+    e = _prep_oriented(edges, direction, edge_filter, self_loop_once, props)
+    # no lazy head (lazy_levels=0), kept by an A/B (8 interleaved process
+    # pairs, medians of 3 calls, 4 cores): a head of 2 took sf0.1
+    # `paths_query` from 12 jobs to 6 (2.16 → 1.96 s) but slowed `*1..3`
+    # MATCH on the nba test fixture from 3.03 to 3.84 s (slower in 8 of
+    # 8 pairs): the lazy levels run again when the result is collected
+    levels, _ = zip(*_counted_levels(
+        _path_seed(start, _path_struct_type(e, props)),
+        lambda f, _: _path_hop(f, e, props), max_hops, broadcast_rows=0))
+    return _path_rows(levels, min_hops)
 
 
 def get_edges(keys: DataFrame, edges: DataFrame) -> DataFrame:

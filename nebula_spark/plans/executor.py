@@ -33,10 +33,11 @@ from nebula_spark.catalog import (DST, RANK, SRC, VID, GraphSpace,
                                   read_back_schema, statement_snapshot)
 from nebula_spark.functions.scalar import FUNCTIONS
 from nebula_spark.operators import go, k_hop_subgraph
-from nebula_spark.operators.paths import (_path_struct_type, all_paths,
-                                          bfs_min_paths, bfs_shortest_paths,
-                                          bidir_distances, bidir_min_paths)
-from nebula_spark.operators.traverse import oriented, traverse
+from nebula_spark.operators.paths import (all_paths, bfs_min_paths,
+                                          bfs_shortest_paths, bidir_distances,
+                                          bidir_min_paths)
+from nebula_spark.operators.traverse import (_path_struct_type, oriented,
+                                             traverse)
 from nebula_spark.plans import ngql as A
 from nebula_spark.session import local_frame
 

@@ -247,14 +247,14 @@ def test_paths_match_python_bfs(spark, direction, max_hops):
 
 @pytest.mark.parametrize("direction", ["out", "in", "both"])
 def test_level_loop_edge_depths_match_python(spark, direction):
-    """The counted level loop at the depths the test above skips: a
-    subgraph of 0 and 1 steps, var-len ranges from 0 hops and with no
-    upper bound, and GO's counted range."""
+    """The level loop at the depths the test above skips: a subgraph of 0
+    and 1 steps, var-len ranges from 0 hops and with no upper bound, and
+    GO over its lazy head (1 step, and 1 TO 2) and its counted range."""
     for steps in (0, 1):
         _check_subgraph(spark, direction, steps)
     _check_walks(spark, direction, 0, 3)
     _check_walks(spark, direction, 1, None)
-    for steps in (3, 5):
+    for steps in (1, 2, 3, 5):
         for track in (False, True):
             out = go(_edges(spark), _frame(spark, ROOTS), 1, steps,
                      direction, track_origin=track)

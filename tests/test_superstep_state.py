@@ -144,6 +144,52 @@ def test_subgraph_reads_seed_once_and_exact(spark):
     assert reads.value == 1, reads.value
 
 
+def _checkpoint_jobs(spark, jobs):
+    """The jobs among ``jobs`` that materialize a ``localCheckpoint`` (their
+    result stage carries its call site); the others are the AQE query
+    stages (shuffles, broadcasts) of the plans being checkpointed."""
+    tracker = spark.sparkContext.statusTracker()
+    return [j for j in jobs
+            if tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds))
+            .name.startswith("localCheckpoint")]
+
+
+def test_level_loop_lazy_head_starts_no_job(spark):
+    """The level loop's lazy head: GO to 2 steps builds one plan and
+    starts no job. Every level after the head is counted with one
+    checkpoint job, and nothing else checkpoints; MATCH var-len expansion
+    (both halves of ALL PATH too) has no head and counts every level."""
+    from nebula_spark.operators import all_paths, go
+    from nebula_spark.operators.traverse import traverse
+    from nebula_spark.session import local_frame
+
+    # JVM-local frames, as in test_paths.py: a Python-list frame runs
+    # Python workers on every scan of every level
+    edges = local_frame(spark, [(s, d, 0) for s, d in EDGES],
+                        "_src long, _dst long, _rank long")
+
+    def src(vids):
+        return local_frame(spark, [(v,) for v in vids], f"{VID} long")
+
+    roots = src([0, 5, 30])
+    # (name, call, checkpoint jobs): GO's head is frontiers 0 and 1, and
+    # frontiers 0..max_steps-1 feed its hops
+    calls = [(f"go-{lo}-{hi}", lambda lo=lo, hi=hi: go(edges, roots, lo, hi),
+              max(0, hi - 2)) for lo, hi in ((1, 1), (2, 2), (1, 2), (1, 5))]
+    calls += [(f"match-{lo}-{hi}",
+               lambda lo=lo, hi=hi: traverse(edges, roots, lo, hi), hi + 1)
+              for lo, hi in ((0, 1), (1, 5))]
+    # ALL PATH to 2 hops: two traversals of 0..1 hops, one per end
+    calls.append(("all-paths-2",
+                  lambda: all_paths(edges, roots, src([3, 33]), 2), 4))
+    for name, fn, levels in calls:
+        with _job_ids(spark, f"lazy-head-{name}") as jobs:
+            fn()
+        assert len(_checkpoint_jobs(spark, jobs)) == levels, (name, jobs)
+        if not levels:
+            assert jobs == [], name
+
+
 def test_sized_superstep_scopes_width_and_aqe(spark):
     from nebula_spark.operators.traverse import sized_superstep
     conf = spark.conf
@@ -250,8 +296,9 @@ def test_path_searches_count_only_on_the_level_loop():
 def test_vertex_algorithms_keep_no_loop_of_their_own():
     """PageRank, label propagation, k-core, connected components and
     weighted shortest paths run their supersteps on the one vertex-state
-    loop (``traverse._vertex_rounds``): none of them holds a ``for`` or
-    ``while`` statement."""
+    loop (``traverse._vertex_rounds``), and GO and MATCH var-len expansion
+    their levels on the level loop (``traverse._counted_levels``): none of
+    them holds a ``for`` or ``while`` statement."""
     import ast
     import inspect
     import textwrap
@@ -259,10 +306,11 @@ def test_vertex_algorithms_keep_no_loop_of_their_own():
     from nebula_spark.operators.algo import (k_core, label_propagation,
                                              pagerank)
     from nebula_spark.operators.paths import weighted_shortest_paths
+    from nebula_spark.operators.traverse import go, traverse
     from nebula_spark.pipeline.dedup import connected_components
     loops = {}
     for fn in (pagerank, label_propagation, k_core, connected_components,
-               weighted_shortest_paths):
+               weighted_shortest_paths, go, traverse):
         tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
         loops[fn.__name__] = [type(node).__name__ for node in ast.walk(tree)
                               if isinstance(node, (ast.For, ast.While))]
