@@ -33,13 +33,13 @@ superstep loop (``traverse._vertex_rounds``) instead: its state is the
 whole tentative-distance set, not a level, and what it counts is the rows
 whose distance improved.
 
-The loop's lazy head (``lazy_levels``, which GO uses) is not used here:
-every search here anti-joins each level against a visited set built from
-the levels before it, so a lazy level would re-run its whole chain in
-every later level's plan and again in the result. Under AQE only a plan
-with no ``localCheckpoint`` at all stays lazy, so a head can only start
-at the seed, never resume after a counted level (a traced 3-hop search
-with lazy checkpoints ran 15 jobs, counted 11).
+The loop's lazy head (``lazy_levels``, used by GO and MATCH var-len) is
+not used here: every search here anti-joins each level against a visited
+set built from the levels before it, so a lazy level would re-run its
+whole chain in every later level's plan and again in the result. Under
+AQE only a plan with no ``localCheckpoint`` at all stays lazy, so a head
+can only start at the seed, never resume after a counted level (a traced
+3-hop search with lazy checkpoints ran 15 jobs, counted 11).
 
 The loop-invariant edge frame is persisted once per call and unpersisted
 on exit, except in :func:`bfs_shortest_paths`, which checkpoints it for

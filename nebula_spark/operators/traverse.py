@@ -15,12 +15,12 @@ Reference implementations:
 Spark-first translation: a hop is a join of the frontier against the edge
 table. Every frontier search (BFS distances and paths, GET SUBGRAPH, MATCH
 var-len, GO) runs on one level loop, :func:`_counted_levels`, and every
-vertex-state algorithm on one superstep loop, :func:`_vertex_rounds`. GO
-starts the loop with a lazy head: its first two levels are one plain plan
-with no job, so a 1- or 2-step GO runs only when collected. MATCH var-len
-and the minimal-path searches of ``paths.py`` extend paths with one shared
-hop (:func:`_path_hop`). The reference's storage-side
-pushdowns (edge filter, per-vertex limit, dedup —
+vertex-state algorithm on one superstep loop, :func:`_vertex_rounds`. A
+range of at most two levels is the loop's lazy head, one plain plan with
+no job: a GO of 1 or 2 steps or a MATCH var-len of at most one hop runs
+only when collected. MATCH var-len and the minimal-path searches of
+``paths.py`` extend paths with one shared hop (:func:`_path_hop`). The
+reference's storage-side pushdowns (edge filter, per-vertex limit, dedup —
 ``storage.thrift:140-158``) become: filter *before* the join
 (Catalyst pushes it into the parquet scan), window row_number per src for
 per-vertex limits, ``select(src,dst).distinct()`` for dst-only frontiers.
@@ -144,15 +144,18 @@ def _counted_levels(seed: DataFrame, step, max_levels: int | None,
                     shuffle_rows=None, lazy_levels: int = 0
                     ) -> Iterator[tuple[DataFrame, int | None]]:
     """The level loop of every frontier search: yields each level, seed
-    first, with its row count. The first ``lazy_levels`` levels (the seed
-    is level 0) chain into one plain plan and are yielded with count
-    ``None``: no checkpoint, no job. Every later level is materialized
-    and counted in one job (:func:`checkpoint_count`), run when the
-    caller pulls that level. Only a plan with no ``localCheckpoint`` at
-    all stays lazy under AQE, so the lazy levels form a head and never
-    follow a counted one. The loop stops after an empty level or at
-    level ``max_levels`` (``None``: only on an empty one), and a caller
-    may stop pulling sooner, or pull two searches in turn.
+    first, with its row count, each materialized and counted in one job
+    (:func:`checkpoint_count`) when the caller pulls it. A range that
+    fits in ``lazy_levels`` levels (``max_levels < lazy_levels``; the seed
+    is level 0) is a lazy head instead: one plain plan, yielded with
+    count ``None``, with no checkpoint and no job. The head is all or
+    nothing: under AQE only a plan with no ``localCheckpoint`` stays
+    lazy, so a head cannot follow a counted level, and a head that
+    counted levels follow runs twice, in the first checkpoint job and
+    again when the caller collects rows read from it. The loop stops
+    after an empty level or at level ``max_levels`` (``None``: only on
+    an empty one), and a caller may stop pulling sooner, or pull two
+    searches in turn.
     ``step(frontier, levels)`` builds level ``len(levels)`` lazily from
     the last level, broadcast while it has at most ``broadcast_rows``
     rows (:func:`_broadcast_small`). ``shuffle_rows(counts)``, if given,
@@ -161,8 +164,9 @@ def _counted_levels(seed: DataFrame, step, max_levels: int | None,
     levels: list[DataFrame] = []
     counts: list[int | None] = []
     frontier, n = seed, None
+    lazy = max_levels is not None and max_levels < lazy_levels
     while True:
-        if len(levels) >= lazy_levels:
+        if not lazy:
             with sized_superstep(seed.sparkSession, shuffle_rows(counts)) \
                     if shuffle_rows and levels else nullcontext():
                 frontier, n = checkpoint_count(frontier)
@@ -294,12 +298,14 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
 
     Adds a ``step`` column. Scale notes: the frontier is deduped every hop
     (dst-only GetDstBySrc shape). The frontiers 0 to ``max_steps - 1``
-    come from the level loop (:func:`_counted_levels`) with a lazy head of
-    two levels, and the hop rows stay lazy. So a 1- or 2-step range is
-    one plan with no job: step 1 broadcasts the (caller-bounded) seed
-    frontier, step 2 leaves the join strategy to AQE, whose runtime stats
-    broadcast a small one anyway. A longer range counts each later
-    frontier and skips the last hop once one comes back empty.
+    come from the level loop (:func:`_counted_levels`), and the hop rows
+    stay lazy. A 1- or 2-step range fits in the loop's lazy head of two
+    levels, so it is one plan with no job: step 1 broadcasts the
+    (caller-bounded) seed frontier, step 2 leaves the join strategy to
+    AQE, whose runtime stats broadcast a small one anyway. A longer range
+    counts every frontier, the seed too, broadcasts those with at most
+    :data:`BROADCAST_FRONTIER_ROWS` rows, and skips the last hop once one
+    comes back empty.
 
     ``edges`` may be a list with one edge table per step (GO ... OVER a
     schedule of edge types): hop *k* then joins only its own table instead
@@ -353,6 +359,8 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
             results.append(rows.withColumn("step", F.lit(step)))
         return rows
 
+    # the seed's broadcast hint reaches only a lazy head's plan: a
+    # counted seed is checkpointed, which drops it, and probed by count
     levels, counts = zip(*_counted_levels(
         F.broadcast(seed),
         lambda f, levels: hop(f, len(levels))
@@ -465,10 +473,12 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
     of ``paths.bfs_min_paths``: the same seed, hop (:func:`_path_hop`,
     whose uniqueness filter is a JVM-side ``array_contains``, no UDF) and
     output shaping on the level loop (:func:`_counted_levels`), with no
-    visited set. The zero-hop paths and each hop's paths are checkpointed
-    and counted in one job, and the walk stops once edge-uniqueness
-    empties the frontier or at ``max_hops``. Path rows are never
-    broadcast: the join leaves them to AQE.
+    visited set. A range of at most one hop (``*0..1``, ``*1``, and both
+    halves of an ``all_paths`` of up to 2 hops) is the loop's lazy head:
+    one plan with no job. In a longer range the zero-hop paths and each
+    hop's paths are checkpointed and counted in one job, and the walk
+    stops once edge-uniqueness empties the frontier or at ``max_hops``.
+    Path rows are never broadcast: the join leaves them to AQE.
 
     ``max_hops=None`` is the reference's open-ended range (`[e*]` /
     `[e*m..]` — parser.yy match_step_range, MatchStepRange.h default max
@@ -487,14 +497,14 @@ def traverse(edges: DataFrame, start: DataFrame, min_hops: int = 1,
     """
     props = tuple(prop_cols or ())
     e = _prep_oriented(edges, direction, edge_filter, self_loop_once, props)
-    # no lazy head (lazy_levels=0), kept by an A/B (8 interleaved process
-    # pairs, medians of 3 calls, 4 cores): a head of 2 took sf0.1
-    # `paths_query` from 12 jobs to 6 (2.16 → 1.96 s) but slowed `*1..3`
-    # MATCH on the nba test fixture from 3.03 to 3.84 s (slower in 8 of
-    # 8 pairs): the lazy levels run again when the result is collected
+    # A/B of the head (8 interleaved process pairs, medians of 3 calls,
+    # 4 cores): sf0.1 `paths_query` (two 0..1-hop halves) 12 → 6 jobs,
+    # 1.80 → 1.56 s (faster in 7 of 8 pairs); a longer range, too long
+    # for the head, runs as before (`*1..3` MATCH: 15 jobs both sides)
     levels, _ = zip(*_counted_levels(
         _path_seed(start, _path_struct_type(e, props)),
-        lambda f, _: _path_hop(f, e, props), max_hops, broadcast_rows=0))
+        lambda f, _: _path_hop(f, e, props), max_hops, broadcast_rows=0,
+        lazy_levels=2))
     return _path_rows(levels, min_hops)
 
 

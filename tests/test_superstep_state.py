@@ -155,10 +155,10 @@ def _checkpoint_jobs(spark, jobs):
 
 
 def test_level_loop_lazy_head_starts_no_job(spark):
-    """The level loop's lazy head: GO to 2 steps builds one plan and
-    starts no job. Every level after the head is counted with one
-    checkpoint job, and nothing else checkpoints; MATCH var-len expansion
-    (both halves of ALL PATH too) has no head and counts every level."""
+    """The level loop's lazy head: GO to 2 steps, MATCH to 1 hop and ALL
+    PATH to 2 hops each build one plan and start no job. A longer range
+    has no head: every level is counted with one checkpoint job, and
+    nothing else checkpoints."""
     from nebula_spark.operators import all_paths, go
     from nebula_spark.operators.traverse import traverse
     from nebula_spark.session import local_frame
@@ -172,22 +172,44 @@ def test_level_loop_lazy_head_starts_no_job(spark):
         return local_frame(spark, [(v,) for v in vids], f"{VID} long")
 
     roots = src([0, 5, 30])
-    # (name, call, checkpoint jobs): GO's head is frontiers 0 and 1, and
-    # frontiers 0..max_steps-1 feed its hops
+    # (name, call, checkpoint jobs): frontiers 0..max_steps-1 feed GO's
+    # hops, and the head holds two of them
     calls = [(f"go-{lo}-{hi}", lambda lo=lo, hi=hi: go(edges, roots, lo, hi),
-              max(0, hi - 2)) for lo, hi in ((1, 1), (2, 2), (1, 2), (1, 5))]
+              hi if hi > 2 else 0)
+             for lo, hi in ((1, 1), (2, 2), (1, 2), (1, 5))]
     calls += [(f"match-{lo}-{hi}",
-               lambda lo=lo, hi=hi: traverse(edges, roots, lo, hi), hi + 1)
-              for lo, hi in ((0, 1), (1, 5))]
+               lambda lo=lo, hi=hi: traverse(edges, roots, lo, hi),
+               hi + 1 if hi > 1 else 0) for lo, hi in ((0, 1), (1, 5))]
     # ALL PATH to 2 hops: two traversals of 0..1 hops, one per end
     calls.append(("all-paths-2",
-                  lambda: all_paths(edges, roots, src([3, 33]), 2), 4))
+                  lambda: all_paths(edges, roots, src([3, 33]), 2), 0))
     for name, fn, levels in calls:
         with _job_ids(spark, f"lazy-head-{name}") as jobs:
             fn()
         assert len(_checkpoint_jobs(spark, jobs)) == levels, (name, jobs)
         if not levels:
             assert jobs == [], name
+
+
+def test_go_counted_seed_is_broadcast_by_size(spark, monkeypatch):
+    """Only GO's lazy head broadcasts the seed unconditionally. A range of
+    3 or more steps counts the seed and broadcasts it only when it has at
+    most BROADCAST_FRONTIER_ROWS rows, so a large piped input is never
+    forced into a broadcast."""
+    from nebula_spark.operators import go
+    from nebula_spark.operators import traverse
+
+    edges = _edges(spark, EDGES)
+    roots = _sources(spark, [0, 5, 30])
+
+    def broadcasts(steps):
+        plan = go(edges, roots, 1, steps)._jdf.queryExecution().analyzed()
+        return "strategy=broadcast" in plan.toString()
+
+    assert broadcasts(2) and broadcasts(3)
+    monkeypatch.setattr(traverse, "BROADCAST_FRONTIER_ROWS", 2)
+    assert broadcasts(2)            # the head's seed is caller-bounded
+    assert not broadcasts(3)
 
 
 def test_sized_superstep_scopes_width_and_aqe(spark):
