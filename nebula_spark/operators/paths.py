@@ -59,8 +59,8 @@ from pyspark.sql.window import Window
 
 from nebula_spark.catalog import DST, SRC, VID
 from nebula_spark.operators.traverse import (
-    BROADCAST_FRONTIER_ROWS, _broadcast_small, _counted_levels, _path_hop,
-    _path_rows, _path_seed, _path_struct_type, _prep_oriented,
+    BROADCAST_FRONTIER_ROWS, _broadcast_small, _counted_levels, _edge_key,
+    _path_hop, _path_rows, _path_seed, _path_struct_type, _prep_oriented,
     _vertex_rounds, checkpoint_count, oriented, traverse,
 )
 
@@ -325,13 +325,9 @@ def _flip_path(col: Column) -> Column:
 
 def _edges_unique(col: Column) -> Column:
     """openCypher relationship-uniqueness over a whole path column:
-    no underlying edge twice, where identity is direction-normalized
-    ((a,b,e,r) == (b,a,-e,r), Edge.cpp:128-136 keyEqual)."""
-    canon = F.transform(col, lambda x: F.struct(
-        F.when(x["t"] == 1, x["s"]).otherwise(x["d"]).alias("a"),
-        F.when(x["t"] == 1, x["d"]).otherwise(x["s"]).alias("b"),
-        x["r"].alias("r"), x["et"].alias("et")))
-    return F.size(F.array_distinct(canon)) == F.size(col)
+    no underlying edge (:func:`_edge_key`) twice."""
+    return F.size(F.array_distinct(F.transform(col, _edge_key))) \
+        == F.size(col)
 
 
 def _bidir_search(sources: DataFrame, targets: DataFrame, direction: str,

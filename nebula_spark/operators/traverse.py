@@ -215,7 +215,7 @@ def oriented(edges: DataFrame, direction: str = "out",
     results keep edge identity.
 
     ``self_loop_once``: in BOTH mode a self-loop's out and in orientations
-    normalize to the same edge identity (``Edge.cpp keyEqual``), and MATCH
+    normalize to the same edge identity (:func:`_edge_key`), and MATCH
     expansion yields it once (SelfReflectiveEdges.feature) — drop the
     reversed copy. GO BIDIRECT keeps both rows (per-direction adjacency
     entries), so it stays opt-in.
@@ -379,14 +379,32 @@ def go(edges: DataFrame | list[DataFrame], start: DataFrame, min_steps: int = 1,
 def _edge_id(reversed_: bool = False, props=()) -> Column:
     """The path struct ``(s, d, r, t, et, *props)`` of an oriented edge
     row. ``reversed_`` gives the same underlying edge seen from the other
-    orientation: reference edge equality is direction-normalized
-    ((a,b,e,r) == (b,a,-e,r), Edge.cpp:128-136 keyEqual), so uniqueness
-    checks both images."""
+    orientation (:func:`_edge_key`), so uniqueness checks both images."""
     s, d = (DST, SRC) if reversed_ else (SRC, DST)
     t = -F.col("_dir") if reversed_ else F.col("_dir")
     return F.struct(F.col(s).alias("s"), F.col(d).alias("d"),
                     F.col(RANK).alias("r"), t.alias("t"),
                     F.col("_etype").alias("et"), *map(F.col, props))
+
+
+def _edge_key(hop: Column | str = "") -> Column:
+    """The identity of an edge: the struct ``(s, d, r, et)`` in its STORED
+    orientation. Two edges are equal when source, destination, rank and
+    type match as stored (``Edge::keyEqual``, Edge.cpp:128-136), however
+    each was traversed: a hop read against its stored direction (``t`` or
+    ``_dir`` of -1) swaps its endpoints back. ``hop`` is a path struct
+    ``(s, d, r, t, et, …)`` (:func:`_edge_id`), or the column prefix of
+    an oriented edge row ``{hop}_src, _dst, _rank, _dir, _etype``
+    (:func:`oriented`; ``""`` for the unprefixed row)."""
+    if isinstance(hop, str):
+        s, d, r, t, et = (F.col(hop + c)
+                          for c in (SRC, DST, RANK, "_dir", "_etype"))
+    else:
+        s, d, r, t, et = (hop[f] for f in ("s", "d", "r", "t", "et"))
+    fwd = t == 1
+    return F.struct(F.when(fwd, s).otherwise(d).alias("s"),
+                    F.when(fwd, d).otherwise(s).alias("d"),
+                    r.alias("r"), et.alias("et"))
 
 
 def _prep_oriented(edges: DataFrame, direction: str,

@@ -23,6 +23,7 @@ import contextlib
 import dataclasses
 import os
 import re
+from functools import reduce
 from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame
@@ -36,8 +37,8 @@ from nebula_spark.operators import go, k_hop_subgraph
 from nebula_spark.operators.paths import (all_paths, bfs_min_paths,
                                           bfs_shortest_paths, bidir_distances,
                                           bidir_min_paths)
-from nebula_spark.operators.traverse import (_path_struct_type, oriented,
-                                             traverse)
+from nebula_spark.operators.traverse import (_edge_key, _path_struct_type,
+                                             oriented, traverse)
 from nebula_spark.plans import ngql as A
 from nebula_spark.session import local_frame
 
@@ -1884,9 +1885,7 @@ def _exec_go(space: GraphSpace, st: A.GoStmt, piped: DataFrame | None,
                     # REVERSELY src(edge) is the stored source, not the
                     # traversal origin (GoYieldVertexEdge.feature "edge
                     # type": Dejounte→Russell stays src=Dejounte)
-                    fwd = F.col("_dir") != -1
-                    a, b = (SRC, DST) if fn == "src" else (DST, SRC)
-                    return F.when(fwd, F.col(a)).otherwise(F.col(b))
+                    return _edge_key()["s" if fn == "src" else "d"]
             if key in ("src_vert", "dst_vert"):
                 side = SRC if key == "src_vert" else DST
                 if fn == "id":
@@ -1904,14 +1903,8 @@ def _exec_go(space: GraphSpace, st: A.GoStmt, piped: DataFrame | None,
             raise ValueError(f"unresolvable graph_fn {fn} {key}")
         if kind == "name":
             n = args[0]
-            if n == "edge":          # bare edge — the edge value in its
-                # STORED orientation (repo struct convention s, d, r, et)
-                fwd = F.col("_dir") != -1
-                return F.struct(
-                    F.when(fwd, F.col(SRC)).otherwise(F.col(DST)).alias("s"),
-                    F.when(fwd, F.col(DST)).otherwise(F.col(SRC)).alias("d"),
-                    F.col(RANK).alias("r"),
-                    F.col("_etype").alias("et"))
+            if n == "edge":          # bare edge — the edge value
+                return _edge_key()
             if n not in hop.columns:
                 # a bare label is never a column ref in GO YIELD
                 # (LabelExpr.feature): the reference's SemanticError
@@ -2402,6 +2395,43 @@ def _find_path_where(space: GraphSpace, names: list[str],
     return ExprCompiler(resolve).col(where)
 
 
+def _path_edge_props(space: GraphSpace, p: DataFrame, names: list[str],
+                     payload, fields: list[Column]
+                     ) -> tuple[DataFrame, DataFrame]:
+    """The explode → identity join → regroup that resolves path props at
+    result-shaping time (SCALE.md: frontiers stay identity-only). Returns
+    ``p`` with a row id ``_pid``, checkpointed so the id is materialized
+    once, and ``(_pid, _path2)`` rows: ``p``'s ``path`` with ``fields``
+    appended to each hop struct. ``fields`` read the ``payload(e)``
+    columns of the row of edge table ``e`` (one per name in ``names``)
+    that has the hop's identity (:func:`_edge_key`), NULL when none has;
+    a path with no hop gets no row."""
+    lut = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [e.select(F.col(SRC).alias("_ls"), F.col(DST).alias("_ld"),
+                  F.col(RANK).alias("_lr"), F.lit(n).alias("_let"),
+                  *payload(e))
+         for n, e in ((n, space.edge(n)) for n in names)])
+    p = (p.withColumn("_pid", F.monotonically_increasing_id())
+         .localCheckpoint(eager=True))
+    hop, key = F.col("_e"), _edge_key(F.col("_e"))
+    on = reduce(Column.__and__,
+                [key[f] == F.col(f"_l{f}") for f in ("s", "d", "r", "et")])
+    je = (p.select("_pid", F.posexplode("path").alias("_pos", "_e"))
+          .join(lut, on, "left")
+          .select("_pid", F.struct(
+              F.col("_pos").alias("i"),
+              F.struct(*[hop[f].alias(f) for f in ("s", "d", "r", "t", "et")],
+                       *fields).alias("e")).alias("_pe")))
+    # array_sort needs an explicit index comparator: a hop struct may
+    # carry a MAP (unorderable type)
+    by_i = lambda l, r: (F.when(l["i"] < r["i"], -1)  # noqa: E731
+                         .when(l["i"] > r["i"], 1).otherwise(0))
+    return p, je.groupBy("_pid").agg(
+        F.transform(F.array_sort(F.collect_list("_pe"), by_i),
+                    lambda x: x["e"]).alias("_path2"))
+
+
 def _path_value_frame(space: GraphSpace, p: DataFrame, names: list[str],
                       alias: str, with_prop: bool) -> DataFrame:
     """Shape ``(start_vid, end_vid, hops, path)`` rows into the
@@ -2430,50 +2460,18 @@ def _path_value_frame(space: GraphSpace, p: DataFrame, names: list[str],
 
     empty_map = F.map_from_arrays(F.array().cast("array<string>"),
                                   F.array().cast("array<string>"))
-    # the frame is re-read by three branches (edge join, vertex join,
-    # final join-back) — checkpoint AFTER assigning the row id so the id
-    # is materialized once, not recomputed per branch
-    p = (p.withColumn("_pid", F.monotonically_increasing_id())
-         .localCheckpoint(eager=True))
 
-    # edge prop maps keyed by STORED identity (type, src, dst, rank) —
-    # a reverse-traversed step (t == -1) stores (d, s)
-    lut = None
-    for n in names:
-        e = space.edge(n)
-        props = sorted(c for c in e.columns if c not in (SRC, DST, RANK))
+    def edge_map(e: DataFrame) -> list[Column]:
         pairs: list[Column] = []
-        for c in props:
+        for c in sorted(c for c in e.columns if c not in (SRC, DST, RANK)):
             pairs += [F.lit(c), _render(F.col(c), e.schema[c].dataType)]
-        part = e.select(
-            F.lit(n).alias("_lt"), F.col(SRC).alias("_ls"),
-            F.col(DST).alias("_ld"), F.col(RANK).alias("_lr"),
-            (F.create_map(*pairs) if pairs else empty_map).alias("_lp"))
-        lut = part if lut is None else lut.unionByName(part)
+        return [(F.create_map(*pairs) if pairs else empty_map).alias("_lp")]
 
-    ex = p.select("_pid", F.posexplode("path").alias("_pos", "_e"))
-    fwd = F.col("_e")["t"] >= 0
-    ss = F.when(fwd, F.col("_e")["s"]).otherwise(F.col("_e")["d"])
-    sd = F.when(fwd, F.col("_e")["d"]).otherwise(F.col("_e")["s"])
-    je = (ex.join(lut, (F.col("_e")["et"] == F.col("_lt"))
-                  & (ss == F.col("_ls")) & (sd == F.col("_ld"))
-                  & (F.col("_e")["r"] == F.col("_lr")), "left")
-          .select("_pid", F.struct(
-              F.col("_pos").alias("i"),
-              F.struct(F.col("_e")["s"].alias("s"),
-                       F.col("_e")["d"].alias("d"),
-                       F.col("_e")["r"].alias("r"),
-                       F.col("_e")["t"].alias("t"),
-                       F.col("_e")["et"].alias("et"),
-                       F.coalesce(F.col("_lp"), empty_map).alias("props"))
-              .alias("e")).alias("_pe")))
-    # array_sort needs an explicit index comparator: the element struct
-    # carries a MAP (unorderable type)
-    by_i = lambda l, r: (F.when(l["i"] < r["i"], -1)  # noqa: E731
-                         .when(l["i"] > r["i"], 1).otherwise(0))
-    pe = je.groupBy("_pid").agg(
-        F.transform(F.array_sort(F.collect_list("_pe"), by_i),
-                    lambda x: x["e"]).alias("_path2"))
+    # the frame is re-read by three branches (edge join, vertex join,
+    # final join-back), so the helper materializes its row id once
+    p, pe = _path_edge_props(
+        space, p, names, edge_map,
+        [F.coalesce(F.col("_lp"), empty_map).alias("props")])
 
     # vertex tag suffixes " :tag{k: v}" per vid, tags in sorted order
     vlut = None
@@ -2714,21 +2712,13 @@ def _exec_subgraph(space: GraphSpace, st: A.SubgraphStmt,
     # BOTH orientation sweep would otherwise re-collect the reversed copy
     # a round later.
     from pyspark.sql.window import Window
-    fwd = F.col("_dir") != -1
-    e2 = collected.select(
-        F.when(fwd, F.col(SRC)).otherwise(F.col(DST)).alias("_cs"),
-        F.when(fwd, F.col(DST)).otherwise(F.col(SRC)).alias("_cd"),
-        F.col(RANK).alias("_cr"), F.col("_etype").alias("_cet"),
-        F.col("step"))
-    w = Window.partitionBy("_cs", "_cd", "_cr", "_cet").orderBy("step")
+    e2 = collected.select(_edge_key().alias("_ck"), F.col("step"))
+    w = Window.partitionBy("_ck").orderBy("step")
     e2 = (e2.withColumn("_rn", F.row_number().over(w))
           .filter(F.col("_rn") == 1)
           .withColumn("_lvl", F.col("step") - 1))
     erows = e2.groupBy("_lvl").agg(
-        F.sort_array(F.collect_list(F.struct(
-            F.col("_cs").alias("s"), F.col("_cd").alias("d"),
-            F.col("_cr").alias("r"), F.col("_cet").alias("et"))))
-        .alias("_edges"))
+        F.sort_array(F.collect_list("_ck")).alias("_edges"))
     vrows = verts.groupBy(F.col("step").alias("_lvl")).agg(
         F.sort_array(F.collect_list(VID)).alias("_nodes"))
     out = vrows.join(erows, "_lvl", "left")
@@ -3012,16 +3002,7 @@ def _bind_tag(space: GraphSpace, alias: str, tag: str | None) -> DataFrame:
     lazily via ``_ensure_tag_props``. The union+agg is one shuffle over
     vertex ids; WHERE id(n) filters push into each branch's scan."""
     if tag is None:
-        u = None
-        for tname in space.tags:
-            part = space.tag(tname).select(
-                F.col(VID).alias(f"{alias}___vid"), F.lit(tname).alias("_t"))
-            u = part if u is None else u.unionByName(part)
-        if u is None:
-            raise ValueError("space has no tags")
-        return (u.groupBy(f"{alias}___vid")
-                .agg(F.array_sort(F.collect_set("_t"))
-                     .alias(f"{alias}___labels")))
+        return _vertex_labels(space, f"{alias}___vid", f"{alias}___labels")
     t = space.tag(tag)
     return t.select(F.col(VID).alias(f"{alias}___vid"),
                     F.array(F.lit(tag)).alias(f"{alias}___labels"),
@@ -3033,22 +3014,44 @@ _NUM_DTYPES = ("tinyint", "smallint", "int", "bigint",
                "float", "double", "decimal")
 
 
-def _pattern_prop_eq(df: DataFrame, col: str, v) -> Column:
-    """Type-strict `{prop: value}` pattern equality: the reference's
-    Value::equal never coerces across kinds, so `{likeness: "99"}` on an
-    INT prop matches NOTHING (match/Base.feature "filter evaluable"
-    line 803) where Spark's implicit cast would match 99. Numeric kinds
-    stay one family (42 == 42.0)."""
-    dt = dict(df.dtypes).get(col, "")
-    if isinstance(v, bool):
-        ok = dt == "boolean"
-    elif isinstance(v, (int, float)):
-        ok = dt.startswith(_NUM_DTYPES)
-    elif isinstance(v, str):
-        ok = dt == "string"
-    else:
-        ok = True
-    return (F.col(col) == F.lit(v)) if ok else F.lit(False)
+def _pattern_props(df: DataFrame, props: dict, prefix: str = ""
+                   ) -> DataFrame:
+    """``df`` narrowed by a pattern's ``{prop: value}`` map over its
+    ``{prefix}{prop}`` columns. Type-strict: the reference's Value::equal
+    never coerces across kinds, so `{likeness: "99"}` on an INT prop
+    matches NOTHING (match/Base.feature "filter evaluable" line 803)
+    where Spark's implicit cast would match 99; numeric kinds stay one
+    family (42 == 42.0). A prop with no column matches nothing either
+    (the reference's UNKNOWN_PROP, MatchCrash.feature); on a multi-type
+    edge union the types without it read NULL, which the equality drops
+    (RewriteEdgeFilter.feature)."""
+    dtypes = dict(df.dtypes) if props else {}
+    for k, v in props.items():
+        dt = dtypes.get(prefix + k)
+        if dt is None:
+            ok = False
+        elif isinstance(v, bool):
+            ok = dt == "boolean"
+        elif isinstance(v, (int, float)):
+            ok = dt.startswith(_NUM_DTYPES)
+        elif isinstance(v, str):
+            ok = dt == "string"
+        else:
+            ok = True
+        df = df.filter(F.col(prefix + k) == F.lit(v) if ok else F.lit(False))
+    return df
+
+
+def _vertex_labels(space: GraphSpace, vid: str, labels: str) -> DataFrame:
+    """``(vid, labels)`` rows: every vertex of the space with the sorted
+    names of ALL its tags (Vertex.h:62-70), one union and one aggregate
+    over vertex ids."""
+    parts = [space.tag(t).select(F.col(VID).alias(vid), F.lit(t).alias("_t"))
+             for t in space.tags]
+    if not parts:
+        raise ValueError("space has no tags")
+    return (reduce(DataFrame.unionByName, parts).groupBy(vid)
+            .agg(F.array_sort(F.collect_set("_t")).alias(labels)))
 
 
 def _ensure_tag_props(space: GraphSpace, cur: DataFrame, exprs: list,
@@ -3071,12 +3074,18 @@ def _ensure_tag_props(space: GraphSpace, cur: DataFrame, exprs: list,
             _walk(e, {"edge_prop"}, trefs)
     refs += [("_", r[1], r[2]) for r in trefs
              if r[1] in tagmap and r[2] in space.tags]
+
+    def join_tag(cur: DataFrame, a: str, t: str, key: str) -> DataFrame:
+        td = space.tag(t)
+        sel = td.select(*[F.col(c).alias(f"{a}___t_{t}__{c}")
+                          for c in td.columns])
+        return cur.join(sel, cur[key] == sel[f"{a}___t_{t}___vid"], "left")
     dtypes = None
     for a, t in sorted({(r[1], r[2]) for r in refs}):
         if t not in space.tags or f"{a}___t_{t}___vid" in cur.columns:
             continue
         if a in tagmap and tagmap.get(a) != t and f"{a}___vid" in cur.columns:
-            key = cur[f"{a}___vid"]
+            key = f"{a}___vid"
         elif a not in tagmap and a in cur.columns:
             # a plain vid-valued column — `UNWIND nodes(p) AS ua0` then
             # `ua0.tag.prop` (Attribute1.feature over ngdata): nodes()
@@ -3087,13 +3096,10 @@ def _ensure_tag_props(space: GraphSpace, cur: DataFrame, exprs: list,
                 dtypes = dict(cur.dtypes)
             if dtypes[a].startswith(("struct", "map", "array")):
                 continue
-            key = cur[a]
+            key = a
         else:
             continue
-        td = space.tag(t)
-        sel = td.select(*[F.col(c).alias(f"{a}___t_{t}__{c}")
-                          for c in td.columns])
-        cur = cur.join(sel, key == sel[f"{a}___t_{t}___vid"], "left")
+        cur = join_tag(cur, a, t, key)
     # labels()/tags() must report EVERY tag on the vertex (Vertex.h:62-70;
     # MatchNodeLabelFilter.feature: a :bachelor-bound Tim Duncan is
     # ["bachelor","player"]). Tag binding stores only the declared tag;
@@ -3120,12 +3126,7 @@ def _ensure_tag_props(space: GraphSpace, cur: DataFrame, exprs: list,
         for t in sorted(space.tags):
             if t == tagmap.get(a) or f"{a}___t_{t}___vid" in cur.columns:
                 continue
-            td = space.tag(t)
-            sel = td.select(*[F.col(c).alias(f"{a}___t_{t}__{c}")
-                              for c in td.columns])
-            cur = cur.join(sel,
-                           cur[f"{a}___vid"] == sel[f"{a}___t_{t}___vid"],
-                           "left")
+            cur = join_tag(cur, a, t, f"{a}___vid")
     for a in sorted(lbl_aliases):
         col = f"{a}___labels"
         if f"{a}___vid" not in cur.columns:
@@ -3134,14 +3135,7 @@ def _ensure_tag_props(space: GraphSpace, cur: DataFrame, exprs: list,
             continue                    # tagless bind already carries all
         if tagmap.get(a) is not None and col not in cur.columns:
             continue                    # not a node bind (edge alias etc.)
-        u = None
-        for tname in space.tags:
-            part = space.tag(tname).select(
-                F.col(VID).alias(f"{a}___lv"), F.lit(tname).alias("_t"))
-            u = part if u is None else u.unionByName(part)
-        full = (u.groupBy(f"{a}___lv")
-                .agg(F.array_sort(F.collect_set("_t"))
-                     .alias(f"{a}___flbl")))
+        full = _vertex_labels(space, f"{a}___lv", f"{a}___flbl")
         cur = (cur.drop(col)
                .join(full, cur[f"{a}___vid"] == full[f"{a}___lv"], "left")
                .withColumnRenamed(f"{a}___flbl", col)
@@ -3156,53 +3150,29 @@ def _enrich_min_paths_props(space: GraphSpace, tr: DataFrame,
     structs AT RESULT-SHAPING TIME — the lazy half of the path-prop
     design (SCALE.md): BFS frontiers never widen; only the minimal
     result paths (already per-pair-pruned, orders of magnitude smaller
-    than any intermediate frontier) pay the explode → edge-table join →
-    regroup. ``tr``: (start_vid, end_vid, hops, path ≥1 edge)."""
-    lut = None
-    for n in enames:
-        e = space.edge(n)
-        keep = [c for c in e.columns
-                if c not in (SRC, DST, RANK) and c in prop_names]
-        part = e.select(F.lit(n).alias("_lt"), F.col(SRC).alias("_ls"),
-                        F.col(DST).alias("_ld"), F.col(RANK).alias("_lr"),
-                        *[F.col(c) for c in keep])
-        lut = part if lut is None else lut.unionByName(
-            part, allowMissingColumns=True)
-    # the id must be materialized once — three plan branches re-read it
-    tr = (tr.withColumn("_rid", F.monotonically_increasing_id())
-          .localCheckpoint(eager=True))
-    ex = tr.select("_rid", F.posexplode("path").alias("_pos", "_e"))
-    fwd = F.col("_e")["t"] >= 0
-    ss = F.when(fwd, F.col("_e")["s"]).otherwise(F.col("_e")["d"])
-    sd = F.when(fwd, F.col("_e")["d"]).otherwise(F.col("_e")["s"])
-    je = (ex.join(lut, (F.col("_e")["et"] == F.col("_lt"))
-                  & (ss == F.col("_ls")) & (sd == F.col("_ld"))
-                  & (F.col("_e")["r"] == F.col("_lr")), "left")
-          .select("_rid", F.struct(
-              F.col("_pos").alias("i"),
-              F.struct(F.col("_e")["s"].alias("s"),
-                       F.col("_e")["d"].alias("d"),
-                       F.col("_e")["r"].alias("r"),
-                       F.col("_e")["t"].alias("t"),
-                       F.col("_e")["et"].alias("et"),
-                       *[F.col(c) for c in prop_names]).alias("e"))
-              .alias("_pe")))
-    pe = je.groupBy("_rid").agg(
-        F.transform(F.array_sort(F.collect_list("_pe")),
-                    lambda x: x["e"]).alias("_p2"))
-    return (tr.join(pe, "_rid", "inner")   # min_hops >= 1 ⇒ path non-empty
+    than any intermediate frontier) pay the explode → identity join →
+    regroup (:func:`_path_edge_props`). ``tr``: (start_vid, end_vid,
+    hops, path ≥1 edge)."""
+    tr, pe = _path_edge_props(
+        space, tr, enames,
+        lambda e: [F.col(c) for c in e.columns
+                   if c not in (SRC, DST, RANK) and c in prop_names],
+        [F.col(c) for c in prop_names])
+    return (tr.join(pe, "_pid", "inner")   # min_hops >= 1 ⇒ path non-empty
             .select("start_vid", "end_vid", "hops",
-                    F.col("_p2").alias("path")))
+                    F.col("_path2").alias("path")))
 
 
 def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
                    seed: DataFrame | None = None,
                    lazy_path_props: bool = False,
                    path_struct_unused: bool = False
-                   ) -> tuple[DataFrame, set[str]]:
-    """One pattern chain → DataFrame with alias-prefixed columns + the set
-    of node aliases it binds (the Traverse/AppendVertices emission,
-    TraverseExecutor.cpp:25-676 / AppendVerticesExecutor.cpp:18-317).
+                   ) -> tuple[DataFrame, set[str], set[str], set[str],
+                              dict[str, str | None]]:
+    """One pattern chain → DataFrame with alias-prefixed columns, plus the
+    node, edge and path aliases it binds and each node alias's tag (the
+    Traverse/AppendVertices emission, TraverseExecutor.cpp:25-676 /
+    AppendVerticesExecutor.cpp:18-317).
 
     ``lazy_path_props``: the statement reads prop fields off path
     relationships, so BFS-routed shortest segments — whose frontiers stay
@@ -3227,35 +3197,51 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
                 and path.nodes[0].alias == path.nodes[1].alias):
             raise ValueError("The shortest path algorithm does not work "
                              "when the start and end nodes are the same")
-    def _apply_extra_tags(cur: DataFrame, node, key: str) -> DataFrame:
-        """Additional ``:tag{props}`` items of a multi-tag node pattern
-        (Scan.feature ``(v:person{name:"Mary"}:teacher)``): each narrows
-        the binding via a vid semi-join against that tag's table, its
-        prop map filtering that tag's own columns — broadcast-able
-        semi-joins, no column bloat on the pattern frame."""
+    aliases: set[str] = set()
+    edge_aliases: set[str] = set()
+    tags: dict[str, str | None] = {}
+
+    def tag_semi(cur: DataFrame, tag: str, props: dict, key: str
+                 ) -> DataFrame:
+        tt = _pattern_props(space.tag(tag), props)
+        tt = tt.select(F.col(VID).alias("_mt_vid"))
+        return cur.join(tt, cur[key] == tt["_mt_vid"], "left_semi")
+
+    def bind_node(cur: DataFrame | None, node, alias: str,
+                  end: str | None) -> DataFrame:
+        """``cur`` with the pattern node ``node`` bound as ``alias``: the
+        start node (``end`` is None) binds its tag's table, or the outer
+        frame's ``seed`` vids when untagged; a later node binds the hop's
+        ``end`` column, and a re-used alias is a same-vertex constraint on
+        its binding (RedefinedNode.feature; openCypher node identity),
+        narrowed by its tag. Then its ``{prop: value}`` map, and each
+        additional ``:tag{props}`` item of a multi-tag node (Scan.feature
+        ``(v:person{name:"Mary"}:teacher)``); tags narrow by broadcast-able
+        vid semi-joins, with no column bloat on the pattern frame."""
+        key = f"{alias}___vid"
+        if end is None and node.tag is None and seed is not None:
+            cur = seed                  # pre-bound vids from the outer frame
+        elif end is None:
+            cur = _bind_tag(space, alias, node.tag)
+        elif alias in aliases:
+            cur = cur.filter(F.col(end) == F.col(key))
+            if node.tag:
+                cur = tag_semi(cur, node.tag, {}, key)
+        elif node.tag:
+            tt = _bind_tag(space, alias, node.tag)
+            cur = cur.join(tt, cur[end] == tt[key], "inner")
+        else:
+            cur = cur.withColumn(key, F.col(end))
+        if alias not in aliases:
+            aliases.add(alias)
+            tags[alias] = node.tag
+        cur = _pattern_props(cur, node.props, f"{alias}__")
         for tg, pm in getattr(node, "extra", ()) or ():
-            tt = space.tag(tg)
-            for k, v in pm.items():
-                tt = tt.filter(F.col(k) == v) if k in tt.columns \
-                    else tt.filter(F.lit(False))
-            tt = tt.select(F.col(VID).alias("_mt_vid"))
-            cur = cur.join(tt, cur[key] == tt["_mt_vid"], "left_semi")
+            cur = tag_semi(cur, tg, pm, key)
         return cur
 
-    n0 = path.nodes[0]
-    a0 = n0.alias or fresh("n")
-    aliases = {a0}
-    edge_aliases: set[str] = set()
-    tags: dict[str, str | None] = {a0: n0.tag}
-    if n0.tag is None and seed is not None:
-        cur = seed                      # pre-bound vids from the outer frame
-    else:
-        cur = _bind_tag(space, a0, n0.tag)
-    for k, v in n0.props.items():
-        # undeclared prop → no match (UNKNOWN_PROP, MatchCrash.feature)
-        cur = cur.filter(_pattern_prop_eq(cur, f"{a0}__{k}", v)) \
-            if f"{a0}__{k}" in cur.columns else cur.filter(F.lit(False))
-    cur = _apply_extra_tags(cur, n0, f"{a0}___vid")
+    a0 = path.nodes[0].alias or fresh("n")
+    cur = bind_node(None, path.nodes[0], a0, None)
 
     # per-hop path fragments for `p = (…)` bindings: each entry is an
     # array<struct(s,d,r,t,et,props…)> column expression over the final
@@ -3284,31 +3270,11 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
 
     path_parts: list = []
     hop_counts: list[Column] = []
-    # canonical edge ids per segment for openCypher relationship
-    # uniqueness ACROSS hops of one pattern (reference hasSameEdgeInPath,
-    # direction-normalized per Edge.cpp:128-136): struct (s,d,r,et) with
-    # s/d in the edge's stored orientation regardless of traversal
+    # edge identities (_edge_key) per segment for openCypher relationship
+    # uniqueness ACROSS hops of one pattern (reference hasSameEdgeInPath)
     canon_single: list[Column] = []
     canon_paths: list[Column] = []
     shortest_done = False  # set when a var-len segment BFS-routed shortest
-
-    def _canon_hop(ea: str) -> Column:
-        fwd = F.col(f"{ea}___dir") == 1
-        return F.struct(
-            F.when(fwd, F.col(f"{ea}___src")).otherwise(F.col(f"{ea}___dst"))
-            .alias("s"),
-            F.when(fwd, F.col(f"{ea}___dst")).otherwise(F.col(f"{ea}___src"))
-            .alias("d"),
-            F.col(f"{ea}___rank").alias("r"),
-            F.col(f"{ea}___etype").alias("et"))
-
-    def _canon_path(ea: str) -> Column:
-        return F.transform(
-            F.col(f"{ea}__path"),
-            lambda x: F.struct(
-                F.when(x["t"] == 1, x["s"]).otherwise(x["d"]).alias("s"),
-                F.when(x["t"] == 1, x["d"]).otherwise(x["s"]).alias("d"),
-                x["r"].alias("r"), x["et"].alias("et")))
 
     prev_alias = a0
     for me, mn in zip(path.edges, path.nodes[1:]):
@@ -3323,14 +3289,8 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
         if na in edge_aliases:
             raise ValueError(f"`{na}': Redefined alias")
         enames = me.types or list(space.edges)
-        edges = _edge_union(space, enames)
-        for k, v in me.props.items():    # inline {k: v} per-step edge filter
-            # a prop NO listed type declares can never match (the
-            # reference's UNKNOWN_PROP → no-match, MatchCrash.feature);
-            # on a multi-type union the other types read NULL, which the
-            # equality already drops (RewriteEdgeFilter.feature)
-            edges = edges.filter(_pattern_prop_eq(edges, k, v)) \
-                if k in edges.columns else edges.filter(F.lit(False))
+        # inline {k: v} per-step edge filter
+        edges = _pattern_props(_edge_union(space, enames), me.props)
         if me.min_hops == 1 and me.max_hops == 1 \
                 and not getattr(me, "var_len", False):
             # explicit `[e*1]` skips this single-hop fast path: the `*`
@@ -3354,7 +3314,7 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
                 F.col(f"{ea}___etype").alias("et"),
                 *_part_fields(seg_have, lambda p: F.col(f"{ea}__{p}")))))
             hop_counts.append(F.lit(1))
-            canon_single.append(_canon_hop(ea))
+            canon_single.append(_edge_key(f"{ea}__"))
         else:
             seeds = cur.select(
                 F.col(f"{prev_alias}___vid").alias(VID)).distinct()
@@ -3383,14 +3343,8 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
                     sp_targets = cur.select(
                         F.col(f"{na}___vid").alias(VID)).distinct()
                 elif mn.tag:
-                    tt = space.tag(mn.tag)
-                    for k, v in mn.props.items():
-                        # undeclared prop → no vertex matches
-                        # (UNKNOWN_PROP, MatchCrash.feature)
-                        tt = tt.filter(_pattern_prop_eq(tt, k, v)) \
-                            if k in tt.columns \
-                            else tt.filter(F.lit(False))
-                    sp_targets = tt.select(VID)
+                    sp_targets = _pattern_props(space.tag(mn.tag),
+                                                mn.props).select(VID)
                 # the reference never emits zero-length shortest paths:
                 # `[e*0]` and same-vid pairs under `*0..n` return nothing
                 # (AllShortestPaths.feature "zero step" + "same start and
@@ -3468,39 +3422,8 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
                                    x["et"].alias("et"),
                                    *_part_fields(have, lambda p: x[p]))))
             hop_counts.append(F.col(f"{ea}__hops"))
-            canon_paths.append(_canon_path(ea))
-        if na in aliases:
-            # re-used node alias within one pattern — a same-vertex
-            # constraint on the existing binding, NOT a re-bind
-            # (RedefinedNode.feature; openCypher node identity). A tag on
-            # the re-use narrows via a semi-join, leaving columns intact.
-            cur = cur.filter(F.col(end_col) == F.col(f"{na}___vid"))
-            if mn.tag:
-                tt = space.tag(mn.tag).select(F.col(VID).alias("_rd_vid"))
-                cur = cur.join(tt, cur[end_col] == tt["_rd_vid"],
-                               "left_semi")
-            for k, v in mn.props.items():
-                # undeclared prop → no match (UNKNOWN_PROP)
-                cur = cur.filter(_pattern_prop_eq(cur, f"{na}__{k}", v)) \
-                    if f"{na}__{k}" in cur.columns \
-                    else cur.filter(F.lit(False))
-            cur = _apply_extra_tags(cur, mn, end_col)
-        else:
-            if mn.tag:
-                tt = _bind_tag(space, na, mn.tag)
-                cur = cur.join(tt, cur[end_col] == tt[f"{na}___vid"],
-                               "inner")
-            else:
-                cur = cur.withColumn(f"{na}___vid", F.col(end_col))
-            for k, v in mn.props.items():
-                # undeclared prop → no match (UNKNOWN_PROP,
-                # MatchCrash.feature `{age: 102, in_service: false}`)
-                cur = cur.filter(_pattern_prop_eq(cur, f"{na}__{k}", v)) \
-                    if f"{na}__{k}" in cur.columns \
-                    else cur.filter(F.lit(False))
-            cur = _apply_extra_tags(cur, mn, f"{na}___vid")
-            aliases.add(na)
-            tags[na] = mn.tag
+            canon_paths.append(F.transform(F.col(f"{ea}__path"), _edge_key))
+        cur = bind_node(cur, mn, na, end_col)
         edge_aliases.add(ea)
         prev_alias = na
 
@@ -3519,7 +3442,6 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
         for j in range(i + 1, len(canon_paths)):
             cur = cur.filter(~F.arrays_overlap(canon_paths[i],
                                                canon_paths[j]))
-    canon_out = (canon_single, canon_paths)
 
     # shortestPath()/allShortestPaths() fallback pruning: keep only
     # min-total-hop rows per (start, end) pair. Reached only when the BFS
@@ -3552,7 +3474,7 @@ def _build_pattern(space: GraphSpace, path: A.MatchPath, counter: list[int],
             f"{pa}__path",
             F.concat(*path_parts) if path_parts else F.array())
         paths_bound.add(pa)
-    return cur, aliases, edge_aliases, paths_bound, tags, canon_out
+    return cur, aliases, edge_aliases, paths_bound, tags
 
 
 def _split_conjuncts(e: tuple) -> list[tuple]:
@@ -3561,18 +3483,40 @@ def _split_conjuncts(e: tuple) -> list[tuple]:
     return [e]
 
 
-def _edge_canon(ea: str) -> Column:
-    """Canonical identity struct of a single-hop edge binding — stored
-    orientation regardless of traversal direction (Edge.cpp:128-136
-    keyEqual), so the same underlying edge compares equal across frames."""
-    fwd = F.col(f"{ea}___dir") == 1
-    return F.struct(
-        F.when(fwd, F.col(f"{ea}___src")).otherwise(F.col(f"{ea}___dst"))
-        .alias("s"),
-        F.when(fwd, F.col(f"{ea}___dst")).otherwise(F.col(f"{ea}___src"))
-        .alias("d"),
-        F.col(f"{ea}___rank").alias("r"),
-        F.col(f"{ea}___etype").alias("et"))
+def _join_subpattern(space: GraphSpace, cur: DataFrame, path: A.MatchPath,
+                     counter: list[int], nodes: set[str], edges: set[str],
+                     join) -> DataFrame | None:
+    """A pattern subquery (PatternApply, RollUpApply) joined onto ``cur``
+    by ``join(cur, pat, keys)``, or None when it shares no alias with
+    ``cur``. ``path`` is built by :func:`_build_pattern`, seeded with
+    ``cur``'s distinct vids when its first node is bound and untagged (the
+    frontier-seeded expansion, not a full re-scan). The keys are the vid
+    of each node alias in ``nodes`` and the identity (:func:`_edge_key`)
+    of each edge alias in ``edges`` that it shares, so ``(x)-[e]->(y)``
+    requires e itself to connect x and y. ``cur`` binds such an edge as a
+    single hop or as an edge VALUE column (a WITH-projected
+    ``relationships(p)[i]``, bugfix/AliasTypeDeduce.feature
+    ``(b)-[e1]->()``); the identity columns are dropped after the join."""
+    n0 = path.nodes[0]
+    seed = cur.select(F.col(f"{n0.alias}___vid")).distinct() \
+        if n0.tag is None and n0.alias in nodes else None
+    pat, aliases, eals, _, _ = _build_pattern(space, path, counter, seed=seed)
+    keys = [f"{a}___vid" for a in sorted(nodes & aliases)]
+    tmp: list[str] = []
+    for ea in sorted(edges & eals):
+        hop = f"{ea}___src" in cur.columns
+        if f"{ea}___src" not in pat.columns or not (hop or ea in cur.columns):
+            raise ValueError(
+                f"`{ea}' is referenced with type Edge but bound as a "
+                "different type (var-len edge lists cannot re-bind)")
+        k = f"_pp_canon_{ea}"
+        cur = cur.withColumn(k, _edge_key(f"{ea}__" if hop else F.col(ea)))
+        pat = pat.withColumn(k, _edge_key(f"{ea}__"))
+        tmp.append(k)
+    if not keys and not tmp:
+        return None
+    out = join(cur, pat, keys + tmp)
+    return out.drop(*tmp) if tmp else out
 
 
 def _apply_pattern_pred(space: GraphSpace, cur: DataFrame, path: A.MatchPath,
@@ -3580,12 +3524,8 @@ def _apply_pattern_pred(space: GraphSpace, cur: DataFrame, path: A.MatchPath,
                         anti: bool) -> DataFrame:
     """WHERE (v)-[:e]->(m) / exists((v)-[:e]->(m)) / NOT … → left-semi /
     left-anti join on the shared alias bindings (PatternApplyExecutor.cpp:
-    15-154, anti flag :36; bare form tck match/PathExpr.feature "In Where").
-    When the predicate's start node is a bound un-tagged alias, the pattern
-    is seeded from the current frame's distinct vids — the frontier-seeded
-    expansion, not a full re-scan. Shared *edge* aliases constrain on the
-    edge's canonical identity, so ``WHERE (x)-[e]->(y)`` requires e itself
-    to connect x and y, not just any edge."""
+    15-154, anti flag :36; bare form tck match/PathExpr.feature "In Where"),
+    through :func:`_join_subpattern`."""
     # WITH-projected value columns count as bound names too
     # (bugfix/AliasTypeDeduce.feature: `with relationships(p)[1] AS e1
     # … where (b)-[e1]->()`)
@@ -3598,47 +3538,13 @@ def _apply_pattern_pred(space: GraphSpace, cur: DataFrame, path: A.MatchPath,
         if ed.alias and ed.alias not in bound:
             raise ValueError("PatternExpression are not allowed to "
                              f"introduce new variables: `{ed.alias}'")
-    n0 = path.nodes[0]
-    seed = None
-    if n0.tag is None and n0.alias in bound:
-        seed = cur.select(F.col(f"{n0.alias}___vid")).distinct()
-    pat, aliases, eals, _pp, _tm, _cn = _build_pattern(space, path, counter,
-                                                       seed=seed)
-    shared = sorted(bound & aliases)
-    shared_e = sorted(bound & eals)
-    if not shared and not shared_e:
+    how = "left_anti" if anti else "left_semi"
+    out = _join_subpattern(
+        space, cur, path, counter, bound, bound,
+        lambda c, pat, keys: c.join(pat.select(*keys).distinct(), keys, how))
+    if out is None:
         raise ValueError("pattern predicate must share an alias with MATCH")
-    keys = [f"{a}___vid" for a in shared]
-    tmp: list[str] = []
-    for ea in shared_e:
-        if f"{ea}___src" not in pat.columns:
-            raise ValueError(
-                f"`{ea}' is referenced with type Edge but bound as a "
-                "different type (var-len edge lists cannot re-bind)")
-        k = f"_pp_canon_{ea}"
-        if f"{ea}___src" in cur.columns:
-            cur = cur.withColumn(k, _edge_canon(ea))
-        elif ea in cur.columns:
-            # edge VALUE binding — a WITH-projected relationships(p)[i]
-            # struct (bugfix/AliasTypeDeduce.feature `(b)-[e1]->()`):
-            # canonicalize from the (s,d,r,t,et) fields, stored
-            # orientation
-            c = F.col(ea)
-            fwd = c["t"] != -1
-            cur = cur.withColumn(k, F.struct(
-                F.when(fwd, c["s"]).otherwise(c["d"]).alias("s"),
-                F.when(fwd, c["d"]).otherwise(c["s"]).alias("d"),
-                c["r"].alias("r"), c["et"].alias("et")))
-        else:
-            raise ValueError(
-                f"`{ea}' is referenced with type Edge but bound as a "
-                "different type (var-len edge lists cannot re-bind)")
-        pat = pat.withColumn(k, _edge_canon(ea))
-        keys.append(k)
-        tmp.append(k)
-    rhs = pat.select(*keys).distinct()
-    out = cur.join(rhs, on=keys, how="left_anti" if anti else "left_semi")
-    return out.drop(*tmp) if tmp else out
+    return out
 
 
 def _apply_where(space: GraphSpace, cur: DataFrame, where: tuple,
@@ -3723,8 +3629,25 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
     "In With"). Each path value is the engine's path convention: an
     array of (s, d, r) hop structs. New variables may not be introduced
     (MatchValidator::validatePathInWhere)."""
-    def repl(path: A.MatchPath):
+    def roll_up(path: A.MatchPath, agg: Column, prefix: str) -> str | None:
+        """RollUpApply (:func:`_join_subpattern`): ``agg`` of the matched
+        paths per shared binding, left-joined onto ``cur`` as a new
+        column ([] where none matched). Returns the column's name, or
+        None when the pattern shares no alias."""
         nonlocal cur
+        counter[0] += 1
+        val = f"{prefix}{counter[0]}"
+        out = _join_subpattern(
+            space, cur, path, counter, bound, ebound,
+            lambda c, pat, keys: c.join(
+                pat.groupBy(*keys).agg(agg.alias(val)), keys, "left")
+            .withColumn(val, F.coalesce(F.col(val), F.array())))
+        if out is None:
+            return None
+        cur = out
+        return val
+
+    def repl(path: A.MatchPath):
         for n in path.nodes:
             if n.alias and n.alias not in bound:
                 raise ValueError(
@@ -3737,34 +3660,11 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
                     f"variables: `{ed.alias}'")
         counter[0] += 1
         pa = f"_ppv{counter[0]}"
-        p2 = dataclasses.replace(path, path_alias=pa)
-        n0 = path.nodes[0]
-        seed = None
-        if n0.tag is None and n0.alias in bound:
-            seed = cur.select(F.col(f"{n0.alias}___vid")).distinct()
-        pat, aliases, eals, _pp, _tm, _cn = _build_pattern(
-            space, p2, counter, seed=seed)
-        shared = sorted(bound & aliases)
-        shared_e = sorted(ebound & eals)
-        if not shared and not shared_e:
+        val = roll_up(dataclasses.replace(path, path_alias=pa),
+                      F.collect_list(F.col(f"{pa}__path")), "_ppval")
+        if val is None:
             raise ValueError("pattern expression must share an alias "
                              "with the enclosing MATCH")
-        keys = [f"{a}___vid" for a in shared]
-        tmp: list[str] = []
-        for ea in shared_e:
-            k = f"_pp_canon_{ea}"
-            cur = cur.withColumn(k, _edge_canon(ea))
-            pat = pat.withColumn(k, _edge_canon(ea))
-            keys.append(k)
-            tmp.append(k)
-        counter[0] += 1
-        val = f"_ppval{counter[0]}"
-        grouped = pat.groupBy(*keys).agg(
-            F.collect_list(F.col(f"{pa}__path")).alias(val))
-        cur = (cur.join(grouped, on=keys, how="left")
-               .withColumn(val, F.coalesce(F.col(val), F.array())))
-        if tmp:
-            cur = cur.drop(*tmp)
         return ("name", val)
 
     def _tagset_col(tag: str) -> str:
@@ -3876,11 +3776,8 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
         d = ed.direction
         if me_end == "n0":               # lambda is the LEFT node
             d = {"out": "in", "in": "out"}.get(d, d)
-        enames = ed.types or sorted(space.edges)
-        edges = _edge_union(space, enames)
-        for k, v in ed.props.items():
-            edges = edges.filter(_pattern_prop_eq(edges, k, v)) \
-                if k in edges.columns else edges.filter(F.lit(False))
+        edges = _pattern_props(
+            _edge_union(space, ed.types or sorted(space.edges)), ed.props)
         counter[0] += 1
         k = f"_ppnbr{counter[0]}"
         if d == "out":
@@ -3919,7 +3816,6 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
         bound aliases, collecting (end-vid, path) pairs; per element the
         value filters by end == id(element). One keyed shuffle, the
         per-element work is a lambda over the joined array."""
-        nonlocal cur
         if len(path.edges) != 1 or len(path.nodes) != 2:
             return None
         if any(n.alias == lv and (n.props or n.tag) for n in path.nodes):
@@ -3935,35 +3831,12 @@ def _rewrite_pattern_values(space: GraphSpace, cur: DataFrame,
                  for n in path.nodes]
         counter[0] += 1
         pa = f"_ppv{counter[0]}"
-        p2 = dataclasses.replace(path, nodes=nodes, path_alias=pa)
-        n0 = p2.nodes[0]
-        seed = None
-        if n0.tag is None and n0.alias in bound:
-            seed = cur.select(F.col(f"{n0.alias}___vid")).distinct()
-        pat, aliases, eals, _pp, _tm, _cn = _build_pattern(
-            space, p2, counter, seed=seed)
-        shared = sorted(bound & aliases)
-        shared_e = sorted(ebound & eals)
-        if not shared and not shared_e:
+        val = roll_up(dataclasses.replace(path, nodes=nodes, path_alias=pa),
+                      F.collect_list(F.struct(
+                          F.col(f"{ta}___vid").alias("end"),
+                          F.col(f"{pa}__path").alias("path"))), "_ppall")
+        if val is None:
             return None
-        keys = [f"{a}___vid" for a in shared]
-        tmp: list[str] = []
-        for ea in shared_e:
-            k = f"_pp_canon_{ea}"
-            cur = cur.withColumn(k, _edge_canon(ea))
-            pat = pat.withColumn(k, _edge_canon(ea))
-            keys.append(k)
-            tmp.append(k)
-        counter[0] += 1
-        val = f"_ppall{counter[0]}"
-        grouped = pat.groupBy(*keys).agg(
-            F.collect_list(F.struct(
-                F.col(f"{ta}___vid").alias("end"),
-                F.col(f"{pa}__path").alias("path"))).alias(val))
-        cur = (cur.join(grouped, on=keys, how="left")
-               .withColumn(val, F.coalesce(F.col(val), F.array())))
-        if tmp:
-            cur = cur.drop(*tmp)
         counter[0] += 1
         tv = f"_ppt{counter[0]}"
         return ("comprehension", tv, ("name", val),
@@ -4080,14 +3953,11 @@ def _match_resolver(bound: set[str], paths: set[str] = frozenset(),
             if fn in ("src", "dst"):
                 # src()/dst() NORMALIZE direction (FunctionManager.cpp:
                 # 2112: `edge.type > 0 ? edge.src : edge.dst`): a
-                # REVERSELY/BOTH-flipped hop (_dir == -1) reports its
-                # canonical endpoints, so un-flip
-                s, d = F.col(f"{alias}___src"), F.col(f"{alias}___dst")
+                # REVERSELY/BOTH-flipped hop reports its stored
+                # endpoints (_edge_key)
                 if columns is not None and f"{alias}___dir" in columns:
-                    rev = F.col(f"{alias}___dir") < 0
-                    return (F.when(rev, d).otherwise(s) if fn == "src"
-                            else F.when(rev, s).otherwise(d))
-                return s if fn == "src" else d
+                    return _edge_key(f"{alias}__")[fn[0]]
+                return F.col(f"{alias}___{fn}")
             if fn in ("labels", "tags") and columns is not None \
                     and f"{alias}___labels" in columns:
                 return F.col(f"{alias}___labels")
@@ -4224,18 +4094,14 @@ def _match_resolver(bound: set[str], paths: set[str] = frozenset(),
                     # bare EDGE alias as a value (`CASE r WHEN null`,
                     # ShortReads.feature:7): the edge's identity struct,
                     # NULL — not a struct of nulls — when an OPTIONAL
-                    # MATCH left it unmatched. Endpoints CANONICAL like
+                    # MATCH left it unmatched. Endpoints STORED like
                     # the reference's Edge value (a reversed hop's
                     # negative type normalizes on read — Value.h Edge;
-                    # src()/dst() in FunctionManager.cpp:2112): un-flip
-                    # _dir == -1 hops
+                    # src()/dst() in FunctionManager.cpp:2112)
                     s, d = F.col(f"{a}___src"), F.col(f"{a}___dst")
                     if f"{a}___dir" in columns:
-                        rev = F.col(f"{a}___dir") < 0
-                        s, d = (F.when(rev, F.col(f"{a}___dst"))
-                                .otherwise(F.col(f"{a}___src")),
-                                F.when(rev, F.col(f"{a}___src"))
-                                .otherwise(F.col(f"{a}___dst")))
+                        key = _edge_key(f"{a}__")
+                        s, d = key["s"], key["d"]
                     props = [c for c in columns
                              if c.startswith(f"{a}__")
                              and not c.startswith(f"{a}___")]
@@ -4785,20 +4651,27 @@ def _exec_match(space: GraphSpace, st: A.MatchStmt) -> DataFrame:
                       how):
         """Join a built pattern frame onto ``base`` over shared node /
         edge aliases. A shared EDGE alias joins on edge identity
-        (MatchJoinOnEdge.feature): single edges on (src, dst, rank),
-        var-len on the whole hop list; mixing the two arities is the
-        reference's SemanticError."""
+        (MatchJoinOnEdge.feature): a single edge on :func:`_edge_key`,
+        a var-len one on its whole hop list; mixing the two arities is
+        the reference's SemanticError."""
         shared = [a for a in sorted(base_bound & aliases)]
         shared_edges = [a for a in sorted(base_ebound & eals)]
         keys = [f"{a}___vid" for a in shared]
+        tmp: list[str] = []
         for a in shared_edges:
             base_list = f"{a}__path" in base.columns
             pat_list = f"{a}__path" in pat.columns
             if base_list != pat_list:
                 raise ValueError(f"`{a}' binding to different type: "
                                  "Edge vs EdgeList")
-            keys += [f"{a}__path"] if pat_list else [
-                f"{a}___src", f"{a}___dst", f"{a}___rank"]
+            if pat_list:
+                keys.append(f"{a}__path")
+                continue
+            k = f"_jk_{a}"
+            base = base.withColumn(k, _edge_key(f"{a}__"))
+            pat = pat.withColumn(k, _edge_key(f"{a}__"))
+            tmp.append(k)
+        keys += tmp
         if keys:
             # pattern side re-binds shared aliases: drop its duplicate
             # prop columns, keep only new ones + keys
@@ -4806,7 +4679,8 @@ def _exec_match(space: GraphSpace, st: A.MatchStmt) -> DataFrame:
                    if any(c.startswith(f"{a}__")
                           for a in shared + shared_edges)
                    and c not in keys]
-            return base.join(pat.drop(*dup), on=keys, how=how)
+            out = base.join(pat.drop(*dup), on=keys, how=how)
+            return out.drop(*tmp) if tmp else out
         return base.crossJoin(pat) if how == "inner" \
             else base.join(pat, F.lit(True), "left")
 
@@ -4817,30 +4691,24 @@ def _exec_match(space: GraphSpace, st: A.MatchStmt) -> DataFrame:
         MatchJoinOnEdge.feature "Multiple Match joined on edge list":
         `WITH relationships(p1) AS e MATCH p2=…-[e:like*1..2]-…`
         keeps only p2 enumerations whose hop list IS e. Identity
-        compares on storage orientation (Edge.cpp keyEqual), so an
-        undirected re-traversal matches the directed original."""
+        compares on :func:`_edge_key`, so an undirected re-traversal
+        matches the directed original."""
         from pyspark.sql.types import ArrayType, StructType
         vt = cur.schema[ea].dataType
-
-        def canon(c):
-            fwd = c["t"] != -1
-            return F.struct(
-                F.when(fwd, c["s"]).otherwise(c["d"]).alias("s"),
-                F.when(fwd, c["d"]).otherwise(c["s"]).alias("d"),
-                c["r"].alias("r"), c["et"].alias("et"))
         if isinstance(vt, ArrayType):
             if f"{ea}__path" not in cur.columns:
                 raise ValueError(f"`{ea}' binding to different type: "
                                  "Edge vs EdgeList")
             val, pl = F.col(ea), F.col(f"{ea}__path")
-            zipped = F.zip_with(val, pl, lambda a, b: canon(a) == canon(b))
+            zipped = F.zip_with(val, pl,
+                                lambda a, b: _edge_key(a) == _edge_key(b))
             return cur.filter((F.size(val) == F.size(pl))
                               & F.forall(zipped, lambda x: x))
         if isinstance(vt, StructType):
             if f"{ea}___src" not in cur.columns:
                 raise ValueError(f"`{ea}' binding to different type: "
                                  "EdgeList vs Edge")
-            return cur.filter(canon(F.col(ea)) == _edge_canon(ea))
+            return cur.filter(_edge_key(F.col(ea)) == _edge_key(f"{ea}__"))
         raise ValueError(f"`{ea}' binding to different type: Edge vs "
                          + str(vt))
 
@@ -4902,17 +4770,17 @@ def _exec_match(space: GraphSpace, st: A.MatchStmt) -> DataFrame:
                 # aliases the outer frame binds — separate left joins
                 # would let pattern 1's bindings survive rows where
                 # pattern 2 fails.
-                p0, a0_, e0, pp0, pt0, _ = built[0]
+                p0, a0_, e0, pp0, pt0 = built[0]
                 a0_, e0, pp0, pt0 = set(a0_), set(e0), set(pp0), dict(pt0)
-                for (p2, a2, e2, pp2, pt2, _pc) in built[1:]:
+                for (p2, a2, e2, pp2, pt2) in built[1:]:
                     p0 = _join_pattern(p0, a0_, e0, p2, set(a2), set(e2),
                                        "inner")
                     a0_ |= a2
                     e0 |= e2
                     pp0 |= pp2
                     pt0.update(pt2)
-                built = [(p0, a0_, e0, pp0, pt0, None)]
-            for pat, aliases, eals, ppaths, ptags, _pc in built:
+                built = [(p0, a0_, e0, pp0, pt0)]
+            for pat, aliases, eals, ppaths, ptags in built:
                 if cl.where is not None and cl.optional:
                     # WHERE of an OPTIONAL MATCH filters the pattern side
                     # BEFORE the left join (openCypher semantics)
