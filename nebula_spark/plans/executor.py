@@ -40,10 +40,8 @@ from nebula_spark.operators.paths import (all_paths, bfs_min_paths,
 from nebula_spark.operators.traverse import (_edge_key, _path_struct_type,
                                              oriented, traverse)
 from nebula_spark.plans import ngql as A
+from nebula_spark.plans.ngql import _AGG_FNS, _is_agg
 from nebula_spark.session import local_frame
-
-_AGG_FNS = {"count", "sum", "avg", "max", "min", "std", "collect",
-            "collect_set", "bit_and", "bit_or", "bit_xor"}
 
 _GRAPH_FNS = {
     "id": lambda c: c, "src": lambda _=None: F.col(SRC),
@@ -159,25 +157,6 @@ def _static_nonbool_const(e) -> bool:
         return False, None
     ok, v = val(e)
     return ok and v is not None and not isinstance(v, (bool, list))
-
-
-def _is_agg(e: tuple) -> bool:
-    if not isinstance(e, tuple):
-        return False
-    if not e:
-        return False
-    if e[0] in ("call", "call_distinct") and e[1] in _AGG_FNS:
-        return True
-    if e[0] == "raw_agg":        # pre-built aggregate Column (ordered collect)
-        return True
-
-    def scan(x) -> bool:
-        if isinstance(x, tuple):
-            return _is_agg(x)
-        if isinstance(x, list):   # map-constructor pairs, case arms
-            return any(scan(i) for i in x)
-        return False
-    return any(scan(x) for x in e[1:])
 
 
 def _walk(e, kinds: set[str], out: list) -> None:
@@ -1628,19 +1607,78 @@ def _runtime_input(vids: str, piped: DataFrame | None,
     return df, col
 
 
+def _vid_contract(space: GraphSpace) -> tuple[bool, int | None]:
+    """The space's vid contract (SpaceDesc, meta.thrift:108): whether its
+    vids are integers (``vid_type`` INT or INT64, in any case) and, for
+    FIXED_STRING(N), the length N. A space with no ``vid_type`` keys by
+    unbounded strings."""
+    vt = str((getattr(space, "options", None) or {})
+             .get("vid_type", "")).strip().lower()
+    m = re.fullmatch(r"fixed_string\((\d+)\)", vt)
+    return vt in ("int", "int64"), int(m.group(1)) if m else None
+
+
+def _literal_keys(space: GraphSpace, keys: list, nv: int,
+                  dml: bool = False) -> list[tuple]:
+    """Literal key tuples with their first ``nv`` entries (the vids) made
+    values: constant function-call vids — ``hash("Tim Duncan")``
+    (parser.yy vid : function_call_expression) — evaluate in one probe
+    (``_eval_const_vids``). With ``dml`` a vid longer than the space's
+    FIXED_STRING(N) refuses (VidInvalidLength.feature; the reference's
+    storage rejects oversize vids at write time)."""
+    flat = _eval_const_vids(space, [v for k in keys for v in k[:nv]])
+    n = _vid_contract(space)[1]
+    if dml and n is not None and any(
+            isinstance(v, str) and len(v.encode("utf-8")) > n for v in flat):
+        raise ValueError("Storage Error: The VID must be a 64-bit integer "
+                         "or a string fitting space vertex id length limit.")
+    return [(*flat[nv * i:nv * (i + 1)], *k[nv:])
+            for i, k in enumerate(keys)]
+
+
+def _key_frame(space: GraphSpace, cols: list[str], keys, refs=(),
+               piped: DataFrame | None = None,
+               env: dict[str, DataFrame] | None = None,
+               dml: bool = False) -> DataFrame:
+    """A statement's keys as one frame over ``cols``: ``[VID]`` or
+    ``[SRC, DST, RANK]``. ``keys`` is a list of literal key tuples in
+    ``cols`` order, or a ``$-``/``$var`` name whose ``refs`` columns are
+    read through ``_runtime_input``; a rank ref that is not given reads 0.
+    With ``dml`` a ref column whose type is not the space's vid type
+    refuses (DeleteEdge.feature:215 "Wrong srcId type `INT`";
+    DeleteVertex.feature:205), and a literal vid too long for it refuses.
+    Duplicate keys stay: each caller decides whether to drop them."""
+    if not isinstance(keys, str):
+        return local_frame(space.spark,
+                           _literal_keys(space, keys, min(len(cols), 2), dml),
+                           cols)
+    sel = []
+    for c, ref in zip(cols, refs):
+        if ref is None and c == RANK:
+            sel.append(F.lit(0).cast("long").alias(RANK))
+            continue
+        df, ref = _runtime_input(keys, piped, ref, env)
+        if dml and c != RANK:
+            got_int = dict(df.dtypes)[ref] in ("tinyint", "smallint", "int",
+                                               "bigint")
+            if got_int != _vid_contract(space)[0]:
+                label = {VID: "vid", SRC: "srcId", DST: "dstId"}[c]
+                raise ValueError(f"Wrong {label} type "
+                                 f"`{'INT' if got_int else 'STRING'}`, value")
+        sel.append((F.col(ref).cast("long") if c == RANK
+                    else F.col(ref)).alias(c))
+    return df.select(*sel)
+
+
 def _vid_frame(space: GraphSpace, vids, piped: DataFrame | None,
                src_col: str | None,
                env: dict[str, DataFrame] | None = None) -> DataFrame:
-    if isinstance(vids, str) and vids.startswith("$"):
-        df, col = _runtime_input(vids, piped, src_col, env)
-        return df.select(F.col(col).alias(VID)).distinct()
-    if any(isinstance(v, tuple) and len(v) == 2 and v[0] == "__const_expr__"
-           for v in vids):
-        # constant function-call vids — `GO FROM hash("Boris Diaw")`
-        # (parser.yy vid : function_call_expression) — evaluate once on
-        # the driver through the expression pipeline
-        vids = _eval_const_vids(space, vids)
-    return local_frame(space.spark, [(v,) for v in vids], [VID])
+    """The start vids of a read: a ``$-``/``$var`` ref reads each vid
+    once, a literal list keeps its order and repeats."""
+    if isinstance(vids, str):
+        return _key_frame(space, [VID], vids, (src_col,), piped,
+                          env).distinct()
+    return _key_frame(space, [VID], [(v,) for v in vids])
 
 
 def _edge_union(space: GraphSpace, names: list[str]) -> DataFrame:
@@ -1648,9 +1686,7 @@ def _edge_union(space: GraphSpace, names: list[str]) -> DataFrame:
         # a space with NO edge schema matches nothing, it doesn't crash
         # (match/Base.feature "Match a path in a space which doesn't
         # have edge schema")
-        vt = "bigint" if "int" in str((getattr(space, "options", None)
-                                       or {}).get("vid_type", "")).lower() \
-            else "string"
+        vt = "bigint" if _vid_contract(space)[0] else "string"
         return local_frame(space.spark,
             [], f"{SRC} {vt}, {DST} {vt}, {RANK} bigint, _etype string")
     dfs = []
@@ -2098,21 +2134,10 @@ def _exec_fetch_edges(space: GraphSpace, st: A.FetchEdgesStmt,
     duplicate keys keep their multiplicity. Keys may come from a pipe or
     query variable ($-.src->$-.dst) — rank defaults to 0 either way."""
     e = space.edge(st.edge)
-    if st.var is not None:
-        source = piped if st.var == "$-" else (env or {}).get(st.var)
-        if source is None:
-            raise ValueError(f"FETCH: no bound input for {st.var}")
-        rank_c = (F.col(st.key_rank_col) if st.key_rank_col
-                  else F.lit(0)).cast("long")
-        kdf = source.select(F.col(st.key_src_col).alias(SRC),
-                            rank_c.alias(RANK),
-                            F.col(st.key_dst_col).alias(DST))
-    else:
-        flat = _eval_const_vids(space,
-                                [v for s, r, d in st.keys for v in (s, d)])
-        kdf = local_frame(space.spark,
-            [(flat[2 * i], int(k[1]), flat[2 * i + 1])
-             for i, k in enumerate(st.keys)], [SRC, RANK, DST])
+    kdf = _key_frame(space, [SRC, DST, RANK],
+                     st.var or [(s, d, r) for s, r, d in st.keys],
+                     (st.key_src_col, st.key_dst_col, st.key_rank_col),
+                     piped, env)
     out = kdf.join(e, [SRC, DST, RANK], "inner")
     eprops = [c for c in e.columns if c not in (SRC, DST, RANK)]
 
@@ -2682,13 +2707,10 @@ def _exec_subgraph(space: GraphSpace, st: A.SubgraphStmt,
     # (GetSubgraphValidator — subgraph.feature "invalid input":
     # `GET SUBGRAPH FROM $-.id` where id is an INT prop refuses)
     from pyspark.sql.types import NumericType
-    vt = str((getattr(space, "options", None) or {})
-             .get("vid_type", "FIXED_STRING")).lower()
-    if "string" in vt and st.src_col is not None \
+    if not _vid_contract(space)[0] and st.src_col is not None \
             and isinstance(seeds.schema[0].dataType, NumericType):
-        ref = (f"$-.{st.src_col}" if st.sources == "$-"
-               else f"{st.sources}.{st.src_col}" if isinstance(
-                   st.sources, str) else st.src_col)
+        ref = (f"{st.sources}.{st.src_col}" if isinstance(st.sources, str)
+               else st.src_col)
         raise ValueError(
             f"SemanticError: `{ref}', the srcs should be type of "
             "FIXED_STRING, but was`INT'")
@@ -5118,7 +5140,7 @@ def _exec_unwind(st: A.UnwindStmt, piped: DataFrame | None,
 def _cast_like(df: DataFrame, table: DataFrame) -> DataFrame:
     """Align a literal-built frame to the table's column types."""
     dt = dict(table.dtypes)
-    return df.select(*[F.col(c).cast(dt[c]) if c in dt else F.col(c)
+    return df.select(*[df[c].cast(dt[c]) if c in dt else df[c]
                        for c in df.columns])
 
 
@@ -5215,26 +5237,6 @@ def _default_col(text, dtype: str) -> Column:
         return ExprCompiler(refuse).col(e).cast(dtype)
     except Exception:
         return F.lit(text).cast(dtype)
-
-
-_VID_LEN_ERR = ("Storage Error: The VID must be a 64-bit integer or a "
-                "string fitting space vertex id length limit.")
-
-
-def _check_vid_len(space: GraphSpace, vids) -> None:
-    """Enforce the space's FIXED_STRING(N) vid length on mutation keys
-    (VidInvalidLength.feature; the reference's storage rejects oversize
-    vids at write time)."""
-    import re as _rex
-    opts = getattr(space, "options", None) or {}
-    m = _rex.fullmatch(r"fixed_string\((\d+)\)",
-                       str(opts.get("vid_type", "")).strip().lower())
-    if not m:
-        return
-    n = int(m.group(1))
-    for v in vids:
-        if isinstance(v, str) and len(v.encode("utf-8")) > n:
-            raise ValueError(_VID_LEN_ERR)
 
 
 def _compile_const_expr(text: str, kind: str):
@@ -5380,22 +5382,10 @@ def _exec_insert(space: GraphSpace, st: A.InsertStmt) -> DataFrame:
     table = space.edge(st.name) if st.is_edge else space.tag(st.name)
     # const function-call keys — INSERT … VALUES hash("Tom"):(…)
     # (Insert.IntVid.feature) — resolve in one probe job
-    if st.is_edge:
-        flat = _eval_const_vids(space,
-                                [v for r in st.rows for v in r[:2]])
-        st_rows = [(flat[2 * i], flat[2 * i + 1], r[2], r[3])
-                   for i, r in enumerate(st.rows)]
-        data = [(r[0], r[1], r[2], *r[3]) for r in st_rows]
-        cols = [SRC, DST, RANK, *st.props]
-        key = [SRC, DST, RANK]
-        _check_vid_len(space, [v for r in st_rows for v in (r[0], r[1])])
-    else:
-        vks = _eval_const_vids(space, [r[0] for r in st.rows])
-        st_rows = [(k, r[1]) for k, r in zip(vks, st.rows)]
-        data = [(r[0], *r[1]) for r in st_rows]
-        cols = [VID, *st.props]
-        key = [VID]
-        _check_vid_len(space, [r[0] for r in st_rows])
+    key = [SRC, DST, RANK] if st.is_edge else [VID]
+    cols = [*key, *st.props]
+    data = [(*r[:-1], *r[-1]) for r in
+            _literal_keys(space, st.rows, min(len(key), 2), dml=True)]
     # within-statement duplicate keys: VALUES apply in order against the
     # unique KV key, so IF NOT EXISTS keeps the FIRST occurrence and plain
     # INSERT keeps the LAST (InsertIfNotExists.feature "Conan" rows)
@@ -5641,34 +5631,12 @@ def _exec_update(space: GraphSpace, st: A.UpdateStmt,
     _update_wrong_expr(st)
     table = space.edge(st.name) if st.is_edge else space.tag(st.name)
     key = [SRC, DST, RANK] if st.is_edge else [VID]
-    if st.var is not None:
-        # runtime-input keys (LookUpUpdate.feature `LOOKUP … | UPDATE
-        # VERTEX ON t $-.id SET …`) — same checked ref resolution as the
-        # DELETE family
-        src_df = _delete_ref_frame(space, st, piped, env)
-        if st.is_edge:
-            keys_df = src_df.select(
-                _delete_ref_col(space, st, st.src_col, piped, env, "src")
-                .alias(SRC),
-                _delete_ref_col(space, st, st.dst_col, piped, env, "dst")
-                .alias(DST),
-                (_delete_ref_col(space, st, st.rank_col, piped, env,
-                                 "rank")
-                 if st.rank_col else F.lit(0)).cast("long").alias(RANK))
-        else:
-            keys_df = src_df.select(
-                _delete_ref_col(space, st, st.src_col, piped, env, "vid")
-                .alias(VID))
-        keys_df = _cast_like(keys_df.distinct(), table)
-    else:
-        nk = 2 if st.is_edge else 1
-        flat = _eval_const_vids(space,
-                                [v for k in st.keys for v in k[:nk]])
-        ukeys = [(*flat[nk * i:nk * i + nk], *k[nk:])
-                 for i, k in enumerate(st.keys)]
-        _check_vid_len(space, [v for k in ukeys for v in k[:nk]])
-        keys_df = _cast_like(
-            local_frame(space.spark, ukeys, key), table)
+    # runtime-input keys (LookUpUpdate.feature `LOOKUP … | UPDATE VERTEX
+    # ON t $-.id SET …`) update each key once
+    keys_df = _key_frame(space, key, st.var or st.keys,
+                         (st.src_col, st.dst_col, st.rank_col), piped, env,
+                         dml=True)
+    keys_df = _cast_like(keys_df.distinct() if st.var else keys_df, table)
     # SET expressions evaluate against the stored row (UpdateExecutor
     # read-modify-write). UPSERT initializes a MISSING key's props from
     # the schema DEFAULTS (UpdateNode.h:84), so later SET exprs read them
@@ -5794,48 +5762,30 @@ def _exec_update(space: GraphSpace, st: A.UpdateStmt,
     updates = base.select(*key,
                           *[c for c in table.columns if c not in key],
                           "__exists")
-    if not st.insertable:
-        # plain UPDATE on a missing key is the reference's storage error
-        # — the missing-key count rides the SAME job that materializes
-        # the update rows (checkpoint_observe), so one UPDATE = one
-        # Spark action instead of a dedicated anti-join probe (r5
-        # verdict item 6), and the eager checkpoint keeps an N-statement
-        # script's table lineage flat instead of N plans deep
-        from nebula_spark.operators.traverse import checkpoint_observe
-        updates, m = checkpoint_observe(
-            updates, missing=F.sum(
-                F.when(F.col("__exists").isNull(), 1).otherwise(0)),
-            n=F.count(F.lit(1)))
-        if int(m["missing"] or 0) > 0:
-            raise ValueError("Storage Error: Vertex or edge not found.")
-        updates = _stats_reset(updates, int(m["n"]))
-    else:
-        # UPSERT: same materialize + stats reset — without it the
-        # table ⋈ updates(table-derived) join SQUARES the sizeInBytes
-        # estimate per statement (see _stats_reset). The SAME job also
-        # counts insert-path rows that leave a NOT NULL/no-default
-        # field NULL — the reference's storage refusal
-        # (Update.feature:355 "Invalid field value…")
-        from nebula_spark.operators.traverse import checkpoint_observe
-        req = [p for p in (getattr(defn_u, "required", None) or [])
-               if p in dt and p not in (defn_u.defaults or {})]
-        viol = F.lit(0)
-        if req:
-            isnull = F.col(req[0]).isNull()
-            for p in req[1:]:
-                isnull = isnull | F.col(p).isNull()
-            viol = F.sum(F.when(F.col("__exists").isNull() & isnull, 1)
-                         .otherwise(0))
-        else:
-            viol = F.sum(F.lit(0))
-        updates, m_upd = checkpoint_observe(updates, viol=viol,
-                                            n=F.count(F.lit(1)))
-        if int(m_upd["viol"] or 0) > 0:
-            raise ValueError(
-                "Storage Error: Invalid field value: may be the filed "
-                "is not NULL or without default value or wrong schema.")
-        updates = _stats_reset(updates, int(m_upd["n"]))
-    updates = updates.drop("__exists")
+    # the refused-row count rides the SAME job that materializes the
+    # update rows (checkpoint_observe), so one UPDATE is one Spark action
+    # (r5 verdict item 6) and an N-statement script's table lineage stays
+    # flat; the stats reset keeps the table ⋈ updates(table-derived) join
+    # from SQUARING its sizeInBytes estimate per statement. A plain
+    # UPDATE refuses a missing key; an UPSERT refuses an inserted row
+    # that leaves a NOT NULL/no-default field NULL (Update.feature:355)
+    from nebula_spark.operators.traverse import checkpoint_observe
+    bad = F.col("__exists").isNull()
+    if st.insertable:
+        nulls = F.lit(False)
+        for p in (getattr(defn_u, "required", None) or []):
+            if p in dt and p not in (defn_u.defaults or {}):
+                nulls = nulls | F.col(p).isNull()
+        bad = bad & nulls
+    updates, m = checkpoint_observe(
+        updates, bad=F.sum(F.when(bad, 1).otherwise(0)),
+        n=F.count(F.lit(1)))
+    if int(m["bad"] or 0) > 0:
+        raise ValueError(
+            "Storage Error: Invalid field value: may be the filed is not "
+            "NULL or without default value or wrong schema."
+            if st.insertable else "Storage Error: Vertex or edge not found.")
+    updates = _stats_reset(updates, int(m["n"])).drop("__exists")
     new = update_rows(table, updates, key, st.insertable)
     _rebind(space, st.name, st.is_edge, new)
     if st.yields:
@@ -5846,83 +5796,23 @@ def _exec_update(space: GraphSpace, st: A.UpdateStmt,
     return space.spark.range(0)
 
 
-def _delete_ref_col(space: GraphSpace, st: A.DeleteStmt, col: str,
-                    piped: DataFrame | None,
-                    env: dict[str, DataFrame] | None,
-                    which: str = "vid") -> Column:
-    """Resolve one ``$-.col``/``$var.col`` key reference for DELETE and
-    enforce the space's vid type (the reference rejects an INT column in
-    a FIXED_STRING space — DeleteEdge.feature:215 "Wrong srcId type
-    `INT`"; DeleteVertex.feature:205 SemanticError)."""
-    src_df = piped if st.var == "$-" else (env or {}).get(st.var)
-    if src_df is None:
-        raise ValueError(
-            f"`{st.var}.{col}', not exist prop `{col}'" if st.var == "$-"
-            else f"`{st.var}.{col}', not exist variable `{st.var[1:]}'")
-    if src_df.columns.count(col) == 0:
-        raise ValueError(f"`{st.var}.{col}', not exist prop `{col}'")
-    if src_df.columns.count(col) > 1:
-        raise ValueError(f"Duplicate Column Name : `{col}'")
-    if which != "rank":
-        opts = getattr(space, "options", None) or {}
-        vt = str(opts.get("vid_type", "")).strip().lower()
-        want_int = vt in ("int", "int64")
-        dt = dict(src_df.dtypes)[col]
-        got_int = dt in ("tinyint", "smallint", "int", "bigint")
-        if got_int != want_int:
-            got = "INT" if got_int else "STRING"
-            label = {"vid": "vid", "src": "srcId", "dst": "dstId"}[which]
-            raise ValueError(f"Wrong {label} type `{got}`, value")
-    return F.col(col)
-
-
-def _delete_ref_frame(space: GraphSpace, st: A.DeleteStmt,
-                      piped: DataFrame | None,
-                      env: dict[str, DataFrame] | None) -> DataFrame:
-    """The piped/$var key frame for a runtime-input DELETE."""
-    src_df = piped if st.var == "$-" else (env or {}).get(st.var)
-    if src_df is None:
-        raise ValueError(
-            f"`{st.var}.{st.src_col}', not exist prop `{st.src_col}'"
-            if st.var == "$-" else
-            f"`{st.var}.{st.src_col}', not exist variable `{st.var[1:]}'")
-    return src_df
-
-
 def _exec_delete(space: GraphSpace, st: A.DeleteStmt,
                  piped: DataFrame | None = None,
                  env: dict[str, DataFrame] | None = None) -> DataFrame:
     from nebula_spark.operators.mutate import delete_rows
     if st.kind == "edge":
         table = space.edge(st.name)
-        if st.var is not None:
-            src_df = _delete_ref_frame(space, st, piped, env)
-            keys_df = src_df.select(
-                _delete_ref_col(space, st, st.src_col, piped, env, "src")
-                .alias(SRC),
-                _delete_ref_col(space, st, st.dst_col, piped, env, "dst")
-                .alias(DST),
-                (_delete_ref_col(space, st, st.rank_col, piped, env, "rank")
-                 if st.rank_col else F.lit(0)).cast("long").alias(RANK))
-            keys_df = _cast_like(keys_df, table)
-        else:
-            flat = _eval_const_vids(space,
-                                    [v for k in st.keys for v in k[:2]])
-            keys = [(flat[2 * i], flat[2 * i + 1], k[2])
-                    for i, k in enumerate(st.keys)]
-            _check_vid_len(space, [v for k in keys for v in k[:2]])
-            keys_df = _cast_like(
-                local_frame(space.spark, keys, [SRC, DST, RANK]),
-                table)
+        keys_df = _key_frame(space, [SRC, DST, RANK], st.var or st.keys,
+                             (st.src_col, st.dst_col, st.rank_col), piped,
+                             env, dml=True)
         _rebind(space, st.name, True,
-                delete_rows(table, keys_df, [SRC, DST, RANK]))
+                delete_rows(table, _cast_like(keys_df, table),
+                            [SRC, DST, RANK]))
         return space.spark.range(0)
     # vertex / tag share the vid-keyed shape
+    vids = _key_frame(space, [VID], st.var or [(v,) for v in st.keys],
+                      (st.src_col,), piped, env, dml=True)
     if st.var is not None:
-        src_df = _delete_ref_frame(space, st, piped, env)
-        vids = src_df.select(
-            _delete_ref_col(space, st, st.src_col, piped, env, "vid")
-            .alias(VID))
         # the key frame fans out to EVERY tag table plus both edge
         # endpoints under WITH EDGE — each consumer re-embeds the whole
         # piped LOOKUP plan in the final action's tree. An explicit
@@ -5932,37 +5822,27 @@ def _exec_delete(space: GraphSpace, st: A.DeleteStmt,
         # was a measured regression twice (r11), and even a lazy one
         # materializes its shuffle stages at statement time under AQE.
         vids = vids.distinct()
-    else:
-        keys = _eval_const_vids(space, list(st.keys))
-        _check_vid_len(space, keys)
-        vids = local_frame(space.spark, [(v,) for v in keys], [VID])
-    if st.kind == "tag":
-        # DELETE TAG <names|*> FROM … (DeleteTagsSentence
-        # MutateSentences.h:564-580): drop the tag rows only — the vertex
-        # survives while any other tag still holds it (DeleteTag.feature
-        # "the output has one row because the vertex has multiple tags")
-        names = list(space.tags) if st.tags is None else st.tags
-        for tname in names:
-            if tname not in space.tags:
-                raise ValueError(f"TagNotFound: TagName `{tname}`")
-        for tname in names:
-            t = space.tag(tname)
-            _rebind(space, tname, False,
-                    delete_rows(t, _cast_like(vids, t), [VID]))
-        return space.spark.range(0)
-    for tname in list(space.tags):
+    # DELETE TAG <names|*> FROM … (DeleteTagsSentence
+    # MutateSentences.h:564-580) drops the tag rows only — the vertex
+    # survives while any other tag still holds it (DeleteTag.feature "the
+    # output has one row because the vertex has multiple tags")
+    names = st.tags if st.kind == "tag" and st.tags is not None \
+        else list(space.tags)
+    for tname in names:
+        if tname not in space.tags:
+            raise ValueError(f"TagNotFound: TagName `{tname}`")
+    for tname in names:
         t = space.tag(tname)
         _rebind(space, tname, False,
                 delete_rows(t, _cast_like(vids, t), [VID]))
     if st.with_edge:
+        ends = [(k, vids.withColumnRenamed(VID, k)) for k in (SRC, DST)]
         for ename in list(space.edges):
-            e = space.edge(ename)
-            vk = _cast_like(vids.withColumnRenamed(VID, SRC), e)
-            e2 = e.join(vk.select(SRC).distinct(), [SRC], "left_anti")
-            vk2 = vids.withColumnRenamed(VID, DST)
-            dtypes = dict(e.dtypes)
-            e2 = e2.join(vk2.select(F.col(DST).cast(dtypes[DST]).alias(DST))
-                         .distinct(), [DST], "left_anti")
+            e = e2 = space.edge(ename)
+            for k, keys in ends:
+                e2 = delete_rows(e2, _cast_like(keys, e), [k])
+            # a USING anti-join on [DST] moves _dst first: keep the
+            # committed column order
             _rebind(space, ename, True, e2.select(*e.columns))
     return space.spark.range(0)
 
@@ -6535,11 +6415,9 @@ def _exec_ddl(space: GraphSpace, st) -> DataFrame:
 
     from nebula_spark.sources.ddl import parse_ddl
     schemas, _indexes = parse_ddl(st.text)
-    # vid columns follow the space's vid_type (SpaceDesc meta.thrift:108):
-    # int64 spaces key by LongType, FIXED_STRING(N) by StringType
-    opts = getattr(space, "options", None) or {}
-    vt = LongType() if str(opts.get("vid_type", "")).strip().lower() \
-        == "int64" else StringType()
+    # vid columns follow the space's vid contract: INT/INT64 spaces key
+    # by LongType, FIXED_STRING(N) by StringType
+    vt = LongType() if _vid_contract(space)[0] else StringType()
     for sd in schemas:
         # geography DEFAULTs validate eagerly at CREATE (GeoBase.feature
         # "test geo schema" — a malformed WKT or a shape mismatch on a

@@ -20,6 +20,8 @@ import re
 import sys
 from dataclasses import dataclass, field
 
+from nebula_spark.operators.aggregate import _AGG_FNS
+
 # the 512-level expression-depth guard (expr()/literal()) costs ~11 Python
 # frames per level; raise CPython's limit once at import so the guard is
 # reachable instead of RecursionError at ~90 levels (per-Parser raising
@@ -285,19 +287,22 @@ class SubgraphStmt:
     #                                     (GetSubgraphValidator::validateWhere)
 
 
-# aggregate function names (AggFunctionManager) — the parser needs them
-# for the joined-YIELD refusal, which the reference performs in the
-# grammar action itself (parser.yy:1731 yield_columns->hasAgg())
-_AGG_FNS = {"count", "sum", "avg", "max", "min", "std", "collect",
-            "collect_set", "bit_and", "bit_or", "bit_xor"}
-
-
-def _has_agg(e) -> bool:
+def _is_agg(e) -> bool:
+    """Whether an expression holds an aggregate call anywhere, CASE arms
+    and map pairs included. The parser needs it for the UNWIND and
+    joined-YIELD refusals, which the reference performs in the grammar
+    action itself (parser.yy:1731 yield_columns->hasAgg()); the function
+    names are the aggregate operator's (AggFunctionManager)."""
+    if isinstance(e, list) or (isinstance(e, tuple) and e
+                               and isinstance(e[0], tuple)):
+        return any(_is_agg(x) for x in e)   # CASE arms, map pairs
     if not isinstance(e, tuple) or not e:
         return False
+    if e[0] == "raw_agg":        # pre-built aggregate Column (ordered collect)
+        return True
     if e[0] in ("call", "call_distinct") and e[1] in _AGG_FNS:
         return True
-    return any(_has_agg(x) for x in e[1:] if isinstance(x, tuple))
+    return any(_is_agg(x) for x in e[1:])
 
 
 @dataclass
@@ -1421,7 +1426,7 @@ class Parser:
         self.eat_kw("unwind")
         e0 = self.peek().pos
         e = self.expr()
-        if _has_agg(e):
+        if _is_agg(e):
             # UnwindValidator (match/Unwind.feature "unwind invalid
             # expression")
             text = self.src[e0:self.peek().pos].strip() if self.src \
@@ -1935,7 +1940,7 @@ class Parser:
         if self.at_kw("from"):
             # joined YIELD (parser.yy:1730-1749): the join form refuses
             # aggregates AT PARSE TIME, quoting the yield-columns text
-            if any(_has_agg(y.expr) for y in items):
+            if any(_is_agg(y.expr) for y in items):
                 end = self.toks[self.i - 1]
                 txt = self.src[start:end.pos + len(end.text)]
                 raise SyntaxError("Invalid use of aggregating function "

@@ -14,8 +14,14 @@ built, every frame that ``operators.traverse.checkpoint_observe``
 materializes has its formatted plan recorded too (the function is wrapped
 in this process only); a dump lists those plans, numbered in the order
 they ran, ahead of the final plan.
+
+Each dump is masked before it is written, so dumps from two checkouts
+diff clean: expression ids (``#12``), RDD numbers, ``plan_id`` values and
+a FileScan's ``Location: …`` up to its ``PushedFilters`` (the checkout's
+path, cut at a fixed width, and a ``PartitionFilters`` entry that shows
+on one side only) become fixed placeholders.
 """
-import importlib, os, sys, io
+import importlib, os, re, sys, io
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 tag = sys.argv[1] if len(sys.argv) > 1 else "before"
@@ -46,6 +52,20 @@ def _recording_observe(df, **metrics):
 
 T.checkpoint_observe = _recording_observe
 
+_MASKS = ((re.compile(r"#\d+"), "#N"), (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+          (re.compile(r"plan_id=\d+"), "plan_id=N"),
+          (re.compile(r"Location: (?:[^\n]*\n){0,2}?[^\n]*?(?=PushedFilters)"),
+           "Location: * "))
+
+
+def mask(text: str) -> str:
+    """``text`` with the ids and paths that differ between runs and
+    checkouts replaced by placeholders."""
+    for pat, rep in _MASKS:
+        text = pat.sub(rep, text)
+    return text
+
+
 sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("plan_capture")
 spark.sparkContext.setLogLevel("ERROR")
@@ -67,5 +87,5 @@ for name in names:
         out = f"ERROR building plan: {ex}\n"
     with open(os.path.join(ROOT, "plans", "r12", f"{name}_{tag}.txt"),
               "w") as f:
-        f.write(out)
+        f.write(mask(out))
     print(name, "->", len(materialized), "materialized,", len(out), "bytes")
