@@ -5140,7 +5140,7 @@ def _exec_unwind(st: A.UnwindStmt, piped: DataFrame | None,
 def _cast_like(df: DataFrame, table: DataFrame) -> DataFrame:
     """Align a literal-built frame to the table's column types."""
     dt = dict(table.dtypes)
-    return df.select(*[df[c].cast(dt[c]) if c in dt else df[c]
+    return df.select(*[F.col(c).cast(dt[c]) if c in dt else F.col(c)
                        for c in df.columns])
 
 
